@@ -313,7 +313,6 @@ def winnow_overlap(
     if max_df is not None:
         fa = _boundary_if_large(fa, docs_a)
         fb = _boundary_if_large(fb, docs_b)
-    if max_df is not None:
         df_tot = (
             fa.select("fp").unionAll(fb.select("fp"))
             .groupBy("fp")

@@ -32,6 +32,52 @@ def _stream(spark, stream_dir):
     )
 
 
+_RUNNING_AGG_SCHEMA = (
+    "struct<user_id:bigint,ts:{ts},value:double,rcount:bigint,"
+    "rsum:double,rmin:double,rmax:double,ema:double>"
+)
+
+
+def _running_agg_sql(spark, src):
+    """running_agg's batch SQL twin: window aggregates plus the
+    closed-form ema (the oracle algebra, where NULL terms drop out of
+    the SUM), over ``src``'s (user_id, ts, value); ema_n=10."""
+    w, q = 2.0 / 11.0, 9.0 / 11.0
+    return spark.sql(
+        f"""
+        WITH t AS (
+          SELECT user_id, ts, value,
+                 row_number() OVER (PARTITION BY user_id ORDER BY ts) - 1 AS i
+          FROM {{src}}
+        )
+        SELECT user_id, ts, value,
+               i + 1 AS rcount,
+               sum(value) OVER win AS rsum,
+               min(value) OVER win AS rmin,
+               max(value) OVER win AS rmax,
+               pow({q}, i) * sum(CASE WHEN i = 0 THEN value
+                    ELSE {w} * value * pow({q}, -i) END) OVER win AS ema
+        FROM t
+        WINDOW win AS (PARTITION BY user_id ORDER BY i
+                       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+        """,
+        src=src,
+    ).collect()
+
+
+def _running_agg_rows(rows):
+    """(user_id, ts, value, rcount, rsum, rmin, rmax, ema) tuples,
+    floats rounded to 9 places, sorted."""
+    def f(v):
+        return None if v is None else round(float(v), 9)
+
+    return sorted(
+        (r["user_id"], r["ts"], f(r["value"]), r["rcount"], f(r["rsum"]),
+         f(r["rmin"]), f(r["rmax"]), f(r["ema"]))
+        for r in rows
+    )
+
+
 def test_stateless_filter_map(spark, stream_dir):
     sf = _stream(spark, stream_dir).filter("value > 250").map(lambda v: v * 2)
     out = sf.run_available_now(name="ek_t1")
@@ -45,6 +91,9 @@ def test_stateless_filter_map(spark, stream_dir):
 def test_running_agg_matches_batch(spark, stream_dir):
     sf = _stream(spark, stream_dir)
     out = sf.run_available_now(sink_df=sf.running_agg(ema_n=10), name="ek_t2")
+    # event_id / event_type / props never reach the kernel, and the ts
+    # crossing as int64 micros comes back as the source's timestamp
+    assert out.schema.simpleString() == _RUNNING_AGG_SCHEMA.format(ts="timestamp")
     got = {
         (r["user_id"], r["rcount"]): (r["rsum"], r["ema"])
         for r in out.collect()
@@ -1395,8 +1444,17 @@ def test_streaming_chunk_spanning_group_order(spark, stream_dir, tmp_path):
                                      name="ek_chunkspan_t")
         got_t = {(r["user_id"], r["ts"], r["value"])
                  for r in out_t.collect()}
+        out_r = sf.run_available_now(sink_df=sf.running_agg(ema_n=10),
+                                     name="ek_chunkspan_r")
+        got_r = sorted(tuple(r) for r in out_r.collect())
     finally:
         spark.conf.set(key, old)
+    # running_agg joins a group's chunks before its one event-time sort:
+    # bit-identical to the ordered single-chunk replay
+    plain = _stream(spark, stream_dir)
+    out_r0 = plain.run_available_now(sink_df=plain.running_agg(ema_n=10),
+                                     name="ek_chunkspan_r0")
+    assert got_r == sorted(tuple(r) for r in out_r0.collect()) and got_r
 
     ef = from_dataframe(
         src, value_cols=["value"], seq_col="event_id", ts_col="ts",
@@ -1878,7 +1936,9 @@ def test_running_agg_null_semantics(spark, tmp_path):
     rows += [(1, 2, 5.0), (2, 2, None), (3, 2, None), (4, 2, 7.0)]
     rows += [(1, 3, None), (2, 3, None), (3, 3, 4.0), (4, 3, None), (5, 3, 6.0)]
     rows += [(1, 4, None), (2, 4, None)]
-    schema = "ts long, user_id long, value double"
+    # plus a payload column the kernel never reads
+    rows = [(*r, f"tag{r[0]}") for r in rows]
+    schema = "ts long, user_id long, value double, tag string"
     src = spark.createDataFrame(rows, schema)
 
     # two files split at ts<=2 / ts>2: u=3's first micro-batch is
@@ -1894,38 +1954,7 @@ def test_running_agg_null_semantics(spark, tmp_path):
         shutil.copyfile(os.path.join(stage, part), dst)
         os.utime(dst, (t0 + i, t0 + i))
 
-    # batch SQL twin: window aggregates + the closed-form ema (the
-    # oracle algebra — NULL terms drop out of the SUM)
-    w, q = 2.0 / 11.0, 9.0 / 11.0
-    exp_rows = spark.sql(
-        f"""
-        WITH t AS (
-          SELECT user_id, ts, value,
-                 row_number() OVER (PARTITION BY user_id ORDER BY ts) - 1 AS i
-          FROM {{src}}
-        )
-        SELECT user_id, ts, value,
-               i + 1 AS rcount,
-               sum(value) OVER win AS rsum,
-               min(value) OVER win AS rmin,
-               max(value) OVER win AS rmax,
-               pow({q}, i) * sum(CASE WHEN i = 0 THEN value
-                    ELSE {w} * value * pow({q}, -i) END) OVER win AS ema
-        FROM t
-        WINDOW win AS (PARTITION BY user_id ORDER BY i
-                       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        """,
-        src=src,
-    ).collect()
-
-    def canon(r):
-        def f(v):
-            return None if v is None else round(float(v), 9)
-
-        return (r["user_id"], r["ts"], f(r["value"]), r["rcount"],
-                f(r["rsum"]), f(r["rmin"]), f(r["rmax"]), f(r["ema"]))
-
-    expected = sorted(canon(r) for r in exp_rows)
+    expected = _running_agg_rows(_running_agg_sql(spark, src))
 
     for multi in (False, True):
         reader = spark.readStream.format("parquet").schema(schema)
@@ -1938,8 +1967,107 @@ def test_running_agg_null_semantics(spark, tmp_path):
         out = sf.run_available_now(
             sink_df=sf.running_agg(ema_n=10), name=f"ek_nulls_{multi}"
         )
-        got = sorted(canon(r) for r in out.collect())
+        # a long event time crosses and returns unchanged
+        assert out.schema.simpleString() == _RUNNING_AGG_SCHEMA.format(ts="bigint")
+        got = _running_agg_rows(out.collect())
         assert got == expected, f"multi={multi}"
+
+
+def test_running_agg_event_time_types(spark, tmp_path):
+    """running_agg keeps the source's event-time type and values for
+    every type it accepts: ``timestamp`` crosses the pandas boundary
+    as int64 micros and is cast back in the JVM, ``timestamp_ntz``
+    crosses as it is (long is pinned in
+    test_running_agg_null_semantics). Wall times inside a DST gap and a
+    non-UTC session zone must survive the round trip, and an unread
+    payload column must not matter."""
+    import datetime as _dt
+
+    from eventkit_spark.streaming.stream import StreamFrame
+
+    # 2024-03-10 02:xx does not exist in America/New_York
+    t0 = _dt.datetime(2024, 3, 10, 1, 58, 0)
+    rows = [
+        (t0 + _dt.timedelta(seconds=41 * ((i * 7) % 12) + u), u,
+         None if (u + i) % 5 == 0 else float((u * 13 + i * 29) % 50) - 20,
+         "x" * i)
+        for u in range(6) for i in range(12)
+    ]
+    src_dir = str(tmp_path / "ntz")
+    spark.createDataFrame(
+        rows, "ts timestamp_ntz, user_id long, value double, props string"
+    ).coalesce(1).write.parquet(src_dir)
+    tz_key = "spark.sql.session.timeZone"
+    old_tz = spark.conf.get(tz_key)
+    try:
+        for ts_type, tz in (("timestamp_ntz", "UTC"),
+                            ("timestamp_ntz", "America/New_York"),
+                            ("timestamp", "America/New_York")):
+            spark.conf.set(tz_key, tz)
+            schema = f"ts {ts_type}, user_id long, value double, props string"
+            sf = StreamFrame(
+                spark.readStream.format("parquet").schema(schema).load(src_dir),
+                value_cols=["value"], ts_col="ts", key_cols=["user_id"],
+            )
+            name = f"ek_evt_{ts_type}_{tz.replace('/', '_')}"
+            out = sf.run_available_now(sink_df=sf.running_agg(ema_n=10), name=name)
+            assert out.schema.simpleString() == _RUNNING_AGG_SCHEMA.format(ts=ts_type)
+            exp = _running_agg_sql(spark, spark.read.schema(schema).parquet(src_dir))
+            got = _running_agg_rows(out.collect())
+            assert got == _running_agg_rows(exp) and len(got) == len(rows), name
+    finally:
+        spark.conf.set(tz_key, old_tz)
+
+
+def _state_node_input(df):
+    """(name, type) of each column the pandas state node receives, read
+    off the analyzed JVM plan tree by node class and ``output()`` — no
+    plan-string parsing."""
+    def walk(node):
+        yield node
+        kids = node.children()
+        for i in range(kids.size()):
+            yield from walk(kids.apply(i))
+
+    plan = df._jdf.queryExecution().analyzed()
+    nodes = [
+        n for n in walk(plan)
+        if n.getClass().getSimpleName() == "FlatMapGroupsInPandasWithState"
+    ]
+    assert len(nodes) == 1, plan.toString()
+    out = nodes[0].child().output()
+    return [
+        (out.apply(i).name(), out.apply(i).dataType().typeName())
+        for i in range(out.size())
+    ]
+
+
+def test_state_kernels_ship_only_read_columns(spark, stream_dir):
+    """Boundary guard: a pandas state kernel receives only the key,
+    event-time and value columns — the source's event_id, event_type
+    and props payload never crosses to Python — and running_agg's
+    timestamp crosses as int64 micros. Keyless kernels group on one
+    constant column (a bare groupBy(lit(0)) failed analysis) and run."""
+    from eventkit_spark.streaming.stream import StreamFrame
+
+    sf = _stream(spark, stream_dir)
+    assert _state_node_input(sf.running_agg(ema_n=10)) == [
+        ("user_id", "long"), ("ts", "long"), ("value", "double"),
+    ]
+    assert _state_node_input(sf.changes()) == [
+        ("user_id", "long"), ("ts", "timestamp"), ("value", "double"),
+    ]
+    keyless = StreamFrame(sf.df, value_cols=["value"], ts_col="ts", key_cols=[])
+    agg = keyless.running_agg(ema_n=10)
+    assert _state_node_input(agg) == [
+        ("__g", "integer"), ("ts", "long"), ("value", "double"),
+    ]
+    out = keyless.run_available_now(sink_df=agg, name="ek_keyless_agg")
+    src = spark.read.parquet(stream_dir)
+    n, total = src.count(), src.agg(F.sum("value")).first()[0]
+    last = out.orderBy(F.desc("rcount")).first()
+    assert out.count() == n and last["rcount"] == n
+    assert abs(last["rsum"] - total) < 1e-6 * max(1.0, abs(total))
 
 
 def test_multibatch_replay_runs_multiple_batches(spark):
