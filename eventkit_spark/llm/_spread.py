@@ -11,7 +11,7 @@ import os
 
 from pyspark.sql import DataFrame
 
-from ..session import session_width
+from ..session import _size_to_bytes, session_width
 
 # Logical-plan nodes under which converting to an RDD is plan-only
 # work: narrow ops over a file relation or an already-materialized
@@ -60,20 +60,6 @@ def spread(df: DataFrame) -> DataFrame:
     except Exception:  # noqa: BLE001 — Connect / exotic plans: no spread
         return df
     return df
-
-
-def _size_to_bytes(v: str) -> int:
-    """Parse a Spark-style size string ("64m", "1g", plain bytes)."""
-    s = str(v).strip().lower()
-    mult = 1
-    for suf, m in (("k", 1 << 10), ("m", 1 << 20), ("g", 1 << 30)):
-        if s.endswith(suf + "b"):
-            s, mult = s[:-2], m
-            break
-        if s.endswith(suf):
-            s, mult = s[:-1], m
-            break
-    return int(float(s) * mult)
 
 
 def source_bytes(df: DataFrame) -> int | None:

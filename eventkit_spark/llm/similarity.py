@@ -147,15 +147,6 @@ def hard_negatives(
     )
 
 
-def _rp_bits(vec, planes) -> "F.Column":
-    """Bucket id = sign bits of dot products with broadcast hyperplanes."""
-    bits = [F.when(dot(vec, F.array(*[F.lit(float(x)) for x in p])) >= 0, 1).otherwise(0) for p in planes]
-    out = F.lit(0)
-    for b in bits:
-        out = out * 2 + b
-    return out
-
-
 def _planes(dim: int, bits: int, table: int):
     """Deterministic pseudo-random hyperplanes (public LCG, seed by table)."""
     planes = []

@@ -16,8 +16,23 @@ def physical_plan(df: DataFrame) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def optimized_plan(df: DataFrame) -> str:
-    return df._jdf.queryExecution().optimizedPlan().toString()
+def plan_nodes(df: DataFrame) -> list:
+    """Every node of ``df``'s analyzed JVM plan tree, parent before
+    children. Callers test node CLASSES (``node_class``), never the
+    plan's string rendering, so a wording change across Spark versions
+    cannot flip a check silently."""
+    def walk(node):
+        yield node
+        kids = node.children()
+        for i in range(kids.size()):
+            yield from walk(kids.apply(i))
+
+    return list(walk(df._jdf.queryExecution().analyzed()))
+
+
+def node_class(node) -> str:
+    """Simple class name of a JVM plan node, e.g. ``"MapInPandas"``."""
+    return node.getClass().getSimpleName()
 
 
 def assert_pushed_filter(df: DataFrame, fragment: str) -> None:

@@ -55,6 +55,19 @@ def session_width(spark: SparkSession) -> int:
         return spark.sparkContext.defaultParallelism
 
 
+def _size_to_bytes(v: str) -> int:
+    """Parse a Spark-style size ("2097152", "100b", "64m", "64mb",
+    "1.5g") to bytes: an integer or float mantissa, then no suffix, a
+    plain byte ``b``, or ``k``/``m``/``g`` with an optional ``b``."""
+    s = str(v).strip().lower()
+    if s.endswith("b"):
+        s = s[:-1]
+    for suffix, mult in (("k", 1 << 10), ("m", 1 << 20), ("g", 1 << 30)):
+        if s.endswith(suffix):
+            return int(float(s[:-1]) * mult)
+    return int(float(s))
+
+
 def get_spark(app_name: str = "eventkit_spark", shuffle_partitions: int | None = None) -> SparkSession:
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
     shuffle = shuffle_partitions or int(os.environ.get("SPARK_SQL_SHUFFLE_PARTITIONS", cpus))

@@ -1,4 +1,4 @@
-"""Non-parquet dataset formats: CSV, JSON-lines, ORC, XML (Avro gated).
+"""Non-parquet dataset formats: CSV, JSON-lines, ORC, XML.
 
 The engine's canonical storage is parquet (columnar, predicate
 pushdown, min/max stats — the 100 TB default). Real pipelines also
@@ -118,24 +118,6 @@ def load_xml(
     if schema is not None:
         reader = reader.schema(schema)
     return _normalize_ntz(reader.load(path))
-
-
-def load_avro(spark: SparkSession, path: str, **options) -> DataFrame:
-    """Avro reader — gated: Avro is an EXTERNAL Spark module (the
-    spark-avro jar), absent from plain pip installs. Raises with a
-    clear remedy rather than Spark's generic lookup error."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    try:
-        return _normalize_ntz(
-            spark.read.options(**options).format("avro").load(path)
-        )
-    except Exception as ex:  # pragma: no cover - depends on deploy
-        if "Failed to find data source: avro" in str(ex):
-            raise RuntimeError(
-                "Avro needs the external spark-avro package on the "
-                "classpath (--packages org.apache.spark:spark-avro_2.13)"
-            ) from ex
-        raise
 
 
 def write_format(

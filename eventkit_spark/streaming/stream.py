@@ -85,58 +85,8 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import StructType, TimestampType
 
-from ..session import session_width
-
-
-def tws_available(spark: SparkSession | None = None) -> bool:
-    """True when Spark's ``transformWithStateInPandas`` (Spark 4's
-    successor to applyInPandasWithState: timers, multiple state
-    variables, TTL) can actually RUN here. Three independent runtime
-    requirements, none implied by the others:
-
-    - the API must exist on ``GroupedData``;
-    - the protobuf package its state-server protocol needs must import
-      (this container ships pyspark 4.1 without protobuf, so the call
-      crashes the TWS driver worker);
-    - the session's state store provider must be RocksDB — TWS refuses
-      the default HDFSBackedStateStoreProvider at query start, so a
-      protobuf-equipped environment with the default provider would
-      fail where the classic applyInPandasWithState path works.
-
-    Pass the session to check the provider; with ``spark=None`` the
-    active session is probed (no-session → provider unknown → False).
-    Kernels gate on this and keep applyInPandasWithState as the
-    portable path."""
-    try:
-        from pyspark.sql.group import GroupedData
-
-        if not hasattr(GroupedData, "transformWithStateInPandas"):
-            return False
-        from google.protobuf import descriptor  # noqa: F401
-
-        if spark is None:
-            spark = SparkSession.getActiveSession()
-        if spark is None:
-            return False
-        provider = spark.conf.get(
-            "spark.sql.streaming.stateStore.providerClass", ""
-        )
-        return "RocksDB" in (provider or "")
-    except Exception:  # noqa: BLE001 — any import/runtime gap: not available
-        return False
-
-
-def _size_to_bytes(v: str) -> int:
-    """Parse a Spark size conf value ("2097152", "64m", "1g") to bytes."""
-    s = str(v).strip().lower()
-    for suffix, mult in (("k", 1 << 10), ("m", 1 << 20), ("g", 1 << 30)):
-        if s.endswith(suffix + "b"):
-            s = s[:-1]
-        if s.endswith(suffix):
-            return int(float(s[:-1]) * mult)
-    if s.endswith("b"):
-        s = s[:-1]
-    return int(s)
+from ..plans.audit import node_class, plan_nodes
+from ..session import _size_to_bytes, session_width
 
 
 def _dir_bytes(path: str) -> int:
@@ -229,23 +179,24 @@ def _make_sorted_chunks():
     # to by-VALUE serialization and the helper ships inside each
     # handler's pickle, keeping handlers self-contained like the
     # pre-r8 inline sorts they replaced.
-    def _sorted_chunks(pdfs, by, ascending=True):
-        """Drain a stateful handler's Arrow chunk iterator and yield the
-        group's micro-batch as ONE DataFrame sorted by ``by`` across ALL
-        chunks. applyInPandasWithState hands each key group as an
-        iterator of pandas chunks
-        (``spark.sql.execution.arrow.maxRecordsPerBatch`` rows apiece,
-        default 10k); sorting per chunk would process rows out of
-        event-time order whenever a group's batch spans chunks, so
-        quota/counter/flip/cut state would update in the wrong order
-        (round-7 ADVICE, medium). Memory stays O(group-per-micro-batch)
-        — the same bound the handlers' ``outs`` buffers already carry."""
+    def _sorted_chunks(pdfs, by, ascending=True) -> pd.DataFrame | None:
+        """Drain a stateful handler's Arrow chunk iterator and return
+        the key group's micro-batch as ONE DataFrame sorted by ``by``
+        across ALL chunks, or None when the group has no rows.
+        applyInPandasWithState hands each key group as an iterator of
+        pandas chunks (``spark.sql.execution.arrow.maxRecordsPerBatch``
+        rows apiece, default 10k); sorting per chunk would process rows
+        out of event-time order whenever a group's batch spans chunks,
+        so quota/counter/flip/cut state would update in the wrong order
+        (round-7 ADVICE, medium). Memory stays O(group-per-micro-batch),
+        the bound every handler's output frame already carries."""
         import pandas as pd
 
         chunks = [p for p in pdfs if len(p)]
-        if chunks:
-            pdf = chunks[0] if len(chunks) == 1 else pd.concat(chunks, ignore_index=True)
-            yield pdf.sort_values(by, ascending=ascending)
+        if not chunks:
+            return None
+        pdf = chunks[0] if len(chunks) == 1 else pd.concat(chunks, ignore_index=True)
+        return pdf.sort_values(by, ascending=ascending)
 
     return _sorted_chunks
 
@@ -255,8 +206,8 @@ _sorted_chunks = _make_sorted_chunks()
 
 def _make_running_scan():
     # factory for the same by-VALUE cloudpickle rationale as
-    # _make_sorted_chunks: both running_agg kernels (classic +
-    # transformWithStateInPandas) ship this helper inside their pickle.
+    # _make_sorted_chunks: running_agg's handler ships this helper
+    # inside its pickle.
     def _running_scan(x, w, cnt, s, mn, mx, ema):
         """One chunk of the per-key running aggregates as seeded
         vectorized scans, with SQL-WINDOW missing-value semantics
@@ -354,67 +305,6 @@ def _make_running_scan():
 
 
 _running_scan = _make_running_scan()
-
-
-def _make_running_agg_processor(keys, ts_col, value_col, ema_n):
-    """Build the ``StatefulProcessor`` behind ``_running_agg_tws``.
-
-    Module-level factory (same pickling rationale as
-    ``_make_sorted_chunks``: the returned class has a ``<locals>``
-    qualname so cloudpickle ships the instance by value) — and, unlike
-    a class buried inside the method, unit-testable with a stub state
-    handle even while the TWS runtime itself stays protobuf-gated
-    (tests/test_streaming.py::test_tws_processor_sorts_across_chunks).
-
-    Rows are drained through ``_sorted_chunks`` — ONE frame per key
-    micro-batch, sorted across ALL Arrow chunks — so the running
-    counters update in event-time order even when a group's batch spans
-    ``maxRecordsPerBatch`` boundaries (the r7-ADVICE ordering bug class
-    its applyInPandasWithState siblings fixed in r8)."""
-    from pyspark.sql.streaming import StatefulProcessor
-
-    w = 2.0 / (ema_n + 1)
-    state_schema = "rcount long, rsum double, rmin double, rmax double, ema double"
-    sorted_chunks = _sorted_chunks
-    running_scan = _running_scan
-
-    class _Run(StatefulProcessor):
-        def init(self, handle):
-            self._st = handle.getValueState("agg", state_schema)
-
-        def handleInputRows(self, key, rows, timerValues):
-            # same vectorized seeded scans as the
-            # applyInPandasWithState sibling (r10): carries prepended,
-            # sum fold order sequential, ema within ~1 ulp of the bare
-            # recurrence; missing-value semantics pinned in
-            # _running_scan (NULL prefix, decay-by-q ema — r11)
-            import numpy as np
-
-            if self._st.exists():
-                cnt, s, mn, mx, ema = self._st.get()
-            else:
-                cnt, s, mn, mx, ema = 0, 0.0, None, None, None
-            for pdf in sorted_chunks(rows, ts_col):
-                if pdf.empty:
-                    continue
-                x = pdf[value_col].to_numpy(dtype=np.float64)
-                cols, (cnt, s, mn, mx, ema) = running_scan(
-                    x, w, cnt, s, mn, mx, ema
-                )
-                out = pdf[list(keys) + [ts_col]].copy()
-                miss = np.isnan(x)
-                out["value"] = (
-                    np.where(miss, None, x.astype(object)) if miss.any() else x
-                )
-                for name, arr in cols.items():
-                    out[name] = arr
-                yield out
-            self._st.update((cnt, s, mn, mx, ema))
-
-        def close(self):
-            pass
-
-    return _Run()
 
 
 def rate_stream(spark: SparkSession, rows_per_second: int = 100) -> "StreamFrame":
@@ -637,7 +527,8 @@ class StreamFrame:
                 pending = [[], [], [], []]
                 fts, fseq = [NONE] * n, [0] * n
                 clock, seqc = [-NONE] * n, [0] * n
-            for pdf in _sorted_chunks(pdfs, ["ts", "tag"]):
+            pdf = _sorted_chunks(pdfs, ["ts", "tag"])
+            if pdf is not None:
                 for r in pdf.itertuples():
                     j = int(r.tag)
                     if pd.isna(r.value):  # end marker for source j
@@ -721,12 +612,7 @@ class StreamFrame:
         )
 
     # -- stateful running aggregates (emit one row per input row) -----
-    def running_agg(
-        self,
-        kinds: Sequence[str] = ("sum",),
-        ema_n: int = 10,
-        use_tws: bool | None = None,
-    ) -> DataFrame:
+    def running_agg(self, ema_n: int = 10) -> DataFrame:
         """Per-key running aggregates as an applyInPandasWithState
         handler — the streaming twin of SURVEY §2.4's cumulative
         windows. Emits one output row per input row; state is
@@ -746,18 +632,7 @@ class StreamFrame:
         they are: they need no localization, and Spark's NTZ-to-micros
         arithmetic reads the session zone, which would move wall times
         that fall in a DST gap.
-
-        ``use_tws`` opts into the Spark 4 ``transformWithStateInPandas``
-        form (same semantics; timers/multi-state for future kernels) —
-        default auto-detects via ``tws_available()``: the API needs the
-        RocksDB state store AND the protobuf package for its state
-        protocol, neither guaranteed everywhere applyInPandasWithState
-        runs, so the classic handler stays the portable default.
         """
-        if use_tws is None:
-            use_tws = tws_available(self.df.sparkSession)
-        if use_tws:
-            return self._running_agg_tws(ema_n)
         value_col = self.value_cols[0]
         ts_col = self.ts_col
         keys = self.key_cols
@@ -817,33 +692,6 @@ class StreamFrame:
         )
         return out.withColumn(ts_col, F.timestamp_micros(ts_col)) if micros else out
 
-    def _running_agg_tws(self, ema_n: int) -> DataFrame:
-        """``transformWithStateInPandas`` form of ``running_agg`` — the
-        Spark 4 stateful API (ROADMAP migration item). Same semantics
-        and output schema; state is one ValueState tuple per key.
-        Requires ``tws_available()`` (RocksDB state store provider +
-        protobuf) — parity-tested where the runtime supports it
-        (tests/test_streaming.py::test_running_agg_tws_parity,
-        skipif-gated)."""
-        value_col = self.value_cols[0]
-        ts_col = self.ts_col
-        keys = list(self.key_cols)
-        out_schema = (
-            _keys_prefix(self.df, keys)
-            + f"{ts_col} {_sql_type(self.df, ts_col)}, value double, "
-            + "rcount long, rsum double, rmin double, rmax double, ema double"
-        )
-        processor = _make_running_agg_processor(keys, ts_col, value_col, ema_n)
-        grouped = (
-            self.df.groupBy(*keys) if keys else self.df.groupBy(F.lit(0).alias("__g"))
-        )
-        return grouped.transformWithStateInPandas(
-            processor,
-            outputStructType=out_schema,
-            outputMode="append",
-            timeMode="none",
-        )
-
     def changes(self) -> DataFrame:
         """Streaming Changes (select.py:102-112): drop consecutive
         duplicates per key. State = last seen value; emits survivors."""
@@ -861,28 +709,25 @@ class StreamFrame:
             # the previous value is absent/NaN (both always re-emit, as
             # in the loop form) or differs from the current one
             prev = state.get[0] if state.exists else None
-            outs = []
-            for pdf in _sorted_chunks(pdfs, ts_col):
-                if pdf.empty:
-                    continue
+            out = None
+            pdf = _sorted_chunks(pdfs, ts_col)
+            if pdf is not None:
                 x = pdf[value_col]
                 shifted = x.shift(1)
                 if prev is not None:
                     shifted.iloc[0] = prev
                 mask = (shifted.isna() | (x != shifted)).to_numpy()
                 if mask.any():
-                    outs.append(
-                        pdf.loc[mask, keys + [ts_col, value_col]].rename(
-                            columns={value_col: "value"}
-                        )
+                    out = pdf.loc[mask, keys + [ts_col, value_col]].rename(
+                        columns={value_col: "value"}
                     )
                 last = x.iloc[-1]
                 prev = None if pd.isna(last) else (
                     last.item() if hasattr(last, "item") else last
                 )
             state.update((prev,))
-            if outs:
-                yield pd.concat(outs, ignore_index=True)
+            if out is not None:
+                yield out
 
         return _apply_state(
             self.df, keys, [ts_col, value_col], handler, out_schema, f"prev {vt}"
@@ -916,10 +761,9 @@ class StreamFrame:
         def handler(key, pdfs, state: GroupState):
             # arange-offset mask instead of a per-row loop (r9 VERDICT)
             seen = state.get[0] if state.exists else 0
-            outs = []
-            for pdf in _sorted_chunks(pdfs, ts_col):
-                if pdf.empty:
-                    continue
+            out = None
+            pdf = _sorted_chunks(pdfs, ts_col)
+            if pdf is not None:
                 n = len(pdf)
                 inside = np.arange(seen, seen + n) < count
                 mask = inside if keep_first else ~inside
@@ -927,11 +771,10 @@ class StreamFrame:
                     out = pdf.loc[mask, keys + [ts_col, value_col]].rename(
                         columns={value_col: "value"}
                     )
-                    outs.append(out)
                 seen += n
             state.update((seen,))
-            if outs:
-                yield pd.concat(outs, ignore_index=True)
+            if out is not None:
+                yield out
 
         return _apply_state(
             self.df, keys, [ts_col, value_col], handler, out_schema, "seen long"
@@ -965,23 +808,20 @@ class StreamFrame:
             # accruing NaN would poison the persisted total and mute
             # the key forever (r9 review)
             spent = state.get[0] if state.exists else 0.0
-            outs = []
-            for pdf in _sorted_chunks(pdfs, ts_col):
-                if pdf.empty:
-                    continue
+            out = None
+            pdf = _sorted_chunks(pdfs, ts_col)
+            if pdf is not None:
                 c = pdf[cost].to_numpy(dtype=np.float64)
                 cum = np.cumsum(np.concatenate(([spent], np.nan_to_num(c, nan=0.0))))[1:]
                 mask = cum <= budget
                 if mask.any():
-                    outs.append(
-                        pdf.loc[mask, keys + [ts_col, value_col]].rename(
-                            columns={value_col: "value"}
-                        )
+                    out = pdf.loc[mask, keys + [ts_col, value_col]].rename(
+                        columns={value_col: "value"}
                     )
                 spent = float(cum[-1])
             state.update((spent,))
-            if outs:
-                yield pd.concat(outs, ignore_index=True)
+            if out is not None:
+                yield out
 
         return _apply_state(
             self.df, keys, [ts_col, value_col, cost], handler, out_schema,
@@ -1014,10 +854,9 @@ class StreamFrame:
         def handler(key, pdfs, state: GroupState):
             # i = start + step*rank is an arange (r9 VERDICT)
             seen = state.get[0] if state.exists else 0
-            outs = []
-            for pdf in _sorted_chunks(pdfs, ts_col):
-                if pdf.empty:
-                    continue
+            out = None
+            pdf = _sorted_chunks(pdfs, ts_col)
+            if pdf is not None:
                 n = len(pdf)
                 idx = start + step * np.arange(seen, seen + n, dtype=np.int64)
                 if keep_value:
@@ -1028,11 +867,10 @@ class StreamFrame:
                 else:
                     out = pdf[keys + [ts_col]].copy()
                     out["value"] = idx
-                outs.append(out)
                 seen += n
             state.update((seen,))
-            if outs:
-                yield pd.concat(outs, ignore_index=True)
+            if out is not None:
+                yield out
 
         return _apply_state(
             self.df, keys, [ts_col, value_col] if keep_value else [ts_col],
@@ -1083,10 +921,9 @@ class StreamFrame:
             # (carry-buffer + chunk offset) emits total[p - count] once
             # p >= count — one slice per chunk instead of a deque loop
             buf = list(state.get[0]) if state.exists else []
-            outs = []
-            for pdf in _sorted_chunks(pdfs, ts_col):
-                if pdf.empty:
-                    continue
+            out = None
+            pdf = _sorted_chunks(pdfs, ts_col)
+            if pdf is not None:
                 n = len(pdf)
                 total = buf + list(pdf[value_col])
                 first_emit = max(count, len(buf))  # global position
@@ -1094,11 +931,10 @@ class StreamFrame:
                     mask = np.arange(len(buf), len(buf) + n) >= count
                     out = pdf.loc[mask, keys + [ts_col]].copy()
                     out["value"] = total[first_emit - count : len(buf) + n - count]
-                    outs.append(out)
                 buf = total[-count:] if len(total) >= count else total
             state.update((buf,))
-            if outs:
-                yield pd.concat(outs, ignore_index=True)
+            if out is not None:
+                yield out
 
         return _apply_state(
             self.df, keys, [ts_col, value_col], handler, out_schema, f"buf array<{vt}>"
@@ -1154,10 +990,9 @@ class StreamFrame:
                     if state.exists
                     else ([], NONE)
                 )
-            outs = []
-            for pdf in _sorted_chunks(pdfs, ts_col):
-                if pdf.empty:
-                    continue
+            out = None
+            pdf = _sorted_chunks(pdfs, ts_col)
+            if pdf is not None:
                 # vectorized (r11, r10 VERDICT item 5): with b carried
                 # values, the m = (b+n)//size complete chunks emit at
                 # chunk-relative rows (j+1)*size - 1 - b — pure index
@@ -1179,7 +1014,6 @@ class StreamFrame:
                     out["value"] = [
                         vals[j * size : (j + 1) * size] for j in range(m)
                     ]
-                    outs.append(out)
                 buf = vals[m * size :]
             if flush_after is None:
                 # state schema unchanged from pre-flush_after releases:
@@ -1195,8 +1029,8 @@ class StreamFrame:
                             wm + 1,
                         )
                     )
-            if outs:
-                yield pd.concat(outs, ignore_index=True)
+            if out is not None:
+                yield out
 
         return _apply_state(
             self.df, keys, [ts_col, value_col], handler, out_schema,
@@ -1234,19 +1068,17 @@ class StreamFrame:
             # seeded cumprod (r10): same sequential multiply order as
             # the loop form, so values are bit-identical
             acc = state.get[0] if state.exists else start_f
-            outs = []
-            for pdf in _sorted_chunks(pdfs, ts_col):
-                if pdf.empty:
-                    continue
+            out = None
+            pdf = _sorted_chunks(pdfs, ts_col)
+            if pdf is not None:
                 x = pdf[value_col].to_numpy(dtype=np.float64)
                 run = np.cumprod(np.concatenate(([acc], x)))[1:]
                 out = pdf[keys + [ts_col]].copy()
                 out["value"] = run
-                outs.append(out)
                 acc = float(run[-1])
             state.update((acc,))
-            if outs:
-                yield pd.concat(outs, ignore_index=True)
+            if out is not None:
+                yield out
 
         return _apply_state(
             self.df, keys, [ts_col, value_col], handler, out_schema, "acc double"
@@ -1289,10 +1121,9 @@ class StreamFrame:
             # the flip is a prefix-OR of failures = cummax (r10), and
             # it includes the failing row itself, like the loop form
             flipped = state.get[0] if state.exists else False
-            outs = []
-            for pdf in _sorted_chunks(pdfs, ts_col):
-                if pdf.empty:
-                    continue
+            out = None
+            pdf = _sorted_chunks(pdfs, ts_col)
+            if pdf is not None:
                 n = len(pdf)
                 if flipped:
                     flip_arr = np.ones(n, dtype=bool)
@@ -1302,15 +1133,13 @@ class StreamFrame:
                     )
                 mask = flip_arr != take
                 if mask.any():
-                    outs.append(
-                        pdf.loc[mask, keys + [ts_col, value_col]].rename(
-                            columns={value_col: "value"}
-                        )
+                    out = pdf.loc[mask, keys + [ts_col, value_col]].rename(
+                        columns={value_col: "value"}
                     )
                 flipped = bool(flip_arr[-1])
             state.update((flipped,))
-            if outs:
-                yield pd.concat(outs, ignore_index=True)
+            if out is not None:
+                yield out
 
         return _apply_state(
             tagged, keys, [ts_col, value_col, "__p"], handler, out_schema,
@@ -1352,12 +1181,11 @@ class StreamFrame:
             # Exact integer nanoseconds — no float anywhere.
             NO_CUT = np.iinfo(np.int64).max
             cut = state.get[0] if state.exists else None  # epoch ns
-            outs = []
+            out = None
             # notifier first at equal ts: the batch cut is STRICT
             # (ts < min notifier ts), so a tied source row drops
-            for pdf in _sorted_chunks(pdfs, [ts_col, "__n"], ascending=[True, False]):
-                if pdf.empty:
-                    continue
+            pdf = _sorted_chunks(pdfs, [ts_col, "__n"], ascending=[True, False])
+            if pdf is not None:
                 tns = (
                     pdf[ts_col].to_numpy(dtype="datetime64[ns]").astype(np.int64)
                 )
@@ -1371,11 +1199,10 @@ class StreamFrame:
                     out = pdf.loc[mask, keys + [ts_col, "__v"]].rename(
                         columns={"__v": "value"}
                     )
-                    outs.append(out)
                 cut = None if rcut[-1] == NO_CUT else int(rcut[-1])
             state.update((cut,))
-            if outs:
-                yield pd.concat(outs, ignore_index=True)
+            if out is not None:
+                yield out
 
         return _apply_state(
             both, keys, [ts_col, "__v", "__n"], handler, out_schema, "cut long"
@@ -1398,10 +1225,9 @@ class StreamFrame:
             # (prev, cur); the chunk's first row emits only when a
             # carried prev exists
             prev = state.get[0] if state.exists else None
-            outs = []
-            for pdf in _sorted_chunks(pdfs, ts_col):
-                if pdf.empty:
-                    continue
+            out = None
+            pdf = _sorted_chunks(pdfs, ts_col)
+            if pdf is not None:
                 n = len(pdf)
                 x = pdf[value_col]
                 shifted = x.shift(1)
@@ -1410,16 +1236,16 @@ class StreamFrame:
                     shifted.iloc[0] = prev
                 else:
                     mask[0] = False
-                out = pdf[keys + [ts_col]].copy()
-                out["prev"] = shifted
-                out["cur"] = x.to_numpy()
+                pairs = pdf[keys + [ts_col]].copy()
+                pairs["prev"] = shifted
+                pairs["cur"] = x.to_numpy()
                 if mask.any():
-                    outs.append(out.loc[mask])
+                    out = pairs.loc[mask]
                 last = x.iloc[-1]
                 prev = last.item() if hasattr(last, "item") else last
             state.update((prev,))
-            if outs:
-                yield pd.concat(outs, ignore_index=True)
+            if out is not None:
+                yield out
 
         return _apply_state(
             self.df, keys, [ts_col, value_col], handler, out_schema, f"prev {vt}"
@@ -1452,10 +1278,9 @@ class StreamFrame:
             # null ARRIVAL updates the side to null, which a plain
             # ffill would wrongly skip as a gap)
             v0, v1 = state.get if state.exists else (None, None)
-            outs = []
-            for pdf in _sorted_chunks(pdfs, [ts_col, "__tag"]):
-                if pdf.empty:
-                    continue
+            out = None
+            pdf = _sorted_chunks(pdfs, [ts_col, "__tag"])
+            if pdf is not None:
                 n = len(pdf)
                 tag = pdf["__tag"].to_numpy()
                 vals = pdf["__v"].to_numpy(dtype=object)
@@ -1473,12 +1298,11 @@ class StreamFrame:
                         v0 = picked[-1]
                     else:
                         v1 = picked[-1]
-                outs.append(out)
             v0 = v0.item() if hasattr(v0, "item") else v0
             v1 = v1.item() if hasattr(v1, "item") else v1
             state.update((v0, v1))
-            if outs:
-                yield pd.concat(outs, ignore_index=True)
+            if out is not None:
+                yield out
 
         return _apply_state(
             tagged, keys, [ts_col, "__tag", "__v"], handler, out_schema,
@@ -1521,10 +1345,9 @@ class StreamFrame:
                 q0, q1 = list(q0), list(q1)
             else:
                 q0, q1, emitted = [], [], 0
-            outs = []
-            for pdf in _sorted_chunks(pdfs, [ts_col, "__tag"]):
-                if pdf.empty:
-                    continue
+            out = None
+            pdf = _sorted_chunks(pdfs, [ts_col, "__tag"])
+            if pdf is not None:
                 tag = pdf["__tag"].to_numpy()
                 vals = pdf["__v"].to_numpy(dtype=object)
                 c0 = len(q0) + np.cumsum(tag == 0)
@@ -1540,14 +1363,13 @@ class StreamFrame:
                     out["pair_no"] = emitted + p - 1
                     out["v0"] = all0[p - 1]
                     out["v1"] = all1[p - 1]
-                    outs.append(out)
                 total_pairs = int(paired[-1])
                 emitted += total_pairs - min(len(q0), len(q1))
                 q0 = list(all0[total_pairs:])
                 q1 = list(all1[total_pairs:])
             state.update((q0, q1, emitted))
-            if outs:
-                yield pd.concat(outs, ignore_index=True)
+            if out is not None:
+                yield out
 
         return _apply_state(
             tagged, keys, [ts_col, "__tag", "__v"], handler, out_schema,
@@ -1584,10 +1406,9 @@ class StreamFrame:
             # Python None ("no source yet" / object-typed null) and DID
             # emit float NaN arrivals — preserved exactly here.
             latest = state.get[0] if state.exists else None
-            outs = []
-            for pdf in _sorted_chunks(pdfs, [ts_col, "__tag"]):
-                if pdf.empty:
-                    continue
+            out = None
+            pdf = _sorted_chunks(pdfs, [ts_col, "__tag"])
+            if pdf is not None:
                 n = len(pdf)
                 tag = pdf["__tag"].to_numpy()
                 vals = pdf["__v"].to_numpy(dtype=object)
@@ -1604,13 +1425,12 @@ class StreamFrame:
                 if mask.any():
                     out = pdf.loc[mask, keys + [ts_col]].copy()
                     out["sampled"] = picked[mask]
-                    outs.append(out)
                 latest = picked[-1]
                 if hasattr(latest, "item"):
                     latest = latest.item()
             state.update((latest,))
-            if outs:
-                yield pd.concat(outs, ignore_index=True)
+            if out is not None:
+                yield out
 
         return _apply_state(
             tagged, keys, [ts_col, "__tag", "__v"], handler, out_schema, f"latest {vt}"
@@ -1704,10 +1524,9 @@ class StreamFrame:
             # right ts) are masked before the scan, and positions with
             # no in-batch right row patch in the cross-batch carry
             r_ts, r_v = state.get if state.exists else (None, None)
-            outs = []
-            for pdf in _sorted_chunks(pdfs, [ts_col, "__tag"]):
-                if pdf.empty:
-                    continue
+            out = None
+            pdf = _sorted_chunks(pdfs, [ts_col, "__tag"])
+            if pdf is not None:
                 pdf = pdf.reset_index(drop=True)
                 isr = pdf["__tag"].to_numpy() == 0
                 ok = isr.copy()
@@ -1733,14 +1552,13 @@ class StreamFrame:
                         tsr.iloc[carry] = r_ts
                     out["value_r"] = rvv
                     out["ts_r"] = tsr
-                    outs.append(out)
                 ridx = np.flatnonzero(ok)
                 if ridx.size:
                     r_ts = pdf[ts_col].iloc[ridx[-1]]
                     r_v = pdf["__rv"].iloc[ridx[-1]]
             state.update((r_ts, r_v))
-            if outs:
-                yield pd.concat(outs, ignore_index=True)
+            if out is not None:
+                yield out
 
         return _apply_state(
             tagged, keys, [ts_col, "__tag", "__lv", "__rv"], handler, out_schema,
@@ -1770,7 +1588,8 @@ class StreamFrame:
                 wt, wc, last_emit = [], [], -float("inf")
             used = sum(wc)
             outs = []
-            for pdf in _sorted_chunks(pdfs, ts_col):
+            pdf = _sorted_chunks(pdfs, ts_col)
+            if pdf is not None:
                 for _, row in pdf.iterrows():
                     t = max(row[ts_col].value / 1e9, last_emit)  # epoch s, matches batch kernel
                     while True:
@@ -1858,7 +1677,8 @@ class StreamFrame:
         def handler(key, pdfs, state: GroupState):
             n = state.get[0] if state.exists else 0
             outs = []
-            for pdf in _sorted_chunks(pdfs, ["pseq", "cidx"]):
+            pdf = _sorted_chunks(pdfs, ["pseq", "cidx"])
+            if pdf is not None:
                 for _, row in pdf.iterrows():
                     outs.append(
                         {**{k: row[k] for k in keys}, "ts": row["ts"],
@@ -1942,7 +1762,8 @@ class StreamFrame:
                 firsts = sorted(zip(fts, fpseq, fcidx))
             else:
                 pending, firsts, clock = [[], [], [], []], [], -(2**62)
-            for pdf in _sorted_chunks(pdfs, ["pseq", "cidx"]):
+            pdf = _sorted_chunks(pdfs, ["pseq", "cidx"])
+            if pdf is not None:
                 for pseq, grp in pdf.groupby("pseq", sort=True):
                     real = grp[grp["cidx"].notna()]
                     if real.empty:
@@ -2138,10 +1959,9 @@ class StreamFrame:
             # pure integer diff mask (r10): prev advances on EVERY row
             # (kept or dropped), so the gap test is exactly ts.diff()
             prev = state.get[0] if state.exists else None  # epoch ns
-            outs = []
-            for pdf in _sorted_chunks(pdfs, ts_col):
-                if pdf.empty:
-                    continue
+            out = None
+            pdf = _sorted_chunks(pdfs, ts_col)
+            if pdf is not None:
                 tns = (
                     pdf[ts_col].to_numpy(dtype="datetime64[ns]").astype(np.int64)
                 )
@@ -2149,15 +1969,13 @@ class StreamFrame:
                 mask = gaps >= gap_ns
                 mask[0] = prev is None or tns[0] - prev >= gap_ns
                 if mask.any():
-                    outs.append(
-                        pdf.loc[mask, keys + [ts_col, value_col]].rename(
-                            columns={value_col: "value"}
-                        )
+                    out = pdf.loc[mask, keys + [ts_col, value_col]].rename(
+                        columns={value_col: "value"}
                     )
                 prev = int(tns[-1])
             state.update((prev,))
-            if outs:
-                yield pd.concat(outs, ignore_index=True)
+            if out is not None:
+                yield out
 
         return _apply_state(
             self.df, keys, [ts_col, value_col], handler, out_schema, "prev long"
@@ -2211,7 +2029,8 @@ class StreamFrame:
                 return
             flipped, prev = state.get if state.exists else (False, NONE)
             outs = []
-            for pdf in _sorted_chunks(pdfs, ts_col):
+            pdf = _sorted_chunks(pdfs, ts_col)
+            if pdf is not None:
                 for _, row in pdf.iterrows():
                     if not flipped and prev != NONE and row[ts_col].value - prev > gap_ns:
                         flipped = True
@@ -2273,7 +2092,8 @@ class StreamFrame:
         def handler(key, pdfs, state: GroupState):
             seen = state.get[0] if state.exists else 0
             outs = []
-            for pdf in _sorted_chunks(pdfs, ts_col):
+            pdf = _sorted_chunks(pdfs, ts_col)
+            if pdf is not None:
                 for _, row in pdf.iterrows():
                     if seen < len(vals):
                         outs.append(
@@ -2310,7 +2130,8 @@ class StreamFrame:
         def handler(key, pdfs, state: GroupState):
             hi, lo = state.get if state.exists else (0.0, 0.0)
             outs = []
-            for pdf in _sorted_chunks(pdfs, ts_col):
+            pdf = _sorted_chunks(pdfs, ts_col)
+            if pdf is not None:
                 for _, row in pdf.iterrows():
                     x = float(row[value_col])
                     nh = max(0.0, hi + (x - kt) - kk)
@@ -2358,7 +2179,8 @@ class StreamFrame:
                 return math.copysign(math.floor(abs(x) * 1e6 + 0.5), x) / 1e6
 
             outs = []
-            for pdf in _sorted_chunks(pdfs, ts_col):
+            pdf = _sorted_chunks(pdfs, ts_col)
+            if pdf is not None:
                 for _, row in pdf.iterrows():
                     x = float(row[value_col])
                     if lvl is None:
@@ -2405,7 +2227,8 @@ class StreamFrame:
                 return math.copysign(math.floor(abs(v) * 1e6 + 0.5), v) / 1e6
 
             outs = []
-            for pdf in _sorted_chunks(pdfs, ts_col):
+            pdf = _sorted_chunks(pdfs, ts_col)
+            if pdf is not None:
                 for _, row in pdf.iterrows():
                     z = float(row[value_col])
                     if x is None:
@@ -2459,7 +2282,8 @@ class StreamFrame:
             else:
                 buf_t, buf_v = [], []
             outs = []
-            for pdf in _sorted_chunks(pdfs, ts_col):
+            pdf = _sorted_chunks(pdfs, ts_col)
+            if pdf is not None:
                 tus = (pdf[ts_col].astype("int64") // 1000).to_numpy()
                 vals = pdf[value_col].to_numpy(dtype="float64")
                 for i in range(len(pdf)):
@@ -2520,7 +2344,8 @@ class StreamFrame:
                 ctr = dict(zip(items, counts))
             else:
                 ctr, n = {}, 0
-            for pdf in _sorted_chunks(pdfs, ts_col):
+            pdf = _sorted_chunks(pdfs, ts_col)
+            if pdf is not None:
                 vals = pdf[col].astype(str)
                 n += len(vals)
                 for item, wt in vals.value_counts().items():
@@ -2624,10 +2449,13 @@ class StreamFrame:
             # running_agg at one partition), so they keep the session
             # width, which is already sized to the cluster.
             try:
-                plan = sink_df._jdf.queryExecution().analyzed().toString()
+                per_group = any(
+                    node_class(n) in ("FlatMapGroupsInPandasWithState", "MapInPandas")
+                    for n in plan_nodes(sink_df)
+                )
             except Exception:  # noqa: BLE001 — can't inspect: don't narrow
-                plan = "FlatMapGroupsInPandasWithState"
-            if "FlatMapGroupsInPandasWithState" in plan or "MapInPandas" in plan:
+                per_group = True
+            if per_group:
                 parts = None
         if parts is None:
             return writer.start()

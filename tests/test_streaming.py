@@ -928,123 +928,40 @@ def test_streaming_combinator_cuts(spark, tmp_path_factory):
         assert got == expect, f"{disc}: {got} != {expect}"
 
 
-def test_tws_gate_detects_missing_runtime(spark):
-    """The transformWithState gate must be FALSE here unless ALL three
-    runtime requirements hold: the API exists in pyspark 4.1 but its
-    protobuf state-protocol dependency is absent in this container (the
-    call crashes the TWS driver worker), and the gate must ALSO refuse
-    a session whose state store provider is not RocksDB (TWS rejects
-    the default HDFS-backed provider at query start even where protobuf
-    imports fine), so running_agg must stay on applyInPandasWithState
-    by default."""
-    from pyspark.sql.group import GroupedData
-
-    from eventkit_spark.streaming.stream import tws_available
-
-    assert hasattr(GroupedData, "transformWithStateInPandas")
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        has_proto = True
-    except ImportError:
-        has_proto = False
-    has_rocks = "RocksDB" in (
-        spark.conf.get("spark.sql.streaming.stateStore.providerClass", "")
-        or ""
-    )
-    assert tws_available(spark) == (has_proto and has_rocks)
-    # provider check alone must veto: default-provider session -> False
-    if not has_rocks:
-        assert not tws_available(spark)
-
-
-_PROVIDER_KEY = "spark.sql.streaming.stateStore.providerClass"
-
-
-def test_running_agg_tws_parity(spark, stream_dir):
-    """transformWithStateInPandas twin of running_agg matches the
-    classic handler — runs only where the TWS runtime exists (RocksDB
-    provider set FIRST: it is part of the gate)."""
-    from eventkit_spark.streaming.stream import tws_available
-
-    old = spark.conf.get(_PROVIDER_KEY, None)
-    spark.conf.set(
-        _PROVIDER_KEY,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        if not tws_available(spark):
-            pytest.skip("transformWithStateInPandas runtime (protobuf) not available")
-        sf = _stream(spark, stream_dir)
-        classic = sf.run_available_now(
-            sink_df=sf.running_agg(ema_n=10, use_tws=False), name="ek_tws_a"
-        )
-        tws = sf.run_available_now(
-            sink_df=sf.running_agg(ema_n=10, use_tws=True), name="ek_tws_b"
-        )
-        a = {(r["user_id"], r["rcount"]): (r["rsum"], round(r["ema"], 9)) for r in classic.collect()}
-        b = {(r["user_id"], r["rcount"]): (r["rsum"], round(r["ema"], 9)) for r in tws.collect()}
-        assert a == b
-    finally:
-        if old is None:
-            spark.conf.unset(_PROVIDER_KEY)
-        else:
-            spark.conf.set(_PROVIDER_KEY, old)
-
-
-def test_tws_processor_sorts_across_chunks():
-    """The TWS processor must order rows by event time across ALL Arrow
-    chunks of a key's micro-batch, not per chunk (the r7-ADVICE bug
-    class). Drives handleInputRows directly with a stub state handle
-    and two chunks whose event times interleave — runnable even while
-    the TWS runtime itself is protobuf-gated."""
+def test_sorted_chunks_one_frame_across_chunks():
+    """The state kernels' chunk helper returns a key group's micro-batch
+    as ONE frame sorted across ALL Arrow chunks (a per-chunk sort would
+    fold rows out of event-time order, the r7-ADVICE bug class), or
+    None when the group has no rows. Pure pandas, no Spark session."""
     import pandas as pd
 
-    from eventkit_spark.streaming.stream import _make_running_agg_processor
+    from eventkit_spark.streaming.stream import _sorted_chunks
 
-    class _StubState:
-        def __init__(self):
-            self._v = None
-
-        def exists(self):
-            return self._v is not None
-
-        def get(self):
-            return self._v
-
-        def update(self, v):
-            self._v = v
-
-    class _StubHandle:
-        def __init__(self):
-            self.state = _StubState()
-
-        def getValueState(self, name, schema):
-            return self.state
-
-    proc = _make_running_agg_processor(["k"], "ts", "v", ema_n=3)
-    handle = _StubHandle()
-    proc.init(handle)
-    # chunk 1 holds ts 0 and 2; chunk 2 holds ts 1 and 3 — a per-chunk
-    # sort would fold values in order 10,30,20,40 (rmax wrong at ts=2).
+    # chunk 1 holds ts 0 and 2, chunk 2 holds ts 1 and 3, and an empty
+    # chunk sits between them
     chunks = [
         pd.DataFrame({"k": [1, 1], "ts": [0, 2], "v": [10.0, 30.0]}),
+        pd.DataFrame({"k": pd.Series([], dtype="int64"),
+                      "ts": pd.Series([], dtype="int64"),
+                      "v": pd.Series([], dtype="float64")}),
         pd.DataFrame({"k": [1, 1], "ts": [1, 3], "v": [20.0, 40.0]}),
     ]
-    outs = pd.concat(list(proc.handleInputRows((1,), iter(chunks), None)), ignore_index=True)
-    assert list(outs["ts"]) == [0, 1, 2, 3]
-    assert list(outs["rcount"]) == [1, 2, 3, 4]
-    assert list(outs["rsum"]) == [10.0, 30.0, 60.0, 100.0]
-    assert list(outs["rmax"]) == [10.0, 20.0, 30.0, 40.0]
-    # state committed once per micro-batch, after the full drain
-    assert handle.state.get() == (4, 100.0, 10.0, 40.0, outs["ema"].iloc[-1])
-    # a second micro-batch resumes from committed state
-    more = pd.concat(
-        list(proc.handleInputRows((1,), iter([pd.DataFrame({"k": [1], "ts": [4], "v": [0.0]})]), None)),
-        ignore_index=True,
-    )
-    assert list(more["rcount"]) == [5]
-    assert list(more["rmin"]) == [0.0]
+    pdf = _sorted_chunks(iter(chunks), "ts")
+    assert list(pdf["ts"]) == [0, 1, 2, 3]
+    assert list(pdf["v"]) == [10.0, 20.0, 30.0, 40.0]
+
+    assert _sorted_chunks(iter([]), "ts") is None
+    assert _sorted_chunks(iter([chunks[1], chunks[1]]), "ts") is None
+
+    # takeuntil's key: notifier rows (__n=1) sort before source rows at
+    # an equal event time, across chunks
+    tagged = [
+        pd.DataFrame({"ts": [5, 1], "__n": [0, 0], "__v": [50.0, 10.0]}),
+        pd.DataFrame({"ts": [5, 3], "__n": [1, 0], "__v": [None, 30.0]}),
+    ]
+    pdf = _sorted_chunks(iter(tagged), ["ts", "__n"], ascending=[True, False])
+    assert list(zip(pdf["ts"], pdf["__n"])) == [(1, 0), (3, 0), (5, 1), (5, 0)]
+    assert list(pdf["__v"].fillna(-1.0)) == [10.0, 30.0, -1.0, 50.0]
 
 
 def test_streaming_store_dedup_and_probe(spark, tmp_path_factory):
@@ -2023,18 +1940,13 @@ def _state_node_input(df):
     """(name, type) of each column the pandas state node receives, read
     off the analyzed JVM plan tree by node class and ``output()`` — no
     plan-string parsing."""
-    def walk(node):
-        yield node
-        kids = node.children()
-        for i in range(kids.size()):
-            yield from walk(kids.apply(i))
+    from eventkit_spark.plans.audit import node_class, plan_nodes
 
-    plan = df._jdf.queryExecution().analyzed()
     nodes = [
-        n for n in walk(plan)
-        if n.getClass().getSimpleName() == "FlatMapGroupsInPandasWithState"
+        n for n in plan_nodes(df)
+        if node_class(n) == "FlatMapGroupsInPandasWithState"
     ]
-    assert len(nodes) == 1, plan.toString()
+    assert len(nodes) == 1, df._jdf.queryExecution().analyzed().toString()
     out = nodes[0].child().output()
     return [
         (out.apply(i).name(), out.apply(i).dataType().typeName())
@@ -2184,14 +2096,15 @@ def test_stream_state_width_derivation(spark, stream_dir):
     JVM-native state. The pandas state kernels keep the session width:
     their cost is per key group in Python, and narrowing them measured
     4-5x slower (running_agg 1.9 s -> 7.8 s at one partition)."""
-    from eventkit_spark.streaming.stream import (
-        _size_to_bytes,
-        _stream_shuffle_partitions,
-    )
+    from eventkit_spark.session import _size_to_bytes
+    from eventkit_spark.streaming.stream import _stream_shuffle_partitions
 
     assert _size_to_bytes("64m") == 64 << 20
     assert _size_to_bytes("2097152") == 2 << 20
     assert _size_to_bytes("1g") == 1 << 30
+    assert _size_to_bytes("100b") == 100
+    assert _size_to_bytes("64mb") == 64 << 20
+    assert _size_to_bytes("1.5g") == 3 << 29
     sess = int(spark.conf.get("spark.sql.shuffle.partitions"))
     adv = _size_to_bytes(
         spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes")
