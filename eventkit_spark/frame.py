@@ -130,8 +130,10 @@ class EventFrame:
         """Attach one empty stream per name as attributes of ``obj``
         (Event.init, event.py:470-480). Empty frames carry the default
         unary double payload; append with ``.merge``/``.chain``."""
+        from .sources.tables import local_frame
+
         for name in names:
-            df = spark.createDataFrame([], "seq long, ts timestamp, value double")
+            df = local_frame(spark, [], "seq long, ts timestamp, value double")
             setattr(
                 obj,
                 name,

@@ -11,16 +11,21 @@ import os
 
 from pyspark.sql import DataFrame
 
+from ..plans.audit import node_class, plan_nodes
 from ..session import _size_to_bytes, session_width
 
-# Logical-plan nodes under which converting to an RDD is plan-only
-# work: narrow ops over a file relation or an already-materialized
-# local relation. Anything else — a join, aggregate, window,
-# generator, another Python kernel — means `.rdd` would FINALIZE the
-# AQE plan and eagerly execute every upstream shuffle stage once for
-# the probe and again for the real query (r11 ADVICE item 1), so the
-# spread is skipped and the frame keeps its own parallelism.
-_CHEAP_NODES = ("Project", "Filter", "Relation", "LogicalRDD", "InMemoryRelation")
+# Optimized-plan node classes under which converting to an RDD is
+# plan-only work: narrow ops (a generator such as explode included)
+# over a file relation or an already-materialized local relation.
+# Anything else — a join, aggregate, window, another Python kernel —
+# means `.rdd` would FINALIZE the AQE plan and eagerly execute every
+# upstream shuffle stage once for the probe and again for the real
+# query (r11 ADVICE item 1), so the spread is skipped and the frame
+# keeps its own parallelism.
+_CHEAP_NODES = frozenset({
+    "Project", "Filter", "Generate", "LogicalRelation", "LogicalRDD",
+    "LocalRelation", "InMemoryRelation",
+})
 
 
 def spread(df: DataFrame) -> DataFrame:
@@ -38,9 +43,9 @@ def spread(df: DataFrame) -> DataFrame:
     - streaming frames are returned untouched (``.rdd`` throws on an
       unstarted stream; the per-micro-batch kernels are stateless and
       partition-invariant);
-    - the partition probe runs only when the optimized plan is
-      scan-shaped (``_CHEAP_NODES``), so it can never double-execute
-      upstream work;
+    - the partition probe runs only when every node class of the
+      optimized plan is in ``_CHEAP_NODES`` (scan-shaped), so it can
+      never double-execute upstream work;
     - a non-numeric shuffle-partitions conf falls back to
       ``defaultParallelism`` (session_width), and any probe failure
       (e.g. Spark Connect, where ``.rdd`` is unsupported) skips the
@@ -50,11 +55,8 @@ def spread(df: DataFrame) -> DataFrame:
         return df
     width = session_width(df.sparkSession)
     try:
-        plan = df._jdf.queryExecution().optimizedPlan().toString()
-        for line in plan.splitlines():
-            node = line.lstrip(" +-:").split(" ", 1)[0].split("[", 1)[0]
-            if node and not node.startswith(_CHEAP_NODES):
-                return df
+        if any(node_class(n) not in _CHEAP_NODES for n in plan_nodes(df, "optimized")):
+            return df
         if df.rdd.getNumPartitions() < width:
             return df.repartition(width)
     except Exception:  # noqa: BLE001 — Connect / exotic plans: no spread

@@ -17,6 +17,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..sources.tables import local_frame
 from .similarity import _as_double
 
 
@@ -836,7 +837,7 @@ def ivfpq_topk(
         (qids[i], int(c)) for i in range(nq) for c in probe[i]
     ]
     spark = corpus.sparkSession
-    probe_df = spark.createDataFrame(probe_rows, "query_id long, cell int")
+    probe_df = local_frame(spark, probe_rows, "query_id long, cell int")
     qpos = {qid: i for i, qid in enumerate(qids)}
 
     cand = coded.join(F.broadcast(probe_df), "cell").filter(

@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window as W, functions as F
 
 from ..session import session_width
+from ..sources.tables import local_frame, read_parquet
 from ._spread import boundary_if_large
 
 
@@ -110,7 +111,7 @@ def exact_dedup_incremental(
     from pyspark.errors import AnalysisException
 
     try:
-        store = spark.read.parquet(f"{store_path}/hashes")
+        store = read_parquet(spark, f"{store_path}/hashes")
         fresh = batch.join(store, ["h", "h2"], "left_anti")
     except AnalysisException as e:
         # ONLY a missing store means "first batch". Any other analysis
@@ -127,7 +128,7 @@ def exact_dedup_incremental(
             raise
         fresh = batch
     fresh.write.mode("overwrite").parquet(f"{store_path}/last_batch")
-    accepted = spark.read.parquet(f"{store_path}/last_batch")
+    accepted = read_parquet(spark, f"{store_path}/last_batch")
     accepted.select("h", "h2").write.mode("append").parquet(f"{store_path}/hashes")
     return accepted.select(id_col, "n_dups_in_batch")
 
@@ -300,8 +301,8 @@ def minhash_signatures(
     map-side partial aggregation, so the shuffle carries one row per doc.
     """
     mh = _minhash_cols(docs, num_hashes, k, text_col, id_col, portable)
-    sig = F.array(*[F.col(f"__m{i}") for i in range(num_hashes)])
-    return mh.select("id", sig.alias("signature"))
+    sig = ", ".join(f"__m{i}" for i in range(num_hashes))
+    return mh.selectExpr("id", f"array({sig}) AS signature")
 
 
 # portable universal-hash family over a 31-bit shingle fold:
@@ -332,18 +333,16 @@ def _minhash_cols(docs, num_hashes, k, text_col, id_col, portable=False):
         )
         hashed = exploded.select("id", sh_fold.alias("__sh64"))
         mins = [
-            F.min(
-                (F.lit(_MH_A[i]) * F.col("__sh64") + F.lit(_MH_B[i])) % F.lit(_MH_P)
-            ).alias(f"__m{i}")
+            f"min(({_MH_A[i]} * __sh64 + {_MH_B[i]}) % {_MH_P}) AS __m{i}"
             for i in range(num_hashes)
         ]
     else:
         hashed = exploded.select("id", F.xxhash64("__sh").alias("__sh64"))
-        mins = [
-            F.min(F.xxhash64("__sh64", F.lit(i))).alias(f"__m{i}")
-            for i in range(num_hashes)
-        ]
-    return hashed.groupBy("id").agg(*mins)
+        mins = [f"min(xxhash64(__sh64, {i})) AS __m{i}" for i in range(num_hashes)]
+    # wide column sets are SQL text, one parse per output column: the
+    # Column API pays a py4j round trip per expression NODE, thousands
+    # per query at these widths, for the same analyzed expressions
+    return hashed.groupBy("id").agg(*[F.expr(m) for m in mins])
 
 
 def _band_buckets(docs, num_hashes, bands, k, text_col, id_col, portable=False):
@@ -355,22 +354,15 @@ def _band_buckets(docs, num_hashes, bands, k, text_col, id_col, portable=False):
     (``minhash_store_init`` / ``minhash_dedup_incremental``)."""
     r = num_hashes // bands
     mh = _minhash_cols(docs, num_hashes, k, text_col, id_col, portable)
-    return mh.select(
-        "id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.xxhash64(
-                            F.concat_ws(",", *[F.col(f"__m{b * r + j}") for j in range(r)])
-                        ).alias("bucket"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("bb"),
-    ).select("id", "bb.band", "bb.bucket")
+    structs = ", ".join(
+        f"struct({b} AS band, xxhash64(concat_ws(',', "
+        + ", ".join(f"__m{b * r + j}" for j in range(r))
+        + ")) AS bucket)"
+        for b in range(bands)
+    )
+    return mh.selectExpr("id", f"explode(array({structs})) AS bb").select(
+        "id", "bb.band", "bb.bucket"
+    )
 
 
 def minhash_store_init(
@@ -400,8 +392,8 @@ def minhash_store_init(
     banded.select("band", "bucket").distinct().write.mode("overwrite").partitionBy(
         "band"
     ).parquet(f"{store_path}/buckets")
-    meta = docs.sparkSession.createDataFrame(
-        [(num_hashes, bands, k, bool(portable))],
+    meta = local_frame(
+        docs.sparkSession, [(num_hashes, bands, k, bool(portable))],
         "num_hashes int, bands int, k int, portable boolean",
     )
     meta.write.mode("overwrite").parquet(f"{store_path}/meta")
@@ -461,12 +453,12 @@ def minhash_dedup_incremental(
     or the store.
     """
     spark = new_docs.sparkSession
-    m = spark.read.parquet(f"{store_path}/meta").first()
+    m = read_parquet(spark, f"{store_path}/meta").first()
     banded = _band_buckets(
         new_docs, m.num_hashes, m.bands, m.k, text_col, id_col, m.portable
     )
     banded = banded.persist() if commit else banded.localCheckpoint(eager=False)
-    store = spark.read.parquet(f"{store_path}/buckets").select("band", "bucket")
+    store = read_parquet(spark, f"{store_path}/buckets").select("band", "bucket")
     hits = (
         banded.join(store, ["band", "bucket"], "left_semi").select("id").distinct()
     )
@@ -493,7 +485,7 @@ def minhash_dedup_incremental(
     if not commit:
         return res
     res.write.mode("overwrite").parquet(f"{store_path}/last_batch")
-    accepted = spark.read.parquet(f"{store_path}/last_batch")
+    accepted = read_parquet(spark, f"{store_path}/last_batch")
     kept = accepted.filter(F.col("status") == "kept").select(
         F.col(id_col).alias("id")
     )
@@ -587,11 +579,11 @@ def _cc_driver_labels(edges, spark, id_type: str):
     passes with zero per-round Spark jobs. Returns the (id, cluster)
     labels frame (edge-touched nodes only, like the loop)."""
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
 
     pdf = edges.toPandas()
     if not len(pdf):
-        return spark.createDataFrame([], f"id {id_type}, cluster {id_type}")
+        return local_frame(spark, [], f"id {id_type}, cluster {id_type}")
     ids = np.unique(pdf["src"].to_numpy())  # symmetrized: src covers all
     s = np.searchsorted(ids, pdf["src"].to_numpy())
     d = np.searchsorted(ids, pdf["dst"].to_numpy())
@@ -603,8 +595,9 @@ def _cc_driver_labels(edges, spark, id_type: str):
         if np.array_equal(m, label):
             break
         label = m
-    return spark.createDataFrame(
-        pd.DataFrame({"id": ids, "cluster": ids[label]})
+    return local_frame(
+        spark, pa.table({"id": ids, "cluster": ids[label]}),
+        f"id {id_type}, cluster {id_type}",
     )
 
 
@@ -1074,15 +1067,15 @@ def contamination_store_init(
         .write.mode("overwrite")
         .parquet(f"{store_path}/hashes")
     )
-    held = spark.read.parquet(f"{store_path}/hashes")
+    held = read_parquet(spark, f"{store_path}/hashes")
     words, m_bits, n_probes = _bloom_build_distributed(held, fpp)
     nz = np.flatnonzero(words)
     signed = words.view(np.int64)
-    spark.createDataFrame(
-        [(int(i), int(signed[i])) for i in nz] or [(0, 0)], "idx long, w long"
+    local_frame(
+        spark, [(int(i), int(signed[i])) for i in nz] or [(0, 0)], "idx long, w long"
     ).write.mode("overwrite").parquet(f"{store_path}/bloom")
-    spark.createDataFrame(
-        [(int(k), float(fpp), int(m_bits), int(n_probes))],
+    local_frame(
+        spark, [(int(k), float(fpp), int(m_bits), int(n_probes))],
         "k int, fpp double, m_bits long, n_probes int",
     ).write.mode("overwrite").parquet(f"{store_path}/meta")
 
@@ -1106,14 +1099,14 @@ def decontaminate_incremental(
     import numpy as np
 
     spark = docs.sparkSession
-    m = spark.read.parquet(f"{store_path}/meta").first()
-    rows = spark.read.parquet(f"{store_path}/bloom").collect()
+    m = read_parquet(spark, f"{store_path}/meta").first()
+    rows = read_parquet(spark, f"{store_path}/bloom").collect()
     words = np.zeros((m.m_bits + 63) // 64, dtype=np.uint64)
     if rows:
         widx = np.array([r["idx"] for r in rows], dtype=np.int64)
         ws = np.array([r["w"] for r in rows], dtype=np.int64).view(np.uint64)
         words[widx] |= ws
-    held = spark.read.parquet(f"{store_path}/hashes")
+    held = read_parquet(spark, f"{store_path}/hashes")
     return _bloom_probe(
         docs, (words, m.m_bits, m.n_probes), held, m.k, min_overlap,
         text_col, id_col,
@@ -1172,22 +1165,16 @@ def simhash64(
     # count: bit i of the fingerprint is set iff ones_i > zeros_i, i.e.
     # 2*sum_i > n — identical sign semantics (ties -> 0) at ~35% less
     # aggregate expression work per token row
-    aggs = [
-        F.sum(F.shiftrightunsigned(F.col("h"), i).bitwiseAND(F.lit(1))).alias(
-            f"__b{i}"
-        )
+    # (the 64 sums and the 64-term OR are SQL text, one parse per
+    # output column — see _minhash_cols)
+    aggs = [F.expr(f"sum(shiftrightunsigned(h, {i}) & 1) AS __b{i}") for i in range(64)]
+    v = tokens.groupBy("id").agg(*aggs, F.count("*").alias("__n"))
+    fp = " | ".join(
+        f"CASE WHEN __b{i} * 2 > __n THEN shiftleft(CAST(1 AS BIGINT), {i}) "
+        "ELSE CAST(0 AS BIGINT) END"
         for i in range(64)
-    ] + [F.count("*").alias("__n")]
-    v = tokens.groupBy("id").agg(*aggs)
-    fp = F.lit(0).cast("long")
-    for i in range(64):
-        fp = fp.bitwiseOR(
-            F.when(
-                F.col(f"__b{i}") * 2 > F.col("__n"),
-                F.shiftleft(F.lit(1).cast("long"), i),
-            ).otherwise(F.lit(0).cast("long"))
-        )
-    return v.select("id", fp.alias("simhash"))
+    )
+    return v.selectExpr("id", f"CAST(0 AS BIGINT) | {fp} AS simhash")
 
 
 def _simhash_chunks(sh):
@@ -1196,23 +1183,13 @@ def _simhash_chunks(sh):
     matches exactly. Shared by the in-memory pair search and the
     persisted-store probe so the blocking can never drift between them.
     """
-    return sh.select(
-        "id",
-        "simhash",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(c).alias("chunk"),
-                        F.shiftrightunsigned(F.col("simhash"), 16 * c)
-                        .bitwiseAND(F.lit(0xFFFF))
-                        .alias("val"),
-                    )
-                    for c in range(4)
-                ]
-            )
-        ).alias("cc"),
-    ).select("id", "simhash", "cc.chunk", "cc.val")
+    chunks = ", ".join(
+        f"struct({c} AS chunk, shiftrightunsigned(simhash, {16 * c}) & 65535 AS val)"
+        for c in range(4)
+    )
+    return sh.selectExpr("id", "simhash", f"explode(array({chunks})) AS cc").select(
+        "id", "simhash", "cc.chunk", "cc.val"
+    )
 
 
 def simhash_near_dups(
@@ -1314,8 +1291,9 @@ def simhash_store_init(
         .partitionBy("chunk")
         .parquet(f"{store_path}/postings")
     )
-    docs.sparkSession.createDataFrame(
-        [(int(max_hamming), bool(portable))], "max_hamming int, portable boolean"
+    local_frame(
+        docs.sparkSession, [(int(max_hamming), bool(portable))],
+        "max_hamming int, portable boolean",
     ).write.mode("overwrite").parquet(f"{store_path}/meta")
 
 
@@ -1371,7 +1349,7 @@ def simhash_dedup_incremental(
     postings append. No text ever enters an exchange or the store.
     """
     spark = new_docs.sparkSession
-    m = spark.read.parquet(f"{store_path}/meta").first()
+    m = read_parquet(spark, f"{store_path}/meta").first()
     # commit path: persist (materialize, reuse for the append,
     # unpersist at the end — an explicit release point exists).
     # dry run: lazy localCheckpoint — one shared fingerprint pass for
@@ -1382,7 +1360,7 @@ def simhash_dedup_incremental(
     else:
         sh = sh.localCheckpoint(eager=False)
     chunks = _simhash_chunks(sh)
-    store = spark.read.parquet(f"{store_path}/postings")
+    store = read_parquet(spark, f"{store_path}/postings")
     hits = (
         chunks.join(
             store.withColumnRenamed("simhash", "__sfp"), ["chunk", "val"]
@@ -1438,7 +1416,7 @@ def simhash_dedup_incremental(
     if not commit:
         return res.select(id_col, "status")
     res.write.mode("overwrite").parquet(f"{store_path}/last_batch")
-    accepted = spark.read.parquet(f"{store_path}/last_batch")
+    accepted = read_parquet(spark, f"{store_path}/last_batch")
     kept = accepted.filter(F.col("status") == "kept").select(
         F.col(id_col).alias("id")
     )

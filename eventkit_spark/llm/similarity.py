@@ -24,6 +24,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..sources.tables import local_frame, read_parquet
+
 
 def _as_double(col):
     return F.transform(col, lambda x: x.cast("double"))
@@ -332,7 +334,7 @@ def ivf_index_write(
     c.write.mode("overwrite").partitionBy("cell").parquet(f"{path}/cells")
     spark = corpus.sparkSession
     rows = [(int(i), [float(x) for x in cent_mat[i]]) for i in range(len(cent_mat))]
-    spark.createDataFrame(rows, "cell int, cv array<double>").coalesce(1).write.mode(
+    local_frame(spark, rows, "cell int, cv array<double>").coalesce(1).write.mode(
         "overwrite"
     ).parquet(f"{path}/centroids")
 
@@ -356,7 +358,7 @@ def ivf_index_append(
     import numpy as np
 
     spark = new_vectors.sparkSession
-    cent_rows = spark.read.parquet(f"{path}/centroids").orderBy("cell").collect()
+    cent_rows = read_parquet(spark, f"{path}/centroids").orderBy("cell").collect()
     cent_mat = np.stack([np.array(r["cv"]) for r in cent_rows])
     c = new_vectors.select(
         F.col(id_col).alias("neighbor_id"), _as_double(F.col(vec_col)).alias("cv")
@@ -371,7 +373,7 @@ def ivf_index_stats(spark, path: str) -> DataFrame:
     overfull cells mean probes re-rank oversized candidate lists). The
     scan reads ONLY the partition column, so this is file-listing-cheap
     even on a huge index."""
-    cells = spark.read.parquet(f"{path}/cells").select("cell")
+    cells = read_parquet(spark, f"{path}/cells").select("cell")
     tot = cells.groupBy().agg(F.count("*").alias("__t"))
     return (
         cells.groupBy("cell")
@@ -406,7 +408,7 @@ def ivf_index_topk(
 
     from pyspark.sql import Window as W
 
-    cent_rows = spark.read.parquet(f"{path}/centroids").orderBy("cell").collect()
+    cent_rows = read_parquet(spark, f"{path}/centroids").orderBy("cell").collect()
     cent_mat = np.stack([np.array(r["cv"]) for r in cent_rows])
     q = queries.select(
         F.col(id_col).alias("query_id"), _as_double(F.col(vec_col)).alias("qv")
@@ -415,7 +417,7 @@ def ivf_index_topk(
         F.explode(_cell_assign_kernel(cent_mat, nprobe)(F.col("qv"))).alias("cell"),
     )
     probe_cells = sorted({int(r["cell"]) for r in q.select("cell").distinct().collect()})
-    cells = spark.read.parquet(f"{path}/cells").filter(F.col("cell").isin(probe_cells))
+    cells = read_parquet(spark, f"{path}/cells").filter(F.col("cell").isin(probe_cells))
     cand = cells.join(F.broadcast(q), on="cell").filter(
         F.col("neighbor_id") != F.col("query_id")
     )
@@ -588,8 +590,8 @@ def embedding_near_dups(
         if dim is None:
             row = corpus.select(F.size(F.col(vec_col)).alias("d")).first()
             if row is None:
-                return corpus.sparkSession.createDataFrame(
-                    [], "id_a long, id_b long, cos double"
+                return local_frame(
+                    corpus.sparkSession, [], "id_a long, id_b long, cos double"
                 )
             dim = int(row["d"])
         plane_mat = np.array(

@@ -10,6 +10,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from ..sources.tables import local_frame, read_parquet
 from ._spread import boundary_if_large as _boundary_if_large, spread as _spread
 
 # Tiny public stopword marker sets per language (heuristic language ID).
@@ -863,8 +864,8 @@ def phrase_hits(
         for j, w in enumerate(words):
             terms.append((pid, j, w))
     spark = docs.sparkSession
-    tdim = spark.createDataFrame(terms, "pid int, j int, w string")
-    ldim = spark.createDataFrame(lens, "pid int, phrase string, n int")
+    tdim = local_frame(spark, terms, "pid int, j int, w string")
+    ldim = local_frame(spark, lens, "pid int, phrase string, n int")
     toks = docs.select(
         F.col(id_col),
         F.posexplode(
@@ -941,8 +942,8 @@ def blocklist_verdicts(
         len_rows.append((mid, 1, len(words)))
         mid += 1
     spark = docs.sparkSession
-    tdim = spark.createDataFrame(dim_rows, "mid int, j int, w string")
-    ldim = spark.createDataFrame(len_rows, "mid int, is_phrase int, n int")
+    tdim = local_frame(spark, dim_rows, "mid int, j int, w string")
+    ldim = local_frame(spark, len_rows, "mid int, is_phrase int, n int")
     toks = docs.select(
         F.col(id_col),
         F.posexplode(
@@ -999,8 +1000,8 @@ def keyword_hits(
     else:
         if not keywords:
             raise ValueError("keyword_hits() needs a non-empty keyword set")
-        kw = docs.sparkSession.createDataFrame(
-            [(str(k).lower(),) for k in keywords], "keyword string"
+        kw = local_frame(
+            docs.sparkSession, [(str(k).lower(),) for k in keywords], "keyword string"
         )
     kw = kw.distinct()
     toks = docs.select(
@@ -1494,15 +1495,15 @@ def stupid_backoff_with_store(
     serves any backoff penalty."""
     spark = docs.sparkSession
     ucnt = (
-        spark.read.parquet(f"{store_path}/uni")
+        read_parquet(spark, f"{store_path}/uni")
         .groupBy("w").agg(F.sum("cu").alias("cu"))
     )
     bcnt = (
-        spark.read.parquet(f"{store_path}/bi")
+        read_parquet(spark, f"{store_path}/bi")
         .groupBy("w1", "w2").agg(F.sum("cb").alias("cb"))
     )
     tcnt = (
-        spark.read.parquet(f"{store_path}/tri")
+        read_parquet(spark, f"{store_path}/tri")
         .groupBy("w1", "w2", "w3").agg(F.sum("ct").alias("ct"))
     )
     return _sb_score(docs, ucnt, bcnt, tcnt, alpha, text_col, id_col)

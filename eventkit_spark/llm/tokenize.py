@@ -36,6 +36,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from ..sources.tables import local_frame, read_parquet
 from .text import BPE_REGEX
 
 __all__ = [
@@ -250,8 +251,8 @@ def _fit(
         if len(head) <= driver_types_max:
             merges, final = _fit_local(head, n_merges, seed_py)
             spark = docs.sparkSession
-            wf = spark.createDataFrame(
-                [(w, f, s) for w, f, s in final],
+            wf = local_frame(
+                spark, final,
                 "word string, freq long, syms array<string>",
             )
             return merges, wf
@@ -312,8 +313,8 @@ def bpe_train(
     merges, wf = _fit(docs, n_merges, text_col, min_freq, driver_types_max)
     wf.unpersist()
     spark = docs.sparkSession
-    return spark.createDataFrame(
-        merges, "rank int, lhs string, rhs string, pair_count long"
+    return local_frame(
+        spark, merges, "rank int, lhs string, rhs string, pair_count long"
     )
 
 
@@ -374,8 +375,8 @@ def bpe_train_bytes(
     )
     wf.unpersist()
     spark = docs.sparkSession
-    return spark.createDataFrame(
-        merges, "rank int, lhs string, rhs string, pair_count long"
+    return local_frame(
+        spark, merges, "rank int, lhs string, rhs string, pair_count long"
     )
 
 
@@ -614,15 +615,15 @@ def bpe_store_init(
     merges, wf = _fit(docs, n_merges, text_col, min_freq, driver_types_max)
     wf.unpersist()
     spark = docs.sparkSession
-    spark.createDataFrame(
-        merges, "rank int, lhs string, rhs string, pair_count long"
+    local_frame(
+        spark, merges, "rank int, lhs string, rhs string, pair_count long"
     ).write.mode("overwrite").parquet(f"{store_path}/merges")
 
 
 def bpe_load_merges(spark, store_path: str) -> list[tuple[str, str]]:
     """Read a persisted ruleset back in learned order."""
     rows = (
-        spark.read.parquet(f"{store_path}/merges").orderBy("rank").collect()
+        read_parquet(spark, f"{store_path}/merges").orderBy("rank").collect()
     )
     return [(r["lhs"], r["rhs"]) for r in rows]
 

@@ -44,6 +44,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from ..sources.tables import local_frame, read_parquet
 from .tokenize import pretoken_counts
 
 __all__ = [
@@ -169,8 +170,8 @@ def _localized_vocab(vocab: DataFrame) -> tuple[DataFrame, int]:
     never silently collected (see ``_max_piece_len``)."""
     rows = vocab.select("piece", "score").collect()
     L = max((len(r["piece"]) for r in rows), default=1)
-    local = vocab.sparkSession.createDataFrame(
-        [(r["piece"], int(r["score"])) for r in rows],
+    local = local_frame(
+        vocab.sparkSession, [(r["piece"], int(r["score"])) for r in rows],
         "piece string, score long",
     )
     return local, L
@@ -511,8 +512,8 @@ def unigram_train(
         types = wt.select("word")
         cand = _piece_candidates(types, L).persist()
         for t in range(1, iters + 1):
-            vocab_df = spark.createDataFrame(
-                sorted(cur.items()), "piece string, score long"
+            vocab_df = local_frame(
+                spark, sorted(cur.items()), "piece string, score long"
             )
             wm = wt.join(
                 _packed_scores(types, vocab_df, L, cand=cand), "word"
@@ -558,8 +559,8 @@ def unigram_train(
         wt.unpersist()
         if cand is not None:
             cand.unpersist()
-    return spark.createDataFrame(
-        sorted(cur.items()), "piece string, score long"
+    return local_frame(
+        spark, sorted(cur.items()), "piece string, score long"
     )
 
 
@@ -652,5 +653,5 @@ def unigram_encode_with_store(
     ``unigram_store_init``) — the inference path. Unknown characters
     fall back to the 0-score <unk> char piece, so a store trained on
     one corpus encodes any other."""
-    vocab = docs.sparkSession.read.parquet(f"{store_path}/vocab")
+    vocab = read_parquet(docs.sparkSession, f"{store_path}/vocab")
     return unigram_encode(docs, vocab=vocab, text_col=text_col, id_col=id_col)

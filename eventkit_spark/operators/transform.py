@@ -192,9 +192,11 @@ def iterate(ef, values, scaled: bool = False, partitions: int | None = None):
     side table is bounded; ``scaled=True`` (unkeyed only) derives the
     row index from select.rank_scaled instead of a single-task window.
     """
-    spark = ef.df.sparkSession
-    side = spark.createDataFrame(
-        [(i, v) for i, v in enumerate(values)], schema=f"{RN} long, __ek_v2 {_lit_type(values)}"
+    from ..sources.tables import local_frame
+
+    side = local_frame(
+        ef.df.sparkSession, list(enumerate(values)),
+        f"{RN} long, __ek_v2 {_lit_type(values)}",
     )
     if scaled:
         from .select import rank_scaled

@@ -16,18 +16,20 @@ def physical_plan(df: DataFrame) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def plan_nodes(df: DataFrame) -> list:
-    """Every node of ``df``'s analyzed JVM plan tree, parent before
-    children. Callers test node CLASSES (``node_class``), never the
-    plan's string rendering, so a wording change across Spark versions
-    cannot flip a check silently."""
+def plan_nodes(df: DataFrame, phase: str = "analyzed") -> list:
+    """Every node of ``df``'s JVM plan tree in ``phase`` (``"analyzed"``
+    or ``"optimized"``), parent before children. Callers test node
+    CLASSES (``node_class``), never the plan's string rendering, so a
+    wording change across Spark versions cannot flip a check silently."""
     def walk(node):
         yield node
         kids = node.children()
         for i in range(kids.size()):
             yield from walk(kids.apply(i))
 
-    return list(walk(df._jdf.queryExecution().analyzed()))
+    qe = df._jdf.queryExecution()
+    root = {"analyzed": qe.analyzed, "optimized": qe.optimizedPlan}[phase]()
+    return list(walk(root))
 
 
 def node_class(node) -> str:

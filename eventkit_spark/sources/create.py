@@ -19,6 +19,7 @@ from typing import Iterable, Sequence
 from pyspark.sql import SparkSession, Window as W, functions as F
 
 from ..frame import EventFrame
+from .tables import local_frame
 
 EPOCH = dt.datetime(2024, 1, 1)
 
@@ -64,7 +65,7 @@ def sequence(
     times = list(times) if times is not None else [i * interval for i in range(len(values))]
     rows = [(i, start + dt.timedelta(seconds=times[i]), v) for i, v in enumerate(values)]
     vtype = _sql_type(values)
-    df = spark.createDataFrame(rows, schema=f"seq long, ts timestamp, value {vtype}")
+    df = local_frame(spark, rows, schema=f"seq long, ts timestamp, value {vtype}")
     return EventFrame(df, value_cols=["value"], seq_col="seq", ts_col="ts")
 
 
@@ -172,5 +173,5 @@ def marble(
             continue
         rows.append((seq, start + dt.timedelta(seconds=pos * interval), ch))
         seq += 1
-    df = spark.createDataFrame(rows, schema="seq long, ts timestamp, value string")
+    df = local_frame(spark, rows, schema="seq long, ts timestamp, value string")
     return EventFrame(df, value_cols=["value"], seq_col="seq", ts_col="ts", end_ts=end_ts)

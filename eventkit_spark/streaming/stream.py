@@ -2172,11 +2172,11 @@ class StreamFrame:
         def handler(key, pdfs, state: GroupState):
             lvl, tr = state.get if state.exists else (None, None)
             # self-contained rounder (executors can't import the repo
-            # package when the driver runs outside it)
-            import math
-
+            # package when the driver runs outside it). numpy's, as in
+            # the batch twin: a NULL value's NaN rounds to NaN and
+            # leaves as NULL (math.floor raises on NaN)
             def _r6(x):
-                return math.copysign(math.floor(abs(x) * 1e6 + 0.5), x) / 1e6
+                return np.copysign(np.floor(np.abs(x) * 1e6 + 0.5), x) / 1e6
 
             outs = []
             pdf = _sorted_chunks(pdfs, ts_col)
@@ -2221,10 +2221,9 @@ class StreamFrame:
 
         def handler(key, pdfs, state: GroupState):
             x, p = state.get if state.exists else (None, None)
-            import math
 
-            def _r6(v):
-                return math.copysign(math.floor(abs(v) * 1e6 + 0.5), v) / 1e6
+            def _r6(v):  # NaN-safe, as in holt
+                return np.copysign(np.floor(np.abs(v) * 1e6 + 0.5), v) / 1e6
 
             outs = []
             pdf = _sorted_chunks(pdfs, ts_col)

@@ -507,6 +507,89 @@ def test_source_quota_caps(spark):
     assert flat.count() == 21
 
 
+def _column_api_simhash(tokens):
+    """simhash64's sign-sum aggregate and OR as Column-API expressions
+    (the reference the SQL-text form must equal bit for bit)."""
+    aggs = [
+        F.sum(F.shiftrightunsigned(F.col("h"), i).bitwiseAND(F.lit(1))).alias(f"__b{i}")
+        for i in range(64)
+    ] + [F.count("*").alias("__n")]
+    v = tokens.groupBy("id").agg(*aggs)
+    fp = F.lit(0).cast("long")
+    for i in range(64):
+        fp = fp.bitwiseOR(
+            F.when(F.col(f"__b{i}") * 2 > F.col("__n"), F.shiftleft(F.lit(1).cast("long"), i))
+            .otherwise(F.lit(0).cast("long"))
+        )
+    return v.select("id", fp.alias("simhash"))
+
+
+def _column_api_minhash(hashed, num_hashes, bands, portable):
+    """_minhash_cols' min aggregates and _band_buckets' band structs as
+    Column-API expressions, over the (id, __sh64) hashed shingles."""
+    from eventkit_spark.llm.dedup import _MH_A, _MH_B, _MH_P
+
+    if portable:
+        mins = [
+            F.min((F.lit(_MH_A[i]) * F.col("__sh64") + F.lit(_MH_B[i])) % F.lit(_MH_P))
+            .alias(f"__m{i}")
+            for i in range(num_hashes)
+        ]
+    else:
+        mins = [F.min(F.xxhash64("__sh64", F.lit(i))).alias(f"__m{i}") for i in range(num_hashes)]
+    mh = hashed.groupBy("id").agg(*mins)
+    r = num_hashes // bands
+    sig = mh.select("id", F.array(*[F.col(f"__m{i}") for i in range(num_hashes)]).alias("signature"))
+    structs = [
+        F.struct(
+            F.lit(b).alias("band"),
+            F.xxhash64(F.concat_ws(",", *[F.col(f"__m{b * r + j}") for j in range(r)])).alias("bucket"),
+        )
+        for b in range(bands)
+    ]
+    banded = mh.select("id", F.explode(F.array(*structs)).alias("bb")).select(
+        "id", "bb.band", "bb.bucket"
+    )
+    return sig, banded
+
+
+def test_wide_sql_text_matches_column_api(spark):
+    """The wide column sets built as SQL text (simhash64's 64 sums and
+    64-term OR, the minhash mins, signature array and band buckets) give
+    the same rows as the Column-API form, for both hash families."""
+    from eventkit_spark.llm import dedup
+
+    docs = load_table(spark, SF, "documents")
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.collect())
+
+    tokens = docs.select(
+        F.col("doc_id").alias("id"),
+        F.explode(F.split(F.lower(F.trim(F.col("text"))), r"\s+")).alias("tok"),
+    ).select("id", F.xxhash64("tok").alias("h"))
+    assert rows(dedup.simhash64(docs)) == rows(_column_api_simhash(tokens))
+    for portable in (False, True):
+        mh = dedup._minhash_cols(docs, 16, 3, "text", "doc_id", portable)
+        ex = docs.select(
+            F.col("doc_id").alias("id"),
+            F.explode(dedup._shingles(F.col("text"), 3)).alias("__sh"),
+        )
+        fold = (
+            F.conv(F.substring(F.md5(F.col("__sh")), 1, 15), 16, 10).cast("long")
+            % F.lit(1 << 31)
+            if portable else F.xxhash64("__sh")
+        )
+        sig, banded = _column_api_minhash(ex.select("id", fold.alias("__sh64")), 16, 4, portable)
+        assert rows(mh.select("id", *[f"__m{i}" for i in range(16)])) == rows(
+            sig.select("id", *[F.col("signature")[i] for i in range(16)])
+        )
+        got_sig = dedup.minhash_signatures(docs, num_hashes=16, portable=portable)
+        assert rows(got_sig) == rows(sig)
+        got_band = dedup._band_buckets(docs, 16, 4, 3, "text", "doc_id", portable)
+        assert rows(got_band) == rows(banded)
+
+
 def test_simhash_posting_list_pairs(spark):
     """Exact duplicates land at hamming 0 in every chunk; the posting
     list path must emit each pair exactly once, never (b, a) twins."""
@@ -2909,3 +2992,26 @@ def test_spread_guards(spark):
     # already-wide input: no repartition (identity plan)
     wide = docs.repartition(width + 3).select("doc_id")
     assert spread(wide) is wide
+
+
+def test_spread_exact_node_names(spark, tmp_path):
+    """The scan-shape gate matches optimized-plan node CLASSES exactly:
+    an explode (Generate) over a one-split scan is spread to the session
+    width — the plan shape of mm_video_features' post-explode decode,
+    which the old line-prefix match left serial — while a frame with an
+    Aggregate keeps its plan."""
+    from eventkit_spark.llm._spread import spread
+    from eventkit_spark.plans.audit import node_class, plan_nodes
+    from eventkit_spark.session import session_width
+    from eventkit_spark.sources.tables import read_parquet
+
+    width = session_width(spark)
+    path = str(tmp_path / "one_split")
+    spark.range(64).selectExpr("id", "array(id, id + 1) AS arr").coalesce(1).write.parquet(path)
+    scan = read_parquet(spark, path)
+    assert scan.rdd.getNumPartitions() == 1
+    exploded = scan.select("id", F.explode("arr").alias("x"))
+    assert "Generate" in {node_class(n) for n in plan_nodes(exploded, "optimized")}
+    assert spread(exploded).rdd.getNumPartitions() == width
+    agg = exploded.groupBy("id").agg(F.sum("x").alias("s"))
+    assert spread(agg) is agg

@@ -359,7 +359,12 @@ def test_headline_shuffle_ceilings(spark):
     # fan the 151 plan constructions out over a thread pool: planning is
     # driver/JVM work and thread-safe, and this test was the single
     # slowest in the suite at ~170 s serial (r12, VERDICT item 2 — the
-    # driver's verify window could no longer fit the suite)
+    # driver's verify window could no longer fit the suite). Sharing the
+    # session across threads is safe because the builders set only
+    # idempotent constant confs (nanosAsLong=true and the UTC time
+    # zone, the same values every time) and read parquet through
+    # sources.tables.read_parquet, whose schema memo is lock-guarded: a
+    # racing miss re-infers a schema, never returns another table's.
     with ThreadPoolExecutor(max_workers=8) as ex:
         hits = [r for r in ex.map(check, SHUFFLE_CEILING.items()) if r]
     over = {name: (n, ceiling) for name, n, ceiling in hits}
@@ -840,6 +845,8 @@ def test_no_vacuous_oracles_at_smallest_sf():
         except Exception as ex:  # noqa: BLE001 — collect, report all at once
             return ("err", (name, str(ex)[:120]))
 
+    # the pool runs DuckDB only, one connection per thread: no Spark
+    # session, so no shared conf and no schema memo to race on
     with ThreadPoolExecutor(max_workers=8) as ex:
         hits = [r for r in ex.map(check, e.oracle_sql().items()) if r]
     errs = [v for k, v in hits if k == "err"]

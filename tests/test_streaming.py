@@ -868,6 +868,61 @@ def test_streaming_kalman(spark, stream_dir):
     assert sp == bp and len(sp) == 1000
 
 
+def test_streaming_holt_kalman_null_values_match_batch(spark, tmp_path):
+    """NULL values: streaming holt / kalman1d == their batch twins over a
+    seeded stream with ~15% NULL values (one key starts on a NULL),
+    replayed as three micro-batches so a NaN-poisoned state carries
+    across batch boundaries. Before, the streaming rounder raised
+    ``cannot convert float NaN to integer`` on the first NULL."""
+    import datetime as dt
+
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from eventkit_spark.sources.tables import from_dataframe
+    from eventkit_spark.streaming import file_stream
+
+    rng = np.random.default_rng(20261018)
+    n, keys = 180, 6
+    users = rng.integers(0, keys, n)
+    values = np.round(rng.normal(50.0, 20.0, n), 3).tolist()
+    values = [None if m else v for v, m in zip(values, rng.random(n) < 0.15)]
+    values[int(np.flatnonzero(users == 0)[0])] = None  # key 0 opens on NULL
+    base = dt.datetime(2024, 1, 1, tzinfo=dt.timezone.utc)
+    src = str(tmp_path / "src")
+    os.makedirs(src)
+    t0 = 1_700_000_000
+    for f in range(3):
+        lo, hi = f * n // 3, (f + 1) * n // 3
+        tbl = pa.table({
+            "event_id": pa.array(range(lo, hi), pa.int64()),
+            "ts": pa.array([base + dt.timedelta(seconds=i) for i in range(lo, hi)],
+                           pa.timestamp("us", tz="UTC")),
+            "user_id": pa.array(users[lo:hi].tolist(), pa.int64()),
+            "value": pa.array(values[lo:hi], pa.float64()),
+        })
+        path = os.path.join(src, f"part{f}.parquet")
+        pq.write_table(tbl, path)
+        os.utime(path, (t0 + f, t0 + f))  # oldest-first pickup order
+    schema = "event_id long, ts timestamp, user_id long, value double"
+    ef = from_dataframe(
+        spark.read.schema(schema).parquet(src),
+        value_cols=["value"], seq_col="event_id", ts_col="ts", key_cols=["user_id"],
+    )
+    for op, cols in (("holt", ("value", "level", "trend", "forecast")),
+                     ("kalman1d", ("value", "kf_x", "kf_p", "kf_gain"))):
+        sf = file_stream(spark, src, schema=schema, value_cols=["value"], ts_col="ts",
+                         key_cols=["user_id"], max_files_per_trigger=1)
+        out = sf.run_available_now(sink_df=getattr(sf, op)(), name=f"ek_null_{op}")
+        got = {(r["user_id"], r["ts"]): tuple(r[c] for c in cols) for r in out.collect()}
+        want = {(r["user_id"], r["ts"]): tuple(r[c] for c in cols)
+                for r in getattr(ef, op)().df.collect()}
+        assert got == want and len(got) == n, op
+        assert any(v[0] is None for v in got.values()), op
+        assert any(v[1] is None for v in got.values()), op
+
+
 def _combo_stream(spark, tmp_path_factory, times, values, tag):
     """One combinator source: rows at epoch+times seconds plus a
     trailing NULL-value end marker (the done row _combine_cut flushes
