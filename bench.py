@@ -20,325 +20,19 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-# Representative spread: window streams, combinators, stateful kernel,
-# relational joins/aggs, dedup, similarity, text. Names match queries().
-HEADLINE = [
-    "filter",
-    "running_sum",
-    "running_sum_scaled",
-    "running_mean",
-    "ema",
-    "deque",
-    "changes",
-    "unique",
-    "chunk",
-    "merge",
-    "ziplatest",
-    "zip",
-    "sample",
-    "takeuntil",
-    "timeout",
-    "debounce_last",
-    "throttle",
-    "mergemap",
-    "switchmap",
-    "tpch_q1",
-    "tpch_q3",
-    "region_revenue",
-    "topk_orders",
-    "rollup",
-    "distinct_agg",
-    "asof_join",
-    "dedup_exact",
-    "dedup_jaccard",
-    "dedup_minhash",
-    "dedup_simhash",
-    "dedup_clusters",
-    "pagerank",
-    "central_dedup",
-    "fuzzy_dedup",
-    "semantic_dedup",
-    "quality_classifier",
-    "interval_join",
-    "sessionize",
-    "funnel",
-    "gopher_rules",
-    "bm25",
-    "url_canonicalize",
-    "host_stats",
-    "bigram_logprob",
-    "collocations",
-    "tfidf_cosine",
-    "dsir",
-    "char_entropy",
-    "containment",
-    "rfm",
-    "novelty",
-    "tpch_q5",
-    "tpch_q6",
-    "tpch_q4",
-    "tpch_q10",
-    "tpch_q12",
-    "tpch_q14",
-    "tpch_q18",
-    "twap",
-    "interarrival",
-    "grouping_sets",
-    "rollup_ts",
-    "pivot_agg",
-    "tpch_q7",
-    "tpch_q15",
-    "tpch_q8",
-    "tpch_q13",
-    "tpch_q17",
-    "tpch_q19",
-    "tpch_q21",
-    "tpch_q22",
-    "tpch_q2",
-    "tpch_q9",
-    "tpch_q11",
-    "tpch_q16",
-    "tpch_q20",
-    "salted_join",
-    "window_funcs",
-    "heavy_hitters",
-    "weighted_sample",
-    "weighted_sample_grouped",
-    "dau",
-    "pct_change",
-    "anomaly",
-    "cusum",
-    "contamination_report",
-    "percentiles",
-    "group_corr",
-    "group_regression",
-    "event_transitions",
-    "session_stats",
-    "asof_join_nearest",
-    "overlap_join",
-    "topk_per_group",
-    "retention",
-    "histogram",
-    "resample",
-    "rollup_cascade",
-    "rolling_time",
-    "decontaminate",
-    "repetition",
-    "text_stats",
-    "text_quality",
-    "text_embed",
-    "line_dedup",
-    "redact_pii",
-    "temperature_mix",
-    "sliding_chunks",
-    "top_ngrams",
-    "decontaminate_bloom",
-    "substring_dedup",
-    "c4_filters",
-    "bpe_train",
-    "bpe_encode",
-    "cms_counts",
-    "hll_card",
-    "unigram_logprob",
-    "train_order",
-    "ccnet_buckets",
-    "tfidf",
-    "split_by_hash",
-    "stratified_sample",
-    "pack_sequences",
-    "pack_spans",
-    "source_quota",
-    "embed_topk",
-    "embed_rp_lsh",
-    "embed_ivf",
-    "embed_neardup",
-    "mm_frame_sample",
-    "mm_resize_plan",
-    "mm_image_features",
-    "fork_merge",
-    "reduce_py",
-    "triangles",
-    "attribution",
-    "phrase_search",
-    "zorder_key",
-    "skew_report",
-    "sorted_neighborhood",
-    "corpus_diff",
-    "event_paths",
-    "bm25_search",
-    "hybrid_rrf",
-    "multi_touch",
-    "holt",
-    "kalman",
-    "winsorize",
-    "corpus_report",
-    "quantile_bins",
-    "fuzzy_decontaminate",
-    "bootstrap_ci",
-    "ab_lift",
-    "cuped",
-    # r6 additions: scaled unkeyed selection (flag + rank machinery),
-    # byte-level BPE trainer. opq_gain is excluded — it runs two full
-    # PQ fits (a ~35 s fit benchmark, not a query).
-    "takewhile_scaled",
-    "skip_scaled",
-    "bpe_train_bytes",
-    "winnow",
-    "winnow_overlap",
-    "seasonal_decompose",
-    "profile",
-    # r7 additions: skew-safe order-preserving distinct, byte-level
-    # encode + fertility legs
-    "unique_scaled",
-    "bpe_encode_bytes",
-    "bpe_fertility_bytes",
-    "keyword_hits",
-    "phrase_hits",
-    "normalize_text",
-    # ----- r8: close the bench/registry gap (r7 VERDICT item 3) -----
-    # Every registered contract is now benched EXCEPT the documented
-    # multi-fit exclusions below; a query can be driver-green yet
-    # perf-regress invisibly if it never runs here.
-    # EXCLUDED (k-means codebook FITS, not queries — each runs full
-    # Lloyd iterations driver-looped over the embedding table, 7-29 s
-    # warm at sf0.1, >2x any family norm; the fit path is perf-covered
-    # by the cheaper kmeans/cluster_topics/ivf_index entries):
-    #   opq_gain (TWO full PQ fits), pq_topk (PQ fit + full probe),
-    #   pq_encode (PQ codebook fit), ivfpq (IVF + PQ double fit).
-    # core §2 selection / transform / combine / source ops
-    "skip",
-    "take",
-    "takewhile",
-    "dropwhile",
-    "enumerate",
-    "count",
-    "previous",
-    "pairwise",
-    "reduce_max",
-    "chain",
-    "concat",
-    "switch",
-    "last",
-    "iterate",
-    "constant",
-    "star_pack",
-    "map_pandas",
-    "partial",
-    "timestamp",
-    "delay",
-    "debounce_first",
-    "chainmap",
-    "concatmap",
-    "list",
-    "chunkwith",
-    "json_pluck",
-    "array_mean",
-    "array_std",
-    "array_anyall",
-    "any_all",
-    "fork_minmax",
-    "product_running",
-    "product_trailing",
-    "errors",
-    "end_on_error",
-    "source_range",
-    "source_repeat",
-    "source_timerange",
-    "source_marble",
-    "source_wait",
-    "source_timer",
-    # relational / sampling
-    "semi_join",
-    "anti_join",
-    "cube",
-    "pivot",
-    "unpivot",
-    "set_ops",
-    "reservoir",
-    "variant_pluck",
-    "asof_join_unkeyed",
-    "asof_join_forward",
-    # scaled unkeyed family (r6/r7 members that missed the list)
-    "ema_scaled",
-    "changes_scaled",
-    "previous_scaled",
-    "chunk_scaled",
-    "dropwhile_scaled",
-    # dedup / decontamination lifecycle + reports
-    "dedup_report",
-    "dedup_incremental",
-    "dedup_minhash_incremental",
-    "dedup_simhash_incremental",
-    "decontaminate_store",
-    "dedup_safe_split",
-    "dedup_minhash_recall",
-    "edit_dedup",
-    # embeddings / ANN (query-shaped members; fits excluded above)
-    "kmeans",
-    "cluster_topics",
-    "ivf_index",
-    "sq_encode",
-    "sq_topk",
-    "embed_standardize",
-    "embed_moments",
-    "embed_rp_lsh_recall",
-    "embed_ivf_recall",
-    "hard_negatives",
-    "approx_agg",
-    # text / tokenizer legs
-    "unigram_vocab",
-    "unigram_encode",
-    "unigram_fertility",
-    "unigram_store",
-    "lexical_diversity",
-    "bpe_vocab",
-    "bpe_vocab_bytes",
-    "bpe_fertility",
-    "mm_audio_features",
-    "mm_video_features",
-    "webdataset",
-    "hll_by_key",
-    # multi-op pipeline showcases
-    "pipeline_corpus",
-    "pipeline_moderation",
-    "blocklist_verdicts",
-    # r9 additions
-    "stupid_backoff",
-    "token_quota",
-    "ngram_lm_store",
-    "upsample_mix",
-    # r10: the streaming lane's driver contracts (real availableNow
-    # structured-streaming replays; each time includes the
-    # streaming-query startup, ~1-2 s fixed)
-    "token_quota_stream",
-    "running_agg_stream",
-    "changes_stream",
-    "take_stream",
-    "pairwise_stream",
-    "debounce_stream",
-    "sample_stream",
-    "zip_stream",
-    "ziplatest_stream",
-    "last_stream",
-    # r10: cluster-balanced coreset sampling (exact-replay kmeans +
-    # two-phase per-cluster top-N)
-    "coreset_sample",
-    # r11: the multibatch carry contract (4 micro-batches) + seven
-    # more availableNow kernel contracts
-    "running_agg_stream_multibatch",
-    "enumerate_stream",
-    "skip_stream",
-    "previous_stream",
-    "product_stream",
-    "takewhile_stream",
-    "dropwhile_stream",
-    "takeuntil_stream",
-    # r11 late: the counter twin + the two native complete-mode sketch
-    # aggregations (bounded-state streaming counters)
-    "count_stream",
-    "cms_stream",
-    "hll_stream",
-]
+from __spark_entry__ import queries  # noqa: E402 — needs the path above
+
+# Every registered contract is benched, in registry order, EXCEPT the
+# multi-fit exclusions below: a query can be driver-green yet
+# perf-regress invisibly if it never runs here. EXCLUDED (k-means
+# codebook FITS, not queries — each runs full Lloyd iterations
+# driver-looped over the embedding table, 7-29 s warm at sf0.1, >2x any
+# family norm; the fit path is perf-covered by the cheaper
+# kmeans/cluster_topics/ivf_index entries):
+#   opq_gain (TWO full PQ fits), pq_topk (PQ fit + full probe),
+#   pq_encode (PQ codebook fit), ivfpq (IVF + PQ double fit).
+_FIT_EXCLUDED = frozenset({"opq_gain", "pq_topk", "pq_encode", "ivfpq"})
+HEADLINE = [n for n in queries() if n not in _FIT_EXCLUDED]
 
 
 def _family(name: str) -> str:

@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import Window as W, functions as F
 
 from ..session import session_width
+from ..state import _keyed_scan, _make_fold_step, ema_exact
 
 from .common import (
     RN,
@@ -406,9 +407,7 @@ def ema(ef, n: int | None = None, weight: float | None = None):
         # carries GROW by q^L instead of decaying (q > 1, weight < 0)
         # or alternate sign (q < 0, weight > 1), and q^{-j} overflows —
         # both regimes route to the exact linear-scan recurrence
-        from .. import state as _state
-
-        return _state.ema_exact(ef, weight=w_)
+        return ema_exact(ef, weight=w_)
     df, ema_col = _ema_staged(ef, w_, q)
     cols = [F.col(c) for c in meta_cols(ef)] + [ema_col.alias("value")]
     return ef._with(df=df.select(*cols), value_cols=["value"])
@@ -502,11 +501,11 @@ def reduce_(ef, merge_expr, initializer=None, result_type="double"):
       whenever the fold is one of them.
     - Arbitrary Python callable (the reference accepts ANY ``func``,
       aggregate.py:18-36 — e.g. a clamped sum or a dict-merging fold
-      that no Column expression can state): an Arrow-batched
-      ``applyInPandas`` linear scan per key, the same kernel shape as
-      ``state.ema_exact`` — parallel across keys, O(n) per key, honest
-      about being the slow path. Unkeyed streams degrade to one task
-      (the reference's single process).
+      that no Column expression can state): ``state.py``'s keyed-scan
+      lane, one Arrow-batched linear pass per key partition — parallel
+      across keys, O(n) per key, honest about being the slow path.
+      Unkeyed streams degrade to one task (the reference's single
+      process).
 
     Both paths seed the fold with the first element when
     ``initializer`` is None (n emits; the reference's silent first-seed
@@ -540,90 +539,13 @@ def reduce_(ef, merge_expr, initializer=None, result_type="double"):
     return ef._with(df=ef.df.select(*cols), value_cols=["value"])
 
 
-_UNSET_KEY = object()  # sentinel unequal to any real key tuple
-
-
 def _reduce_python(ef, func, initializer, result_type):
-    """Arbitrary-Python running fold: per-PARTITION linear scan via
-    mapInPandas over repartition+sortWithinPartitions (the
-    state.throttle kernel shape). With thousands of small keys,
-    per-group applyInPandas pays one Python/Arrow round trip per KEY;
-    this pays one per Arrow batch — same fold, same per-key seq order,
-    same seeding, state carried across a key split over adjacent
-    batches. NULL-safe key runs (two NULL keys compare equal, matching
-    groupBy)."""
-    vname = ef.value_cols[0]
-    seq_col = ef.seq_col
-    schema = ef.df.schema
-    key_cols = list(ef.key_cols)
-
-    def kernel(batches):
-        import numpy as np
-        import pandas as pd
-
-        def same_key(a, b):
-            if b is _UNSET_KEY:
-                return False
-            return all(
-                (x == y) or (pd.isna(x) and pd.isna(y)) for x, y in zip(a, b)
-            )
-
-        cur_key = _UNSET_KEY
-        acc = initializer
-        seeded = False
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            vals = pdf[vname].to_numpy()
-            out = np.empty(len(vals), dtype=object)
-            if key_cols:
-                kmat = pdf[key_cols]
-                shifted = kmat.shift()
-                changed = (
-                    (kmat.ne(shifted) & ~(kmat.isna() & shifted.isna()))
-                    .any(axis=1)
-                    .to_numpy()
-                )
-                changed[0] = True
-                starts = np.flatnonzero(changed)
-                for bi, s in enumerate(starts):
-                    e = starts[bi + 1] if bi + 1 < len(starts) else len(vals)
-                    k = tuple(pdf[kc].iloc[s] for kc in key_cols)
-                    # only the batch's first run may continue the carry
-                    if bi > 0 or not same_key(k, cur_key):
-                        acc, seeded = initializer, False
-                    cur_key = k
-                    for i in range(s, e):
-                        x = vals[i]
-                        if not seeded and initializer is None:
-                            acc = x
-                        else:
-                            acc = func(acc, x)
-                        seeded = True
-                        out[i] = acc
-            else:
-                for i in range(len(vals)):
-                    x = vals[i]
-                    if not seeded and initializer is None:
-                        acc = x
-                    else:
-                        acc = func(acc, x)
-                    seeded = True
-                    out[i] = acc
-            yield pdf.assign(**{vname: pd.Series(out, index=pdf.index)})
-
-    out_schema = ", ".join(
-        f"{f.name} {result_type if f.name == vname else f.dataType.simpleString()}"
-        for f in schema.fields
-    )
-    if key_cols:
-        arranged = ef.df.repartition(*[F.col(c) for c in key_cols]).sortWithinPartitions(
-            *key_cols, seq_col
-        )
-    else:
-        arranged = ef.df.repartition(1).sortWithinPartitions(seq_col)
-    df = arranged.mapInPandas(kernel, schema=out_schema)
-    return ef._with(df=df.select(*[f.name for f in schema.fields]), value_cols=[vname])
+    """Arbitrary-Python running fold: ``state.py``'s fold step in the
+    keyed-scan lane (one pass per key partition, NULL keys one key)."""
+    v = ef.value_cols[0]
+    step = _make_fold_step(func, initializer)
+    df = _keyed_scan(ef.df, ef.key_cols, ef.seq_col, step, [v], [(v, result_type)])
+    return ef._with(df=df, value_cols=[v])
 
 
 def list_(ef):

@@ -194,6 +194,7 @@ def iterate(ef, values, scaled: bool = False, partitions: int | None = None):
     """
     from ..sources.tables import local_frame
 
+    values = list(values)  # a one-shot iterable is read once, here
     side = local_frame(
         ef.df.sparkSession, list(enumerate(values)),
         f"{RN} long, __ek_v2 {_lit_type(values)}",

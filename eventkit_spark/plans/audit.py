@@ -103,13 +103,12 @@ def skew_report(df: DataFrame, keys: list[str], top: int = 10) -> DataFrame:
     )
 
 
-def count_shuffles(df: DataFrame) -> int:
-    """Number of SHUFFLE exchanges in the physical plan (lower = better
-    for the same result; windows/joins/aggregations each justify at most
-    one). ReusedExchange references and BroadcastExchange (a broadcast,
-    not a shuffle) are excluded — plan_report['exchanges'] uses the
-    same per-line rule."""
-    plan = physical_plan(df)
+def _shuffles(plan: str) -> int:
+    """Shuffle exchanges in a physical-plan string, one per line that
+    names an Exchange. ReusedExchange is a plan-tree reference (no
+    second shuffle) and BroadcastExchange is a broadcast, not a
+    shuffle — counting raw "Exchange" substrings would inflate CI
+    budgets with both."""
     return sum(
         1
         for ln in plan.splitlines()
@@ -117,6 +116,13 @@ def count_shuffles(df: DataFrame) -> int:
         and "Reused" not in ln
         and "BroadcastExchange" not in ln
     )
+
+
+def count_shuffles(df: DataFrame) -> int:
+    """Number of SHUFFLE exchanges in the physical plan (lower = better
+    for the same result; windows/joins/aggregations each justify at most
+    one); the rule ``plan_report['exchanges']`` uses."""
+    return _shuffles(physical_plan(df))
 
 
 def plan_report(df: DataFrame) -> dict:
@@ -134,20 +140,9 @@ def plan_report(df: DataFrame) -> dict:
     report that silently returned 0 pre-execution would mislead.
     """
     p = physical_plan(df)
-    # "exchanges" means SHUFFLES, same per-line rule as count_shuffles:
-    # ReusedExchange is a plan-tree reference (no second shuffle) and
-    # BroadcastExchange is a broadcast, not a shuffle — counting raw
-    # "Exchange" substrings would inflate CI budgets with both.
-    shuffles = sum(
-        1
-        for ln in p.splitlines()
-        if "Exchange" in ln
-        and "Reused" not in ln
-        and "BroadcastExchange" not in ln
-    )
     return {
         "scans": p.count("FileScan"),
-        "exchanges": shuffles,
+        "exchanges": _shuffles(p),
         "broadcasts": p.count("BroadcastExchange"),
         "sorts": p.count("Sort "),
         "python_evals": sum(

@@ -1,48 +1,123 @@
-"""Sequential stateful kernels that have no window-function form.
+"""Sequential recurrences: one keyed-scan lane and the steps it runs.
 
-Two operators in the reference are true sequential recurrences
-(SURVEY.md §4.2): Throttle's re-timestamping (eventkit/ops/timing.py:104-184)
-and exact EMA for streams too long for the closed-form window scan
-(eventkit/ops/aggregate.py:95-111). Both run as Arrow-batched
-``applyInPandas`` kernels: one linear scan per key partition — fully
-parallel across keys, O(n) per key, no driver collection. For unkeyed
-(globally ordered) streams they degrade to a single task, same as the
-reference's single process.
+Six operators are true sequential recurrences with no window-function
+form (SURVEY.md §4.2): exact EMA (eventkit/ops/aggregate.py:95-111),
+Throttle's re-timestamping (eventkit/ops/timing.py:104-184), CUSUM, Holt,
+the 1-D Kalman filter, and the arbitrary-Python running fold behind
+``reduce`` (aggregate.py:18-36). Each is written ONCE, as a step:
+
+    step(cols, state) -> (outs, state)
+
+``cols`` holds one key run's input arrays in order, ``state`` is the
+carried tuple (None at the key's first row), ``outs`` the run's output
+arrays. The batch kernels run their step through ``_keyed_scan``; the
+streaming twins (streaming/stream.py) call the same step once per key
+group per micro-batch, with the state in the state store.
+
+Steps are built by factories: a nested function's ``<locals>`` qualname
+makes cloudpickle ship it BY VALUE, so executors never import this
+package (it may be driver-side only, a sys.path-injected checkout).
 """
 
 from __future__ import annotations
 
+import math
+from collections import deque
+
+import numpy as np
 import pandas as pd
 
-from pyspark.sql import functions as F
+
+def _keyed_scan(df, key_cols, seq_col, step, in_cols, out_fields):
+    """Run ``step`` over every key's rows in ``seq_col`` order.
+
+    One linear pass per key partition: ``repartition(keys)`` plus
+    ``sortWithinPartitions(keys, seq)`` (``coalesce(1)`` when keyless,
+    the reference's single process), then ``mapInPandas``, which pays
+    one Python/Arrow round trip per Arrow batch rather than per key.
+    Key runs are found NULL-safely (two NULL keys are one key, as in
+    ``groupBy`` and the state store), and a key split across batches
+    carries its state into the next batch.
+
+    ``out_fields`` are ``(name, ddl)`` pairs in step-output order: a
+    name already in ``df`` is replaced in place, a new one appended."""
+    key_cols = list(key_cols)
+    names = [n for n, _ in out_fields]
+    types = dict(out_fields)
+    schema = ", ".join(
+        [f"{f.name} {types.pop(f.name, f.dataType.simpleString())}"
+         for f in df.schema.fields]
+        + [f"{n} {t}" for n, t in types.items()]
+    )
+
+    def kernel(batches):
+        state, last = None, None  # last: the previous batch's final key
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            starts = np.zeros(1, dtype=np.int64)
+            if key_cols:
+                kmat = pdf[key_cols]
+                prev = kmat.shift()
+                changed = (
+                    (kmat.ne(prev) & ~(kmat.isna() & prev.isna())).any(axis=1).to_numpy()
+                )
+                changed[0] = True
+                starts = np.flatnonzero(changed)
+                first = kmat.iloc[0].tolist()
+                if last is None or not all(
+                    a == b or (pd.isna(a) and pd.isna(b)) for a, b in zip(first, last)
+                ):
+                    state = None
+                last = kmat.iloc[-1].tolist()
+            cols = [pdf[c].to_numpy() for c in in_cols]
+            parts = []
+            for i, (s, e) in enumerate(zip(starts, [*starts[1:], len(pdf)])):
+                if i:
+                    state = None
+                outs, state = step([c[s:e] for c in cols], state)
+                parts.append(outs)
+            if len(parts) > 1:
+                parts = [[np.concatenate(p) for p in zip(*parts)]]
+            yield pdf.assign(**dict(zip(names, parts[0])))
+
+    if key_cols:
+        arranged = df.repartition(*key_cols).sortWithinPartitions(*key_cols, seq_col)
+    else:
+        arranged = df.coalesce(1).sortWithinPartitions(seq_col)
+    return arranged.mapInPandas(kernel, schema=schema)
 
 
-def ema_exact(ef, n: int | None = None, weight: float | None = None):
-    """Linear-scan EMA recurrence per key — use when per-key streams are
-    too long for the closed-form window formulation (> ~6000 rows).
+def _make_round6():
+    def _round6(arr):
+        """Round to 6 decimals with HALF-AWAY-FROM-ZERO ties on the
+        scaled double, the semantics DuckDB's round(DOUBLE, n) and
+        Spark's F.round share. np.round is half-EVEN, and Python's
+        round() too: a recurrence landing exactly on a 5e-7 boundary
+        (holt hit one at sf0.01) would flip the last digit between
+        engines. NaN stays NaN."""
+        return np.copysign(np.floor(np.abs(arr) * 1e6 + 0.5), arr) / 1e6
 
-    Missing values follow the same pinned algebra as the window form
-    (``_ema_staged``) and the streaming scan: NULL until the key's
-    first value, a NULL row decays the ema by (1-w), full-weight seed
-    only for a non-NULL literal first row (a NaN here would otherwise
-    poison the recurrence forever; NaN round-trips to NULL through
-    Arrow — pinned in tests)."""
-    w = weight if weight is not None else 2.0 / (n + 1)
-    value_col = ef.value_cols[0]
-    seq_col = ef.seq_col
-    schema = ef.df.schema
+    return _round6
 
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        import numpy as np
 
-        pdf = pdf.sort_values(seq_col)
-        x = pdf[value_col].to_numpy(dtype="float64")
-        out = np.full_like(x, np.nan)
-        ema, seen = np.nan, False
-        for i, v in enumerate(x):
-            if not np.isnan(v):
+_round6 = _make_round6()
+
+
+def _make_ema_step(w: float):
+    def step(cols, state):
+        """Missing values follow the pinned algebra of the window form
+        (``_ema_staged``) and the streaming scan: NULL until the key's
+        first value, a NULL row decays the ema by (1-w), full-weight
+        seed only for a non-NULL literal first row."""
+        vals = np.asarray(cols[0], dtype="float64").tolist()
+        fresh = state is None
+        ema, seen = (math.nan, False) if fresh else state
+        out = np.full(len(vals), math.nan)
+        for i, v in enumerate(vals):
+            if not math.isnan(v):
                 if not seen:
-                    ema = v if i == 0 else w * v
+                    ema = v if fresh and i == 0 else w * v
                     seen = True
                 else:
                     ema = (1.0 - w) * ema + w * v
@@ -50,20 +125,144 @@ def ema_exact(ef, n: int | None = None, weight: float | None = None):
                 ema = (1.0 - w) * ema
             if seen:
                 out[i] = ema
-        pdf[value_col] = out
-        return pdf
+        return (out,), (ema, seen)
 
-    out_schema = ", ".join(
-        f"{f.name} {'double' if f.name == value_col else f.dataType.simpleString()}"
-        for f in schema.fields
-    )
-    grouped = (
-        ef.df.groupBy(*ef.key_cols) if ef.key_cols else ef.df.groupBy(F.lit(0).alias("__g"))
-    )
-    df = grouped.applyInPandas(kernel, schema=out_schema)
-    if not ef.key_cols:
-        df = df.drop("__g") if "__g" in df.columns else df
-    return ef._with(df=df.select(*[f.name for f in schema.fields]))
+    return step
+
+
+def _make_throttle_step(maximum, interval, cost=1.0, sched=(), status=False):
+    def step(cols, state):
+        """Sliding-budget re-timestamping. ``cols`` is the event time
+        (datetime64) and, optionally, a per-row cost; emits the
+        re-stamped time (plus ``throttled`` when ``status``)."""
+        times = cols[0].astype("int64") / 1e9  # epoch s
+        costs = cols[1].tolist() if len(cols) > 1 else None
+        if state is None:
+            # (emit_time, cost) window, its cost, last emit, next
+            # limit-change index, current maximum and interval
+            state = (deque(), 0.0, -math.inf, 0, maximum, interval)
+        window, used, last_emit, si, mx, iv = state
+        n_sched, emits = len(sched), []
+        for i, t in enumerate(times.tolist()):
+            c = cost if costs is None else costs[i]
+            # FIFO: a queued row cannot emit before its predecessor
+            t = max(t, last_emit)
+            # earliest admissible time given the sliding budget
+            while True:
+                while si < n_sched and sched[si][0] <= t:
+                    _, mx, iv = sched[si]
+                    si += 1
+                while window and window[0][0] <= t - iv:
+                    used -= window.popleft()[1]
+                if used + c <= mx or not window:
+                    break
+                # wait until the oldest in-window emission expires, or
+                # until a pending limit change, which may raise the budget
+                t_next = window[0][0] + iv
+                if si < n_sched and sched[si][0] < t_next:
+                    t = sched[si][0]
+                else:
+                    t = t_next
+            emits.append(t)
+            last_emit = t
+            window.append((t, c))
+            used += c
+        out = np.array(emits)
+        # whole microseconds: float-derived ns residue makes the Arrow
+        # ns->us cast "unsafe"
+        micros = np.round(out * 1e6).astype("int64")
+        outs = ((micros * 1000).astype("datetime64[ns]"),)
+        if status:
+            outs += (out > times + 1e-9,)
+        return outs, (window, used, last_emit, si, mx, iv)
+
+    return step
+
+
+def _make_cusum_step(target, h, slack, reset):
+    kt, kh, kk = float(target), float(h), float(slack)
+
+    def step(cols, state):
+        hi, lo = (0.0, 0.0) if state is None else state
+        acc, al = [], []
+        for v in np.asarray(cols[0], dtype="float64").tolist():
+            nh = max(0.0, hi + (v - kt) - kk)
+            nl = max(0.0, lo - (v - kt) - kk)
+            a = nh > kh or nl > kh
+            acc.append((nh, nl))
+            al.append(a)
+            hi, lo = (0.0, 0.0) if (a and reset) else (nh, nl)
+        nh_, nl_ = _round6(np.array(acc)).T
+        return (nh_, nl_, np.array(al, dtype=bool)), (hi, lo)
+
+    return step
+
+
+def _make_holt_step(alpha, beta):
+    a, b = float(alpha), float(beta)
+    one_a, one_b = 1.0 - a, 1.0 - b
+
+    def step(cols, state):
+        rows = []
+        for v in np.asarray(cols[0], dtype="float64").tolist():
+            if state is None:
+                nl, nt = v, 0.0
+            else:
+                pl, pt = state
+                nl = a * v + one_a * (pl + pt)
+                nt = b * (nl - pl) + one_b * pt
+            state = (nl, nt)
+            rows.append((nl, nt, nl + nt))
+        return tuple(_round6(np.array(rows)).T), state
+
+    return step
+
+
+def _make_kalman_step(q, r, p0):
+    kq, kr, kp0 = float(q), float(r), float(p0)
+
+    def step(cols, state):
+        rows = []
+        for v in np.asarray(cols[0], dtype="float64").tolist():
+            if state is None:
+                nx, np_, nk = v, kp0, 0.0
+            else:
+                px, pp = state
+                pm = pp + kq
+                nk = pm / (pm + kr)
+                nx = px + nk * (v - px)
+                np_ = (1.0 - nk) * pm
+            state = (nx, np_)
+            rows.append((nx, np_, nk))
+        return tuple(_round6(np.array(rows)).T), state
+
+    return step
+
+
+def _make_fold_step(func, initializer):
+    def step(cols, state):
+        """Arbitrary-Python running fold; without an initializer the
+        key's first element seeds it. Elements reach ``func`` as the
+        numpy scalars Arrow delivered."""
+        acc, seeded = (initializer, False) if state is None else state
+        out = np.empty(len(cols[0]), dtype=object)
+        for i, x in enumerate(cols[0]):
+            acc = x if not seeded and initializer is None else func(acc, x)
+            seeded = True
+            out[i] = acc
+        return (out,), (acc, seeded)
+
+    return step
+
+
+def ema_exact(ef, n: int | None = None, weight: float | None = None):
+    """Linear-scan EMA recurrence per key — use when per-key streams are
+    too long for the closed-form window formulation (> ~6000 rows).
+    NaN round-trips to NULL through Arrow (pinned in tests)."""
+    w = weight if weight is not None else 2.0 / (n + 1)
+    v = ef.value_cols[0]
+    df = _keyed_scan(ef.df, ef.key_cols, ef.seq_col, _make_ema_step(w), [v], [(v, "double")])
+    return ef._with(df=df)
 
 
 def throttle(ef, maximum: float, interval: float, cost: float = 1.0, cost_expr=None,
@@ -86,11 +285,8 @@ def throttle(ef, maximum: float, interval: float, cost: float = 1.0, cost_expr=N
     change time — including jumping a waiting row forward to a change
     that raises the budget. The schedule is a tiny driver-side config
     (closure-captured), not a shuffled stream.
-
-    Sequential by nature (each row's emit time depends on all prior emit
-    times) — pandas kernel per key.
     """
-    ts_col, seq_col = ef.ts_col, ef.seq_col
+    ts_col = ef.ts_col
     if not ts_col:
         raise ValueError("throttle() needs an event-time column")
 
@@ -102,136 +298,15 @@ def throttle(ef, maximum: float, interval: float, cost: float = 1.0, cost_expr=N
             sched.append((float(t), float(mx), float(iv)))
         sched.sort()
 
-    src = ef.df
+    src, in_cols = ef.df, [ts_col]
     if cost_expr is not None:
-        src = src.withColumn("__ek_cost", cost_expr.cast("double"))
-    value_cols = list(src.columns)
-    out_cols = [c for c in value_cols if c != "__ek_cost"] + (
-        ["throttled"] if status else []
-    )
-    key_cols = list(ef.key_cols)
-    has_cost_col = cost_expr is not None
-
-    class _KeyState:
-        __slots__ = ("window", "used", "last_emit", "si", "maximum", "interval")
-
-        def __init__(self):
-            from collections import deque
-
-            self.window = deque()  # (emit_time, cost)
-            self.used = 0.0
-            self.last_emit = -float("inf")
-            self.si = 0  # next pending limit_changes index
-            self.maximum = maximum
-            self.interval = interval
-
-    def _run(times, costs, st: _KeyState):
-        out = times.copy()
-        window, used, last_emit = st.window, st.used, st.last_emit
-        mx, iv, si = st.maximum, st.interval, st.si
-        for i in range(len(out)):
-            c = costs[i] if costs is not None else cost
-            # FIFO: a queued row cannot emit before its predecessor
-            t = max(times[i], last_emit)
-            # earliest admissible time given the sliding budget
-            while True:
-                while si < len(sched) and sched[si][0] <= t:
-                    _, mx, iv = sched[si]
-                    si += 1
-                while window and window[0][0] <= t - iv:
-                    used -= window.popleft()[1]
-                if used + c <= mx or not window:
-                    break
-                # wait until the oldest in-window emission expires — or
-                # until a pending limit change, which may raise the budget
-                t_next = window[0][0] + iv
-                if si < len(sched) and sched[si][0] < t_next:
-                    t = sched[si][0]
-                else:
-                    t = t_next
-            out[i] = t
-            last_emit = t
-            window.append((t, c))
-            used += c
-        st.used, st.last_emit = used, last_emit
-        st.maximum, st.interval, st.si = mx, iv, si
-        return out
-
-    def kernel(batches):
-        # per-PARTITION kernel handling many keys per Arrow batch: with
-        # thousands of small keys, per-group applyInPandas pays one
-        # Python/Arrow round trip per key; mapInPandas over
-        # repartition+sortWithinPartitions pays one per batch. Keys are
-        # contiguous (sorted), but Arrow may split one key across
-        # batches — state carries over via (cur_key, cur_state).
-        import numpy as np
-
-        cur_key = object()  # sentinel unequal to any real key
-        cur_state = _KeyState()
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            times = pdf[ts_col].astype("int64").to_numpy() / 1e9  # epoch s
-            costs = pdf["__ek_cost"].to_numpy() if has_cost_col else None
-            out = np.empty_like(times)
-            if key_cols:
-                keys = pdf[key_cols[0]].to_numpy() if len(key_cols) == 1 else list(
-                    zip(*[pdf[k].to_numpy() for k in key_cols])
-                )
-                start = 0
-                for i in range(1, len(times) + 1):
-                    if i == len(times) or keys[i] != keys[start]:
-                        if keys[start] != cur_key:
-                            cur_key = keys[start]
-                            cur_state = _KeyState()
-                        out[start:i] = _run(
-                            times[start:i],
-                            costs[start:i] if costs is not None else None,
-                            cur_state,
-                        )
-                        start = i
-            else:
-                out[:] = _run(times, costs, cur_state)
-            # whole microseconds: float-derived ns residue makes the
-            # Arrow ns->us cast "unsafe"; keep the input's tz-awareness
-            micros = np.round(out * 1e6).astype("int64")
-            stamped = pd.to_datetime(micros * 1000)
-            tz = getattr(pdf[ts_col].dtype, "tz", None)
-            if tz is not None:
-                stamped = stamped.tz_localize(tz)
-            if status:
-                pdf["throttled"] = out > times + 1e-9
-            pdf[ts_col] = pd.Series(stamped, index=pdf.index)
-            if has_cost_col:
-                pdf = pdf.drop(columns=["__ek_cost"])
-            yield pdf
-
-    out_schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}"
-        for f in src.schema.fields
-        if f.name != "__ek_cost"
-    )
+        src, in_cols = src.withColumn("__ek_cost", cost_expr.cast("double")), [ts_col, "__ek_cost"]
+    out_fields = [(ts_col, src.schema[ts_col].dataType.simpleString())]
     if status:
-        out_schema += ", throttled boolean"
-    if key_cols:
-        arranged = src.repartition(*[F.col(k) for k in key_cols]).sortWithinPartitions(
-            *key_cols, seq_col
-        )
-    else:
-        arranged = src.coalesce(1).sortWithinPartitions(seq_col)
-    df = arranged.mapInPandas(kernel, schema=out_schema)
-    return ef._with(df=df.select(*out_cols))
-
-
-def _round6(arr):
-    """Round to 6 decimals with HALF-AWAY-FROM-ZERO ties on the scaled
-    double — the semantics DuckDB's round(DOUBLE, n) and Spark's
-    F.round share. np.round is half-EVEN: a recurrence landing exactly
-    on a 5e-7 boundary (holt hit one at sf0.01) flips the last digit
-    between engines."""
-    import numpy as np
-
-    return np.copysign(np.floor(np.abs(arr) * 1e6 + 0.5), arr) / 1e6
+        out_fields.append(("throttled", "boolean"))
+    step = _make_throttle_step(maximum, interval, cost, sched, status)
+    df = _keyed_scan(src, ef.key_cols, ef.seq_col, step, in_cols, out_fields)
+    return ef._with(df=df.drop("__ek_cost"))
 
 
 def cusum(ef, target: float, h: float, slack: float = 0.0, reset: bool = True):
@@ -245,68 +320,17 @@ def cusum(ef, target: float, h: float, slack: float = 0.0, reset: bool = True):
     ``reset=True`` (the restart convention) zeroes both accumulators
     after an alarm so each drift episode fires once. The clamped
     recurrence is NOT linear (unlike EMA), so no closed-form window
-    scan exists — this is exactly the sequential-kernel lane
-    (SURVEY.md §4.2): one Arrow-batched linear pass per key partition,
-    fully parallel across keys, state carried across batch splits;
-    unkeyed degrades to a single task (the reference's own total-order
-    semantics). Adds ``cusum_hi`` / ``cusum_lo`` (rounded 6) and
+    scan exists. Adds ``cusum_hi`` / ``cusum_lo`` (rounded 6) and
     ``alarm`` columns.
 
     Reference analog: none (the reference cuts/thins streams; this is
     the monitoring primitive the engine adds next to ``anomaly``).
     """
-    import numpy as np
-
-    value_col = ef.value_cols[0]
-    seq_col = ef.seq_col
-    key_cols = list(ef.key_cols)
-    src = ef.df
-    kt = float(target)
-    kk = float(slack)
-    kh = float(h)
-
-    def kernel(batches):
-        state = {}  # key tuple -> (hi, lo); carries across batch splits
-        # local copy of _round6: the closure must stay self-contained —
-        # executors can't import eventkit_spark when the driver runs
-        # outside the repo (path-based package, not installed)
-        r6 = lambda arr: np.copysign(np.floor(np.abs(arr) * 1e6 + 0.5), arr) / 1e6
-
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            x = pdf[value_col].to_numpy(dtype="float64")
-            if key_cols:
-                keys = list(zip(*[pdf[k].to_numpy() for k in key_cols]))
-            else:
-                keys = [()] * len(pdf)
-            hi = np.empty(len(x))
-            lo = np.empty(len(x))
-            al = np.empty(len(x), dtype=bool)
-            for i in range(len(x)):
-                ph, pl = state.get(keys[i], (0.0, 0.0))
-                nh = max(0.0, ph + (x[i] - kt) - kk)
-                nl = max(0.0, pl - (x[i] - kt) - kk)
-                a = nh > kh or nl > kh
-                hi[i], lo[i], al[i] = nh, nl, a
-                state[keys[i]] = (0.0, 0.0) if (a and reset) else (nh, nl)
-            out = pdf.copy()
-            out["cusum_hi"] = r6(hi)
-            out["cusum_lo"] = r6(lo)
-            out["alarm"] = al
-            yield out
-
-    out_schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in src.schema.fields
-    ) + ", cusum_hi double, cusum_lo double, alarm boolean"
-    if key_cols:
-        arranged = src.repartition(*[F.col(k) for k in key_cols]).sortWithinPartitions(
-            *key_cols, seq_col
-        )
-    else:
-        arranged = src.coalesce(1).sortWithinPartitions(seq_col)
-    df = arranged.mapInPandas(kernel, schema=out_schema)
-    return ef._with(df=df, value_cols=[*ef.value_cols, "cusum_hi", "cusum_lo", "alarm"])
+    out = ["cusum_hi", "cusum_lo", "alarm"]
+    step = _make_cusum_step(target, h, slack, reset)
+    df = _keyed_scan(ef.df, ef.key_cols, ef.seq_col, step, ef.value_cols[:1],
+                     list(zip(out, ["double", "double", "boolean"])))
+    return ef._with(df=df, value_cols=[*ef.value_cols, *out])
 
 
 def holt(ef, alpha: float = 0.5, beta: float = 0.3):
@@ -321,66 +345,14 @@ def holt(ef, alpha: float = 0.5, beta: float = 0.3):
     each rounded to 6.
 
     The COUPLED two-state recurrence has no single-column window form
-    (EMA's trick scans one state), so it runs in the sequential-kernel
-    lane (SURVEY.md §4.2): one Arrow-batched linear pass per key
-    partition, state carried across batch splits, fully parallel
-    across keys; unkeyed degrades to a single task. The float ops are
-    written in one fixed order (and ``1-alpha`` / ``1-beta`` derived
-    the same way in the oracle) so a recursive-CTE replay is
-    bit-identical.
+    (EMA's trick scans one state). The float ops are written in one
+    fixed order (and ``1-alpha`` / ``1-beta`` derived the same way in
+    the oracle) so a recursive-CTE replay is bit-identical.
     """
-    import numpy as np
-
-    value_col = ef.value_cols[0]
-    seq_col = ef.seq_col
-    key_cols = list(ef.key_cols)
-    src = ef.df
-    a = float(alpha)
-    b = float(beta)
-    one_a = 1.0 - a
-    one_b = 1.0 - b
-
-    def kernel(batches):
-        state = {}  # key tuple -> (level, trend)
-        r6 = lambda arr: np.copysign(np.floor(np.abs(arr) * 1e6 + 0.5), arr) / 1e6
-
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            x = pdf[value_col].to_numpy(dtype="float64")
-            if key_cols:
-                keys = list(zip(*[pdf[k].to_numpy() for k in key_cols]))
-            else:
-                keys = [()] * len(pdf)
-            lv = np.empty(len(x))
-            tr = np.empty(len(x))
-            for i in range(len(x)):
-                prev = state.get(keys[i])
-                if prev is None:
-                    nl, nt = x[i], 0.0
-                else:
-                    pl, pt = prev
-                    nl = a * x[i] + one_a * (pl + pt)
-                    nt = b * (nl - pl) + one_b * pt
-                lv[i], tr[i] = nl, nt
-                state[keys[i]] = (nl, nt)
-            out = pdf.copy()
-            out["level"] = r6(lv)
-            out["trend"] = r6(tr)
-            out["forecast"] = r6(lv + tr)
-            yield out
-
-    out_schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in src.schema.fields
-    ) + ", level double, trend double, forecast double"
-    if key_cols:
-        arranged = src.repartition(*[F.col(k) for k in key_cols]).sortWithinPartitions(
-            *key_cols, seq_col
-        )
-    else:
-        arranged = src.coalesce(1).sortWithinPartitions(seq_col)
-    df = arranged.mapInPandas(kernel, schema=out_schema)
-    return ef._with(df=df, value_cols=[*ef.value_cols, "level", "trend", "forecast"])
+    out = ["level", "trend", "forecast"]
+    df = _keyed_scan(ef.df, ef.key_cols, ef.seq_col, _make_holt_step(alpha, beta),
+                     ef.value_cols[:1], [(c, "double") for c in out])
+    return ef._with(df=df, value_cols=[*ef.value_cols, *out])
 
 
 def kalman1d(ef, q: float = 0.01, r: float = 1.0, p0: float = 1.0):
@@ -397,59 +369,10 @@ def kalman1d(ef, q: float = 0.01, r: float = 1.0, p0: float = 1.0):
     (posterior variance) and ``kf_gain`` — each rounded half-away to 6.
 
     The gain makes the recurrence nonlinear in state (a division), so
-    no window form exists: sequential-kernel lane, one Arrow pass per
-    key partition, cross-batch state carry, recursive-CTE oracle in
-    the same float-op order.
+    no window form exists; the recursive-CTE oracle runs the same
+    float-op order.
     """
-    import numpy as np
-
-    value_col = ef.value_cols[0]
-    seq_col = ef.seq_col
-    key_cols = list(ef.key_cols)
-    src = ef.df
-    kq, kr, kp0 = float(q), float(r), float(p0)
-
-    def kernel(batches):
-        state = {}  # key tuple -> (x, p)
-        r6 = lambda arr: np.copysign(np.floor(np.abs(arr) * 1e6 + 0.5), arr) / 1e6
-
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            z = pdf[value_col].to_numpy(dtype="float64")
-            if key_cols:
-                keys = list(zip(*[pdf[k].to_numpy() for k in key_cols]))
-            else:
-                keys = [()] * len(pdf)
-            xs = np.empty(len(z))
-            ps = np.empty(len(z))
-            ks = np.empty(len(z))
-            for i in range(len(z)):
-                prev = state.get(keys[i])
-                if prev is None:
-                    nx, np_, nk = z[i], kp0, 0.0
-                else:
-                    px, pp = prev
-                    pm = pp + kq
-                    nk = pm / (pm + kr)
-                    nx = px + nk * (z[i] - px)
-                    np_ = (1.0 - nk) * pm
-                xs[i], ps[i], ks[i] = nx, np_, nk
-                state[keys[i]] = (nx, np_)
-            out = pdf.copy()
-            out["kf_x"] = r6(xs)
-            out["kf_p"] = r6(ps)
-            out["kf_gain"] = r6(ks)
-            yield out
-
-    out_schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in src.schema.fields
-    ) + ", kf_x double, kf_p double, kf_gain double"
-    if key_cols:
-        arranged = src.repartition(*[F.col(k) for k in key_cols]).sortWithinPartitions(
-            *key_cols, seq_col
-        )
-    else:
-        arranged = src.coalesce(1).sortWithinPartitions(seq_col)
-    df = arranged.mapInPandas(kernel, schema=out_schema)
-    return ef._with(df=df, value_cols=[*ef.value_cols, "kf_x", "kf_p", "kf_gain"])
+    out = ["kf_x", "kf_p", "kf_gain"]
+    df = _keyed_scan(ef.df, ef.key_cols, ef.seq_col, _make_kalman_step(q, r, p0),
+                     ef.value_cols[:1], [(c, "double") for c in out])
+    return ef._with(df=df, value_cols=[*ef.value_cols, *out])

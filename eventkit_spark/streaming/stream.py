@@ -53,7 +53,8 @@ parity-tested twin or carries its batch-only reason (r7 VERDICT item 5):
 |                              |   (r9 — needs with_watermark, no TWS)     |
 | debounce (on_first)          | last-ts gap state                         |
 | debounce (on_last)           | session window, last value per burst      |
-| throttle                     | sliding-budget deque in the state store   |
+| throttle                     | state.py's throttle step; its emission    |
+|                              |   window in the state store per key       |
 | sample                       | union + stateful latest, emit on timer tag|
 | errors / end_on_error        | same error-column ops (stateless filter)  |
 | sources: Timer/Sequence      | rate_stream; Aiterate -> file_stream      |
@@ -87,6 +88,12 @@ from pyspark.sql.types import StructType, TimestampType
 
 from ..plans.audit import node_class, plan_nodes
 from ..session import _size_to_bytes, session_width
+from ..state import (
+    _make_cusum_step,
+    _make_holt_step,
+    _make_kalman_step,
+    _make_throttle_step,
+)
 
 
 def _dir_bytes(path: str) -> int:
@@ -1565,56 +1572,68 @@ class StreamFrame:
             f"r_ts {tst}, r_v {rvt}",
         )
 
-    def throttle(self, maximum: float, interval: float, cost: float = 1.0) -> DataFrame:
-        """Streaming Throttle: the same sliding-budget re-timestamping
-        recurrence as the batch kernel (state.py:50), with the in-window
-        emission deque carried in the state store per key — emits
-        (ts, emit_ts, value); identical output to the batch kernel over
-        the same recorded rows (parity-tested)."""
-        value_col = self.value_cols[0]
-        ts_col = self.ts_col
-        keys = self.key_cols
-        vt = _sql_type(self.df, value_col)
+    def _scan_state(self, step, in_cols, fields, state_schema,
+                    load=None, save=None) -> DataFrame:
+        """Run a ``state.py`` recurrence step as the streaming twin of
+        its batch kernel: one step call per key group per micro-batch,
+        over the group's rows in event-time order, the step's carried
+        state in the state store (``load`` / ``save`` convert it to and
+        from the stored row when the two forms differ). Emits the keys,
+        the event time, then ``fields`` in order: ``value`` is the
+        input value (as float64 when declared ``double``), every other
+        name the step's next output array."""
+        value_col, ts_col, keys = self.value_cols[0], self.ts_col, self.key_cols
         out_schema = (
             _keys_prefix(self.df, keys)
-            + f"{ts_col} {_sql_type(self.df, ts_col)}, emit_ts timestamp, value {vt}"
+            + f"{ts_col} {_sql_type(self.df, ts_col)}, "
+            + ", ".join(f"{n} {t}" for n, t in fields)
         )
 
         def handler(key, pdfs, state: GroupState):
-            if state.exists:
-                wt, wc, last_emit = state.get
-                wt, wc = list(wt), list(wc)
-            else:
-                wt, wc, last_emit = [], [], -float("inf")
-            used = sum(wc)
-            outs = []
             pdf = _sorted_chunks(pdfs, ts_col)
-            if pdf is not None:
-                for _, row in pdf.iterrows():
-                    t = max(row[ts_col].value / 1e9, last_emit)  # epoch s, matches batch kernel
-                    while True:
-                        while wt and wt[0] <= t - interval:
-                            wt.pop(0)
-                            used -= wc.pop(0)
-                        if used + cost <= maximum or not wt:
-                            break
-                        t = wt[0] + interval
-                    last_emit = t
-                    wt.append(t)
-                    wc.append(cost)
-                    used += cost
-                    outs.append(
-                        {**{k: row[k] for k in keys}, ts_col: row[ts_col],
-                         "emit_ts": pd.Timestamp(round(t * 1e6) * 1000),
-                         "value": row[value_col]}
-                    )
-            state.update((wt, wc, last_emit))
-            if outs:
-                yield pd.DataFrame(outs)
+            if pdf is None:
+                return
+            carried = None
+            if state.exists:
+                carried = load(state.get) if load else state.get
+            outs, new = step([pdf[c].to_numpy() for c in in_cols], carried)
+            state.update(save(new) if save else new)
+            outs = iter(outs)
+            out = pdf[[*keys, ts_col]].copy()
+            for name, ddl in fields:
+                if name == "value":
+                    v = pdf[value_col]
+                    out[name] = v.to_numpy(dtype="float64") if ddl == "double" else v
+                else:
+                    out[name] = next(outs)
+            yield out
 
         return _apply_state(
-            self.df, keys, [ts_col, value_col], handler, out_schema,
-            "wt array<double>, wc array<double>, last_emit double",
+            self.df, keys, [ts_col, value_col], handler, out_schema, state_schema
+        )
+
+    def throttle(self, maximum: float, interval: float, cost: float = 1.0) -> DataFrame:
+        """Streaming Throttle: the batch kernel's sliding-budget step
+        (state.py:_make_throttle_step), with the in-window emissions
+        carried in the state store per key — emits (ts, emit_ts,
+        value); identical output to the batch kernel over the same
+        recorded rows (parity-tested)."""
+
+        def load(stored):
+            from collections import deque
+
+            wt, wc, last_emit = stored
+            return deque(zip(wt, wc)), sum(wc), last_emit, 0, maximum, interval
+
+        def save(st):
+            window, _, last_emit = st[:3]
+            return [t for t, _ in window], [c for _, c in window], last_emit
+
+        return self._scan_state(
+            _make_throttle_step(maximum, interval, cost), [self.ts_col],
+            [("emit_ts", "timestamp"),
+             ("value", _sql_type(self.df, self.value_cols[0]))],
+            "wt array<double>, wc array<double>, last_emit double", load, save,
         )
 
     # -- higher-order (emap family) ------------------------------------
@@ -2112,143 +2131,41 @@ class StreamFrame:
 
     def cusum(self, target: float, h: float, slack: float = 0.0,
               reset: bool = True) -> DataFrame:
-        """Streaming CUSUM twin (state.py:cusum): the clamped two-sided
-        recurrence with (hi, lo) carried in the state store per key —
-        tick-for-tick equal to the batch kernel over the same rows
-        (parity-tested). Emits every row with its accumulators + alarm.
+        """Streaming CUSUM twin: the batch kernel's step
+        (state.py:_make_cusum_step) with (hi, lo) carried in the state
+        store per key — tick-for-tick equal to the batch kernel over
+        the same rows, rounding included (parity-tested). Emits every
+        row with its accumulators + alarm.
         """
-        value_col = self.value_cols[0]
-        ts_col = self.ts_col
-        keys = self.key_cols
-        out_schema = (
-            _keys_prefix(self.df, keys)
-            + f"{ts_col} {_sql_type(self.df, ts_col)}, value double, "
-            + "cusum_hi double, cusum_lo double, alarm boolean"
-        )
-        kt, kk, kh = float(target), float(slack), float(h)
-
-        def handler(key, pdfs, state: GroupState):
-            hi, lo = state.get if state.exists else (0.0, 0.0)
-            outs = []
-            pdf = _sorted_chunks(pdfs, ts_col)
-            if pdf is not None:
-                for _, row in pdf.iterrows():
-                    x = float(row[value_col])
-                    nh = max(0.0, hi + (x - kt) - kk)
-                    nl = max(0.0, lo - (x - kt) - kk)
-                    a = nh > kh or nl > kh
-                    outs.append({
-                        **{k: row[k] for k in keys}, ts_col: row[ts_col],
-                        "value": x, "cusum_hi": round(nh, 6),
-                        "cusum_lo": round(nl, 6), "alarm": a,
-                    })
-                    hi, lo = (0.0, 0.0) if (a and reset) else (nh, nl)
-            state.update((hi, lo))
-            if outs:
-                yield pd.DataFrame(outs)
-
-        return _apply_state(
-            self.df, keys, [ts_col, value_col], handler, out_schema,
+        return self._scan_state(
+            _make_cusum_step(target, h, slack, reset), self.value_cols[:1],
+            [("value", "double"), ("cusum_hi", "double"),
+             ("cusum_lo", "double"), ("alarm", "boolean")],
             "hi double, lo double",
         )
 
     def holt(self, alpha: float = 0.5, beta: float = 0.3) -> DataFrame:
-        """Streaming Holt smoothing twin (state.py:holt): the coupled
-        (level, trend) recurrence carried in the state store per key —
-        tick-for-tick equal to the batch kernel over the same rows
-        (parity-tested). First row per key seeds level=x, trend=0.
+        """Streaming Holt smoothing twin: the batch kernel's step
+        (state.py:_make_holt_step) with (level, trend) carried in the
+        state store per key (parity-tested). First row per key seeds
+        level=x, trend=0; a NULL value poisons the state as in batch.
         """
-        value_col = self.value_cols[0]
-        ts_col = self.ts_col
-        keys = self.key_cols
-        out_schema = (
-            _keys_prefix(self.df, keys)
-            + f"{ts_col} {_sql_type(self.df, ts_col)}, value double, "
-            + "level double, trend double, forecast double"
-        )
-        a, b = float(alpha), float(beta)
-        one_a, one_b = 1.0 - a, 1.0 - b
-
-        def handler(key, pdfs, state: GroupState):
-            lvl, tr = state.get if state.exists else (None, None)
-            # self-contained rounder (executors can't import the repo
-            # package when the driver runs outside it). numpy's, as in
-            # the batch twin: a NULL value's NaN rounds to NaN and
-            # leaves as NULL (math.floor raises on NaN)
-            def _r6(x):
-                return np.copysign(np.floor(np.abs(x) * 1e6 + 0.5), x) / 1e6
-
-            outs = []
-            pdf = _sorted_chunks(pdfs, ts_col)
-            if pdf is not None:
-                for _, row in pdf.iterrows():
-                    x = float(row[value_col])
-                    if lvl is None:
-                        nl, nt = x, 0.0
-                    else:
-                        nl = a * x + one_a * (lvl + tr)
-                        nt = b * (nl - lvl) + one_b * tr
-                    outs.append({
-                        **{k: row[k] for k in keys}, ts_col: row[ts_col],
-                        "value": x, "level": _r6(nl),
-                        "trend": _r6(nt),
-                        "forecast": _r6(nl + nt),
-                    })
-                    lvl, tr = nl, nt
-            if lvl is not None:
-                state.update((lvl, tr))
-            if outs:
-                yield pd.DataFrame(outs)
-
-        return _apply_state(
-            self.df, keys, [ts_col, value_col], handler, out_schema,
+        return self._scan_state(
+            _make_holt_step(alpha, beta), self.value_cols[:1],
+            [("value", "double"), ("level", "double"),
+             ("trend", "double"), ("forecast", "double")],
             "l double, t double",
         )
 
     def kalman1d(self, q: float = 0.01, r: float = 1.0, p0: float = 1.0) -> DataFrame:
-        """Streaming 1-D Kalman twin (state.py:kalman1d): (x, p) carried
-        in the state store per key — tick-for-tick equal to the batch
-        kernel (parity-tested). First row per key seeds x=z, p=p0."""
-        value_col = self.value_cols[0]
-        ts_col = self.ts_col
-        keys = self.key_cols
-        out_schema = (
-            _keys_prefix(self.df, keys)
-            + f"{ts_col} {_sql_type(self.df, ts_col)}, value double, "
-            + "kf_x double, kf_p double, kf_gain double"
-        )
-        kq, kr, kp0 = float(q), float(r), float(p0)
-
-        def handler(key, pdfs, state: GroupState):
-            x, p = state.get if state.exists else (None, None)
-
-            def _r6(v):  # NaN-safe, as in holt
-                return np.copysign(np.floor(np.abs(v) * 1e6 + 0.5), v) / 1e6
-
-            outs = []
-            pdf = _sorted_chunks(pdfs, ts_col)
-            if pdf is not None:
-                for _, row in pdf.iterrows():
-                    z = float(row[value_col])
-                    if x is None:
-                        x, p, k = z, kp0, 0.0
-                    else:
-                        pm = p + kq
-                        k = pm / (pm + kr)
-                        x = x + k * (z - x)
-                        p = (1.0 - k) * pm
-                    outs.append({
-                        **{kk: row[kk] for kk in keys}, ts_col: row[ts_col],
-                        "value": z, "kf_x": _r6(x), "kf_p": _r6(p),
-                        "kf_gain": _r6(k),
-                    })
-            if x is not None:
-                state.update((x, p))
-            if outs:
-                yield pd.DataFrame(outs)
-
-        return _apply_state(
-            self.df, keys, [ts_col, value_col], handler, out_schema,
+        """Streaming 1-D Kalman twin: the batch kernel's step
+        (state.py:_make_kalman_step) with (x, p) carried in the state
+        store per key (parity-tested). First row per key seeds x=z,
+        p=p0."""
+        return self._scan_state(
+            _make_kalman_step(q, r, p0), self.value_cols[:1],
+            [("value", "double"), ("kf_x", "double"),
+             ("kf_p", "double"), ("kf_gain", "double")],
             "x double, p double",
         )
 

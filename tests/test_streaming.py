@@ -2207,3 +2207,108 @@ def test_stream_state_width_derivation(spark, stream_dir):
     q2.awaitTermination()
     ops2 = q2.lastProgress["stateOperators"]
     assert ops2 and ops2[0]["numShufflePartitions"] == sess, ops2
+
+
+def _write_batches(root, batches):
+    """One parquet file per micro-batch of (event_id, ts seconds, user_id,
+    value) rows, mtimes oldest first; returns the schema DDL."""
+    import datetime as dt
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    os.makedirs(root)
+    base = dt.datetime(2024, 1, 1, tzinfo=dt.timezone.utc)
+    for f, rows in enumerate(batches):
+        eid, secs, uid, val = zip(*rows)
+        path = os.path.join(root, f"part{f}.parquet")
+        pq.write_table(pa.table({
+            "event_id": pa.array(eid, pa.int64()),
+            "ts": pa.array([base + dt.timedelta(seconds=s) for s in secs],
+                           pa.timestamp("us", tz="UTC")),
+            "user_id": pa.array(uid, pa.int64()),
+            "value": pa.array(val, pa.float64()),
+        }), path)
+        os.utime(path, (1_700_000_000 + f, 1_700_000_000 + f))
+    return "event_id long, ts timestamp, user_id long, value double"
+
+
+def test_recurrence_twins_group_null_keys(spark, tmp_path):
+    """NULL keys: each streaming twin (one state-store group for the NULL
+    key) equals its batch kernel, which now also treats NULL keys as
+    one key, over three micro-batches. Before, batch cusum / holt /
+    kalman1d / throttle restarted on every NULL-key row."""
+    from eventkit_spark.sources.tables import from_dataframe
+    from eventkit_spark.streaming import file_stream
+
+    keys = [1, None, 1, None, 1, None, 2, None, 2, 1, None, 2]
+    vals = [5.0, 10.0, 5.0, 30.0, None, 50.0, 7.0, 2.0, 1.0, 4.0, 8.0, 3.0]
+    rows = [(i, i, k, v) for i, (k, v) in enumerate(zip(keys, vals))]
+    src = str(tmp_path / "src")
+    schema = _write_batches(src, [rows[:4], rows[4:8], rows[8:]])
+    ef = from_dataframe(
+        spark.read.schema(schema).parquet(src),
+        value_cols=["value"], seq_col="event_id", ts_col="ts", key_cols=["user_id"],
+    )
+    for op, args, cols in (
+        ("cusum", (0.0, 1000.0), ("cusum_hi", "cusum_lo", "alarm")),
+        ("holt", (), ("level", "trend", "forecast")),
+        ("kalman1d", (), ("kf_x", "kf_p", "kf_gain")),
+        ("throttle", (1, 3600.0), ("ts",)),
+    ):
+        sf = file_stream(spark, src, schema=schema, value_cols=["value"], ts_col="ts",
+                         key_cols=["user_id"], max_files_per_trigger=1)
+        out = sf.run_available_now(sink_df=getattr(sf, op)(*args), name=f"ek_nk_{op}")
+        if op == "throttle":
+            got = {r["ts"]: (r["emit_ts"],) for r in out.collect()}
+        else:
+            got = {r["ts"]: tuple(r[c] for c in cols) for r in out.collect()}
+        batch = getattr(ef, op)(*args).df.collect()
+        orig = {r["event_id"]: r["ts"] for r in ef.df.collect()}
+        want = {orig[r["event_id"]]: tuple(r[c] for c in cols) for r in batch}
+        assert got == want and len(got) == 12, op
+        if op == "cusum":  # the NULL key's running sums
+            assert [got[orig[i]][0] for i in (1, 3, 5, 7, 10)] == [
+                10.0, 40.0, 90.0, 92.0, 100.0
+            ]
+
+
+def test_streaming_cusum_rounds_like_batch(spark, tmp_path):
+    """Streaming cusum rounds its accumulators with the batch kernel's
+    half-away-from-zero rounder: 12.3456785 lands on a half-way 6th
+    decimal, which Python's round() took to 12.345678."""
+    from eventkit_spark.sources.tables import from_dataframe
+    from eventkit_spark.streaming import file_stream
+
+    src = str(tmp_path / "src")
+    schema = _write_batches(src, [[(0, 0, 1, 12.3456785)]])
+    sf = file_stream(spark, src, schema=schema, value_cols=["value"], ts_col="ts",
+                     key_cols=["user_id"])
+    out = sf.run_available_now(sink_df=sf.cusum(0.0, h=100.0), name="ek_cusum_r6")
+    ef = from_dataframe(
+        spark.read.schema(schema).parquet(src),
+        value_cols=["value"], seq_col="event_id", ts_col="ts", key_cols=["user_id"],
+    )
+    (b,) = ef.cusum(0.0, h=100.0).df.collect()
+    (s,) = out.collect()
+    assert b["cusum_hi"] == 12.345679
+    assert (s["cusum_hi"], s["cusum_lo"]) == (b["cusum_hi"], b["cusum_lo"])
+
+
+def test_streaming_iterate_one_shot_iterable(spark, stream_dir):
+    """A generator of ints gives a long ``value`` column in streaming
+    iterate, with the batch twin's values."""
+    from eventkit_spark.sources.tables import from_dataframe
+
+    sf = _stream(spark, stream_dir)
+    sink = sf.iterate(v * 3 for v in range(5))
+    assert sink.schema["value"].dataType.simpleString() == "bigint"
+    out = sf.run_available_now(sink_df=sink, name="ek_iter_gen")
+    ef = from_dataframe(
+        spark.read.parquet(stream_dir),
+        value_cols=["value"], seq_col="event_id", ts_col="ts", key_cols=["user_id"],
+    )
+    got = {(r["user_id"], r["ts"]): r["value"] for r in out.collect()}
+    want = {(r["user_id"], r["ts"]): r["value"]
+            for r in ef.iterate(v * 3 for v in range(5)).df.collect()}
+    assert got == want and set(got.values()) == {0, 3, 6, 9, 12}

@@ -336,3 +336,99 @@ def test_kalman1d_model(spark):
     # gain decreases toward the steady state as variance shrinks
     gains = [got[(0, j)][2] for j in range(1, 5)]
     assert all(g > 0 for g in gains) and gains[0] > gains[-1]
+
+
+def _null_key_frame(spark):
+    """Rows keyed [1, NULL, 1, NULL, 1, NULL, 2, NULL, 2, 1, NULL, 2],
+    one second apart, one NULL value."""
+    import datetime as dt
+
+    from eventkit_spark.sources.tables import from_dataframe
+
+    keys = [1, None, 1, None, 1, None, 2, None, 2, 1, None, 2]
+    vals = [5.0, 10.0, 5.0, 30.0, None, 50.0, 7.0, 2.0, 1.0, 4.0, 8.0, 3.0]
+    t0 = dt.datetime(2024, 1, 1)
+    rows = [(i, t0 + dt.timedelta(seconds=i), k, v)
+            for i, (k, v) in enumerate(zip(keys, vals))]
+    df = spark.createDataFrame(rows, "seq long, ts timestamp, k long, value double")
+    return df, lambda d, key_cols: from_dataframe(
+        d, value_cols=["value"], seq_col="seq", ts_col="ts", key_cols=key_cols
+    )
+
+
+NULL_KEY_KERNELS = {
+    "ema_exact": lambda ef: ef.ema_exact(n=3),
+    "throttle": lambda ef: ef.throttle(maximum=1, interval=3600.0, status=True),
+    "cusum": lambda ef: ef.cusum(0.0, h=1000.0),
+    "holt": lambda ef: ef.holt(),
+    "kalman1d": lambda ef: ef.kalman1d(),
+    # a Python conditional has no Column form: the fold runs in the lane
+    "reduce": lambda ef: ef.reduce(lambda a, x: a + (0.0 if x != x else x), initializer=0.0),
+}
+
+
+def test_recurrences_group_null_keys(spark):
+    """NULL keys are ONE key in every sequential kernel, as in groupBy
+    and the streaming state store: each kernel's keyed output equals
+    a replay that runs it keyless on every groupBy group (NULL-safe
+    filter). Before, cusum/holt/kalman1d/throttle started a fresh key
+    on every NULL-key row of a numeric key column."""
+    from pyspark.sql import functions as F
+
+    df, frame = _null_key_frame(spark)
+    for name, op in NULL_KEY_KERNELS.items():
+        got = {r["seq"]: tuple(r) for r in op(frame(df, ["k"])).df.collect()}
+        want = {}
+        for g in (1, 2, None):
+            sub = df.filter(F.col("k").eqNullSafe(F.lit(g).cast("long")))
+            want.update({r["seq"]: tuple(r) for r in op(frame(sub, [])).df.collect()})
+        assert got == want and len(got) == 12, name
+    null_rows = [1, 3, 5, 7, 10]
+    cus = {r["seq"]: r for r in NULL_KEY_KERNELS["cusum"](frame(df, ["k"])).df.collect()}
+    assert [cus[s]["cusum_hi"] for s in null_rows] == [10.0, 40.0, 90.0, 92.0, 100.0]
+    thr = {r["seq"]: r for r in NULL_KEY_KERNELS["throttle"](frame(df, ["k"])).df.collect()}
+    t0 = thr[1]["ts"]
+    assert [(thr[s]["ts"] - t0).total_seconds() for s in null_rows] == [
+        0.0, 3600.0, 7200.0, 10800.0, 14400.0
+    ]
+    assert [thr[s]["throttled"] for s in null_rows] == [False, True, True, True, True]
+
+
+def test_sort_within_partitions_only_in_the_lane():
+    """Every per-key sequential scan of the package goes through
+    state.py's ``_keyed_scan``: a ``sortWithinPartitions(`` call
+    anywhere else (bar the Z-order file layout) is a new copy of the
+    keyed-scan scaffolding, with its own NULL-key and batch-split
+    rules to drift."""
+    import ast
+    import pathlib
+
+    pkg = pathlib.Path(__file__).resolve().parent.parent / "eventkit_spark"
+    bad = []
+
+    class Calls(ast.NodeVisitor):
+        def __init__(self, rel):
+            self.rel, self.defs = rel, []
+
+        def visit_FunctionDef(self, node):
+            self.defs.append(node.name)
+            self.generic_visit(node)
+            self.defs.pop()
+
+        visit_AsyncFunctionDef = visit_FunctionDef
+
+        def visit_Call(self, node):
+            f = node.func
+            outer = self.defs[0] if self.defs else "<module>"
+            if (
+                isinstance(f, ast.Attribute) and f.attr == "sortWithinPartitions"
+                and self.rel != "sources/layout.py"
+                and (self.rel, outer) != ("state.py", "_keyed_scan")
+            ):
+                bad.append(f"{self.rel}:{node.lineno} in {outer}")
+            self.generic_visit(node)
+
+    for path in sorted(pkg.rglob("*.py")):
+        rel = path.relative_to(pkg).as_posix()
+        Calls(rel).visit(ast.parse(path.read_text()))
+    assert not bad, bad

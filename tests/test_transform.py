@@ -148,3 +148,11 @@ def test_pluck_json_variant_matches_string_path(spark):
 
     with _pytest.raises(ValueError, match="at least one"):
         ef.pluck_json({})
+
+
+def test_iterate_one_shot_iterable(ints):
+    """A generator is read once: its ints give a long column (typing it
+    after the side table had drained it gave ``string``)."""
+    out = ints.take(4).iterate(v * 10 for v in range(6))
+    assert out.df.schema["value"].dataType.simpleString() == "bigint"
+    assert out.to_list() == [0, 10, 20, 30]
