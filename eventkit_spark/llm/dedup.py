@@ -168,6 +168,24 @@ def ngram_jaccard_pairs(
     )
 
 
+def _hot_keys(df: DataFrame, keys, cap: int) -> DataFrame:
+    """The ``keys`` values holding more than ``cap`` rows of ``df``: the
+    hot set every size guard here anti-joins away (shingle document
+    frequency, LSH and SimHash bucket sizes). The guard must not itself
+    shuffle on the hot key: a count WINDOW puts every row of a hot key
+    into one un-splittable window task before dropping it, the very
+    skew the guard exists for. The aggregate's map-side partial combine
+    collapses hot keys per input partition, and its output (only the
+    keys over the cap) is tiny, so AQE broadcasts it and hot rows drop
+    map-side with no hot-key exchange."""
+    return (
+        df.groupBy(*keys)
+        .agg(F.count("*").alias("__df"))
+        .filter(F.col("__df") > cap)
+        .select(*keys)
+    )
+
+
 def _pair_counts(docs, k, text_col, id_col, max_df):
     """Shared posting-list core: (id_a, id_b, na, nb, common) for every
     document pair sharing >=1 (surviving) shingle — the intersection
@@ -202,21 +220,8 @@ def _pair_counts(docs, k, text_col, id_col, max_df):
         # boundary is SIZE-CONDITIONAL (r11 VERDICT item 4): it engages
         # only above the _spread.materialize_threshold() source size.
         sh = boundary_if_large(sh, docs)
-        # df-pruning BOUNDS every collect_list at max_df entries. The
-        # guard must not itself shuffle on the hot key: a count WINDOW
-        # over the shingle put every copy of a boilerplate shingle into
-        # one un-splittable window task before dropping it. Instead,
-        # aggregate the hot set (map-side partial combine collapses hot
-        # shingles per input partition; output = only the shingles OVER
-        # the cap, a tiny table) and anti-join it — AQE broadcasts the
-        # hot table, so hot rows drop map-side with no hot-key exchange.
-        hot = (
-            sh.groupBy("shingle")
-            .agg(F.count("*").alias("__df"))
-            .filter(F.col("__df") > max_df)
-            .select("shingle")
-        )
-        sh = sh.join(hot, "shingle", "left_anti")
+        # df-pruning BOUNDS every collect_list at max_df entries
+        sh = sh.join(_hot_keys(sh, ["shingle"], max_df), "shingle", "left_anti")
     posts = (
         sh.groupBy("shingle")
         .agg(F.array_sort(F.collect_list(F.struct("id", "n"))).alias("lst"))
@@ -538,18 +543,9 @@ def minhash_lsh_candidates(
     # with no exchange reuse; grouping each bucket once halves the heavy
     # part. Bucket membership ~ near-dup groups + rare hash collisions.
     if max_bucket is not None:
-        # oversized buckets drop BEFORE any list is built — via a hot-set
-        # aggregate + anti-join, NOT a count window: the window form
-        # shuffled every member of the hot bucket into one un-splittable
-        # task first (the exact skew the guard exists for); the hot
-        # table is tiny and AQE broadcasts it, so hot rows drop map-side
-        hot = (
-            banded.groupBy("band", "bucket")
-            .agg(F.count("*").alias("__bn"))
-            .filter(F.col("__bn") > max_bucket)
-            .select("band", "bucket")
-        )
-        banded = banded.join(hot, ["band", "bucket"], "left_anti")
+        # oversized buckets drop BEFORE any list is built
+        bb = ["band", "bucket"]
+        banded = banded.join(_hot_keys(banded, bb, max_bucket), bb, "left_anti")
     posts = (
         banded.groupBy("band", "bucket")
         .agg(F.array_sort(F.collect_list("id")).alias("lst"))
@@ -1222,10 +1218,8 @@ def simhash_near_dups(
     sh = simhash64(docs, text_col, id_col, portable=portable)
     chunks = _simhash_chunks(sh)
     if max_bucket is not None:
-        cw = W.partitionBy("chunk", "val")
-        chunks = chunks.withColumn("__bn", F.count("*").over(cw)).filter(
-            F.col("__bn") <= max_bucket
-        ).drop("__bn")
+        cv = ["chunk", "val"]
+        chunks = chunks.join(_hot_keys(chunks, cv, max_bucket), cv, "left_anti")
     posts = (
         chunks.groupBy("chunk", "val")
         .agg(F.array_sort(F.collect_list(F.struct("id", "simhash"))).alias("lst"))
@@ -2156,11 +2150,7 @@ def cross_corpus_near_dups(
         .distinct()
     )
     if max_df is not None:
-        hot = (
-            sa.groupBy("sh").agg(F.count("*").alias("__df"))
-            .filter(F.col("__df") > max_df)
-            .select("sh")
-        )
+        hot = _hot_keys(sa, ["sh"], max_df)
         sa = sa.join(hot, "sh", "left_anti")
         sb = sb.join(F.broadcast(hot), "sh", "left_anti")
     maybe_bc = F.broadcast if broadcast_heldout else (lambda x: x)

@@ -25,6 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from ..sources.tables import local_frame, read_parquet
+from .dedup import _hot_keys
 
 
 def _as_double(col):
@@ -621,16 +622,8 @@ def embedding_near_dups(
             "id", F.posexplode(buckets_udf(F.col("v"))).alias("tbl", "bucket")
         )
         if max_bucket is not None:
-            # hot-set aggregate + anti-join, not a count window: a hot
-            # bucket must never shuffle into one window task just to be
-            # dropped (same guard shape as minhash's max_bucket)
-            hot = (
-                banded.groupBy("tbl", "bucket")
-                .agg(F.count("*").alias("__bn"))
-                .filter(F.col("__bn") > max_bucket)
-                .select("tbl", "bucket")
-            )
-            banded = banded.join(hot, ["tbl", "bucket"], "left_anti")
+            tb = ["tbl", "bucket"]
+            banded = banded.join(_hot_keys(banded, tb, max_bucket), tb, "left_anti")
         posts = (
             banded.groupBy("tbl", "bucket")
             .agg(F.array_sort(F.collect_list("id")).alias("lst"))

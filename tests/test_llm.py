@@ -700,8 +700,11 @@ def test_asof_join_unkeyed_carry_forward(spark):
 
 def test_bucket_caps_prune_only_downward(spark):
     """max_bucket on minhash/simhash may drop pairs, never invent them;
-    with a generous cap the pair sets are identical."""
+    with a generous cap the pair sets are identical. The simhash cap is
+    the hot-set aggregate + anti-join, never a count window (a window
+    shuffles a whole hot bucket into one task before dropping it)."""
     from eventkit_spark.llm.dedup import minhash_lsh_candidates, simhash_near_dups
+    from eventkit_spark.plans.audit import node_class, plan_nodes
 
     docs = load_table(spark, SF, "documents")
     mh_all = {(r["id_a"], r["id_b"]) for r in minhash_lsh_candidates(docs).collect()}
@@ -710,7 +713,10 @@ def test_bucket_caps_prune_only_downward(spark):
     assert mh_cap == mh_all and mh_tight <= mh_all
     sh_all = {(r["id_a"], r["id_b"]) for r in simhash_near_dups(docs).collect()}
     sh_cap = {(r["id_a"], r["id_b"]) for r in simhash_near_dups(docs, max_bucket=500).collect()}
-    assert sh_cap == sh_all
+    tight = simhash_near_dups(docs, max_bucket=2)
+    sh_tight = {(r["id_a"], r["id_b"]) for r in tight.collect()}
+    assert sh_cap == sh_all and sh_tight <= sh_all
+    assert "Window" not in {node_class(n) for n in plan_nodes(tight, "optimized")}
 
 
 def test_pack_spans_exact_budget(spark):

@@ -332,7 +332,10 @@ def _marble_stream(spark, tmp_path_factory, n_parents):
 
 def test_streaming_emap_family(spark, tmp_path_factory):
     """Streaming emap twins match the batch engine's four disciplines
-    on the reference marble goldens (transform_test.py:117-166)."""
+    on the reference marble goldens (transform_test.py:117-166). The
+    Arrow batch size is cut to 5 rows so each key group of children
+    spans several chunks: the counter and cut states must still see
+    them in (pseq, cidx) order."""
     from eventkit_spark.operators.higher_order import marble_children
     from eventkit_spark.sources.create import sequence
 
@@ -368,13 +371,19 @@ def test_streaming_emap_family(spark, tmp_path_factory):
 
         sf = _marble_stream(spark, tmp_path_factory, 3)
         out = sf.emap(gen, joiner)
-        if isinstance(out, type(sf)):  # mergemap returns a StreamFrame
-            got_df = sf.run_available_now(sink_df=out.df, name=f"ek_em{i}")
-            rows = got_df.orderBy("ts", "pseq", "cidx").collect()
-        else:
-            got_df = sf.run_available_now(sink_df=out, name=f"ek_em{i}")
-            order = ["chain_no"] if "chain_no" in got_df.columns else ["ts"]
-            rows = got_df.orderBy(*order).collect()
+        key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+        old = spark.conf.get(key)
+        spark.conf.set(key, "5")
+        try:
+            if isinstance(out, type(sf)):  # mergemap returns a StreamFrame
+                got_df = sf.run_available_now(sink_df=out.df, name=f"ek_em{i}")
+                rows = got_df.orderBy("ts", "pseq", "cidx").collect()
+            else:
+                got_df = sf.run_available_now(sink_df=out, name=f"ek_em{i}")
+                order = ["chain_no"] if "chain_no" in got_df.columns else ["ts"]
+                rows = got_df.orderBy(*order).collect()
+        finally:
+            spark.conf.set(key, old)
         got = [r["value"] for r in rows]
         assert got == expect, f"{joiner}: {got} != {expect}"
 
@@ -1505,10 +1514,17 @@ def test_streaming_timeout_sentinel(spark, stream_dir):
     assert any(v is None for _, _, v in exp)  # sentinel branch non-vacuous
 
     sf = _stream(spark, stream_dir).with_watermark("0 seconds")
-    out = sf.run_available_now(
-        sink_df=sf.timeout(GAP, emit_sentinel=True), name="ek_tos"
-    )
-    got = {(r["user_id"], r["ts"], r["value"]) for r in out.collect()}
+    # 5-row Arrow batches: every key group spans several chunks
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "5")
+    try:
+        out = sf.run_available_now(
+            sink_df=sf.timeout(GAP, emit_sentinel=True), name="ek_tos"
+        )
+        got = {(r["user_id"], r["ts"], r["value"]) for r in out.collect()}
+    finally:
+        spark.conf.set(key, old)
     assert exp <= got, f"missing batch rows: {sorted(exp - got)[:5]}"
 
     extras = got - exp
@@ -1748,6 +1764,63 @@ def test_streaming_chunk_numeric_ts_and_null_budget_cost(spark, tmp_path):
     assert [v for _, v in vals] == [10.0, 20.0, 0.0]
 
 
+def test_streaming_chunk_null_values(spark, tmp_path):
+    """A NULL value stays a NULL element of its chunk, as in batch chunk:
+    in one micro-batch, in the carry buffer handed across micro-batches,
+    and in the partial chunk that flush_after emits. (Spark failed the
+    query decoding a NULL element of a pandas kernel's array<double>.)"""
+    import datetime
+
+    from eventkit_spark.sources.tables import from_dataframe
+    from eventkit_spark.streaming import file_stream
+
+    schema = "seq long, ts timestamp, user_id long, value double"
+    base = datetime.datetime(2024, 1, 1)
+
+    def write(d, rows):
+        spark.createDataFrame(rows, schema).coalesce(1).write.mode("append").parquet(d)
+
+    def chunks(out):
+        return sorted((r["user_id"], r["ts"], tuple(r["value"])) for r in out.collect())
+
+    d = str(tmp_path / "in")
+    rows = [(i, base + datetime.timedelta(seconds=i), 1, v)
+            for i, v in enumerate([10.0, None, None, 40.0, 50.0, None, 70.0])]
+    write(d, rows[:3])  # the first micro-batch ends on a buffered NULL
+    write(d, rows[3:])
+    ef = from_dataframe(spark.read.parquet(d), value_cols=["value"],
+                        seq_col="seq", ts_col="ts", key_cols=["user_id"])
+    want = chunks(ef.chunk(2).df)
+    assert want[-1][2] == (70.0,)  # the batch remainder: not emitted below
+    for multi in (None, 1):
+        sf = file_stream(spark, d, schema, value_cols=["value"], ts_col="ts",
+                         key_cols=["user_id"], max_files_per_trigger=multi)
+        got = chunks(sf.run_available_now(sink_df=sf.chunk(2), name=f"ek_cnull{multi}"))
+        assert got == want[:-1] == [
+            (1, base + datetime.timedelta(seconds=1), (10.0, None)),
+            (1, base + datetime.timedelta(seconds=3), (None, 40.0)),
+            (1, base + datetime.timedelta(seconds=5), (50.0, None)),
+        ], multi
+
+    # flush_after: key 1 buffers the partial [NULL]; key 2 an hour later
+    # moves the watermark past key 1's timer, which flushes it
+    d2 = str(tmp_path / "in2")
+    write(d2, [(0, base, 1, 1.0), (1, base + datetime.timedelta(seconds=1), 1, None),
+               (2, base + datetime.timedelta(seconds=2), 1, None)])
+    write(d2, [(3, base + datetime.timedelta(hours=1), 2, 100.0),
+               (4, base + datetime.timedelta(hours=1, seconds=1), 2, 101.0)])
+    sf = file_stream(spark, d2, schema, value_cols=["value"], ts_col="ts",
+                     key_cols=["user_id"], max_files_per_trigger=1
+                     ).with_watermark("0 seconds")
+    got = chunks(sf.run_available_now(sink_df=sf.chunk(2, flush_after=60.0),
+                                      name="ek_cnull_flush"))
+    assert got == [
+        (1, base + datetime.timedelta(seconds=1), (1.0, None)),
+        (1, base + datetime.timedelta(seconds=2), (None,)),
+        (2, base + datetime.timedelta(hours=1, seconds=1), (100.0, 101.0)),
+    ]
+
+
 def test_streaming_cross_batch_state_parity(spark, stream_dir, tmp_path):
     """r10: every vectorized stateful kernel must carry its state
     across MICRO-BATCH boundaries exactly (the carries are prepended to
@@ -1818,6 +1891,11 @@ def test_streaming_cross_batch_state_parity(spark, stream_dir, tmp_path):
         # arithmetic over the carry buffer) — the partial-chunk buffer
         # must hand off across batches exactly
         "chunk": lambda sf: sf.chunk(5),
+        # the lane's arange/prefix-flip rewrites of the per-row loops:
+        # the literal-index, flip and trailing-window carries
+        "iterate": lambda sf: sf.iterate(range(0, 120, 3)),
+        "timeout": lambda sf: sf.timeout(3600.0),
+        "anomaly": lambda sf: sf.anomaly(86400.0, z=2.0),
     }
     # two-input kernels: zip / ziplatest / takeuntil / sample
     two_input = {
@@ -2312,3 +2390,79 @@ def test_streaming_iterate_one_shot_iterable(spark, stream_dir):
     want = {(r["user_id"], r["ts"]): r["value"]
             for r in ef.iterate(v * 3 for v in range(5)).df.collect()}
     assert got == want and set(got.values()) == {0, 3, 6, 9, 12}
+
+
+def test_state_protocol_only_in_the_lane():
+    """Every applyInPandasWithState kernel of the package is a step run
+    by ``StreamFrame._scan_state``; ``running_agg`` keeps the one other
+    handler. A GroupState call, a ``_sorted_chunks(`` drain or an
+    ``_apply_state(`` call anywhere else is a new hand-written handler
+    shell, with its own load/sort/store/emit rules to drift; an
+    ``iterrows(`` in the streaming module is a per-row output loop."""
+    import ast
+    import pathlib
+
+    pkg = pathlib.Path(__file__).resolve().parent.parent / "eventkit_spark"
+    # GroupState's own methods and properties: flagged on any object.
+    # The generic names are flagged on a GroupState-annotated parameter
+    # or a name ``state``.
+    own = {"hasTimedOut", "getCurrentWatermarkMs", "getCurrentProcessingTimeMs",
+           "setTimeoutTimestamp", "setTimeoutDuration", "oldTimeoutTimestamp"}
+    generic = {"exists", "get", "update", "remove"}
+    bad = []
+
+    class Calls(ast.NodeVisitor):
+        def __init__(self, rel):
+            self.rel, self.defs, self.gs = rel, [], [set()]
+
+        def visit_FunctionDef(self, node):
+            self.defs.append(node.name)
+            args = node.args.posonlyargs + node.args.args + node.args.kwonlyargs
+            self.gs.append({
+                a.arg for a in args
+                if a.annotation is not None and "GroupState" in ast.unparse(a.annotation)
+            } | {"state"})
+            self.generic_visit(node)
+            self.defs.pop()
+            self.gs.pop()
+
+        visit_AsyncFunctionDef = visit_FunctionDef
+
+        def where(self, node):
+            return f"{self.rel}:{node.lineno} in {'.'.join(self.defs) or '<module>'}"
+
+        def in_lane(self, running_agg_method=False):
+            if self.rel != "streaming/stream.py":
+                return False
+            if "_scan_state" in self.defs:
+                return True
+            ra = "running_agg" in self.defs
+            return ra and (running_agg_method or self.defs[-1] == "handler")
+
+        def visit_Attribute(self, node):
+            gs_call = node.attr in own or (
+                node.attr in generic
+                and isinstance(node.value, ast.Name)
+                and node.value.id in self.gs[-1]
+            )
+            if gs_call and not self.in_lane():
+                bad.append(f"GroupState.{node.attr} at {self.where(node)}")
+            if node.attr == "applyInPandasWithState" and self.defs != ["_apply_state"]:
+                bad.append(f"applyInPandasWithState at {self.where(node)}")
+            if node.attr == "iterrows" and self.rel == "streaming/stream.py":
+                bad.append(f"iterrows at {self.where(node)}")
+            self.generic_visit(node)
+
+        def visit_Call(self, node):
+            f = node.func
+            name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
+            if name == "_sorted_chunks" and not self.in_lane():
+                bad.append(f"_sorted_chunks( at {self.where(node)}")
+            if name == "_apply_state" and not self.in_lane(running_agg_method=True):
+                bad.append(f"_apply_state( at {self.where(node)}")
+            self.generic_visit(node)
+
+    for path in sorted(pkg.rglob("*.py")):
+        rel = path.relative_to(pkg).as_posix()
+        Calls(rel).visit(ast.parse(path.read_text()))
+    assert not bad, bad
