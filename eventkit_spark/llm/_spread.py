@@ -1,18 +1,14 @@
-"""Shared plan/size probes for the llm operators: the CPU-spread
-remedy for expensive Arrow kernels on under-split scans (ONE copy —
-the r11 winnow change duplicated multimodal's `_spread` inline and
-the two guards had already started to drift; r11 ADVICE items 2-4 are
-folded in here), and the size-conditional materialization gate for
-duplicated shared subtrees (r11 VERDICT item 4)."""
+"""The CPU-spread remedy for expensive Arrow kernels on under-split
+scans, shared by the llm operators (ONE copy — the r11 winnow change
+duplicated multimodal's `_spread` inline and the two guards had already
+started to drift; r11 ADVICE items 2-4 are folded in here)."""
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import DataFrame
 
 from ..plans.audit import node_class, plan_nodes
-from ..session import _size_to_bytes, session_width
+from ..session import session_width
 
 # Optimized-plan node classes under which converting to an RDD is
 # plan-only work: narrow ops (a generator such as explode included)
@@ -61,66 +57,4 @@ def spread(df: DataFrame) -> DataFrame:
             return df.repartition(width)
     except Exception:  # noqa: BLE001 — Connect / exotic plans: no spread
         return df
-    return df
-
-
-def source_bytes(df: DataFrame) -> int | None:
-    """Best-effort size of the SOURCE feeding ``df``'s plan: the summed
-    size of its input files when they are local paths, else the
-    optimizer's estimate for the plan (which at scan level is the
-    relation size even on object storage). ``None`` when nothing can
-    be learned — callers treat unknown as small."""
-    try:
-        total = 0
-        files = df.inputFiles()
-        for uri in files:
-            p = uri
-            if p.startswith("file:"):
-                from urllib.parse import urlparse
-
-                p = urlparse(p).path
-            if not os.path.exists(p):
-                total = 0
-                break
-            total += os.path.getsize(p)
-        if total:
-            return total
-        est = int(
-            str(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-        )
-        # Spark's no-stats fallback is Long.MaxValue-ish garbage on some
-        # nodes; treat absurd estimates as unknown
-        return est if 0 < est < (1 << 60) else None
-    except Exception:  # noqa: BLE001
-        return None
-
-
-def materialize_threshold() -> int:
-    """Byte threshold above which a duplicated shared subtree is worth
-    a per-run materialization boundary (lazy ``localCheckpoint``).
-    Below it, the duplicated legs execute as PARALLEL stages of one
-    job and beat any boundary — measured three independent times in
-    r11 (pagerank 1.5 s -> 4.8 s, winnow_overlap 3.4 s -> 5.7 s with an
-    unconditional boundary at sub-MB corpus sizes). Above it, each
-    re-executed leg re-pays corpus-scale shuffles and the
-    jaccard_verify precedent shows the boundary winning ~30%.
-    Override: ``SPARK_GRAFT_SUBTREE_MATERIALIZE`` (e.g. "64m";
-    "0" forces the boundary on, handy for A/B and parity tests)."""
-    override = os.environ.get("SPARK_GRAFT_SUBTREE_MATERIALIZE")
-    if override:
-        return _size_to_bytes(override)
-    return 64 << 20
-
-
-def boundary_if_large(df: DataFrame, src: DataFrame) -> DataFrame:
-    """Return ``df`` with a lazy ``localCheckpoint`` materialization
-    boundary when the SOURCE feeding it (``src``) is estimated above
-    ``materialize_threshold()`` — the size-conditional form of the
-    guide-§5 shared-subtree remedy. Never fires on streaming frames;
-    unknown sizes are treated as small (no boundary)."""
-    if df.isStreaming or src.isStreaming:
-        return df
-    size = source_bytes(src)
-    if size is not None and size >= materialize_threshold():
-        return df.localCheckpoint(eager=False)
     return df

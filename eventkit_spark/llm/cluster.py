@@ -17,8 +17,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..operators.relational import topk_per_group
 from ..sources.tables import local_frame
-from .similarity import _as_double
+from .similarity import _as_double, sqdist
 
 
 def _portable31(col):
@@ -598,89 +599,108 @@ def pq_topk(
     codes, books = pq_encode(
         corpus, m=m, ks=ks, max_iter=max_iter, id_col=id_col, vec_col=vec_col
     )
-    sub = books.shape[2]
-    ks = books.shape[1]  # actual centers (kmeans clips at #corpus rows)
+
+    def candidates(qids, Q, luts, k_short):
+        nq = len(qids)
+        kk = k_short + 1  # survive self-match removal
+
+        def kern(batches):
+            for pdf in batches:
+                if not len(pdf):
+                    continue
+                Cm = np.stack(pdf["codes"].to_numpy()).astype(np.int64)
+                ids = pdf["id"].to_numpy()
+                D = np.zeros((nq, len(ids)))
+                for j in range(m):
+                    D += luts[:, j, Cm[:, j]]
+                take = min(kk, len(ids))
+                part = np.argpartition(D, take - 1, axis=1)[:, :take]
+                out_q, out_n, out_d = [], [], []
+                for qi in range(nq):
+                    sel = part[qi]
+                    out_q.extend([qids[qi]] * len(sel))
+                    out_n.extend(ids[sel])
+                    out_d.extend(D[qi, sel])
+                yield pd.DataFrame(
+                    {"query_id": out_q, "neighbor_id": out_n, "adc_dist2": out_d}
+                )
+
+        base = codes.select(F.col(id_col).alias("id"), "codes")
+        local = base.mapInPandas(
+            kern, "query_id long, neighbor_id long, adc_dist2 double"
+        )
+        return local.filter(F.col("neighbor_id") != F.col("query_id"))
+
+    return _adc_search(
+        corpus, queries, books, _as_double(F.col(vec_col)), candidates,
+        k, refine, id_col, vec_col,
+    )
+
+
+def _adc_search(corpus, queries, books, qexpr, candidates, k, refine, id_col, vec_col):
+    """The candidate -> verify -> rank lane ``pq_topk`` and
+    ``ivfpq_topk`` share. Collects the (small) query set ONCE — ids,
+    ``qexpr`` (the vector the LUTs read: floats, or fixed-point units
+    under replay) and the float vector the re-rank reads — and builds
+    the per-query m x ks LUT stack of partial squared distances to
+    every codebook center. ``candidates(qids, Q, luts, k_short)`` returns
+    the ADC-scored (query_id, neighbor_id, adc_dist2) rows, self-matches
+    excluded; each query keeps its ADC top-``k_short`` (``k * refine``
+    when ``refine > 1``, else ``k``). With ``refine > 1`` the shortlist
+    is re-ranked to ``k`` by exact squared L2. No queries: the empty
+    result, with the schema a non-empty search returns."""
+    import numpy as np
+
+    rerank = bool(refine and refine > 1)
     qrows = queries.select(
-        F.col(id_col).alias("qid"), _as_double(F.col(vec_col)).alias("qv")
+        F.col(id_col).alias("qid"),
+        qexpr.alias("qv"),
+        _as_double(F.col(vec_col)).alias("qf"),
     ).collect()
-    qids = [r["qid"] for r in qrows]
+    if not qrows:
+        dist = "dist2" if rerank else "adc_dist2"
+        return local_frame(
+            corpus.sparkSession, [],
+            f"query_id long, neighbor_id long, {dist} double, rank int",
+        )
+    qids = [int(r["qid"]) for r in qrows]
     Q = np.stack([np.array(r["qv"]) for r in qrows])
-    nq = len(qids)
-    luts = np.empty((nq, m, ks))
+    m, ks, sub = books.shape
+    luts = np.empty((len(qids), m, ks))
     for j in range(m):
         C = books[j]
         S = Q[:, j * sub:(j + 1) * sub]
         luts[:, j, :] = (
             (S * S).sum(axis=1, keepdims=True) - 2.0 * (S @ C.T) + (C * C).sum(axis=1)
         )
-    k_short = k * refine if refine and refine > 1 else k
-    kk = k_short + 1  # survive self-match removal
-
-    def kern(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            Cm = np.stack(pdf["codes"].to_numpy()).astype(np.int64)
-            ids = pdf["id"].to_numpy()
-            D = np.zeros((nq, len(ids)))
-            for j in range(m):
-                D += luts[:, j, Cm[:, j]]
-            take = min(kk, len(ids))
-            part = np.argpartition(D, take - 1, axis=1)[:, :take]
-            out_q, out_n, out_d = [], [], []
-            for qi in range(nq):
-                sel = part[qi]
-                out_q.extend([qids[qi]] * len(sel))
-                out_n.extend(ids[sel])
-                out_d.extend(D[qi, sel])
-            yield pd.DataFrame(
-                {"query_id": out_q, "neighbor_id": out_n, "adc_dist2": out_d}
-            )
-
-    base = codes.select(F.col(id_col).alias("id"), "codes")
-    local = base.mapInPandas(
-        kern, "query_id long, neighbor_id long, adc_dist2 double"
+    k_short = k * refine if rerank else k
+    short = topk_per_group(
+        candidates(qids, Q, luts, k_short), "query_id", "adc_dist2", k_short,
+        descending=False, tie_cols=["neighbor_id"],
     )
-    from pyspark.sql import Window as W
-
-    w = W.partitionBy("query_id").orderBy(F.col("adc_dist2"), F.col("neighbor_id"))
-    short = (
-        local.filter(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k_short)
-    )
-    if not (refine and refine > 1):
+    if not rerank:
         return short.select(
             "query_id", "neighbor_id",
             F.round("adc_dist2", 6).alias("adc_dist2"), "rank",
         )
-    # exact re-rank: true vectors fetched ONLY for the shortlist ids
+    # exact re-rank: true vectors fetched ONLY for the shortlist ids; the
+    # query vectors ride the plan as a literal nq x d array (kilobytes)
+    # indexed by a small map — no second broadcast join
+    Qf = [r["qf"] for r in qrows]
+    qpos = {qid: i for i, qid in enumerate(qids)}
     vecs = corpus.select(
         F.col(id_col).alias("neighbor_id"), _as_double(F.col(vec_col)).alias("nv")
     )
-    lut_q = {int(qid): i for i, qid in enumerate(qids)}
-    qvec_lit = F.array(*[
-        F.array(*[F.lit(float(x)) for x in Q[i]]) for i in range(nq)
-    ])
-    # query vectors as a literal nq x d array (kilobytes in the plan),
-    # indexed by a small map — avoids a second broadcast join
+    qvec_lit = F.array(*[F.array(*[F.lit(float(x)) for x in v]) for v in Qf])
     qidx = F.create_map(*[
-        x for qid, i in lut_q.items() for x in (F.lit(qid), F.lit(i))
+        x for qid, i in qpos.items() for x in (F.lit(qid), F.lit(i))
     ])
     joined = short.select("query_id", "neighbor_id").join(vecs, "neighbor_id")
     qv = F.element_at(qvec_lit, qidx[F.col("query_id")] + 1)
-    d2 = F.aggregate(
-        F.zip_with(qv, F.col("nv"), lambda a, b: (a - b) * (a - b)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    w2 = W.partitionBy("query_id").orderBy(F.col("dist2"), F.col("neighbor_id"))
-    return (
-        joined.withColumn("dist2", d2)
-        .withColumn("rank", F.row_number().over(w2))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", F.round("dist2", 6).alias("dist2"), "rank")
-    )
+    return topk_per_group(
+        joined.withColumn("dist2", sqdist(qv, F.col("nv"))), "query_id", "dist2", k,
+        descending=False, tie_cols=["neighbor_id"],
+    ).select("query_id", "neighbor_id", F.round("dist2", 6).alias("dist2"), "rank")
 
 
 def ivfopq_topk(
@@ -786,14 +806,10 @@ def ivfpq_topk(
     import numpy as np
     import pandas as pd
 
-    from pyspark.sql import Window as W
-
     codes, books = pq_encode(
         corpus, m=m, ks=ks, max_iter=max_iter, id_col=id_col, vec_col=vec_col,
         replay_scale=replay_scale,
     )
-    sub = books.shape[2]
-    ks_eff = books.shape[1]
     # coarse routing: hash-seeded centroids, L2 argmin (ADC scores L2)
     cent = _seed_centroids(
         corpus, n_cells, id_col, vec_col,
@@ -810,92 +826,45 @@ def ivfpq_topk(
     )
     coded = codes.select(F.col(id_col).alias("id"), "codes").join(routed, "id")
 
-    qrows = queries.select(
-        F.col(id_col).alias("qid"),
-        vexpr.alias("qv"),
-        _as_double(F.col(vec_col)).alias("qf"),
-    ).collect()
-    qids = [int(r["qid"]) for r in qrows]
-    Q = np.stack([np.array(r["qv"]) for r in qrows])
-    Qf = np.stack([np.array(r["qf"]) for r in qrows])
-    nq = len(qids)
-    # per-query LUTs (nq x m x ks doubles, kernel closure)
-    luts = np.empty((nq, m, ks_eff))
-    for j in range(m):
-        C = books[j]
-        S = Q[:, j * sub:(j + 1) * sub]
-        luts[:, j, :] = (
-            (S * S).sum(axis=1, keepdims=True) - 2.0 * (S @ C.T) + (C * C).sum(axis=1)
+    def candidates(qids, Q, luts, _k_short):
+        # probe list: nprobe nearest coarse cells per query (driver-side
+        # — n_cells x d is kilobytes)
+        d2q = (
+            (Q * Q).sum(axis=1, keepdims=True) - 2.0 * (Q @ cent.T) + (cent * cent).sum(axis=1)
         )
-    # probe list: nprobe nearest coarse cells per query (driver-side —
-    # n_cells x d is kilobytes)
-    d2q = (
-        (Q * Q).sum(axis=1, keepdims=True) - 2.0 * (Q @ cent.T) + (cent * cent).sum(axis=1)
-    )
-    probe = np.argsort(d2q, axis=1, kind="stable")[:, :nprobe]
-    probe_rows = [
-        (qids[i], int(c)) for i in range(nq) for c in probe[i]
-    ]
-    spark = corpus.sparkSession
-    probe_df = local_frame(spark, probe_rows, "query_id long, cell int")
-    qpos = {qid: i for i, qid in enumerate(qids)}
-
-    cand = coded.join(F.broadcast(probe_df), "cell").filter(
-        F.col("id") != F.col("query_id")
-    )
-    k_short = k * refine if refine and refine > 1 else k
-
-    def kern(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            Cm = np.stack(pdf["codes"].to_numpy()).astype(np.int64)
-            ids = pdf["id"].to_numpy()
-            qarr = pdf["query_id"].to_numpy()
-            qi = np.array([qpos[int(x)] for x in qarr])
-            # ADC distance of each (query, candidate) row: fancy-index
-            # the row's own query LUT at its code per subspace
-            D = np.zeros(len(ids))
-            for j in range(m):
-                D += luts[qi, j, Cm[:, j]]
-            yield pd.DataFrame(
-                {"query_id": qarr, "neighbor_id": ids, "adc_dist2": D}
-            )
-
-    local = cand.select("query_id", "id", "codes").mapInPandas(
-        kern, "query_id long, neighbor_id long, adc_dist2 double"
-    )
-    w = W.partitionBy("query_id").orderBy(F.col("adc_dist2"), F.col("neighbor_id"))
-    short = local.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k_short
-    )
-    if not (refine and refine > 1):
-        return short.select(
-            "query_id", "neighbor_id",
-            F.round("adc_dist2", 6).alias("adc_dist2"), "rank",
+        probe = np.argsort(d2q, axis=1, kind="stable")[:, :nprobe]
+        probe_rows = [
+            (qid, int(c)) for qid, cells in zip(qids, probe) for c in cells
+        ]
+        probe_df = local_frame(corpus.sparkSession, probe_rows, "query_id long, cell int")
+        qpos = {qid: i for i, qid in enumerate(qids)}
+        cand = coded.join(F.broadcast(probe_df), "cell").filter(
+            F.col("id") != F.col("query_id")
         )
-    vecs = corpus.select(
-        F.col(id_col).alias("neighbor_id"), _as_double(F.col(vec_col)).alias("nv")
-    )
-    qvec_lit = F.array(*[
-        F.array(*[F.lit(float(x)) for x in Qf[i]]) for i in range(nq)
-    ])
-    qidx = F.create_map(*[
-        x for qid, i in qpos.items() for x in (F.lit(qid), F.lit(i))
-    ])
-    joined = short.select("query_id", "neighbor_id").join(vecs, "neighbor_id")
-    qv = F.element_at(qvec_lit, qidx[F.col("query_id")] + 1)
-    d2 = F.aggregate(
-        F.zip_with(qv, F.col("nv"), lambda a, b: (a - b) * (a - b)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    w2 = W.partitionBy("query_id").orderBy(F.col("dist2"), F.col("neighbor_id"))
-    return (
-        joined.withColumn("dist2", d2)
-        .withColumn("rank", F.row_number().over(w2))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", F.round("dist2", 6).alias("dist2"), "rank")
+
+        def kern(batches):
+            for pdf in batches:
+                if not len(pdf):
+                    continue
+                Cm = np.stack(pdf["codes"].to_numpy()).astype(np.int64)
+                ids = pdf["id"].to_numpy()
+                qarr = pdf["query_id"].to_numpy()
+                qi = np.array([qpos[int(x)] for x in qarr])
+                # ADC distance of each (query, candidate) row: fancy-index
+                # the row's own query LUT at its code per subspace
+                D = np.zeros(len(ids))
+                for j in range(m):
+                    D += luts[qi, j, Cm[:, j]]
+                yield pd.DataFrame(
+                    {"query_id": qarr, "neighbor_id": ids, "adc_dist2": D}
+                )
+
+        return cand.select("query_id", "id", "codes").mapInPandas(
+            kern, "query_id long, neighbor_id long, adc_dist2 double"
+        )
+
+    return _adc_search(
+        corpus, queries, books, vexpr, candidates, k, refine, id_col, vec_col
     )
 
 
@@ -1007,8 +976,6 @@ def sq_topk(
     vectors); the rerank column pulls full vectors for only R rows per
     query. Quantization state is d min/max doubles — kilobytes.
     """
-    from pyspark.sql import Window as W
-
     st = sq_stats(corpus, vec_col)
     c = corpus.crossJoin(F.broadcast(st)).select(
         F.col(id_col).alias("neighbor_id"),
@@ -1021,32 +988,18 @@ def sq_topk(
         _as_double(F.col(vec_col)).alias("qv"),
     )
     joined = c.join(F.broadcast(q), F.col("neighbor_id") != F.col("query_id"))
-    d2c = F.aggregate(
-        F.zip_with(F.col("qc"), F.col("cc"), lambda a, b: (a - b) * (a - b)),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
+    scored = joined.withColumn(
+        "dist2_code", sqdist(F.col("qc"), F.col("cc"), F.lit(0).cast("long"))
     )
-    w = W.partitionBy("query_id").orderBy(F.col("dist2_code"), F.col("neighbor_id"))
-    scored = (
-        joined.withColumn("dist2_code", d2c)
-        .withColumn("rank", F.row_number().over(w))
+    if rerank is not None and rerank < k:
+        raise ValueError(f"rerank ({rerank}) must be >= k ({k})")
+    short = topk_per_group(
+        scored, "query_id", "dist2_code", k if rerank is None else rerank,
+        descending=False, tie_cols=["neighbor_id"],
     )
     if rerank is None:
-        return scored.filter(F.col("rank") <= k).select(
-            "query_id", "neighbor_id", "dist2_code", "rank"
-        )
-    if rerank < k:
-        raise ValueError(f"rerank ({rerank}) must be >= k ({k})")
-    short = scored.filter(F.col("rank") <= rerank)
-    d2x = F.aggregate(
-        F.zip_with(F.col("qv"), F.col("cv"), lambda a, b: (a - b) * (a - b)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    w2 = W.partitionBy("query_id").orderBy(F.col("dist2"), F.col("neighbor_id"))
-    return (
-        short.withColumn("dist2", d2x)
-        .withColumn("rank", F.row_number().over(w2))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", F.round("dist2", 6).alias("dist2"), "rank")
-    )
+        return short.select("query_id", "neighbor_id", "dist2_code", "rank")
+    return topk_per_group(
+        short.withColumn("dist2", sqdist(F.col("qv"), F.col("cv"))), "query_id", "dist2", k,
+        descending=False, tie_cols=["neighbor_id"],
+    ).select("query_id", "neighbor_id", F.round("dist2", 6).alias("dist2"), "rank")

@@ -23,7 +23,6 @@ from pyspark.sql import DataFrame, Window as W, functions as F
 
 from ..session import session_width
 from ..sources.tables import local_frame, read_parquet
-from ._spread import boundary_if_large
 
 
 def _shingles(text_col, k: int = 3):
@@ -186,6 +185,41 @@ def _hot_keys(df: DataFrame, keys, cap: int) -> DataFrame:
     )
 
 
+def _posting_pairs(df: DataFrame, keys, item, pair, cap: int | None = None) -> DataFrame:
+    """The posting-list pair expansion every pair family here shares:
+    group ``df`` by the bucket ``keys`` ONCE, collect each bucket's
+    sorted member list of ``item``, and explode its (i < j) pairs as
+    one struct column ``p`` built by ``pair(x, y)`` (x the lower
+    member). O(sum bucket^2) pairs, the multiset a bucketed a⋈b
+    self-join would give, without planning the upstream pipeline on
+    both join sides (Catalyst reuses no exchange across them). ``cap``
+    drops buckets over that many rows BEFORE any list is collected
+    (``_hot_keys``), bounding every list."""
+    if cap is not None:
+        df = df.join(_hot_keys(df, keys, cap), keys, "left_anti")
+    posts = (
+        df.groupBy(*keys)
+        .agg(F.array_sort(F.collect_list(item)).alias("lst"))
+        .filter(F.size("lst") >= 2)
+    )
+    lst = F.col("lst")
+    pairs = F.flatten(
+        F.transform(
+            lst,
+            lambda x, i: F.transform(
+                F.slice(lst, i + 2, F.greatest(F.size(lst), F.lit(1))),
+                lambda y: pair(x, y),
+            ),
+        )
+    )
+    return posts.select(F.explode(pairs).alias("p"))
+
+
+def _id_pair(x, y):
+    """The bare (id_a, id_b) pair struct of the LSH candidate searches."""
+    return F.struct(x.alias("id_a"), y.alias("id_b"))
+
+
 def _pair_counts(docs, k, text_col, id_col, max_df):
     """Shared posting-list core: (id_a, id_b, na, nb, common) for every
     document pair sharing >=1 (surviving) shingle — the intersection
@@ -207,46 +241,17 @@ def _pair_counts(docs, k, text_col, id_col, max_df):
     # set sizes BEFORE df-pruning (pruning can then only lower a pair's
     # score, never promote a non-pair): one window riding an id exchange
     sh = sh.withColumn("n", F.count("*").over(W.partitionBy("id")))
-    if max_df is not None:
-        # sh feeds BOTH the hot-set aggregate and the anti-join probe
-        # side, so the scan+shingle subtree is planned twice. r11
-        # measured an UNCONDITIONAL localCheckpoint here 3x slower on
-        # pagerank/central_dedup (1.5 s -> 4.8 s) and ~15% slower on
-        # dedup_jaccard: at sub-MB corpus sizes the duplicated legs
-        # execute as PARALLEL stages of one job, while a checkpoint
-        # serializes them and strips size statistics. At corpus scale
-        # the re-executed leg re-pays corpus-scale shuffles and the
-        # trade flips (the jaccard_verify precedent wins ~30%), so the
-        # boundary is SIZE-CONDITIONAL (r11 VERDICT item 4): it engages
-        # only above the _spread.materialize_threshold() source size.
-        sh = boundary_if_large(sh, docs)
-        # df-pruning BOUNDS every collect_list at max_df entries
-        sh = sh.join(_hot_keys(sh, ["shingle"], max_df), "shingle", "left_anti")
-    posts = (
-        sh.groupBy("shingle")
-        .agg(F.array_sort(F.collect_list(F.struct("id", "n"))).alias("lst"))
-        .filter(F.size("lst") >= 2)
-    )
-    # expand each posting list to its (i < j) pairs — O(sum df^2), the
-    # same pair multiset the self-join produced, without the second
-    # (third, …) shingle pass
-    lst = F.col("lst")
-    pairs = F.flatten(
-        F.transform(
-            lst,
-            lambda x, i: F.transform(
-                F.slice(lst, i + 2, F.greatest(F.size(lst), F.lit(1))),
-                lambda y: F.struct(
-                    x.getField("id").alias("id_a"),
-                    x.getField("n").alias("na"),
-                    y.getField("id").alias("id_b"),
-                    y.getField("n").alias("nb"),
-                ),
-            ),
-        )
-    )
     return (
-        posts.select(F.explode(pairs).alias("p"))
+        _posting_pairs(
+            sh, ["shingle"], F.struct("id", "n"),
+            lambda x, y: F.struct(
+                x.getField("id").alias("id_a"),
+                x.getField("n").alias("na"),
+                y.getField("id").alias("id_b"),
+                y.getField("n").alias("nb"),
+            ),
+            cap=max_df,
+        )
         .groupBy("p.id_a", "p.id_b", "p.na", "p.nb")
         .agg(F.count("*").alias("common"))
     )
@@ -542,27 +547,10 @@ def minhash_lsh_candidates(
     # self-join planned the shingle + minhash-aggregate pipeline TWICE
     # with no exchange reuse; grouping each bucket once halves the heavy
     # part. Bucket membership ~ near-dup groups + rare hash collisions.
-    if max_bucket is not None:
-        # oversized buckets drop BEFORE any list is built
-        bb = ["band", "bucket"]
-        banded = banded.join(_hot_keys(banded, bb, max_bucket), bb, "left_anti")
-    posts = (
-        banded.groupBy("band", "bucket")
-        .agg(F.array_sort(F.collect_list("id")).alias("lst"))
-        .filter(F.size("lst") >= 2)
-    )
-    lst = F.col("lst")
-    pairs = F.flatten(
-        F.transform(
-            lst,
-            lambda x, i: F.transform(
-                F.slice(lst, i + 2, F.greatest(F.size(lst), F.lit(1))),
-                lambda y: F.struct(x.alias("id_a"), y.alias("id_b")),
-            ),
-        )
-    )
     return (
-        posts.select(F.explode(pairs).alias("p"))
+        _posting_pairs(
+            banded, ["band", "bucket"], F.col("id"), _id_pair, cap=max_bucket
+        )
         .select("p.id_a", "p.id_b")
         .distinct()
     )
@@ -1188,6 +1176,16 @@ def _simhash_chunks(sh):
     )
 
 
+def _simhash_pair(x, y):
+    """The (id, simhash) pair struct both SimHash pair searches expand."""
+    return F.struct(
+        x.getField("id").alias("id_a"),
+        x.getField("simhash").alias("ha"),
+        y.getField("id").alias("id_b"),
+        y.getField("simhash").alias("hb"),
+    )
+
+
 def simhash_near_dups(
     docs: DataFrame,
     max_hamming: int = 3,
@@ -1216,37 +1214,16 @@ def simhash_near_dups(
     # Bucket sizes are ~n/2^16 for unrelated docs plus the near-dup
     # groups themselves.
     sh = simhash64(docs, text_col, id_col, portable=portable)
-    chunks = _simhash_chunks(sh)
-    if max_bucket is not None:
-        cv = ["chunk", "val"]
-        chunks = chunks.join(_hot_keys(chunks, cv, max_bucket), cv, "left_anti")
-    posts = (
-        chunks.groupBy("chunk", "val")
-        .agg(F.array_sort(F.collect_list(F.struct("id", "simhash"))).alias("lst"))
-        .filter(F.size("lst") >= 2)
-    )
-    lst = F.col("lst")
-    pairs = F.flatten(
-        F.transform(
-            lst,
-            lambda x, i: F.transform(
-                F.slice(lst, i + 2, F.greatest(F.size(lst), F.lit(1))),
-                lambda y: F.struct(
-                    x.getField("id").alias("id_a"),
-                    x.getField("simhash").alias("ha"),
-                    y.getField("id").alias("id_b"),
-                    y.getField("simhash").alias("hb"),
-                ),
-            ),
-        )
+    pairs = _posting_pairs(
+        _simhash_chunks(sh), ["chunk", "val"], F.struct("id", "simhash"),
+        _simhash_pair, cap=max_bucket,
     )
     # hamming filter BEFORE the dedup shuffle: far pairs never ride the
     # exchange; distinct then only de-dups true near-dups that collided
     # in several chunks
     dist = F.bit_count(F.col("p.ha").bitwiseXOR(F.col("p.hb")))
     return (
-        posts.select(F.explode(pairs).alias("p"))
-        .select("p.id_a", "p.id_b", dist.alias("hamming"))
+        pairs.select("p.id_a", "p.id_b", dist.alias("hamming"))
         .filter(F.col("hamming") <= max_hamming)
         .distinct()
     )
@@ -1367,28 +1344,10 @@ def simhash_dedup_incremental(
         .distinct()
     )
     clean = chunks.join(hits, "id", "left_anti")
-    posts = (
-        clean.groupBy("chunk", "val")
-        .agg(F.array_sort(F.collect_list(F.struct("id", "simhash"))).alias("lst"))
-        .filter(F.size("lst") >= 2)
-    )
-    lst = F.col("lst")
-    pairs = F.flatten(
-        F.transform(
-            lst,
-            lambda x, i: F.transform(
-                F.slice(lst, i + 2, F.greatest(F.size(lst), F.lit(1))),
-                lambda y: F.struct(
-                    x.getField("id").alias("id_a"),
-                    x.getField("simhash").alias("ha"),
-                    y.getField("id").alias("id_b"),
-                    y.getField("simhash").alias("hb"),
-                ),
-            ),
-        )
-    )
     batch_dup = (
-        posts.select(F.explode(pairs).alias("p"))
+        _posting_pairs(
+            clean, ["chunk", "val"], F.struct("id", "simhash"), _simhash_pair
+        )
         .filter(
             F.bit_count(F.col("p.ha").bitwiseXOR(F.col("p.hb"))) <= m.max_hamming
         )

@@ -16,7 +16,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window as W, functions as F
 
+from ..operators.relational import topk_per_group
 from ..session import session_width
+from .dedup import _posting_pairs
 
 KNUTH = 2654435761
 
@@ -638,11 +640,8 @@ def tfidf_top_terms(
     scored = tf.join(df_tbl, "term")
     idf = F.log((F.lit(float(n_docs + 1))) / (F.col("df") + 1)) + 1.0
     scored = scored.withColumn("tfidf", F.col("tf") * idf)
-    w = W.partitionBy("id").orderBy(F.col("tfidf").desc(), F.col("term"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("id", "term", F.round("tfidf", 6).alias("tfidf"), "rank")
+    return topk_per_group(scored, "id", "tfidf", k, tie_cols=["term"]).select(
+        "id", "term", F.round("tfidf", 6).alias("tfidf"), "rank"
     )
 
 
@@ -690,11 +689,8 @@ def bm25_top_terms(
         (1.0 - b) + b * (F.col("dl") * F.lit(float(n_docs)) / F.lit(float(total_tokens)))
     )
     scored = scored.withColumn("bm25", idf * (F.col("tf") * (k1 + 1.0)) / denom)
-    w = W.partitionBy("id").orderBy(F.col("bm25").desc(), F.col("term"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("id", "term", F.round("bm25", 6).alias("bm25"), "rank")
+    return topk_per_group(scored, "id", "bm25", k, tie_cols=["term"]).select(
+        "id", "term", F.round("bm25", 6).alias("bm25"), "rank"
     )
 
 
@@ -919,30 +915,18 @@ def tfidf_cosine_pairs(
     )
     if max_df is not None:
         w_tbl = w_tbl.filter(F.col("df") <= max_df)
-    posts = (
-        w_tbl.select(F.xxhash64("term").alias("t"), "id", "w", "nrm")
-        .groupBy("t")
-        .agg(F.array_sort(F.collect_list(F.struct("id", "w", "nrm"))).alias("lst"))
-        .filter(F.size("lst") >= 2)
-    )
-    lst = F.col("lst")
-    pairs = F.flatten(
-        F.transform(
-            lst,
-            lambda x, i: F.transform(
-                F.slice(lst, i + 2, F.greatest(F.size(lst), F.lit(1))),
-                lambda y: F.struct(
-                    x.getField("id").alias("id_a"),
-                    x.getField("nrm").alias("na"),
-                    y.getField("id").alias("id_b"),
-                    y.getField("nrm").alias("nb"),
-                    (x.getField("w") * y.getField("w")).alias("ww"),
-                ),
+    dots = (
+        _posting_pairs(
+            w_tbl.select(F.xxhash64("term").alias("t"), "id", "w", "nrm"),
+            ["t"], F.struct("id", "w", "nrm"),
+            lambda x, y: F.struct(
+                x.getField("id").alias("id_a"),
+                x.getField("nrm").alias("na"),
+                y.getField("id").alias("id_b"),
+                y.getField("nrm").alias("nb"),
+                (x.getField("w") * y.getField("w")).alias("ww"),
             ),
         )
-    )
-    dots = (
-        posts.select(F.explode(pairs).alias("p"))
         .groupBy("p.id_a", "p.id_b", "p.na", "p.nb")
         .agg(F.sum("p.ww").alias("dot"))
     )

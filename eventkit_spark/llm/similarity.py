@@ -17,15 +17,25 @@ Scale design:
   shuffle-friendly, skew-safe.
 - ivf_topk: inverted-file variant — k-means-ish centroids sampled
   deterministically, every vector assigned to its nearest centroid
-  (broadcast argmin), queries probe the nprobe nearest cells.
+  (broadcast argmin), queries probe the nprobe nearest cells. The
+  persisted index (ivf_index_topk) runs the same probe and rank steps
+  (_ivf_probe, _ivf_rank) over its partition-pruned cells.
+
+Every searcher is candidate -> verify -> rank, and each shared shape
+is written once: the per-query top-k cut is
+operators/relational.topk_per_group, the squared-L2 fold is `sqdist`
+(beside `dot`; the PQ/SQ searchers in llm/cluster.py use it too), and
+embedding_near_dups' rp-LSH candidates come from the posting-list pair
+expansion of dedup._posting_pairs.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..operators.relational import topk_per_group
 from ..sources.tables import local_frame, read_parquet
-from .dedup import _hot_keys
+from .dedup import _id_pair, _posting_pairs
 
 
 def _as_double(col):
@@ -44,6 +54,18 @@ def norm(a):
 
 def cosine(a, b):
     return dot(a, b) / (norm(a) * norm(b))
+
+
+def sqdist(a, b, zero=None):
+    """Squared L2 distance of two array columns, folded in element
+    order like ``dot`` (so SQL oracles replay it bit for bit). ``zero``
+    seeds the fold: default ``0.0``; integer code vectors pass a long
+    zero to keep the sum exact."""
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
+        F.lit(0.0) if zero is None else zero,
+        lambda acc, x: acc + x,
+    )
 
 
 def cosine_pandas(a, b):
@@ -86,8 +108,6 @@ def brute_force_topk(
     rank slot (returning k - hits would be the classic off-by-the-
     positives bug in negative mining).
     """
-    from pyspark.sql import Window as W
-
     q = queries.select(
         F.col(id_col).alias("query_id"), _as_double(F.col(vec_col)).alias("qv")
     )
@@ -102,25 +122,15 @@ def brute_force_topk(
             "left_anti",
         )
     if metric == "cosine":
-        scored = joined.withColumn("cos", cosine(F.col("qv"), F.col("cv")))
-        w = W.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("neighbor_id"))
-        val = "cos"
+        val, score = "cos", cosine(F.col("qv"), F.col("cv"))
     elif metric == "l2":
-        d2 = F.aggregate(
-            F.zip_with(F.col("qv"), F.col("cv"), lambda a, b: (a - b) * (a - b)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        scored = joined.withColumn("dist2", d2)
-        w = W.partitionBy("query_id").orderBy(F.col("dist2"), F.col("neighbor_id"))
-        val = "dist2"
+        val, score = "dist2", sqdist(F.col("qv"), F.col("cv"))
     else:
         raise ValueError(f"metric must be 'cosine' or 'l2', got {metric!r}")
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", val, "rank")
-    )
+    return topk_per_group(
+        joined.withColumn(val, score), "query_id", val, k,
+        descending=metric == "cosine", tie_cols=["neighbor_id"],
+    ).select("query_id", "neighbor_id", val, "rank")
 
 
 def hard_negatives(
@@ -179,8 +189,6 @@ def rp_lsh_topk(
     exact cosine within candidates. Recall grows with ``tables``.
     ``dim`` defaults to the measured width of the first corpus vector.
     """
-    from pyspark.sql import Window as W
-
     import numpy as np
     import pandas as pd
 
@@ -232,11 +240,8 @@ def rp_lsh_topk(
         .distinct()
     )
     scored = cand.withColumn("cos", cosine_pandas(F.col("query_id_v"), F.col("neighbor_id_v")))
-    w = W.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cos", "rank")
+    return topk_per_group(scored, "query_id", "cos", k, tie_cols=["neighbor_id"]).select(
+        "query_id", "neighbor_id", "cos", "rank"
     )
 
 
@@ -306,6 +311,30 @@ def _cell_assign_kernel(cent_mat, m):
     # other filter will push below it. Keep call sites
     # projection-shaped.
     return F.pandas_udf(k, "array<int>").asNondeterministic()
+
+
+def _ivf_probe(queries, cent_mat, nprobe, id_col, vec_col):
+    """(query_id, qv, cell): each query fanned out to its ``nprobe``
+    nearest cells — the probe side both IVF searchers join on."""
+    return queries.select(
+        F.col(id_col).alias("query_id"), _as_double(F.col(vec_col)).alias("qv")
+    ).select(
+        "query_id", "qv",
+        F.explode(_cell_assign_kernel(cent_mat, nprobe)(F.col("qv"))).alias("cell"),
+    )
+
+
+def _ivf_rank(cells, probes, k):
+    """Exact-cosine top-``k`` per query over the (neighbor_id, cv, cell)
+    rows of its probed cells: a cell equi-join against the broadcast
+    probe table, then the per-query cut."""
+    cand = cells.join(F.broadcast(probes), on="cell").filter(
+        F.col("neighbor_id") != F.col("query_id")
+    )
+    scored = cand.withColumn("cos", cosine_pandas(F.col("qv"), F.col("cv")))
+    return topk_per_group(scored, "query_id", "cos", k, tie_cols=["neighbor_id"]).select(
+        "query_id", "neighbor_id", "cos", "rank"
+    )
 
 
 def ivf_index_write(
@@ -407,28 +436,12 @@ def ivf_index_topk(
     """
     import numpy as np
 
-    from pyspark.sql import Window as W
-
     cent_rows = read_parquet(spark, f"{path}/centroids").orderBy("cell").collect()
     cent_mat = np.stack([np.array(r["cv"]) for r in cent_rows])
-    q = queries.select(
-        F.col(id_col).alias("query_id"), _as_double(F.col(vec_col)).alias("qv")
-    ).select(
-        "query_id", "qv",
-        F.explode(_cell_assign_kernel(cent_mat, nprobe)(F.col("qv"))).alias("cell"),
-    )
+    q = _ivf_probe(queries, cent_mat, nprobe, id_col, vec_col)
     probe_cells = sorted({int(r["cell"]) for r in q.select("cell").distinct().collect()})
     cells = read_parquet(spark, f"{path}/cells").filter(F.col("cell").isin(probe_cells))
-    cand = cells.join(F.broadcast(q), on="cell").filter(
-        F.col("neighbor_id") != F.col("query_id")
-    )
-    scored = cand.withColumn("cos", cosine_pandas(F.col("qv"), F.col("cv")))
-    w = W.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cos", "rank")
-    )
+    return _ivf_rank(cells, q, k)
 
 
 def ivf_topk(
@@ -463,31 +476,15 @@ def ivf_topk(
     so the whole route — assignment, probe list, in-cell top-k — is
     engine-independent up to float cosine ties).
     """
-    from pyspark.sql import Window as W
-
     cent_mat = _ivf_centroids(corpus, n_cells, id_col, vec_col, centroids)
     # one BLAS product against the (broadcast-closure) centroid matrix
-    # per Arrow batch — the SAME kernel the persisted-index path uses
-    # (_cell_assign_kernel), so in-memory and index routing cannot drift
-    _nearest_kernel = lambda m: _cell_assign_kernel(cent_mat, m)  # noqa: E731
-
+    # per Arrow batch — the SAME kernel, probe and rank steps the
+    # persisted-index path uses, so in-memory and index routing cannot
+    # drift
     c = corpus.select(
         F.col(id_col).alias("neighbor_id"), _as_double(F.col(vec_col)).alias("cv")
-    ).withColumn("cell", F.element_at(_nearest_kernel(1)(F.col("cv")), 1))
-    q = queries.select(
-        F.col(id_col).alias("query_id"), _as_double(F.col(vec_col)).alias("qv")
-    ).select(
-        "query_id", "qv",
-        F.explode(_nearest_kernel(nprobe)(F.col("qv"))).alias("cell"),
-    )
-    cand = c.join(F.broadcast(q), on="cell").filter(F.col("neighbor_id") != F.col("query_id"))
-    scored = cand.withColumn("cos", cosine_pandas(F.col("qv"), F.col("cv")))
-    w = W.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cos", "rank")
-    )
+    ).withColumn("cell", F.element_at(_cell_assign_kernel(cent_mat, 1)(F.col("cv")), 1))
+    return _ivf_rank(c, _ivf_probe(queries, cent_mat, nprobe, id_col, vec_col), k)
 
 
 # sign-LSH separability floor: auto-sized bits below this mean <=8
@@ -563,8 +560,6 @@ def embedding_near_dups(
     import numpy as np
     import pandas as pd
 
-    from pyspark.sql import Window as W
-
     if prefilter == "rp_lsh":
         # clamp: threshold=1.0 gives p_hit=1.0 and log(p_hit)=0 below
         p_hit = 1.0 - math.acos(min(max(threshold, -1.0), 1.0)) / math.pi
@@ -621,26 +616,10 @@ def embedding_near_dups(
         banded = vecs.select(
             "id", F.posexplode(buckets_udf(F.col("v"))).alias("tbl", "bucket")
         )
-        if max_bucket is not None:
-            tb = ["tbl", "bucket"]
-            banded = banded.join(_hot_keys(banded, tb, max_bucket), tb, "left_anti")
-        posts = (
-            banded.groupBy("tbl", "bucket")
-            .agg(F.array_sort(F.collect_list("id")).alias("lst"))
-            .filter(F.size("lst") >= 2)
-        )
-        lst = F.col("lst")
-        pairs = F.flatten(
-            F.transform(
-                lst,
-                lambda x, i: F.transform(
-                    F.slice(lst, i + 2, F.greatest(F.size(lst), F.lit(1))),
-                    lambda y: F.struct(x.alias("id_a"), y.alias("id_b")),
-                ),
-            )
-        )
         cand = (
-            posts.select(F.explode(pairs).alias("p"))
+            _posting_pairs(
+                banded, ["tbl", "bucket"], F.col("id"), _id_pair, cap=max_bucket
+            )
             .select("p.id_a", "p.id_b")
             .distinct()
         )

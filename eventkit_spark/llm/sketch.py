@@ -28,22 +28,34 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 
-def _mg_add(counters: dict, item, wt: int, k: int) -> dict:
-    """One weighted Misra–Gries update (shared by the batch kernel and
-    the streaming state handler).  Decrements are batched: k
-    participants (k-1 counters + the incoming weight) each lose
-    ``dec``, so total decrement mass stays ≤ n/k — the superset
-    guarantee's invariant."""
-    if item in counters:
-        counters[item] += int(wt)
-    elif len(counters) < k - 1:
-        counters[item] = int(wt)
-    else:
-        dec = min(int(wt), min(counters.values()))
-        counters = {it: c - dec for it, c in counters.items() if c > dec}
-        if wt > dec and len(counters) < k - 1:
-            counters[item] = int(wt) - dec
-    return counters
+def _make_mg_add():
+    # Factory, not a plain module-level def, for the reason
+    # streaming/stream.py's _make_lane_helpers gives: the batch kernel
+    # and the streaming step both call this helper on the executors,
+    # and cloudpickle ships a module-level function BY REFERENCE
+    # (import on the worker), which fails wherever only the driver can
+    # import the package. A "<locals>" qualname ships BY VALUE.
+    def _mg_add(counters: dict, item, wt: int, k: int) -> dict:
+        """One weighted Misra–Gries update (shared by the batch kernel
+        and the streaming state step).  Decrements are batched: k
+        participants (k-1 counters + the incoming weight) each lose
+        ``dec``, so total decrement mass stays ≤ n/k — the superset
+        guarantee's invariant."""
+        if item in counters:
+            counters[item] += int(wt)
+        elif len(counters) < k - 1:
+            counters[item] = int(wt)
+        else:
+            dec = min(int(wt), min(counters.values()))
+            counters = {it: c - dec for it, c in counters.items() if c > dec}
+            if wt > dec and len(counters) < k - 1:
+                counters[item] = int(wt) - dec
+        return counters
+
+    return _mg_add
+
+
+_mg_add = _make_mg_add()
 
 
 def _mg_kernel(k: int, col: str):

@@ -11,7 +11,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, functions as F
 
 from ..sources.tables import local_frame, read_parquet
-from ._spread import boundary_if_large as _boundary_if_large, spread as _spread
+from ._spread import spread as _spread
 
 # Tiny public stopword marker sets per language (heuristic language ID).
 LANG_MARKERS = {
@@ -301,19 +301,7 @@ def winnow_overlap(
         .select(F.col(id_col).alias("id_b"), "fp")
         .distinct()
     )
-    # each side's fingerprint subtree is planned TWICE (the df_tot
-    # union leg and the pair-join leg), i.e. the CPU-bound MOSS hash
-    # kernel runs 4x per execution. r11 measured an unconditional
-    # boundary here SLOWER at bench scale (3.4 s -> 5.7 s: the four
-    # kernel subtrees ran as parallel stages of one job) — so, like
-    # _pair_counts, the per-run materialization is SIZE-CONDITIONAL
-    # (r11 VERDICT item 4): it engages only when the source corpus
-    # exceeds _spread.materialize_threshold(), where re-running the
-    # kernel legs costs more than serializing two pair-list-sized
-    # materializations.
     if max_df is not None:
-        fa = _boundary_if_large(fa, docs_a)
-        fb = _boundary_if_large(fb, docs_b)
         df_tot = (
             fa.select("fp").unionAll(fb.select("fp"))
             .groupBy("fp")

@@ -9,6 +9,15 @@ Window nodes, and whether every scan carries PushedFilters when the
 query filters at all. Writes one TSV summary (stdout) and optionally the
 full explain text per query under ``plans/<round>/audit/`` (PLAN_ROUND env, default r12).
 
+``--save`` writes each plan MASKED (``mask``): expression ids, lambda
+variable suffixes, plan and AQE stage ids, RDD ids, object addresses and
+temp paths — everything that changes between two runs of the same code —
+are replaced by placeholders, so the saved plans of two checkouts compare
+with ``diff -r``:
+
+    PLAN_ROUND=cmp python scripts/plan_audit.py --save embed_topk pq_topk
+    diff -r <checkout-a>/plans/cmp/audit <checkout-b>/plans/cmp/audit
+
 NOTE: building some frames is eager by design (kmeans runs its Lloyd
 loop, dedup_clusters runs connected components, streaming contracts run
 their availableNow query) — the audit therefore takes bench-like time.
@@ -23,6 +32,26 @@ import sys
 from contextlib import redirect_stdout
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+# (pattern, placeholder), applied in order: the lambda-variable suffix
+# (x_12#345 — a fresh counter per lambda built in the session) before
+# the bare expression id it carries
+_MASKS = [
+    (re.compile(r"\b([xyz])_\d+#"), r"\1_N#"),
+    (re.compile(r"#\d+"), "#N"),
+    (re.compile(r"\bplan_id=\d+"), "plan_id=N"),
+    (re.compile(r"\b(\w*QueryStage) \d+"), r"\1 N"),
+    (re.compile(r"RDD\[\d+\]"), "RDD[N]"),
+    (re.compile(r"\b0x[0-9a-f]+\b"), "0xN"),
+    (re.compile(r"/tmp/[^\s,\]\)]*"), "/tmp/<tmp>"),
+]
+
+
+def mask(plan: str) -> str:
+    """``plan`` with its run-dependent parts replaced by placeholders."""
+    for pat, rep in _MASKS:
+        plan = pat.sub(rep, plan)
+    return plan
 
 
 def main():
@@ -73,7 +102,7 @@ def main():
         pushed = len(re.findall(r"PushedFilters: \[[^\]]", plan))
         if save:
             with open(os.path.join(outdir, f"{name}.txt"), "w") as f:
-                f.write(plan)
+                f.write(mask(plan))
         print(f"{name}\t{ex_n}\t{scans}\t{py}\t{smj}\t{cart}\t{win}\t{pushed}\t{len(plan.splitlines())}\t")
         sys.stdout.flush()
 

@@ -2941,44 +2941,6 @@ def test_upsample_mix_model(spark):
         upsample_mix(df, -0.5, "doc_id")
 
 
-def test_subtree_boundary_size_conditional(spark):
-    """r12 (r11 VERDICT item 4): the duplicated-shared-subtree
-    materialization in _pair_counts / winnow_overlap is SIZE-GATED —
-    off at bench scale (sub-threshold sources keep the measured-optimal
-    parallel-stages form), forced on via SPARK_GRAFT_SUBTREE_MATERIALIZE=0,
-    and in both forms the results are identical."""
-    import os
-
-    from eventkit_spark.llm.dedup import ngram_jaccard_pairs
-    from eventkit_spark.llm.text import winnow_overlap
-
-    docs = load_table(spark, SF, "documents")
-    key = "SPARK_GRAFT_SUBTREE_MATERIALIZE"
-    assert key not in os.environ
-
-    def run():
-        jac = ngram_jaccard_pairs(docs, k=3, threshold=0.3, max_df=64)
-        ovl = winnow_overlap(docs, docs, k=5, w=4, max_df=64)
-        return (
-            sorted((r["id_a"], r["id_b"], round(r["jaccard"], 6)) for r in jac.collect()),
-            sorted(map(tuple, ovl.collect())),
-            physical_plan(jac) + physical_plan(ovl),
-        )
-
-    jac_off, ovl_off, plan_off = run()
-    # default threshold (64 MiB) >> sf0.001 documents: no boundary
-    assert "ExistingRDD" not in plan_off
-    os.environ[key] = "0"
-    try:
-        jac_on, ovl_on, plan_on = run()
-    finally:
-        del os.environ[key]
-    # forced boundary: the shared subtrees are LogicalRDD-backed
-    assert "ExistingRDD" in plan_on
-    assert jac_on == jac_off and ovl_on == ovl_off
-    assert len(jac_off) > 0 and len(ovl_off) > 0
-
-
 def test_spread_guards(spark):
     """r12 (r11 ADVICE): the shared _spread helper only probes
     scan-shaped plans (the .rdd probe on anything else would finalize
@@ -3021,3 +2983,139 @@ def test_spread_exact_node_names(spark, tmp_path):
     assert spread(exploded).rdd.getNumPartitions() == width
     agg = exploded.groupBy("id").agg(F.sum("x").alias("s"))
     assert spread(agg) is agg
+
+
+def test_heavy_hitters_closures_ship_by_value(tmp_path):
+    """Both Misra–Gries closures — the batch ``mapInPandas`` kernel and
+    the streaming state step — must unpickle and run in a process that
+    cannot import ``eventkit_spark`` (executors of a driver that put a
+    checkout on ``sys.path``): cloudpickle ships a module-level helper
+    by reference, so ``_mg_add`` is factory-made and travels inside
+    each pickle."""
+    import subprocess
+    import sys
+    import types
+
+    from pyspark import cloudpickle
+
+    from eventkit_spark.llm.sketch import _mg_kernel
+    from eventkit_spark.streaming.stream import StreamFrame
+
+    steps = []
+    owner = types.SimpleNamespace(
+        value_cols=["value"], ts_col="ts",
+        _scan_state=lambda step, *a, **kw: steps.append(step),
+    )
+    StreamFrame.heavy_hitters(owner, k=3)
+    (tmp_path / "kernel.pkl").write_bytes(cloudpickle.dumps(_mg_kernel(3, "x")))
+    (tmp_path / "step.pkl").write_bytes(cloudpickle.dumps(steps[0]))
+    code = "\n".join([
+        "import pickle, pandas as pd",
+        "try:",
+        "    import eventkit_spark",
+        "    raise SystemExit('eventkit_spark is importable')",
+        "except ModuleNotFoundError:",
+        "    pass",
+        "kern = pickle.load(open('kernel.pkl', 'rb'))",
+        "step = pickle.load(open('step.pkl', 'rb'))",
+        "out = list(kern(iter([pd.DataFrame({'x': list('aaabac')})])))[0]",
+        "print(sorted(out['item']), int(out['n_part'].iloc[0]))",
+        "emit, state = step('k', pd.DataFrame({'value': list('aaabac')}), None)",
+        "print(sorted(emit['item']), state[2])",
+    ])
+    res = subprocess.run(
+        [sys.executable, "-I", "-c", code], cwd=tmp_path, capture_output=True, text=True,
+    )
+    assert res.returncode == 0, res.stderr[-2000:]
+    # a: 4 of 6 rows, over n/k = 2 — the one surviving counter
+    assert res.stdout.split("\n")[:2] == ["['a'] 6", "['a'] 6"]
+
+
+def test_pq_searchers_empty_queries(spark):
+    """An empty query frame gives an empty top-k with the schema a
+    non-empty search returns, with and without the exact re-rank —
+    like ``brute_force_topk`` — instead of failing to build the LUTs."""
+    import random
+
+    from eventkit_spark.llm.cluster import ivfopq_topk, ivfpq_topk, pq_topk
+
+    rng = random.Random(5)
+    rows = [(i, [rng.uniform(-1, 1) for _ in range(8)]) for i in range(40)]
+    emb = spark.createDataFrame(rows, ["vec_id", "embedding"])
+    none = emb.filter(F.col("vec_id") < 0)
+    some = emb.filter(F.col("vec_id") < 2)
+    kw = dict(k=3, m=2, ks=8, max_iter=2)
+    ivf = dict(n_cells=4, nprobe=2, **kw)
+    for refine, dist in ((0, "adc_dist2"), (2, "dist2")):
+        searches = [
+            lambda q: pq_topk(emb, q, refine=refine, **kw),
+            lambda q: ivfpq_topk(emb, q, refine=refine, **ivf),
+        ]
+        if refine:
+            searches.append(lambda q: ivfopq_topk(emb, q, refine=refine, **ivf))
+        for search in searches:
+            empty, full = search(none), search(some)
+            assert empty.columns == ["query_id", "neighbor_id", dist, "rank"]
+            assert [f.dataType for f in empty.schema] == [f.dataType for f in full.schema]
+            assert empty.collect() == []
+            assert full.count() == 6
+
+
+def test_candidate_shapes_only_in_their_helpers():
+    """The llm package writes its two candidate shapes once each: the
+    (i < j) posting-list pair expansion (a ``slice(lst, i + 2, …)``) only
+    in ``dedup._posting_pairs``, and the per-group top-k cut (a
+    ``row_number()`` rank filtered by ``rank <= k``) only in
+    ``operators/relational.topk_per_group``. A hand-written copy is a
+    second implementation of the shape to drift."""
+    import ast
+    import pathlib
+
+    pkg = pathlib.Path(__file__).resolve().parent.parent / "eventkit_spark" / "llm"
+    bad = []
+
+    def callee(node):
+        f = node.func
+        return f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
+
+    def is_rank_cut(node):
+        # F.col("rank") <= k, or the SQL-string form "rank <= k"
+        if isinstance(node, ast.Compare) and isinstance(node.ops[0], ast.LtE):
+            left = node.left
+            return (
+                isinstance(left, ast.Call) and callee(left) == "col"
+                and [ast.literal_eval(a) for a in left.args[:1]] == ["rank"]
+            )
+        return (
+            isinstance(node, ast.Constant) and isinstance(node.value, str)
+            and node.value.replace(" ", "").startswith("rank<=")
+        )
+
+    class Shapes(ast.NodeVisitor):
+        def __init__(self, rel):
+            self.rel, self.defs = rel, []
+
+        def visit_FunctionDef(self, node):
+            self.defs.append(node.name)
+            where = f"{self.rel}:{node.lineno} in {'.'.join(self.defs)}"
+            body = [n for n in ast.walk(node) if n is not node]
+            numbered = any(isinstance(n, ast.Call) and callee(n) == "row_number" for n in body)
+            if numbered and any(is_rank_cut(n) for n in body) and len(self.defs) == 1:
+                bad.append(f"row_number top-k cut at {where}")
+            self.generic_visit(node)
+            self.defs.pop()
+
+        def visit_Call(self, node):
+            start = node.args[1] if len(node.args) > 1 else None
+            if (
+                callee(node) == "slice"
+                and isinstance(start, ast.BinOp) and isinstance(start.op, ast.Add)
+                and isinstance(start.right, ast.Constant) and start.right.value == 2
+                and not (self.rel == "dedup.py" and self.defs[:1] == ["_posting_pairs"])
+            ):
+                bad.append(f"(i < j) pair expansion at {self.rel}:{node.lineno}")
+            self.generic_visit(node)
+
+    for path in sorted(pkg.rglob("*.py")):
+        Shapes(path.relative_to(pkg).as_posix()).visit(ast.parse(path.read_text()))
+    assert not bad, bad
