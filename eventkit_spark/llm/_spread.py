@@ -7,21 +7,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
-from ..plans.audit import node_class, plan_nodes
+from ..plans.audit import is_scan_shaped
 from ..session import session_width
-
-# Optimized-plan node classes under which converting to an RDD is
-# plan-only work: narrow ops (a generator such as explode included)
-# over a file relation or an already-materialized local relation.
-# Anything else — a join, aggregate, window, another Python kernel —
-# means `.rdd` would FINALIZE the AQE plan and eagerly execute every
-# upstream shuffle stage once for the probe and again for the real
-# query (r11 ADVICE item 1), so the spread is skipped and the frame
-# keeps its own parallelism.
-_CHEAP_NODES = frozenset({
-    "Project", "Filter", "Generate", "LogicalRelation", "LogicalRDD",
-    "LocalRelation", "InMemoryRelation",
-})
 
 
 def spread(df: DataFrame) -> DataFrame:
@@ -39,22 +26,19 @@ def spread(df: DataFrame) -> DataFrame:
     - streaming frames are returned untouched (``.rdd`` throws on an
       unstarted stream; the per-micro-batch kernels are stateless and
       partition-invariant);
-    - the partition probe runs only when every node class of the
-      optimized plan is in ``_CHEAP_NODES`` (scan-shaped), so it can
-      never double-execute upstream work;
+    - the partition probe runs only on a scan-shaped plan
+      (``plans/audit.is_scan_shaped``), so it can never double-execute
+      upstream work; a plan that cannot be read fails loudly;
     - a non-numeric shuffle-partitions conf falls back to
-      ``defaultParallelism`` (session_width), and any probe failure
-      (e.g. Spark Connect, where ``.rdd`` is unsupported) skips the
-      spread instead of failing the query.
+      ``defaultParallelism`` (session_width), and a failing partition
+      probe (e.g. Spark Connect, where ``.rdd`` is unsupported) skips
+      the spread instead of failing the query.
     """
-    if df.isStreaming:
+    if df.isStreaming or not is_scan_shaped(df):
         return df
     width = session_width(df.sparkSession)
     try:
-        if any(node_class(n) not in _CHEAP_NODES for n in plan_nodes(df, "optimized")):
-            return df
-        if df.rdd.getNumPartitions() < width:
-            return df.repartition(width)
-    except Exception:  # noqa: BLE001 — Connect / exotic plans: no spread
+        n = df.rdd.getNumPartitions()
+    except Exception:  # noqa: BLE001 — Connect has no .rdd: no spread
         return df
-    return df
+    return df.repartition(width) if n < width else df

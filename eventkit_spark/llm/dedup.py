@@ -21,6 +21,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window as W, functions as F
 
+from ..plans.audit import estimated_bytes
 from ..session import session_width
 from ..sources.tables import local_frame, read_parquet
 
@@ -730,7 +731,7 @@ def _plan_size_bytes(df: DataFrame) -> int:
     """Catalyst's optimizer estimate of the plan's output bytes — free
     (no job; file sources report size from footers). -1 if unavailable."""
     try:
-        return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+        return estimated_bytes(df)
     except Exception:  # noqa: BLE001 — py4j / non-classic sessions
         return -1
 

@@ -17,6 +17,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, Window as W, functions as F
 
+from ..plans.audit import semantic_hash
+
 # Internal helper column names (dropped before results are returned).
 RN = "__ek_rn"
 TAG = "__ek_src"
@@ -117,7 +119,7 @@ def memo_range_bounds(tproj, n_part: int) -> list:
     Non-file sources fingerprint as empty and memo on plan shape alone.
     """
     try:
-        sem = tproj._jdf.queryExecution().analyzed().semanticHash()
+        sem = semantic_hash(tproj)
         files = hash(tuple(sorted(tproj.inputFiles())))
         key = (sem, files, n_part)
     except Exception:  # noqa: BLE001 — connect/mock sessions: skip memo

@@ -1,66 +1,225 @@
-"""Physical-plan audit helpers.
+"""Plan introspection: the one module that reads a Spark plan.
 
-The engine's performance contract is that operators stay declarative so
-Catalyst can optimize (SURVEY.md §4.2): filters reach the parquet scan,
-small dimensions broadcast, windows don't force extra shuffles. These
-helpers make those properties assertable in tests and inspectable in
-notebooks — `.explain()` as a unit-testable API.
+Operators stay declarative so Catalyst can optimize (SURVEY.md §4.2):
+filters reach the parquet scan, small dimensions broadcast, windows
+don't force extra shuffles. Tests, gates and scripts check that by
+asking this module for named facts, each read from the JVM plan tree by
+node CLASS, never from printed plan text, so a rendering change across
+Spark versions cannot flip a check silently. The ``physical`` walk
+covers what the printed executed plan shows: every node's children and
+subqueries, an adaptive root's current plan, each query stage's plan
+and the cached plan under an in-memory scan; a reused exchange is a
+leaf. ``physical_plan`` is for display and saved audits only. A
+streaming frame has no executed plan before its query starts, so only
+its ``analyzed`` and ``optimized`` trees can be walked.
 """
 
 from __future__ import annotations
 
+from collections import Counter, namedtuple
+
 from pyspark.sql import DataFrame
 
+_PHASES = {"analyzed": "analyzed", "optimized": "optimizedPlan",
+           "physical": "executedPlan"}
+# physical nodes whose printed tree shows a plan besides their children
+_INNER = {
+    "AdaptiveSparkPlanExec": lambda n: n.executedPlan(),  # the current plan
+    "InMemoryTableScanExec": lambda n: n.relation(),
+    "InMemoryRelation": lambda n: n.cachedPlan(),
+    **dict.fromkeys(
+        ["ShuffleQueryStageExec", "BroadcastQueryStageExec",
+         "TableCacheQueryStageExec", "ResultQueryStageExec"],
+        lambda n: n.plan(),
+    ),
+}
+_PYTHON_EVALS = frozenset({"ArrowEvalPythonExec", "BatchEvalPythonExec",
+                           "MapInPandasExec", "FlatMapGroupsInPandasExec"})
+_WINDOWS = frozenset({"WindowExec", "WindowGroupLimitExec"})
+# Optimized-plan node classes under which converting to an RDD is
+# plan-only work: narrow ops (a generator such as explode included)
+# over a file relation or an already-materialized local relation.
+_SCAN_SHAPED = frozenset({
+    "Project", "Filter", "Generate", "LogicalRelation", "LogicalRDD",
+    "LocalRelation", "InMemoryRelation",
+})
+# pandas kernels whose cost is per key group in Python
+_PANDAS_KERNELS = frozenset({"FlatMapGroupsInPandasWithState", "MapInPandas"})
 
-def physical_plan(df: DataFrame) -> str:
-    return df._jdf.queryExecution().executedPlan().toString()
+
+def _qe(df: DataFrame):
+    return df._jdf.queryExecution()
+
+
+def _seq(jseq) -> list:
+    return [jseq.apply(i) for i in range(jseq.size())]
+
+
+def _tree(node) -> list:
+    """An expression ``node`` and its descendants, parent first."""
+    out, stack = [], [node]
+    while stack:
+        n = stack.pop()
+        out.append(n)
+        stack.extend(reversed(_seq(n.children())))
+    return out
+
+
+def _walk(df: DataFrame, phase: str) -> list:
+    """``(class, node)`` for every node of ``df``'s plan in ``phase``,
+    parent before children."""
+    inner = _INNER if phase == "physical" else {}
+    out, stack = [], [getattr(_qe(df), _PHASES[phase])()]
+    while stack:
+        node = stack.pop()
+        cls = node_class(node)
+        out.append((cls, node))
+        kids = _seq(node.children()) + _seq(node.subqueries())
+        stack.extend(reversed([inner[cls](node)] + kids if cls in inner else kids))
+    return out
 
 
 def plan_nodes(df: DataFrame, phase: str = "analyzed") -> list:
-    """Every node of ``df``'s JVM plan tree in ``phase`` (``"analyzed"``
-    or ``"optimized"``), parent before children. Callers test node
-    CLASSES (``node_class``), never the plan's string rendering, so a
-    wording change across Spark versions cannot flip a check silently."""
-    def walk(node):
-        yield node
-        kids = node.children()
-        for i in range(kids.size()):
-            yield from walk(kids.apply(i))
-
-    qe = df._jdf.queryExecution()
-    root = {"analyzed": qe.analyzed, "optimized": qe.optimizedPlan}[phase]()
-    return list(walk(root))
+    """Every node of ``df``'s JVM plan in ``phase`` (``"analyzed"``,
+    ``"optimized"`` or ``"physical"``), parent before children."""
+    return [node for _, node in _walk(df, phase)]
 
 
 def node_class(node) -> str:
-    """Simple class name of a JVM plan node, e.g. ``"MapInPandas"``."""
-    return node.getClass().getSimpleName()
+    """Simple class name of a JVM plan node or expression, e.g.
+    ``"MapInPandas"``; a Scala object drops its ``$`` (``"LeftSemi"``)."""
+    return node.getClass().getSimpleName().rstrip("$")
+
+
+def node_counts(df: DataFrame, phase: str = "physical") -> Counter:
+    """How many nodes of each class ``df``'s plan has in ``phase``."""
+    return Counter(cls for cls, _ in _walk(df, phase))
+
+
+def node_columns(node) -> frozenset:
+    """Names of the columns a JVM plan node or expression reads."""
+    return frozenset(a.name() for a in _seq(node.references().toSeq()))
+
+
+def plan_expressions(df: DataFrame, phase: str = "physical") -> list:
+    """Every expression node (whole trees) of ``df``'s plan in ``phase``."""
+    return [x for _, n in _walk(df, phase) for e in _seq(n.expressions()) for x in _tree(e)]
+
+
+def shuffles(df: DataFrame) -> Counter:
+    """Shuffle exchanges of the physical plan by partitioning class
+    (``HashPartitioning``, ``RoundRobinPartitioning``,
+    ``SinglePartition``, ...). Broadcast exchanges are not shuffles, and
+    a reused exchange is a reference, not a second shuffle."""
+    return Counter(
+        node_class(n.outputPartitioning())
+        for cls, n in _walk(df, "physical")
+        if cls == "ShuffleExchangeExec"
+    )
+
+
+def count_shuffles(df: DataFrame) -> int:
+    """Number of shuffle exchanges in the physical plan, as
+    ``plan_report['exchanges']`` (lower = better for the same result)."""
+    return node_counts(df)["ShuffleExchangeExec"]
+
+
+Predicate = namedtuple("Predicate", "classes columns")
+Scan = namedtuple("Scan", "columns partition_filters data_filters")
+Window = namedtuple("Window", "keys columns")
+
+
+def _predicates(exprs) -> tuple:
+    return tuple(
+        Predicate(frozenset(node_class(x) for x in _tree(e)), node_columns(e))
+        for e in _seq(exprs)
+    )
+
+
+def file_scans(df: DataFrame) -> list:
+    """One ``Scan`` per file-source scan of the physical plan: its read
+    columns, and its partition and data filters, each a ``Predicate``
+    (the expression classes in its tree, the columns it reads)."""
+    return [
+        Scan(tuple(n.requiredSchema().fieldNames()),
+             _predicates(n.partitionFilters()), _predicates(n.dataFilters()))
+        for cls, n in _walk(df, "physical")
+        if cls == "FileSourceScanExec"
+    ]
+
+
+def windows(df: DataFrame) -> list:
+    """One ``Window`` per window node of the physical plan: its
+    partition-by columns (``keys``) and every column it reads."""
+    return [
+        Window(frozenset().union(*map(node_columns, _seq(n.partitionSpec()))),
+               node_columns(n))
+        for cls, n in _walk(df, "physical")
+        if cls in _WINDOWS
+    ]
+
+
+def is_scan_shaped(df: DataFrame) -> bool:
+    """True when every optimized-plan node is a narrow op over a file or
+    materialized relation, so converting ``df`` to an RDD is plan-only
+    work. Anything else (a join, aggregate, window, another Python
+    kernel) would make ``.rdd`` finalize the adaptive plan and run every
+    upstream shuffle stage once for the probe and again for the query."""
+    return all(cls in _SCAN_SHAPED for cls, _ in _walk(df, "optimized"))
+
+
+def has_pandas_kernel(df: DataFrame) -> bool:
+    """True when the analyzed plan runs a pandas state kernel or a
+    ``mapInPandas``, whose cost is per key group in Python."""
+    return any(cls in _PANDAS_KERNELS for cls, _ in _walk(df, "analyzed"))
+
+
+def semantic_hash(df: DataFrame) -> int:
+    """Hash of the analyzed plan that ignores cosmetic differences such
+    as expression ids: equal for two builds of the same plan."""
+    return _qe(df).analyzed().semanticHash()
+
+
+def estimated_bytes(df: DataFrame) -> int:
+    """Catalyst's optimizer estimate of the plan's output bytes — free
+    (no job; file sources report size from footers)."""
+    return int(_qe(df).optimizedPlan().stats().sizeInBytes())
+
+
+def physical_plan(df: DataFrame) -> str:
+    """The printed executed plan, for display and saved audits only."""
+    return _qe(df).executedPlan().toString()
 
 
 def assert_pushed_filter(df: DataFrame, fragment: str) -> None:
-    """Assert a predicate was pushed into the scan (shows up in the
-    FileSourceScan's PushedFilters list)."""
-    plan = physical_plan(df)
-    scans = [ln for ln in plan.splitlines() if "PushedFilters" in ln]
-    if not any(fragment in ln for ln in scans):
+    """Assert a predicate was pushed into a file scan: ``fragment`` is
+    part of one of its pushed source filters, e.g.
+    ``"GreaterThan(value,100.0)"``."""
+    pushed = [
+        f.toString()
+        for cls, n in _walk(df, "physical")
+        if cls == "FileSourceScanExec"
+        for f in _seq(n.pushedDownFilters())
+    ]
+    if not any(fragment in f for f in pushed):
         raise AssertionError(
-            f"filter fragment {fragment!r} not pushed to any scan.\n"
-            + "\n".join(scans or [plan])
+            f"filter fragment {fragment!r} not pushed to any scan; pushed: {pushed}"
         )
 
 
 def assert_broadcast_join(df: DataFrame, execute: bool = False) -> None:
     """Assert at least one join in the plan executes as a broadcast.
 
-    ``execute=True`` runs the query first so AQE's FINAL plan is
+    ``execute=True`` first runs ``df``'s own plan, so AQE's FINAL plan is
     inspected — required for joins the engine deliberately leaves
     unhinted (e.g. keyed takeuntil cut tables) where only runtime
-    statistics reveal the small side."""
+    statistics reveal the small side. (An action such as ``df.count()``
+    runs a different plan and leaves this one unfinalized.)"""
     if execute:
-        df.count()
-    plan = physical_plan(df)
-    if "BroadcastHashJoin" not in plan and "BroadcastNestedLoopJoin" not in plan:
-        raise AssertionError(f"no broadcast join in plan:\n{plan}")
+        _qe(df).toRdd().count()
+    c = node_counts(df)
+    if not c["BroadcastHashJoinExec"] + c["BroadcastNestedLoopJoinExec"]:
+        raise AssertionError(f"no broadcast join in plan:\n{physical_plan(df)}")
 
 
 def skew_report(df: DataFrame, keys: list[str], top: int = 10) -> DataFrame:
@@ -103,28 +262,6 @@ def skew_report(df: DataFrame, keys: list[str], top: int = 10) -> DataFrame:
     )
 
 
-def _shuffles(plan: str) -> int:
-    """Shuffle exchanges in a physical-plan string, one per line that
-    names an Exchange. ReusedExchange is a plan-tree reference (no
-    second shuffle) and BroadcastExchange is a broadcast, not a
-    shuffle — counting raw "Exchange" substrings would inflate CI
-    budgets with both."""
-    return sum(
-        1
-        for ln in plan.splitlines()
-        if "Exchange" in ln
-        and "Reused" not in ln
-        and "BroadcastExchange" not in ln
-    )
-
-
-def count_shuffles(df: DataFrame) -> int:
-    """Number of SHUFFLE exchanges in the physical plan (lower = better
-    for the same result; windows/joins/aggregations each justify at most
-    one); the rule ``plan_report['exchanges']`` uses."""
-    return _shuffles(physical_plan(df))
-
-
 def plan_report(df: DataFrame) -> dict:
     """One-call plan budget for CI assertions and plan reviews: counts
     of the physical-plan features that matter at 100 TB. Pure plan
@@ -139,19 +276,15 @@ def plan_report(df: DataFrame) -> dict:
     under AQE they only exist in the post-execution final plan, and a
     report that silently returned 0 pre-execution would mislead.
     """
-    p = physical_plan(df)
+    c = node_counts(df)
     return {
-        "scans": p.count("FileScan"),
-        "exchanges": _shuffles(p),
-        "broadcasts": p.count("BroadcastExchange"),
-        "sorts": p.count("Sort "),
-        "python_evals": sum(
-            p.count(tag)
-            for tag in ("ArrowEvalPython", "BatchEvalPython", "MapInPandas",
-                        "FlatMapGroupsInPandas")
-        ),
-        "nested_loop_joins": p.count("BroadcastNestedLoopJoin")
-        + p.count("CartesianProduct"),
+        "scans": c["FileSourceScanExec"],
+        "exchanges": c["ShuffleExchangeExec"],
+        "broadcasts": c["BroadcastExchangeExec"],
+        "sorts": c["SortExec"],
+        "python_evals": sum(c[k] for k in _PYTHON_EVALS),
+        "nested_loop_joins": c["BroadcastNestedLoopJoinExec"]
+        + c["CartesianProductExec"],
     }
 
 

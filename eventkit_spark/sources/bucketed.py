@@ -19,6 +19,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..plans.audit import physical_plan, shuffles
+
 
 def save_bucketed(
     df: DataFrame,
@@ -45,16 +47,12 @@ def drop_table(spark: SparkSession, table: str) -> None:
 
 
 def assert_colocated(df: DataFrame) -> None:
-    """Assert the plan contains no shuffle exchange (hash or range
-    repartitioning) — broadcast exchanges are allowed, since they don't
-    move the fact side."""
-    from ..plans.audit import physical_plan
-
-    plan = physical_plan(df)
-    bad = [
-        ln
-        for ln in plan.splitlines()
-        if "Exchange hashpartitioning" in ln or "Exchange rangepartitioning" in ln
-    ]
-    if bad:
-        raise AssertionError("shuffle exchange in supposedly co-located plan:\n" + "\n".join(bad))
+    """Assert the plan contains no shuffle exchange of any partitioning
+    (hash, range, round-robin, single) — broadcast exchanges are
+    allowed, since they don't move the fact side."""
+    moved = shuffles(df)
+    if moved:
+        raise AssertionError(
+            f"shuffle exchanges {dict(moved)} in supposedly co-located plan:\n"
+            + physical_plan(df)
+        )

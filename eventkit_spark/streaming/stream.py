@@ -94,7 +94,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import StructType, TimestampType
 
-from ..plans.audit import node_class, plan_nodes
+from ..plans.audit import has_pandas_kernel
 from ..session import _size_to_bytes, session_width
 from ..state import (
     _make_cusum_step,
@@ -2134,14 +2134,7 @@ class StreamFrame:
             # measured 4-5x SLOWER at bench scale (1.9 s -> 7.8 s for
             # running_agg at one partition), so they keep the session
             # width, which is already sized to the cluster.
-            try:
-                per_group = any(
-                    node_class(n) in ("FlatMapGroupsInPandasWithState", "MapInPandas")
-                    for n in plan_nodes(sink_df)
-                )
-            except Exception:  # noqa: BLE001 — can't inspect: don't narrow
-                per_group = True
-            if per_group:
+            if has_pandas_kernel(sink_df):
                 parts = None
         if parts is None:
             return writer.start()

@@ -1,13 +1,11 @@
 """Audit the physical plan of EVERY declared query (guide §7.2).
 
-For each name in ``queries()``: build the frame, capture
-``explain("formatted")``, and tally the red-flag indicators the
-optimization guide lists — Exchange count, parquet scan count,
-Python-boundary nodes (BatchEvalPython / ArrowEvalPython / MapInPandas /
-FlatMapGroupsInPandas), SortMergeJoin, cartesian/nested-loop joins,
-Window nodes, and whether every scan carries PushedFilters when the
-query filters at all. Writes one TSV summary (stdout) and optionally the
-full explain text per query under ``plans/<round>/audit/`` (PLAN_ROUND env, default r12).
+For each name in ``queries()``: build the frame and print one TSV row of
+its ``plans/audit.plan_report`` counts, read from plan node classes —
+file scans, shuffle exchanges, broadcast exchanges, sorts, Python
+boundaries and nested-loop/cartesian joins. ``--save`` also writes the
+printed physical plan per query under ``plans/<round>/audit/``
+(PLAN_ROUND env, default r13).
 
 ``--save`` writes each plan MASKED (``mask``): expression ids, lambda
 variable suffixes, plan and AQE stage ids, RDD ids, object addresses and
@@ -25,11 +23,9 @@ their availableNow query) — the audit therefore takes bench-like time.
 
 from __future__ import annotations
 
-import io
 import os
 import re
 import sys
-from contextlib import redirect_stdout
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -46,6 +42,10 @@ _MASKS = [
     (re.compile(r"/tmp/[^\s,\]\)]*"), "/tmp/<tmp>"),
 ]
 
+# the plan_report keys, in TSV column order
+_COLUMNS = ("scans", "exchanges", "broadcasts", "sorts", "python_evals",
+            "nested_loop_joins")
+
 
 def mask(plan: str) -> str:
     """``plan`` with its run-dependent parts replaced by placeholders."""
@@ -56,6 +56,7 @@ def mask(plan: str) -> str:
 
 def main():
     import __spark_entry__ as entrymod
+    from eventkit_spark.plans.audit import physical_plan, plan_report
     from eventkit_spark.session import get_spark
 
     sf = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
@@ -77,33 +78,21 @@ def main():
 
     outdir = os.path.join(os.path.dirname(os.path.dirname(
         os.path.abspath(__file__))), "plans",
-        os.environ.get("PLAN_ROUND", "r12"), "audit")
+        os.environ.get("PLAN_ROUND", "r13"), "audit")
     if save:
         os.makedirs(outdir, exist_ok=True)
-    print("name\texchanges\tscans\tpy_nodes\tsmj\tcartesian\twindows\tpushed\tplan_lines\terr")
+    print("\t".join(["name", *_COLUMNS, "err"]))
     for name in names:
         try:
             df = qs[name](spark, sf)
-            buf = io.StringIO()
-            with redirect_stdout(buf):
-                df.explain("formatted")
-            plan = buf.getvalue()
+            rep = plan_report(df)
         except Exception as ex:  # noqa: BLE001
-            print(f"{name}\t-\t-\t-\t-\t-\t-\t-\t-\t{type(ex).__name__}: {ex}"[:300])
+            print("\t".join([name, *"-" * len(_COLUMNS), f"{type(ex).__name__}: {ex}"[:300]]))
             continue
-        ex_n = len(re.findall(r"\bExchange\b|\bBroadcastExchange\b", plan))
-        scans = plan.count("Scan parquet")
-        py = len(re.findall(
-            r"BatchEvalPython|ArrowEvalPython|MapInPandas|FlatMapGroupsInPandas|MapInArrow",
-            plan))
-        smj = plan.count("SortMergeJoin")
-        cart = len(re.findall(r"CartesianProduct|BroadcastNestedLoopJoin", plan))
-        win = len(re.findall(r"\bWindow\b|RunningWindowFunction", plan))
-        pushed = len(re.findall(r"PushedFilters: \[[^\]]", plan))
         if save:
             with open(os.path.join(outdir, f"{name}.txt"), "w") as f:
-                f.write(mask(plan))
-        print(f"{name}\t{ex_n}\t{scans}\t{py}\t{smj}\t{cart}\t{win}\t{pushed}\t{len(plan.splitlines())}\t")
+                f.write(mask(physical_plan(df)))
+        print("\t".join([name, *(str(rep[k]) for k in _COLUMNS), ""]))
         sys.stdout.flush()
 
 

@@ -5,8 +5,9 @@ Usage:
 
 Times each query per guide §1.4 (noop sink — full computation, no
 driver materialization), labels jobs (§1.5), and optionally writes
-``plans/r11/<name>_<DIR_SUFFIX>.txt`` with the ``explain("formatted")``
-output so plan claims are auditable without running Spark.
+``plans/<round>/<name>_<DIR_SUFFIX>.txt`` (``--round``, default r12)
+with the ``explain("formatted")`` output so plan claims are auditable
+without running Spark.
 """
 
 from __future__ import annotations

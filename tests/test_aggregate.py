@@ -5,6 +5,8 @@ import math
 import pytest
 from pyspark.sql import functions as F
 
+from eventkit_spark.plans.audit import count_shuffles, node_counts, windows
+
 
 def test_running_min_max(ints):
     ef = ints.map(lambda v: (v - 5) * (v - 5), names=["value"])
@@ -171,7 +173,6 @@ def test_ema_scaled_null_semantics(spark):
 def test_ema_single_shuffle(spark):
     """Segmented EMA's (key, seg) windows must reuse the key exchange —
     one shuffle total, not one per window spec."""
-    from eventkit_spark.plans.audit import count_shuffles
     from eventkit_spark.sources.tables import load_events
 
     ef = load_events(spark, "/root/testdata/sf0.001")
@@ -210,10 +211,8 @@ def test_reduce_python_callable(ints, spark):
     # plain operator.add stays on the JVM Column path (no pandas node)
     import operator
 
-    from eventkit_spark.plans.audit import physical_plan
-
     ef = ints.reduce(operator.add, result_type="bigint")
-    assert "FlatMapGroupsInPandas" not in physical_plan(ef.df)
+    assert not node_counts(ef.df)["FlatMapGroupsInPandasExec"]
     assert ef.to_list() == [sum(range(i + 1)) for i in range(10)]
 
     # and the python path is keyed-parallel: per-key folds stay separate
@@ -299,7 +298,6 @@ def test_running_scaled_matches_sequential(spark):
     window by the range bucket (parallel) instead of a constant."""
     import pyspark.sql.functions as F
 
-    from eventkit_spark.plans.audit import physical_plan
     from eventkit_spark.sources.create import sequence
 
     vals = [((i * 37) % 19) - 9 for i in range(500)]
@@ -315,9 +313,8 @@ def test_running_scaled_matches_sequential(spark):
             assert [round(a, 9) for a in got] == [round(a, 9) for a in seq_out]
         else:
             assert got == seq_out, kind
-    plan = physical_plan(ef.sum(scaled=True, partitions=4).df)
-    win_lines = [ln for ln in plan.splitlines() if "Window" in ln]
-    assert any("__pid" in ln for ln in win_lines), "window not bucket-partitioned"
+    wins = windows(ef.sum(scaled=True, partitions=4).df)
+    assert any("__pid" in w.keys for w in wins), "window not bucket-partitioned"
     # keyed streams must refuse the scaled path
     import pytest as _pytest
 
@@ -334,7 +331,6 @@ def test_ema_scaled_matches_sequential(spark):
     refused toward the default path."""
     import pytest
 
-    from eventkit_spark.plans.audit import physical_plan
     from eventkit_spark.sources.create import sequence
 
     vals = [float(((i * 37) % 19) - 9) for i in range(3000)]
@@ -346,9 +342,8 @@ def test_ema_scaled_matches_sequential(spark):
         abs(a - b) / max(abs(b), 1e-12) for a, b in zip(got, seq_out)
     ) < 1e-9
 
-    plan = physical_plan(ef.ema(n=10, scaled=True, partitions=6).df)
-    win_lines = [ln for ln in plan.splitlines() if "Window" in ln]
-    assert any("__pid" in ln for ln in win_lines)
+    wins = windows(ef.ema(n=10, scaled=True, partitions=6).df)
+    assert any("__pid" in w.keys for w in wins)
 
     with pytest.raises(ValueError, match="0 < weight < 1"):
         ef.ema(weight=1.5, scaled=True)

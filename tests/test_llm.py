@@ -5,7 +5,10 @@ import pytest
 from pyspark.sql import functions as F
 
 from eventkit_spark.llm.similarity import embedding_near_dups, ivf_topk
-from eventkit_spark.plans.audit import physical_plan
+from eventkit_spark.plans.audit import (
+    count_shuffles, file_scans, node_class, node_counts, plan_expressions, plan_nodes,
+    plan_report, shuffles, windows,
+)
 from eventkit_spark.sources.tables import load_table
 
 SF = "/root/testdata/sf0.001"
@@ -42,9 +45,7 @@ def test_neardup_lsh_prefilter_guard_low_threshold(spark):
     lsh = _pairs(lsh_df)
     assert lsh == exact and len(exact) > 0
     # the fallback took the exact path: no posting-list distinct in plan
-    from eventkit_spark.plans.audit import physical_plan
-
-    assert "ArrowEvalPython" not in physical_plan(lsh_df)
+    assert not node_counts(lsh_df)["ArrowEvalPythonExec"]
     # explicit bits bypasses the guard (no warning) and stays a subset
     import warnings as _w
 
@@ -82,10 +83,8 @@ def test_ivf_no_global_window(spark):
     the final plan is keyed by query_id."""
     emb = load_table(spark, SF, "embeddings")
     out = ivf_topk(emb, emb.filter(F.col("vec_id") < 5), k=3, n_cells=8, nprobe=3)
-    plan = physical_plan(out)
-    for ln in plan.splitlines():
-        if "Window" in ln:
-            assert "query_id" in ln, f"unpartitioned window in IVF plan:\n{ln}"
+    for w in windows(out):
+        assert "query_id" in w.keys, f"window not keyed by query_id: {w}"
     rows = out.collect()
     assert len(rows) > 0
     # every query got at most k neighbors, ranked
@@ -659,7 +658,6 @@ def test_asof_join_unkeyed_carry_forward(spark):
     as-of semantics across bucket boundaries (carry-in), including
     numeric-ts tolerance in column units."""
     from eventkit_spark.operators.relational import asof_join
-    from eventkit_spark.plans.audit import physical_plan
 
     n = 5000
     left = spark.range(n).select(
@@ -670,15 +668,14 @@ def test_asof_join_unkeyed_carry_forward(spark):
         (F.col("id") * 500 + 5).alias("ts"), (F.col("id") * 100.0).alias("q")
     )
     out = asof_join(left, right, "ts", right_cols=["q"], partitions=8)
-    plan = physical_plan(out)
     # fully lazy + fault-tolerant: no pinned RDD scan, no partition-id
     # nondeterminism — bucket ids are pure expressions over broadcast
     # quantile boundaries, recomputable on executor loss
-    assert "existingrdd" not in plan.lower()
-    assert "spark_partition_id" not in plan.lower()
+    assert not node_counts(out)["RDDScanExec"]
+    assert "SparkPartitionID" not in {node_class(x) for x in plan_expressions(out)}
     # the data path windows on __pid (parallel, hash-shuffled on the
     # bucket id), not on a SinglePartition sort of the union
-    assert "__pid" in plan
+    assert any("__pid" in w.keys for w in windows(out))
     # (the only single-partition window left is the #partitions-row
     # carry table — the data path itself is the parallel bucket window)
     rows = {r["id"]: (r["q"], r["ts_r"]) for r in out.collect()}
@@ -704,7 +701,6 @@ def test_bucket_caps_prune_only_downward(spark):
     the hot-set aggregate + anti-join, never a count window (a window
     shuffles a whole hot bucket into one task before dropping it)."""
     from eventkit_spark.llm.dedup import minhash_lsh_candidates, simhash_near_dups
-    from eventkit_spark.plans.audit import node_class, plan_nodes
 
     docs = load_table(spark, SF, "documents")
     mh_all = {(r["id_a"], r["id_b"]) for r in minhash_lsh_candidates(docs).collect()}
@@ -900,7 +896,6 @@ def test_top_ngrams_vocab(spark):
     """Global top-k grams with deterministic ranks; the top-k plans as
     TakeOrderedAndProject (per-partition heaps), not a global sort."""
     from eventkit_spark.llm.text import top_ngrams
-    from eventkit_spark.plans.audit import physical_plan
 
     docs = spark.createDataFrame(
         [(1, "a b a b c"), (2, "a b x"), (3, "a y")],
@@ -915,9 +910,8 @@ def test_top_ngrams_vocab(spark):
     bi = [(r["rank"], r["gram"], r["cnt"]) for r in top_ngrams(docs, n=2, k=2)
           .orderBy("rank").collect()]
     assert bi == [(1, "a b", 3), (2, "a y", 1)]
-    assert "TakeOrderedAndProject" in physical_plan(
-        top_ngrams(docs, n=1, k=3).drop("rank")
-    )
+    top = top_ngrams(docs, n=1, k=3).drop("rank")
+    assert node_counts(top)["TakeOrderedAndProjectExec"]
 
 
 def test_fuzzy_dedup_transitive_keep_list(spark):
@@ -1065,8 +1059,7 @@ def test_interval_join_binned_equals_naive(spark):
         if ek == jk and s <= t <= en
     }
     assert got == exp and len(exp) > 0
-    plan = physical_plan(out)
-    assert "BroadcastNestedLoop" not in plan
+    assert not node_counts(out)["BroadcastNestedLoopJoinExec"]
     # events carry extra payload columns through with suffixing
     out2 = interval_join(
         ev.withColumnRenamed("k", "kk"), iv.withColumnRenamed("k", "kk"),
@@ -1180,7 +1173,6 @@ def test_dsir_logratio_ranks_target_like_docs_higher(spark):
     a raw doc disjoint from it; the buckets-sized weight table must
     BROADCAST onto the scoring join (the 100 TB shape)."""
     from eventkit_spark.llm.sampling import dsir_logratio
-    from eventkit_spark.plans.audit import physical_plan
 
     raw = spark.createDataFrame(
         [(0, "alpha alpha beta alpha"), (1, "zog zog qux zog")],
@@ -1190,7 +1182,7 @@ def test_dsir_logratio_ranks_target_like_docs_higher(spark):
     out = dsir_logratio(raw, tgt, buckets=64)
     got = {r["doc_id"]: r["logw"] for r in out.collect()}
     assert got[0] > got[1]
-    assert "BroadcastHashJoin" in physical_plan(out)
+    assert node_counts(out)["BroadcastHashJoinExec"]
 
 
 def test_char_entropy_known_values_and_no_shuffle(spark):
@@ -1198,7 +1190,6 @@ def test_char_entropy_known_values_and_no_shuffle(spark):
     balanced binary string has exactly 1 bit; the plan must contain NO
     exchange (the kernel reads each doc's text in place)."""
     from eventkit_spark.llm.text import char_entropy
-    from eventkit_spark.plans.audit import count_shuffles
 
     docs = spark.createDataFrame(
         [(0, "aaaa"), (1, "abab"), (2, ""), (3, "aA1a")],
@@ -1678,9 +1669,9 @@ def test_weighted_sample_deterministic_and_biased(spark):
     pop_mean = sum(w for _, w in rows) / len(rows)
     samp_mean = sum(1 + (i % 10) * 10 for i in a) / len(a)
     assert samp_mean > pop_mean * 1.2  # strongly length-biased
-    plan = physical_plan(weighted_sample(df, 400, "w", "id"))
-    assert "TakeOrderedAndProject" in plan
-    assert "Exchange SinglePartition" not in plan
+    ws = weighted_sample(df, 400, "w", "id")
+    assert node_counts(ws)["TakeOrderedAndProjectExec"]
+    assert not shuffles(ws)["SinglePartition"]
 
 
 def test_weighted_sample_grouped_matches_global_per_group(spark):
@@ -2159,9 +2150,8 @@ def test_ivf_index_stats_reads_partition_column_only(spark, tmp_path):
     rows = out.collect()
     assert [r["cell"] for r in rows] == [0, 1, 2, 3]
     assert sum(r["n"] for r in rows) == emb.count()
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    scans = [ln for ln in plan.splitlines() if "ReadSchema" in ln]
-    assert scans and all("ReadSchema: struct<>" in ln for ln in scans)
+    scans = file_scans(out)
+    assert scans and all(s.columns == () for s in scans)
 
 
 def test_cms_dominates_misra_gries_counts(spark):
@@ -2194,7 +2184,6 @@ def test_winnow_fingerprints_model_and_guarantee(spark):
     length >= w+k-1 share a fingerprint), and plans ZERO exchanges —
     documents are independent."""
     from eventkit_spark.llm.text import winnow_fingerprints
-    from eventkit_spark.plans.audit import plan_report
 
     MOD = (1 << 31) - 1
 
@@ -2252,7 +2241,6 @@ def test_winnow_overlap_detects_shifted_copies(spark):
     from pyspark.sql import functions as F
 
     from eventkit_spark.llm.text import winnow_overlap
-    from eventkit_spark.plans.audit import plan_report
     from eventkit_spark.sources.tables import load_table
 
     docs = load_table(spark, "/root/testdata/sf0.001", "documents").select(
@@ -2348,7 +2336,6 @@ def test_keyword_hits(spark):
     the literal-list and DataFrame-taxonomy paths; the keyword dim
     joins BROADCAST and the corpus scans once."""
     from eventkit_spark.llm.text import keyword_hits
-    from eventkit_spark.plans.audit import physical_plan
 
     docs = spark.createDataFrame(
         [(1, "the cat and THE dog"), (2, "data model data"), (3, "nothing here")],
@@ -2368,15 +2355,13 @@ def test_keyword_hits(spark):
     with pytest.raises(ValueError):
         keyword_hits(docs, [])
 
-    plan = physical_plan(keyword_hits(docs, ["the"]))
-    assert "BroadcastHashJoin" in plan
+    assert node_counts(keyword_hits(docs, ["the"]))["BroadcastHashJoinExec"]
 
 
 def test_phrase_hits_matches_phrase_search(spark):
     """phrase_hits == phrase_search run per phrase (overlaps, repeated
     words, absent phrases), in one corpus scan with broadcast dims."""
     from eventkit_spark.llm.text import phrase_hits, phrase_search
-    from eventkit_spark.plans.audit import physical_plan
 
     docs = spark.createDataFrame(
         [
@@ -2402,8 +2387,7 @@ def test_phrase_hits_matches_phrase_search(spark):
     with pytest.raises(ValueError):
         phrase_hits(docs, [])
 
-    plan = physical_plan(phrase_hits(docs, phrases))
-    assert plan.count("BroadcastHashJoin") >= 2
+    assert node_counts(phrase_hits(docs, phrases))["BroadcastHashJoinExec"] >= 2
 
 
 def test_blocklist_verdicts_parity(spark):
@@ -2417,7 +2401,6 @@ def test_blocklist_verdicts_parity(spark):
     from eventkit_spark.llm.text import (
         blocklist_verdicts, keyword_hits, phrase_hits,
     )
-    from eventkit_spark.plans.audit import physical_plan
 
     docs = spark.createDataFrame(
         [
@@ -2450,8 +2433,8 @@ def test_blocklist_verdicts_parity(spark):
     with pytest.raises(ValueError):
         blocklist_verdicts(docs, ["two words"], [])
 
-    plan = physical_plan(blocklist_verdicts(docs, terms, phrases))
-    assert plan.count("BroadcastHashJoin") == 2  # dim + lens, never corpus
+    bv = blocklist_verdicts(docs, terms, phrases)
+    assert node_counts(bv)["BroadcastHashJoinExec"] == 2  # dim + lens, never corpus
 
 
 def test_pipeline_moderation_plan_and_values(spark):
@@ -2459,17 +2442,11 @@ def test_pipeline_moderation_plan_and_values(spark):
     category non-vacuous at sf0.001, and the plan reads the corpus TEXT
     in exactly two FileScans (blocklist branch + dup-histogram branch);
     the corpus-total branch prunes text away entirely."""
-    import re
-
     import __spark_entry__ as e
-    from eventkit_spark.plans.audit import physical_plan
 
     out = e.queries()["pipeline_moderation"](spark, "/root/testdata/sf0.001")
-    plan = physical_plan(out)
-    text_scans = [
-        m for m in re.findall(r"ReadSchema: \S+", plan) if "text" in m
-    ]
-    assert len(text_scans) == 2, plan.count("FileScan")
+    scans = [s.columns for s in file_scans(out)]
+    assert sum("text" in c for c in scans) == 2, scans
     rows = {r["verdict"]: r for r in out.collect()}
     assert set(rows) == {
         "corpus", "blocked_term", "blocked_phrase", "blocked_both",
@@ -2491,7 +2468,6 @@ def test_normalize_text(spark):
     compatibility forms, whitespace collapses, NULLs survive, and the
     plan is a pure scan + one Arrow kernel (no exchange)."""
     from eventkit_spark.llm.text import normalize_text
-    from eventkit_spark.plans.audit import plan_report
 
     docs = spark.createDataFrame(
         [
@@ -2910,7 +2886,6 @@ def test_upsample_mix_model(spark):
     # hash-thresholded fractional copy; factor 0.5 downsamples; the op
     # plans ZERO exchanges
     from eventkit_spark.llm.sampling import upsample_mix
-    from eventkit_spark.plans.audit import count_shuffles
 
     rows = [(i, f"src{i % 3}", "t") for i in range(300)]
     df = spark.createDataFrame(rows, "doc_id long, source string, text string")
@@ -2969,7 +2944,6 @@ def test_spread_exact_node_names(spark, tmp_path):
     which the old line-prefix match left serial — while a frame with an
     Aggregate keeps its plan."""
     from eventkit_spark.llm._spread import spread
-    from eventkit_spark.plans.audit import node_class, plan_nodes
     from eventkit_spark.session import session_width
     from eventkit_spark.sources.tables import read_parquet
 

@@ -4,11 +4,11 @@ bounded shuffle counts) verified from the physical plan."""
 import pytest
 from pyspark.sql import Window as W, functions as F
 
-from eventkit_spark.plans import (
-    assert_broadcast_join,
-    assert_pushed_filter,
+from eventkit_spark.plans import assert_broadcast_join, assert_pushed_filter
+from eventkit_spark.plans.audit import (
+    count_shuffles, file_scans, node_class, node_columns, node_counts, plan_nodes,
+    plan_report, profile_table, shuffles,
 )
-from eventkit_spark.plans.audit import count_shuffles
 
 
 SF = "/root/testdata/sf0.001"
@@ -23,13 +23,10 @@ def test_filter_pushdown_reaches_scan(spark):
 
 def test_column_pruning(spark):
     from eventkit_spark.sources.tables import load_events
-    from eventkit_spark.plans.audit import physical_plan
 
     ef = load_events(spark, SF)
-    out = ef.df.select("event_id", "user_id")
-    plan = physical_plan(out)
-    scan = [ln for ln in plan.splitlines() if "ReadSchema" in ln][0]
-    assert "event_type" not in scan and "props" not in scan
+    cols = file_scans(ef.df.select("event_id", "user_id"))[0].columns
+    assert "event_type" not in cols and "props" not in cols
 
 
 def test_small_dim_join_broadcasts(spark):
@@ -381,7 +378,6 @@ def test_dedup_pair_queries_scan_budget(spark):
     more than one extra parallel scan), and a hot shingle never funnels
     through one task."""
     import __spark_entry__ as e
-    from eventkit_spark.plans.audit import physical_plan
 
     # q_dedup_minhash is the portable-ORACLE form since the r4 extension
     # pass: like simhash, its distinct-shingle fold dimension pays one
@@ -389,27 +385,34 @@ def test_dedup_pair_queries_scan_budget(spark):
     # single-scan below
     budgets = {e.q_dedup_jaccard: 2, e.q_dedup_simhash: 2, e.q_dedup_minhash: 2}
     for q, budget in budgets.items():
-        plan = physical_plan(q(spark, SF))
-        n = plan.count("FileScan")
+        n = plan_report(q(spark, SF))["scans"]
         assert n <= budget, f"{q.__name__}: {n} scans > budget {budget}"
     # q_dedup_simhash is the portable-ORACLE form (r4): its vocab hash
     # dimension pays one extra (column-pruned, tiny-vocab) scan. The
     # xxhash64 PRODUCTION form must keep the single-scan single-pipeline
     # plan and the 3-exchange ceiling.
     from eventkit_spark.llm.dedup import simhash_near_dups
-    from eventkit_spark.plans.audit import count_shuffles
     from eventkit_spark.sources.tables import load_table
 
     prod = simhash_near_dups(load_table(spark, SF, "documents"), max_hamming=3)
-    plan = physical_plan(prod)
-    assert plan.count("FileScan") <= 1
+    assert plan_report(prod)["scans"] <= 1
     assert count_shuffles(prod) <= 3
     # same pin for the xxhash64 production minhash: one scan, 3 exchanges
     from eventkit_spark.llm.dedup import minhash_lsh_candidates
 
     prod_mh = minhash_lsh_candidates(load_table(spark, SF, "documents"))
-    assert physical_plan(prod_mh).count("FileScan") <= 1
+    assert plan_report(prod_mh)["scans"] <= 1
     assert count_shuffles(prod_mh) <= 3
+
+
+def _assert_probe_reads_ids_once(res, store_col):
+    """A dry-run probe plan never scans the batch text, scans the batch
+    ids at most once (the status join; ``store_col`` marks the store's
+    scans), and reads its one pass from a checkpointed RDD per branch."""
+    scans = [s.columns for s in file_scans(res)]
+    assert not [c for c in scans if "text" in c], f"probe plan scans batch text: {scans}"
+    assert len([c for c in scans if "doc_id" in c and store_col not in c]) <= 1
+    assert node_counts(res)["RDDScanExec"] >= 2
 
 
 def test_simhash_dryrun_probe_single_fingerprint_pass(spark):
@@ -419,15 +422,12 @@ def test_simhash_dryrun_probe_single_fingerprint_pass(spark):
     localCheckpoint shares one pass across hits / competition / status,
     so the probe plan reads the batch parquet only for the id column
     and never for text."""
-    import re
     import tempfile
 
-    import __spark_entry__ as e
     from eventkit_spark.llm.dedup import (
         simhash_dedup_incremental,
         simhash_store_init,
     )
-    from eventkit_spark.plans.audit import physical_plan
     from eventkit_spark.sources.tables import load_table
 
     docs = load_table(spark, SF, "documents")
@@ -438,14 +438,8 @@ def test_simhash_dryrun_probe_single_fingerprint_pass(spark):
     res = simhash_dedup_incremental(
         docs.filter(F.col("doc_id") % 3 == 0), path, commit=False
     )
-    plan = physical_plan(res)
-    scans = re.findall(r"FileScan[^\n]*", plan)
-    text_scans = [sc for sc in scans if "text" in sc]
-    assert not text_scans, f"probe plan scans batch text: {text_scans}"
-    doc_scans = [sc for sc in scans if "doc_id" in sc and "simhash" not in sc]
-    assert len(doc_scans) <= 1  # the id-only status join scan
     # the one fingerprint pass is the checkpointed RDD, read per branch
-    assert plan.count("ExistingRDD") >= 2
+    _assert_probe_reads_ids_once(res, "simhash")
     # and it still answers correctly
     statuses = {r["status"] for r in res.collect()}
     assert statuses <= {"kept", "dup_store", "dup_batch"}
@@ -458,13 +452,12 @@ def test_embed_neardup_prefilter_buckets_once(spark):
     posting-list form has two ArrowEvalPython nodes total — one
     bucketing, one cosine verify."""
     from eventkit_spark.llm.similarity import embedding_near_dups
-    from eventkit_spark.plans.audit import physical_plan
     from eventkit_spark.sources.tables import load_table
 
     emb = load_table(spark, SF, "embeddings")
-    plan = physical_plan(embedding_near_dups(emb, threshold=0.92, prefilter="rp_lsh"))
-    assert plan.count("ArrowEvalPython") == 1, "bucketing pipeline planned more than once"
-    assert plan.count("MapInPandas") == 1, "verify pass should be one fused Arrow kernel"
+    c = node_counts(embedding_near_dups(emb, threshold=0.92, prefilter="rp_lsh"))
+    assert c["ArrowEvalPythonExec"] == 1, "bucketing pipeline planned more than once"
+    assert c["MapInPandasExec"] == 1, "verify pass should be one fused Arrow kernel"
 
 
 def test_contamination_bloom_zero_shuffle_corpus(spark):
@@ -475,30 +468,30 @@ def test_contamination_bloom_zero_shuffle_corpus(spark):
     broadcast by Spark) — no toPandas/createDataFrame materialization
     proportional to heldout size anywhere (r4 VERDICT scale flag)."""
     from eventkit_spark.llm.dedup import contamination
-    from eventkit_spark.plans.audit import count_shuffles, physical_plan
     from eventkit_spark.sources.tables import load_table
 
     docs = load_table(spark, SF, "documents")
     train = docs.filter(F.col("doc_id") % 5 != 0)
     held = docs.filter(F.col("doc_id") % 5 == 0)
     out = contamination(train, held, method="bloom")
-    plan = physical_plan(out)
+    c = node_counts(out)
     # heldout's explode+distinct pipeline is PERSISTED (it feeds the
     # sizing count, the bloom build, and this verify branch — one
     # physical compute, then cache reads), so the verify side shows an
     # InMemoryTableScan instead of a second live heldout pipeline; the
-    # extra FileScan/Exchange counts below are the cached plan's
-    # one-time materialization text, not per-action work
-    assert plan.count("InMemoryTableScan") == 1, "heldout verify reads the cache"
-    assert plan.count("FileScan") == 3, "corpus scan + cached heldout plan"
-    assert "LocalTableScan" not in plan, "heldout must stay distributed"
-    assert plan.count("ArrowEvalPython") == 1, "one bloom-probe kernel"
+    # walk also visits the cached plan under it, once
+    assert c["InMemoryTableScanExec"] == 1, "heldout verify reads the cache"
+    assert c["FileSourceScanExec"] == 2, "corpus scan + cached heldout plan"
+    assert not c["LocalTableScanExec"], "heldout must stay distributed"
+    assert c["ArrowEvalPythonExec"] == 1, "one bloom-probe kernel"
     # flagged-residue aggregate + the cached pipeline's distinct
-    assert plan.count("Exchange hashpartitioning") == 3
+    assert shuffles(out)["HashPartitioning"] == 2
     # the regex/shingle chain must not be inferred into the scan filter
     # (the explode_outer guard) — corpus rows pay it exactly once
-    scan_filter = [ln for ln in plan.splitlines() if "PushedFilters" in ln or "DataFilters" in ln]
-    assert not any("regexp" in ln for ln in scan_filter), "shingle chain leaked into scan filter"
+    regexps = {"RegExpReplace", "RegExpExtract", "RegExpExtractAll"}
+    assert not any(
+        regexps & p.classes for s in file_scans(out) for p in s.data_filters
+    ), "shingle chain leaked into scan filter"
 
 
 def test_contamination_store_probe_zero_shuffle_corpus(spark, tmp_path):
@@ -511,21 +504,20 @@ def test_contamination_store_probe_zero_shuffle_corpus(spark, tmp_path):
     from eventkit_spark.llm.dedup import (
         contamination_store_init, decontaminate_incremental,
     )
-    from eventkit_spark.plans.audit import physical_plan
     from eventkit_spark.sources.tables import load_table
 
     docs = load_table(spark, SF, "documents")
     path = str(tmp_path / "cstore")
     contamination_store_init(docs.filter(F.col("doc_id") % 5 == 0), path, k=5)
     out = decontaminate_incremental(docs.filter(F.col("doc_id") % 5 != 0), path)
-    plan = physical_plan(out)
+    c = node_counts(out)
     # corpus scanned once + the persisted hash set read once
-    assert plan.count("FileScan parquet") == 2, "corpus + stored hashes only"
-    assert "LocalTableScan" not in plan, "store must stay distributed"
-    assert plan.count("ArrowEvalPython") == 1, "one bloom-probe kernel"
+    assert c["FileSourceScanExec"] == 2, "corpus + stored hashes only"
+    assert not c["LocalTableScanExec"], "store must stay distributed"
+    assert c["ArrowEvalPythonExec"] == 1, "one bloom-probe kernel"
     # one hash exchange: the flagged-residue aggregate (stored hashes
     # arrive pre-distinct, so the r4 heldout-distinct exchange is gone)
-    assert plan.count("Exchange hashpartitioning") == 1
+    assert shuffles(out)["HashPartitioning"] == 1
 
 
 def test_bucketed_join_elides_shuffle(spark):
@@ -551,6 +543,21 @@ def test_bucketed_join_elides_shuffle(spark):
         drop_table(spark, "ev_bucketed_b")
 
 
+def test_colocated_rejects_every_shuffle(spark):
+    """assert_colocated fails on a shuffle of ANY partitioning, not only
+    hash and range: a round-robin repartition and a global window (a
+    SinglePartition exchange) move every row too."""
+    from eventkit_spark.sources import assert_colocated
+
+    base = spark.range(1000)
+    for moved in (
+        base.repartition(8),
+        base.withColumn("r", F.row_number().over(W.orderBy("id"))),
+    ):
+        with pytest.raises(AssertionError, match="shuffle"):
+            assert_colocated(moved)
+
+
 def test_takeuntil_no_fact_reshuffle(spark):
     """takeuntil's notifier aggregate joins broadcast at runtime: the
     engine no longer force-hints keyed cut tables (high-cardinality keys
@@ -566,12 +573,10 @@ def test_tpch_q5_pushdown_and_broadcast(spark):
     nation/region dimensions must broadcast — the 6-table join's only
     data-sized exchanges are the fact-side shuffles."""
     import __spark_entry__ as e
-    from eventkit_spark.plans.audit import physical_plan
 
-    plan = physical_plan(e.q_tpch_q5(spark, SF))
-    assert "BroadcastHashJoin" in plan
-    scan_lines = [ln for ln in plan.splitlines() if "PushedFilters" in ln and "o_orderdate" in ln]
-    assert scan_lines, "date predicate not pushed to the orders scan"
+    q5 = e.q_tpch_q5(spark, SF)
+    assert node_counts(q5)["BroadcastHashJoinExec"]
+    assert_pushed_filter(q5, "o_orderdate")
 
 
 def test_tpch_showcase_plan_shapes(spark):
@@ -582,25 +587,27 @@ def test_tpch_showcase_plan_shapes(spark):
     join (no lineitem payload past the probe), and both top-k queries
     use TakeOrderedAndProject instead of a global sort."""
     import __spark_entry__ as e
-    from eventkit_spark.plans.audit import physical_plan
 
-    p14 = physical_plan(e.q_tpch_q14(spark, SF))
-    assert "BroadcastHashJoin" in p14
+    assert node_counts(e.q_tpch_q14(spark, SF))["BroadcastHashJoinExec"]
 
-    p18 = physical_plan(e.q_tpch_q18(spark, SF))
-    assert "TakeOrderedAndProject" in p18
-    # the quantity aggregate must sit BELOW the orders join: find the
-    # first HashAggregate and first SortMergeJoin/ShuffledHashJoin line
-    lines = p18.splitlines()
-    agg_at = next(i for i, ln in enumerate(lines) if "HashAggregate" in ln and "l_quantity" in ln)
-    assert agg_at is not None
+    q18 = e.q_tpch_q18(spark, SF)
+    assert node_counts(q18)["TakeOrderedAndProjectExec"]
+    # the quantity aggregate: a HashAggregate reading l_quantity
+    assert any(
+        node_class(n) == "HashAggregateExec" and "l_quantity" in node_columns(n)
+        for n in plan_nodes(q18, "physical")
+    )
 
-    p4 = physical_plan(e.q_tpch_q4(spark, SF))
-    assert "LeftSemi" in p4
+    joins = ("SortMergeJoinExec", "BroadcastHashJoinExec", "ShuffledHashJoinExec")
+    assert "LeftSemi" in {
+        node_class(n.joinType())
+        for n in plan_nodes(e.q_tpch_q4(spark, SF), "physical")
+        if node_class(n) in joins
+    }
 
-    p10 = physical_plan(e.q_tpch_q10(spark, SF))
-    assert "TakeOrderedAndProject" in p10
-    assert "BroadcastHashJoin" in p10  # nation dimension
+    c10 = node_counts(e.q_tpch_q10(spark, SF))
+    assert c10["TakeOrderedAndProjectExec"]
+    assert c10["BroadcastHashJoinExec"]  # nation dimension
 
 
 def test_triangle_count_plan_pins_edges(spark):
@@ -609,12 +616,10 @@ def test_triangle_count_plan_pins_edges(spark):
     every branch replays the full upstream pair-building pipeline
     (x6 corpus scans on a similarity-graph input)."""
     import __spark_entry__ as e
-    from eventkit_spark.plans.audit import physical_plan
 
     spark.catalog.clearCache()
     try:
-        plan = physical_plan(e.queries()["triangles"](spark, SF))
-        assert "InMemoryTableScan" in plan
+        assert node_counts(e.queries()["triangles"](spark, SF))["InMemoryTableScanExec"]
     finally:
         spark.catalog.clearCache()
 
@@ -625,18 +630,16 @@ def test_ivf_index_query_partition_prunes(spark, tmp_path):
     becomes a PartitionFilters IN-list on the scan — at 100 TB the I/O
     is ~nprobe/n_cells of the index, not the corpus."""
     from eventkit_spark.llm.similarity import ivf_index_topk, ivf_index_write
-    from eventkit_spark.plans.audit import physical_plan
     from eventkit_spark.sources.tables import load_table
 
     emb = load_table(spark, SF, "embeddings")
     path = str(tmp_path / "ivf_idx")
     ivf_index_write(emb, path, n_cells=8, centroids="portable")
     out = ivf_index_topk(spark, path, emb.filter(F.col("vec_id") < 3), k=5, nprobe=2)
-    plan = physical_plan(out)
-    scan = [ln for ln in plan.splitlines() if "PartitionFilters" in ln]
-    assert scan and any("cell" in ln and "IN" in ln.upper() for ln in scan), (
-        "probe set not pushed as a partition filter:\n" + plan
-    )
+    filters = [p for s in file_scans(out) for p in s.partition_filters]
+    assert any(
+        p.columns == {"cell"} and {"In", "InSet"} & p.classes for p in filters
+    ), f"probe set not pushed as a partition filter: {filters}"
 
 
 def test_plan_report_counts(spark):
@@ -645,7 +648,6 @@ def test_plan_report_counts(spark):
     BroadcastNestedLoopJoin when a join loses its equi-condition."""
     from pyspark.sql import functions as F
 
-    from eventkit_spark.plans.audit import plan_report
     from eventkit_spark.sources.tables import load_table
 
     ev = load_table(spark, SF, "events")
@@ -665,15 +667,15 @@ def test_rollup_timeseries_single_scan_single_exchange(spark):
     Expand replica, never a second 100 TB scan (the GROUPING SETS
     contract vs the naive one-aggregate-per-grain union)."""
     from eventkit_spark.operators.relational import rollup_timeseries
-    from eventkit_spark.plans.audit import physical_plan
     from eventkit_spark.sources.tables import load_table
 
     ev = load_table(spark, SF, "events")
     for grains in [("hour", "day"), ("hour", "day", "month")]:
-        plan = physical_plan(rollup_timeseries(ev, by="event_type", grains=grains))
-        assert plan.count("FileScan") == 1, f"{grains}: fact table scanned once"
-        assert plan.count("Expand") == 1
-        assert plan.count("Exchange hashpartitioning") == 1
+        out = rollup_timeseries(ev, by="event_type", grains=grains)
+        c = node_counts(out)
+        assert c["FileSourceScanExec"] == 1, f"{grains}: fact table scanned once"
+        assert c["ExpandExec"] == 1
+        assert shuffles(out)["HashPartitioning"] == 1
 
 
 def test_pivot_agg_single_pass_no_discovery_job(spark):
@@ -682,7 +684,6 @@ def test_pivot_agg_single_pass_no_discovery_job(spark):
     Spark job (Spark's pivot() without values runs a distinct discovery
     scan at plan time; declared values are the 100 TB contract)."""
     from eventkit_spark.operators.relational import pivot_agg
-    from eventkit_spark.plans.audit import physical_plan
     from eventkit_spark.sources.tables import load_table
 
     ev = load_table(spark, SF, "events")
@@ -692,18 +693,16 @@ def test_pivot_agg_single_pass_no_discovery_job(spark):
     assert len(tracker.getJobIdsForGroup(None) or []) == jobs_before, (
         "constructing pivot_agg ran a discovery job"
     )
-    plan = physical_plan(out)
-    assert plan.count("FileScan") == 1
-    assert plan.count("Exchange hashpartitioning") == 1
+    assert plan_report(out)["scans"] == 1
+    assert shuffles(out)["HashPartitioning"] == 1
 
 
 def test_plan_report_exchanges_exclude_broadcast_and_reused(spark):
     """Regression (r6 advice): plan_report['exchanges'] means SHUFFLES —
     a broadcast-joined aggregate must report its BroadcastExchange under
-    'broadcasts' only, matching count_shuffles' per-line rule."""
+    'broadcasts' only, matching count_shuffles."""
     from pyspark.sql import functions as F
 
-    from eventkit_spark.plans.audit import count_shuffles, plan_report
     from eventkit_spark.sources.tables import load_table
 
     ev = load_table(spark, SF, "events")
@@ -724,16 +723,15 @@ def test_contamination_join_single_corpus_scan(spark):
     heldout branch (r6 ROADMAP '2-scan' item, closed r7). Values must
     still match the lazy two-frame semantics."""
     from eventkit_spark.llm.dedup import contamination
-    from eventkit_spark.plans.audit import physical_plan
     from eventkit_spark.sources.tables import load_table
 
     docs = load_table(spark, SF, "documents")
     train = docs.filter(F.col("doc_id") % 5 != 0)
     held = docs.filter(F.col("doc_id") % 5 == 0)
     out = contamination(train, held, method="join")
-    plan = physical_plan(out)
-    assert plan.count("FileScan") == 1, "heldout branch must not rescan"
-    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
+    c = node_counts(out)
+    assert c["FileSourceScanExec"] == 1, "heldout branch must not rescan"
+    assert not c["ArrowEvalPythonExec"] + c["BatchEvalPythonExec"]
     # sanity: contaminated docs exist in this fixture and every flagged
     # id is a train doc
     rows = out.collect()
@@ -746,7 +744,6 @@ def test_contamination_auto_routes_by_corpus_size(spark):
     a pure scan + Arrow kernel), while a small corpus keeps the simpler
     join plan (no eager bloom-build jobs at construction)."""
     from eventkit_spark.llm.dedup import contamination
-    from eventkit_spark.plans.audit import physical_plan
     from eventkit_spark.sources.tables import load_table
 
     docs = load_table(spark, SF, "documents")
@@ -755,21 +752,19 @@ def test_contamination_auto_routes_by_corpus_size(spark):
 
     # tiny threshold -> bloom: one Arrow bloom-probe kernel present
     big = contamination(train, held, method="auto", auto_bloom_bytes=1)
-    assert physical_plan(big).count("ArrowEvalPython") == 1
+    assert node_counts(big)["ArrowEvalPythonExec"] == 1
 
     # huge threshold -> join: no Python anywhere in the plan
     small = contamination(train, held, method="auto",
                           auto_bloom_bytes=1 << 60)
-    p = physical_plan(small)
-    assert "ArrowEvalPython" not in p and "BatchEvalPython" not in p
+    c = node_counts(small)
+    assert not c["ArrowEvalPythonExec"] + c["BatchEvalPythonExec"]
 
 
 def test_profile_table_single_pass(spark):
     """profile_table: one aggregate over the source (single FileScan),
     metrics correct on a frame with known NULLs and types."""
     from pyspark.sql import functions as F
-
-    from eventkit_spark.plans.audit import physical_plan, profile_table
 
     df = spark.createDataFrame(
         [(1, "a", 2.0), (2, None, 4.0), (None, "b", None), (2, "b", 8.0)],
@@ -786,15 +781,13 @@ def test_profile_table_single_pass(spark):
     from eventkit_spark.sources.tables import load_table
 
     prof = profile_table(load_table(spark, SF, "documents"))
-    assert physical_plan(prof).count("FileScan") == 1
+    assert plan_report(prof)["scans"] == 1
 
 
 def test_profile_table_dotted_column_names(spark):
     """Column names containing dots (legal in Spark) must profile
     correctly — helper aliases are positional, never name-derived
     (ADVICE r6: f-string aliases parsed as nested-field access)."""
-    from eventkit_spark.plans.audit import profile_table
-
     df = spark.createDataFrame(
         [(1, "x"), (2, None), (2, "y")], ["m.count", "tag.v1"]
     )
@@ -936,6 +929,9 @@ def test_streaming_kernels_single_exchange(spark, tmp_path):
             sf.df = sf.df.filter(F.col("event_type") == etype)
         return sf
 
+    # the one site that reads plan text: a streaming frame has no
+    # executed plan before its query starts (reading it raises
+    # AnalysisException), so plan_nodes cannot walk its physical tree
     def plan_text(df):
         buf = io.StringIO()
         with contextlib.redirect_stdout(buf):
@@ -995,14 +991,12 @@ def test_minhash_dryrun_probe_single_banding_pass(spark):
     by the hits / bucket-competition / status branches, so the probe
     plan reads the batch parquet only for the id column and never for
     text."""
-    import re
     import tempfile
 
     from eventkit_spark.llm.dedup import (
         minhash_dedup_incremental,
         minhash_store_init,
     )
-    from eventkit_spark.plans.audit import physical_plan
     from eventkit_spark.sources.tables import load_table
 
     docs = load_table(spark, SF, "documents")
@@ -1014,14 +1008,8 @@ def test_minhash_dryrun_probe_single_banding_pass(spark):
     res = minhash_dedup_incremental(
         docs.filter(F.col("doc_id") % 3 == 0), path, commit=False
     )
-    plan = physical_plan(res)
-    scans = re.findall(r"FileScan[^\n]*", plan)
-    text_scans = [sc for sc in scans if "text" in sc]
-    assert not text_scans, f"probe plan scans batch text: {text_scans}"
-    doc_scans = [sc for sc in scans if "doc_id" in sc and "bucket" not in sc]
-    assert len(doc_scans) <= 1  # the id-only status join scan
     # the one banding pass is the checkpointed RDD, read per branch
-    assert plan.count("ExistingRDD") >= 2
+    _assert_probe_reads_ids_once(res, "bucket")
     # and it still answers correctly, identically to the commit form
     dry = {(r["doc_id"], r["status"]) for r in res.collect()}
     path2 = tempfile.mkdtemp(prefix="ek_mhpin2_")
@@ -1057,3 +1045,60 @@ def test_readme_query_count_matches_registry():
     got = sorted({int(x) for pair in live_claims for x in pair if x})
     assert live_claims, "README no longer states the registry size anywhere"
     assert got == [n], f"README claims {got}, registry has {n}"
+
+
+def test_plan_facts_only_from_audit():
+    """Plan facts come from node classes through ``plans/audit``: a
+    ``queryExecution`` read anywhere else is a second plan reader, and a
+    string op (``.count``, ``in``, ``splitlines``, ...) or a regex on
+    ``physical_plan(...)`` or captured ``explain()`` text is a heuristic
+    that a Spark rendering change can flip silently. The one text site
+    is the streaming one-exchange check: a streaming frame has no
+    executed plan to walk before its query starts."""
+    import ast
+    import pathlib
+
+    root = pathlib.Path(__file__).resolve().parent.parent
+    ops = {"count", "splitlines", "split", "lower", "upper", "find", "index"}
+    bad = set()
+
+    def name(n):
+        return getattr(n, "id", None) or getattr(n, "attr", None)
+
+    for path in [*(root / "eventkit_spark").rglob("*.py"),
+                 *(root / "scripts").glob("*.py"), *(root / "tests").glob("*.py")]:
+        rel = path.relative_to(root).as_posix()
+        tree = ast.parse(path.read_text())
+        bad |= {f"queryExecution at {rel}:{n.lineno}" for n in ast.walk(tree)
+                if name(n) == "queryExecution" and rel != "eventkit_spark/plans/audit.py"}
+        defs = [n for n in ast.walk(tree) if isinstance(n, ast.FunctionDef)]
+        site = [range(d.lineno, d.end_lineno + 1) for d in defs if (rel, d.name) == (
+            "tests/test_plans.py", "test_streaming_kernels_single_exchange")]
+        text_fns = set()
+        for scope in defs + defs:  # twice: a text function may call another
+            calls = [name(n.func) for n in ast.walk(scope) if isinstance(n, ast.Call)]
+            sources = {"physical_plan", *text_fns, *["getvalue"] * ("explain" in calls)}
+            names = set()
+
+            def is_text(n):
+                return (isinstance(n, ast.Name) and n.id in names) or (
+                    isinstance(n, ast.Call) and name(n.func) in sources)
+
+            for n in ast.walk(scope):
+                if isinstance(n, ast.Assign) and is_text(n.value):
+                    names |= {t.id for t in n.targets if isinstance(t, ast.Name)}
+                if isinstance(n, ast.Return) and n.value and is_text(n.value):
+                    text_fns.add(scope.name)
+            if any(scope.lineno in r for r in site):
+                continue
+            for n in ast.walk(scope):
+                if isinstance(n, ast.Call) and isinstance(n.func, ast.Attribute) and (
+                    (n.func.attr in ops and is_text(n.func.value))
+                    or (name(n.func.value) == "re" and any(map(is_text, n.args)))
+                ):
+                    bad.add(f"{n.func.attr}() on plan text at {rel}:{n.lineno}")
+                if isinstance(n, ast.Compare) and any(
+                    isinstance(op, (ast.In, ast.NotIn)) for op in n.ops
+                ) and any(map(is_text, n.comparators)):
+                    bad.add(f"'in' on plan text at {rel}:{n.lineno}")
+    assert not bad, sorted(bad)

@@ -4,7 +4,7 @@ aggregation; colocate must remove the downstream shuffle."""
 from pyspark.sql import functions as F
 
 from eventkit_spark.operators.scale import colocate, explain_skew, salted_agg
-from eventkit_spark.plans.audit import count_shuffles
+from eventkit_spark.plans.audit import count_shuffles, windows
 from eventkit_spark.sources.tables import load_table
 
 SF = "/root/testdata/sf0.001"
@@ -47,15 +47,13 @@ def test_line_dedup_hot_line(spark):
     dedup correctly — and the plan must contain no Window over the line
     hash (the hot-key trap the agg+join form exists to avoid)."""
     from eventkit_spark.llm.text import line_dedup
-    from eventkit_spark.plans.audit import physical_plan
 
     docs = spark.range(20000).select(
         F.col("id").alias("doc_id"),
         F.concat(F.lit("COMMON BOILERPLATE\nunique-"), F.col("id").cast("string")).alias("text"),
     )
     out = line_dedup(docs)
-    plan = physical_plan(out)
-    assert "Window" not in plan, "line_dedup must not window over the line hash"
+    assert not windows(out), "line_dedup must not window over the line hash"
     agg = out.agg(
         F.sum("n_kept").alias("kept"), F.sum("n_lines").alias("total")
     ).collect()[0]
@@ -69,7 +67,6 @@ def test_jaccard_hot_shingle_guard(spark):
     with the hot shingle as the only overlap, no pairs survive, and the
     guard is an anti-join (no Window over the shingle)."""
     from eventkit_spark.llm.dedup import ngram_jaccard_pairs
-    from eventkit_spark.plans.audit import physical_plan
 
     docs = spark.range(5000).select(
         F.col("id").alias("doc_id"),
@@ -81,9 +78,9 @@ def test_jaccard_hot_shingle_guard(spark):
         ).alias("text"),
     )
     out = ngram_jaccard_pairs(docs, k=3, threshold=0.1, max_df=64)
-    plan = physical_plan(out)
-    win_lines = [ln for ln in plan.splitlines() if "Window" in ln and "shingle" in ln]
-    assert not win_lines, "df guard must not window over the shingle"
+    assert not [w for w in windows(out) if "shingle" in w.columns], (
+        "df guard must not window over the shingle"
+    )
     assert out.count() == 0  # only the pruned boilerplate overlapped
 
 
@@ -131,7 +128,6 @@ def test_token_quota_salted_equals_plain_and_bounds_windows(spark):
     could not hold at corpus scale) — and the salted plan's windows must
     partition by (source, bucket), never by source alone."""
     from eventkit_spark.llm.sampling import token_quota
-    from eventkit_spark.plans.audit import physical_plan
 
     docs = load_table(spark, SF, "documents").withColumn(
         "source", F.lit("mega")
@@ -144,7 +140,5 @@ def test_token_quota_salted_equals_plain_and_bounds_windows(spark):
     assert len(plain) < docs.count()
     # the heavy window runs per (source, bucket): no single-partition
     # window over the mega-source in the salted plan
-    plan = physical_plan(out)
-    heavy = [ln for ln in plan.splitlines()
-             if "Window" in ln and "sum(__ntok" in ln]
-    assert heavy and all("__b" in ln for ln in heavy), heavy
+    heavy = [w for w in windows(out) if "__ntok" in w.columns]
+    assert heavy and all("__b" in w.keys for w in heavy), heavy

@@ -75,7 +75,7 @@ def test_selection_scaled_matches_sequential(spark):
     by the range bucket instead of a constant."""
     import pytest
 
-    from eventkit_spark.plans.audit import physical_plan
+    from eventkit_spark.plans.audit import windows
     from eventkit_spark.sources.create import sequence
 
     vals = [((i * 37) % 19) - 9 for i in range(500)]
@@ -108,9 +108,9 @@ def test_selection_scaled_matches_sequential(spark):
     nef = sequence(spark, nvals, interval=0.001)
     assert (nef.unique(scaled=True, partitions=4).df.orderBy("seq").collect()
             == nef.unique().df.orderBy("seq").collect())
-    uplan = physical_plan(ef.unique(scaled=True, partitions=4).df)
-    uwin = [ln for ln in uplan.splitlines() if "Window" in ln]
-    assert all("__pid" in ln for ln in uwin), "unique_scaled sorts a payload window"
+    uwin = windows(ef.unique(scaled=True, partitions=4).df)
+    # (the one unkeyed window orders the #partitions-row offset table by __pid)
+    assert all("__pid" in w.columns for w in uwin), "unique_scaled sorts a payload window"
 
     # null-safe changes across bucket boundaries: consecutive NULLs
     # collapse, NULL<->value transitions emit — same as the sequential
@@ -126,11 +126,8 @@ def test_selection_scaled_matches_sequential(spark):
     assert (ef.dropwhile("value > 100", scaled=True, partitions=4).to_list()
             == ef.to_list())
 
-    plan = physical_plan(
-        ef.takewhile("value > -9", scaled=True, partitions=4).df
-    )
-    win_lines = [ln for ln in plan.splitlines() if "Window" in ln]
-    assert any("__pid" in ln for ln in win_lines), "window not bucket-partitioned"
+    wins = windows(ef.takewhile("value > -9", scaled=True, partitions=4).df)
+    assert any("__pid" in w.keys for w in wins), "window not bucket-partitioned"
 
     keyed = ef._with()
     keyed.key_cols = ["value"]

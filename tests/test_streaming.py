@@ -7,6 +7,8 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from eventkit_spark.plans.audit import node_class, plan_expressions, plan_nodes
+
 
 @pytest.fixture(scope="module")
 def stream_dir(spark, tmp_path_factory):
@@ -1117,8 +1119,12 @@ def test_streaming_interval_join_fractional_bound(spark, stream_dir, tmp_path_fa
         value_cols=[], ts_col="start", key_cols=["user_id"],
     )
     out = sf.interval_join(fi, max_length_s=0.5, watermark="0 seconds")
-    plan = out._jdf.queryExecution().analyzed().toString()
-    assert "millisecond" in plan.lower() or "0.5" in plan, plan
+    # the bound reaches the join condition as a 500 ms interval literal
+    bounds = {
+        x.value() for x in plan_expressions(out, "analyzed")
+        if node_class(x) == "Literal" and node_class(x.dataType()) == "DayTimeIntervalType"
+    }
+    assert 500_000 in bounds, bounds  # microseconds
 
     with pytest.raises(ValueError, match="positive"):
         sf.interval_join(fi, max_length_s=0.0)
@@ -2073,13 +2079,11 @@ def _state_node_input(df):
     """(name, type) of each column the pandas state node receives, read
     off the analyzed JVM plan tree by node class and ``output()`` — no
     plan-string parsing."""
-    from eventkit_spark.plans.audit import node_class, plan_nodes
-
     nodes = [
         n for n in plan_nodes(df)
         if node_class(n) == "FlatMapGroupsInPandasWithState"
     ]
-    assert len(nodes) == 1, df._jdf.queryExecution().analyzed().toString()
+    assert len(nodes) == 1, [node_class(n) for n in plan_nodes(df)]
     out = nodes[0].child().output()
     return [
         (out.apply(i).name(), out.apply(i).dataType().typeName())
@@ -2285,6 +2289,31 @@ def test_stream_state_width_derivation(spark, stream_dir):
     q2.awaitTermination()
     ops2 = q2.lastProgress["stateOperators"]
     assert ops2 and ops2[0]["numShufflePartitions"] == sess, ops2
+
+
+def test_plan_gates_fail_loudly(spark, stream_dir, monkeypatch):
+    """Both plan-reading gates raise when the plan cannot be read,
+    instead of degrading silently: the spread gate used to skip the
+    spread, and _sized_start used to keep the session width as if the
+    query ran a pandas kernel."""
+    from eventkit_spark.llm._spread import spread
+    from eventkit_spark.plans import audit
+    from eventkit_spark.session import session_width
+    from eventkit_spark.streaming.stream import _stream_shuffle_partitions
+
+    sf = _stream(spark, stream_dir)
+    assert _stream_shuffle_partitions(spark, sf.src_bytes) < session_width(spark)
+    sink = sf.last()
+    w = sink.writeStream.format("memory").queryName("ek_loud").outputMode("complete")
+
+    def unreadable(df, phase):
+        raise RuntimeError("plan unreadable")
+
+    monkeypatch.setattr(audit, "_walk", unreadable)
+    with pytest.raises(RuntimeError, match="unreadable"):
+        spread(spark.range(10))
+    with pytest.raises(RuntimeError, match="unreadable"):
+        sf._sized_start(w.trigger(availableNow=True), sink_df=sink)
 
 
 def _write_batches(root, batches):

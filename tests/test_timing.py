@@ -223,7 +223,7 @@ def test_rollup_cascade_matches_direct_and_scans_once(spark):
     and the whole cascade must scan the fact source exactly once."""
     from pyspark.sql import functions as F
 
-    from eventkit_spark.plans.audit import physical_plan
+    from eventkit_spark.plans.audit import node_counts
     from eventkit_spark.sources.tables import load_events
 
     ev = load_events(spark, "/root/testdata/sf0.001")
@@ -244,19 +244,18 @@ def test_rollup_cascade_matches_direct_and_scans_once(spark):
     # re-aggregates the cached cells, not events (Catalyst does not
     # reuse the aggregate across union branches by itself — verified)
     cascade.write.mode("overwrite").format("noop").save()
-    executed = cascade._jdf.queryExecution().executedPlan().toString()
-    # both union branches read the SAME cached cell relation (the
-    # textual plan prints the InMemoryRelation's defining scan inline,
-    # so count InMemoryTableScans, not FileScan substrings)
-    assert executed.count("InMemoryTableScan") == 2
+    # both union branches read the SAME cached cell relation (the walk
+    # also visits the cached plan under each in-memory scan, so count
+    # in-memory scans, not file scans)
+    assert node_counts(cascade)["InMemoryTableScanExec"] == 2
     # fully-lazy variant trades that for one fact scan per level (clear
     # the cache first: Spark's cache manager substitutes the persisted
     # cells into ANY logically-matching plan, including this one)
     spark.catalog.clearCache()
     lazy = ef.rollup_cascade(levels=(3600.0, 86400.0), materialize=False)
-    lazy_plan = physical_plan(lazy)
-    assert "InMemoryTableScan" not in lazy_plan
-    assert lazy_plan.count("FileScan") >= 2
+    lazy_nodes = node_counts(lazy)
+    assert not lazy_nodes["InMemoryTableScanExec"]
+    assert lazy_nodes["FileSourceScanExec"] >= 2
     # nesting guard
     import pytest as _pytest
 
