@@ -3,14 +3,17 @@ product quantization (PQ) — the curation/compression stages of an
 embedding pipeline (cluster-then-dedup à la SemDeDup; PQ codes for
 billion-scale ANN à la Jégou et al. 2011).
 
-Scale shape shared by both: centroids are the ONLY driver-side state
-(k x d doubles — kilobytes), shipped to executors as a broadcast
-closure; every assignment pass is one blocked BLAS matmul per Arrow
-batch (the `ivf_topk` kernel pattern, llm/similarity.py:243), and every
-update pass is one partial-combined (cluster, dim) aggregate whose
-shuffle carries k*d cells, not vectors. Iterations are driver-driven
-(classic Lloyd's), so the corpus is scanned once per iteration with no
-lineage growth — each pass reads the source, not the previous pass.
+Every codebook fit — ``kmeans``, the PQ and OPQ codebooks, the IVF
+``centroids="kmeans"`` cells — runs one Lloyd lane, ``_lloyd``, over an
+m x k x sub codebook (m = 1 for plain k-means). Centroids are the ONLY
+driver-side state (kilobytes), shipped to executors in the kernel
+closure. Each iteration is ONE corpus pass: a ``mapInPandas`` kernel
+assigns every subspace with the one squared-L2 argmin (``_nearest``, a
+blocked BLAS product per Arrow batch) and folds (sub, c, n, sum v) over
+its whole partition, so at most m*k rows per partition reach the one
+(sub, c) aggregate and at most m*k rows reach the driver. Iterations
+are driver-driven (classic Lloyd's) over a base frame the lane caches
+for the fit and releases when it returns or raises.
 """
 
 from __future__ import annotations
@@ -22,6 +25,38 @@ from ..sources.tables import local_frame
 from .similarity import _as_double, sqdist
 
 
+def _make_l2_helpers():
+    # Factory, not plain module-level defs: the Lloyd fold and the
+    # encoders call these on the executors, and cloudpickle ships a
+    # module-level function by reference (README, Design rules).
+    import numpy as np
+
+    def sq_l2(A, C):
+        """n x k squared L2 distances of the rows of ``A`` to the rows
+        of ``C`` by one BLAS product: ||a||^2 - 2 a.c + ||c||^2. Exact
+        for the fixed-point integer units (every term < 2^53)."""
+        return (A * A).sum(axis=1, keepdims=True) - 2.0 * (A @ C.T) + (C * C).sum(axis=1)
+
+    def nearest(A, books):
+        """Nearest centre per subspace: ``books`` is m x k x sub and
+        the columns of ``A`` are its m contiguous subvectors. Returns
+        (codes, d2), both n x m; ties go to the lowest centre id."""
+        m, _, sub = books.shape
+        codes = np.empty((len(A), m), dtype=np.int32)
+        d2 = np.empty((len(A), m))
+        rows = np.arange(len(A))
+        for j in range(m):
+            t = sq_l2(A[:, j * sub:(j + 1) * sub], books[j])
+            codes[:, j] = np.argmin(t, axis=1)
+            d2[:, j] = t[rows, codes[:, j]]
+        return codes, d2
+
+    return sq_l2, nearest
+
+
+_sq_l2, _nearest = _make_l2_helpers()
+
+
 def _portable31(col):
     """(id mod 2^31) * 2654435761 mod 2^31 — the Knuth multiplicative
     hash, replayable in ANSI SQL and overflow-safe under ANSI mode (the
@@ -29,11 +64,14 @@ def _portable31(col):
     return ((col.cast("long") % F.lit(1 << 31)) * F.lit(2654435761)) % F.lit(1 << 31)
 
 
-def _int_units(vec, scale):
-    """array<float> -> array<long> in fixed-point units: floor(x*scale).
-    float->double widening and the double multiply are IEEE-identical in
-    any engine, and floor is unambiguous (unlike round-half ties), so
-    the integer vectors are bit-identical in Spark and SQL."""
+def _vec_units(vec, scale=None):
+    """array<float> -> array<double>; with ``scale``, array<long> in
+    fixed-point units floor(x*scale). float->double widening and the
+    double multiply are IEEE-identical in any engine, and floor is
+    unambiguous (unlike round-half ties), so the integer vectors are
+    bit-identical in Spark and SQL."""
+    if not scale:
+        return _as_double(vec)
     return F.transform(
         _as_double(vec), lambda x: F.floor(x * F.lit(float(scale))).cast("long")
     )
@@ -45,13 +83,16 @@ def _seed_centroids(corpus, n, id_col, vec_col, portable=False, scale=None):
     global window, reproducible across runs/engines. ``portable=True``
     orders by the Knuth 31-bit hash (id tie-break) instead, which an
     ANSI-SQL oracle can replay; ``scale`` additionally returns the
-    vectors in integer fixed-point units (see ``_int_units``)."""
+    vectors in integer fixed-point units (see ``_vec_units``)."""
     import numpy as np
 
     h = _portable31(F.col(id_col)) if portable else F.xxhash64(F.col(id_col))
-    cv = _int_units(F.col(vec_col), scale) if scale else _as_double(F.col(vec_col))
     rows = (
-        corpus.select(cv.alias("cv"), h.alias("__h"), F.col(id_col).alias("__id"))
+        corpus.select(
+            _vec_units(F.col(vec_col), scale).alias("cv"),
+            h.alias("__h"),
+            F.col(id_col).alias("__id"),
+        )
         .orderBy("__h", "__id")
         .limit(n)
         .select("cv")
@@ -67,19 +108,11 @@ def _assign_kernel(cent_mat):
     import numpy as np
     import pandas as pd
 
+    books = cent_mat[None]
+
     def k(vs):
-        A = np.stack(vs.to_numpy())
-        # ||a - c||^2 = ||a||^2 - 2 a.c + ||c||^2 ; argmin over c
-        d2 = (
-            (A * A).sum(axis=1, keepdims=True)
-            - 2.0 * (A @ cent_mat.T)
-            + (cent_mat * cent_mat).sum(axis=1)
-        )
-        idx = np.argmin(d2, axis=1)
-        return pd.DataFrame({
-            "cluster": idx.astype(np.int32),
-            "dist2": d2[np.arange(len(idx)), idx],
-        })
+        codes, d2 = _nearest(np.stack(vs.to_numpy()), books)
+        return pd.DataFrame({"cluster": codes[:, 0], "dist2": d2[:, 0]})
 
     # asNondeterministic: extracting BOTH struct fields (a.cluster,
     # a.dist2) through stacked projections otherwise inlines and
@@ -93,6 +126,80 @@ def _assign_kernel(cent_mat):
     # other filter will push below it. Keep call sites
     # projection-shaped.
     return F.pandas_udf(k, "cluster int, dist2 double").asNondeterministic()
+
+
+def _lloyd(base, seeds, max_iter, tol, replay):
+    """Lloyd's iterations over ``base`` (id, v) for an m x k x sub
+    codebook ``seeds`` (the columns of v are the m contiguous
+    subvectors). Returns ``(books, n_iter)``.
+
+    One pass per iteration: a ``mapInPandas`` kernel assigns every
+    subspace with ``_nearest`` and folds the (sub, c, n, sum v) partials
+    over its whole partition (at most m*k rows out), then one (sub, c)
+    aggregate, its element sums written as SQL text, collects at most
+    m*k rows. Empty clusters keep their centre. ``replay`` (int64 units):
+    FLOORED integer means (numpy ``//`` == SQL ``floor(sum/n)``) and
+    exactly ``max_iter`` iterations — the sums are exact, so neither
+    partition nor batch order can change a digit. Float: sum / n; a
+    subspace whose max centre shift^2 falls below ``tol`` keeps its
+    centres from then on, and the loop ends once every subspace has.
+    ``base`` is cached for the fit and released before returning, also
+    when the fit raises."""
+    import numpy as np
+    import pandas as pd
+
+    m, k, sub = seeds.shape
+    dtype = "long" if replay else "double"
+    sums = "array(" + ", ".join(f"sum(s[{i}])" for i in range(sub)) + ")"
+
+    def fold_kernel(books):
+        def fold(batches):
+            n = np.zeros((m, k), dtype=np.int64)
+            s = np.zeros((m, k, sub), dtype=books.dtype)
+            for pdf in batches:
+                if not len(pdf):
+                    continue
+                A = np.stack(pdf["v"].to_numpy())
+                codes, _ = _nearest(A, books)
+                for j in range(m):
+                    n[j] += np.bincount(codes[:, j], minlength=k)
+                    np.add.at(s[j], codes[:, j], A[:, j * sub:(j + 1) * sub])
+            js, cs = np.nonzero(n)
+            if len(js):
+                yield pd.DataFrame({
+                    "sub": js.astype(np.int32), "c": cs.astype(np.int32),
+                    "n": n[js, cs], "s": list(s[js, cs]),
+                })
+
+        return fold
+
+    books = seeds.copy()
+    live = np.ones(m, dtype=bool)
+    n_iter = 0
+    base = base.persist()
+    try:
+        while n_iter < max_iter and live.any():
+            n_iter += 1
+            rows = (
+                base.mapInPandas(
+                    fold_kernel(books), f"sub int, c int, n long, s array<{dtype}>"
+                )
+                .groupBy("sub", "c")
+                .agg(F.expr("sum(n)").alias("n"), F.expr(sums).alias("s"))
+                .collect()
+            )
+            new = books.copy()
+            for r in rows:
+                s = np.array(r["s"], dtype=books.dtype)
+                new[r["sub"], r["c"]] = s // r["n"] if replay else s / r["n"]
+            if not replay:
+                shift = ((new - books) ** 2).sum(axis=2).max(axis=1)
+                new[~live] = books[~live]
+                live &= shift >= tol
+            books = new
+    finally:
+        base.unpersist(blocking=False)
+    return books, n_iter
 
 
 def _maximin_seeds(base, k):
@@ -136,12 +243,13 @@ def kmeans(
     ``(assignments, centers, n_iter)``: assignments is a DataFrame
     (id, cluster, dist2), centers a k x d numpy array.
 
-    Per iteration: ONE corpus scan -> blocked-BLAS argmin (Arrow batch,
-    no per-row Python) -> ONE partial-combined (cluster, dim) mean
-    aggregate -> k*d cells collected to the driver (kilobytes). Stops
-    early when max centroid shift^2 < ``tol``. Empty clusters keep
-    their previous center (the standard convention). Deterministic: no
-    RNG anywhere.
+    The fit is the m = 1 call of the Lloyd lane (``_lloyd``): per
+    iteration ONE corpus scan -> blocked-BLAS argmin and a per-partition
+    (cluster, n, sum v) fold in one Arrow kernel -> ONE (cluster)
+    aggregate -> at most k rows collected to the driver. Stops early
+    when max centroid shift^2 < ``tol``. Empty clusters keep their
+    previous center (the standard convention). Deterministic: no RNG
+    anywhere.
 
     ``init="maximin"`` (default) is deterministic farthest-point
     seeding — k-1 cheap extra scans that avoid the split-blob local
@@ -160,136 +268,31 @@ def kmeans(
     CTEs — the pagerank integer-determinism trick applied to Lloyd's.
     Returns dist2 as the exact integer distance (long), not a float.
 
-    Reference analog: none (corpus op); pyspark.ml.KMeans is the
-    JVM-estimator equivalent — this stays in the DataFrame/Arrow lane
-    so it composes with the rest of the pipeline and its plan is
-    auditable (`ivf_topk(centroids="kmeans")` uses the ml estimator;
-    this op IS the engine-native path).
+    Reference analog: none (corpus op). This is the package's one
+    k-means: it stays in the DataFrame/Arrow lane so it composes with
+    the rest of the pipeline and its plan is auditable, and
+    ``ivf_topk(centroids="kmeans")`` fits its cells with it.
     """
-    import numpy as np
-
-    vexpr = (
-        _int_units(F.col(vec_col), replay_scale)
-        if replay_scale
-        else _as_double(F.col(vec_col))
+    base = corpus.select(
+        F.col(id_col).alias("id"), _vec_units(F.col(vec_col), replay_scale).alias("v")
     )
-    base = corpus.select(F.col(id_col).alias("id"), vexpr.alias("v"))
-    # The Lloyd loop scans `base` once per iteration (plus seeding and
-    # the final assignment pass). Persist it so every pass after the
-    # first reads the materialized (id, v) pairs instead of re-running
-    # the parquet scan + unit conversion (guide §5: reuse justifies the
-    # cache; storage is id + one vector per row). Released before
-    # return — the final lazy assignment pass pays one recompute.
-    base = base.persist()
     if replay_scale:
-        cent = _seed_centroids(
+        seeds = _seed_centroids(
             corpus, k, id_col, vec_col, portable=True, scale=replay_scale
         )
     elif init == "maximin":
-        cent = _maximin_seeds(base, k)
+        seeds = _maximin_seeds(base, k)
     elif init == "hash":
-        cent = _seed_centroids(corpus, k, id_col, vec_col)
+        seeds = _seed_centroids(corpus, k, id_col, vec_col)
     else:
         raise ValueError(f"init must be 'maximin' or 'hash', got {init!r}")
-    n_iter = 0
-    for _ in range(max_iter):
-        n_iter += 1
-        if replay_scale:
-            # Integer-units mode: fold the per-cluster (count, sum)
-            # partials INSIDE the same BLAS pass that assigns clusters
-            # (guide §2.3 "aggregate before you shuffle" — here the
-            # posexplode + (c, dim) hash-aggregate exchange disappears
-            # entirely; each iteration is one scan -> k x d partials per
-            # Arrow batch -> in-cluster combine -> <=k-row collect).
-            # Exact: the vectors are
-            # int64 units, so partial-sum order cannot change a digit,
-            # and the distance/argmin math below is verbatim
-            # _assign_kernel. Float mode keeps the partial-aggregated
-            # exchange form, whose accumulation order the plan fixes.
-            cm = cent
-
-            def _partials(batches):
-                import pandas as pd
-
-                for pdf in batches:
-                    if len(pdf) == 0:
-                        continue
-                    A = np.stack(pdf["v"].to_numpy())
-                    d2 = (
-                        (A * A).sum(axis=1, keepdims=True)
-                        - 2.0 * (A @ cm.T)
-                        + (cm * cm).sum(axis=1)
-                    )
-                    idx = np.argmin(d2, axis=1)
-                    cs, ns, ss = [], [], []
-                    for c in np.unique(idx):
-                        m = idx == c
-                        cs.append(int(c))
-                        ns.append(int(m.sum()))
-                        ss.append(A[m].sum(axis=0).tolist())
-                    yield pd.DataFrame({"c": cs, "n": ns, "s": ss})
-
-            # Aggregate the per-batch partials IN-CLUSTER before the
-            # collect (guide §5: the driver must not be a data funnel).
-            # _partials yields up to k rows PER ARROW BATCH; at corpus
-            # scale that is millions of rows, and collecting them all
-            # for a single-threaded Python fold re-created the driver
-            # bottleneck the fused kernel removed. One element-wise
-            # sum groupBy("c") — with map-side partial aggregation —
-            # reduces them to EXACTLY one row per non-empty cluster, so
-            # the driver receives <= k rows per Lloyd iteration. Exact:
-            # the units are int64 (|x|*S ~ 5e5 per element), so the sum
-            # is order-independent and stays far inside long range up
-            # to ~1e12 corpus rows.
-            d = cent.shape[1]
-            parts = (
-                base.mapInPandas(_partials, "c int, n long, s array<long>")
-                .groupBy("c")
-                .agg(
-                    F.sum("n").alias("n"),
-                    F.array(
-                        *[F.sum(F.col("s")[j]) for j in range(d)]
-                    ).alias("s"),
-                )
-                .collect()
-            )
-            new_cent = cent.copy()
-            counts = np.zeros(k)
-            for r in parts:
-                c = r["c"]
-                n = int(r["n"])
-                counts[c] = n
-                sv = r["s"]
-                for j in range(d):
-                    # FLOORED integer mean — Python // floors exactly
-                    # like the oracle's floor(sum/n)
-                    new_cent[c, j] = int(sv[j]) // n
-        else:
-            assigned = base.withColumn("a", _assign_kernel(cent)(F.col("v")))
-            sums = (
-                assigned.select(
-                    F.col("a.cluster").alias("c"),
-                    F.posexplode(F.col("v")).alias("dim", "x"),
-                )
-                .groupBy("c", "dim")
-                .agg(F.sum("x").alias("s"), F.count("*").alias("n"))
-                .collect()
-            )
-            new_cent = cent.copy()
-            counts = np.zeros(k)
-            for r in sums:
-                new_cent[r["c"], r["dim"]] = r["s"] / r["n"]
-                counts[r["c"]] = r["n"]
-        shift = float(((new_cent - cent) ** 2).sum(axis=1).max())
-        cent = new_cent
-        if not replay_scale and shift < tol:
-            break
+    books, n_iter = _lloyd(base, seeds[None], max_iter, tol, bool(replay_scale))
+    cent = books[0]
     dist_out = (
         F.col("a.dist2").cast("long")
         if replay_scale
         else F.round(F.col("a.dist2"), 6)
     )
-    base.unpersist(blocking=False)
     assignments = base.withColumn("a", _assign_kernel(cent)(F.col("v"))).select(
         F.col("id").alias(id_col),
         F.col("a.cluster").alias("cluster"),
@@ -377,60 +380,40 @@ def pq_encode(
     m x ks x (d/m) numpy array.
 
     Compression: d floats -> m small ints (d=64, m=8, ks=16 is 256x).
-    The codebook fit runs ``m`` independent Lloyd's loops over SLICED
-    vectors (slice is a zero-copy column expr; each loop's shuffle
-    carries ks*(d/m) cells); encoding is ONE scan with m blocked-BLAS
-    argmins fused into a single Arrow kernel. At 100 TB the codes table
-    is what you keep hot for ANN — the float vectors page to cold
-    storage.
+    The codebook fit is ONE Lloyd lane call (``_lloyd``) for all ``m``
+    subspaces, so it scans the corpus ``max_iter`` times whatever ``m``
+    is; encoding is ONE scan with the m argmins in a single Arrow
+    kernel. At 100 TB the codes table is what you keep hot for ANN —
+    the float vectors page to cold storage.
 
+    Seeding is one hash sample of ``ks`` whole vectors, sliced into the
+    m subspaces: every subspace seeds from the SAME ids (the hash is on
+    id only) — a valid deterministic choice the oracle mirrors.
     ``replay_scale=S`` propagates kmeans' exact-replay fixed-point mode
-    to every subspace fit and to the encoder: codebooks, codes and
-    reconstruction errors become exact integers that an ANSI-SQL oracle
-    replays bit-identically (``recon_err2`` is then the exact integer
-    error, not a rounded float). The per-subspace seed sample hashes the
-    SAME ids for every subspace (hash is on id only) — a valid
-    deterministic choice the oracle mirrors.
+    to the fit and to the encoder: codebooks, codes and reconstruction
+    errors become exact integers that an ANSI-SQL oracle replays
+    bit-identically (``recon_err2`` is then the exact integer error,
+    not a rounded float).
     """
     import numpy as np
     import pandas as pd
 
-    first = corpus.select(F.size(_as_double(F.col(vec_col))).alias("d")).first()
-    d = int(first["d"])
+    seeds = _seed_centroids(
+        corpus, ks, id_col, vec_col, portable=bool(replay_scale), scale=replay_scale
+    )
+    d = seeds.shape[1]
     if d % m:
         raise ValueError(f"dim {d} not divisible by m={m} subspaces")
-    sub = d // m
-    books = []
-    for j in range(m):
-        sliced = corpus.select(
-            F.col(id_col),
-            F.slice(_as_double(F.col(vec_col)), j * sub + 1, sub).alias("sv"),
-        )
-        # hash init here: maximin's ks-1 extra scans x m subspaces would
-        # dominate the fit, and PQ averages away subspace init noise
-        _, cent, _ = kmeans(
-            sliced, k=ks, max_iter=max_iter, id_col=id_col, vec_col="sv",
-            init="hash", replay_scale=replay_scale,
-        )
-        books.append(cent)
-    books_arr = np.stack(books)  # m x ks x sub
+    base = corpus.select(
+        F.col(id_col).alias("id"), _vec_units(F.col(vec_col), replay_scale).alias("v")
+    )
+    books, _ = _lloyd(
+        base, np.stack(np.split(seeds, m, axis=1)), max_iter, 1e-4, bool(replay_scale)
+    )
 
     def enc(vs):
-        A = np.stack(vs.to_numpy())
-        codes = np.empty((len(A), m), dtype=np.int32)
-        err = np.zeros(len(A))
-        for j in range(m):
-            S = A[:, j * sub:(j + 1) * sub]
-            C = books_arr[j]
-            d2 = (
-                (S * S).sum(axis=1, keepdims=True)
-                - 2.0 * (S @ C.T)
-                + (C * C).sum(axis=1)
-            )
-            idx = np.argmin(d2, axis=1)
-            codes[:, j] = idx
-            err += d2[np.arange(len(idx)), idx]
-        return pd.DataFrame({"codes": list(codes), "recon_err2": np.maximum(err, 0.0)})
+        codes, d2 = _nearest(np.stack(vs.to_numpy()), books)
+        return pd.DataFrame({"codes": list(codes), "recon_err2": np.maximum(d2.sum(axis=1), 0.0)})
 
     # asNondeterministic: same §4.4 duplication as _assign_kernel — the
     # (codes, recon_err2) struct-field extraction re-planned the whole
@@ -442,23 +425,17 @@ def pq_encode(
     # other filter will push below it. Keep call sites
     # projection-shaped.
     enc_udf = F.pandas_udf(enc, "codes array<int>, recon_err2 double").asNondeterministic()
-    vexpr = (
-        _int_units(F.col(vec_col), replay_scale)
-        if replay_scale
-        else _as_double(F.col(vec_col))
-    )
     err_out = (
         F.col("e.recon_err2").cast("long")
         if replay_scale
         else F.round(F.col("e.recon_err2"), 6)
     )
-    base = corpus.select(F.col(id_col), vexpr.alias("v"))
     codes = base.withColumn("e", enc_udf(F.col("v"))).select(
-        F.col(id_col),
+        F.col("id").alias(id_col),
         F.col("e.codes").alias("codes"),
         err_out.alias("recon_err2"),
     )
-    return codes, books_arr
+    return codes, books
 
 
 def _opq_allocation(eigvals, m: int, sub: int) -> list[int]:
@@ -479,6 +456,45 @@ def _opq_allocation(eigvals, m: int, sub: int) -> list[int]:
         buckets[j].append(i)
         logs[j] += math.log(max(float(ev), 1e-30))
     return [i for b in buckets for i in b]
+
+
+def _opq_rotation(corpus, m, id_col, vec_col, scale):
+    """The OPQ-lite rotation ``opq_encode`` and ``ivfopq_topk`` share:
+    the PCA eigenbasis from ONE exact moment-sums pass
+    (``linalg.embed_pca``; the d x d eigen step is driver-side), its
+    dimensions permuted by ``_opq_allocation``. Returns
+    ``(rotation, perm, rotate)``; ``rotate(df)`` is (id_col, vec_col)
+    with vec_col the rotated doubles — ONE broadcast d x d matmul per
+    Arrow batch, not d folded Column dot-products. Applied UNCENTERED:
+    k-means/PQ reconstruction error and L2 distances are
+    translation-invariant, and queries take the same ``x @ R.T``."""
+    import numpy as np
+    import pandas as pd
+
+    from .linalg import embed_pca
+
+    d = int(corpus.select(F.size(F.col(vec_col)).alias("d")).first()["d"])
+    if d % m:
+        raise ValueError(f"dim {d} not divisible by m={m} subspaces")
+    _, comps, eigvals = embed_pca(
+        corpus, k=d, vec_col=vec_col, id_col=id_col, dim=d, scale=scale
+    )
+    perm = _opq_allocation(eigvals, m, d // m)
+    rotation = np.asarray(comps)[perm]  # permuted orthonormal d x d
+    rb = corpus.sparkSession.sparkContext.broadcast(rotation)
+
+    def rot(vs):
+        a = np.stack(vs.to_numpy())
+        return pd.Series(list(a @ rb.value.T))
+
+    rot_udf = F.pandas_udf(rot, "array<double>")
+
+    def rotate(df):
+        return df.select(
+            F.col(id_col), rot_udf(_as_double(F.col(vec_col))).alias(vec_col)
+        )
+
+    return rotation, perm, rotate
 
 
 def opq_encode(
@@ -504,54 +520,18 @@ def opq_encode(
     ``rotation`` the permuted k x d eigenbasis (apply to queries before
     ADC lookups), ``perm`` the dimension allocation.
 
-    Scale shape: the basis comes from ONE exact moment-sums pass
-    (``linalg.embed_pca``; d x d eigen is driver-side); the rotation is
-    ONE broadcast d x d matmul per Arrow batch (not d folded Column
-    dot-products — that expression tree re-evaluates inside every
-    k-means pass), and the rotated frame is PERSISTED because the PQ
-    fit scans it once per (subspace, iteration). Rotation is applied
-    UNCENTERED: k-means/PQ reconstruction error is translation-
-    invariant, and queries get the same ``x @ R.T`` transform. The
-    rotation is float (eigendecomposition), so there is no fixed-point
-    replay path — the contract is the reconstruction-error improvement
-    vs plain PQ, not a value oracle.
+    Scale shape: the rotation (``_opq_rotation``) runs inside the PQ
+    fit's base frame, which the Lloyd lane caches for the fit and
+    releases; the one encode scan recomputes it. The rotation is float
+    (eigendecomposition), so there is no fixed-point replay path — the
+    contract is the reconstruction-error improvement vs plain PQ, not a
+    value oracle.
     """
-    import numpy as np
-    import pandas as pd
-
-    from .linalg import embed_pca
-
-    first = corpus.select(F.size(_as_double(F.col(vec_col))).alias("d")).first()
-    d = int(first["d"])
-    if d % m:
-        raise ValueError(f"dim {d} not divisible by m={m} subspaces")
-    _, comps, eigvals = embed_pca(
-        corpus, k=d, vec_col=vec_col, id_col=id_col, dim=d, scale=scale
+    rotation, perm, rotate = _opq_rotation(corpus, m, id_col, vec_col, scale)
+    codes, books = pq_encode(
+        rotate(corpus), m=m, ks=ks, max_iter=max_iter, id_col=id_col,
+        vec_col=vec_col,
     )
-    perm = _opq_allocation(eigvals, m, d // m)
-    rotation = np.asarray(comps)[perm]  # permuted orthonormal d x d
-    rb = corpus.sparkSession.sparkContext.broadcast(rotation)
-
-    def rot(vs):
-        a = np.stack(vs.to_numpy())
-        return pd.Series(list(a @ rb.value.T))
-
-    rot_udf = F.pandas_udf(rot, "array<double>")
-    rotated = corpus.select(
-        F.col(id_col), rot_udf(_as_double(F.col(vec_col))).alias("rv")
-    ).persist()
-    try:
-        codes, books = pq_encode(
-            rotated, m=m, ks=ks, max_iter=max_iter, id_col=id_col,
-            vec_col="rv",
-        )
-    except Exception:
-        rotated.unpersist()
-        raise
-    # the returned `codes` still reads the cache for its one remaining
-    # encode scan; callers materialize then may unpersist via
-    # codes.sparkSession.catalog.clearCache() or let the context
-    # cleaner reclaim it.
     return codes, books, rotation, perm
 
 
@@ -668,11 +648,7 @@ def _adc_search(corpus, queries, books, qexpr, candidates, k, refine, id_col, ve
     m, ks, sub = books.shape
     luts = np.empty((len(qids), m, ks))
     for j in range(m):
-        C = books[j]
-        S = Q[:, j * sub:(j + 1) * sub]
-        luts[:, j, :] = (
-            (S * S).sum(axis=1, keepdims=True) - 2.0 * (S @ C.T) + (C * C).sum(axis=1)
-        )
+        luts[:, j, :] = _sq_l2(Q[:, j * sub:(j + 1) * sub], books[j])
     k_short = k * refine if rerank else k
     short = topk_per_group(
         candidates(qids, Q, luts, k_short), "query_id", "adc_dist2", k_short,
@@ -719,9 +695,10 @@ def ivfopq_topk(
 ) -> DataFrame:
     """IVFADC over OPQ-rotated vectors — the FAISS ``OPQ..,IVF..,PQ..``
     composition: rotate corpus AND queries by the eigenvalue-balanced
-    PCA basis (``_opq_allocation``; one moment-sums pass + one
-    broadcast matmul kernel per side), then run the standard
-    ``ivfpq_topk`` in rotated space. The rotation is orthonormal, so
+    PCA basis (``_opq_rotation``, shared with ``opq_encode``; one
+    moment-sums pass + one broadcast matmul kernel per side), then run
+    the standard ``ivfpq_topk`` in rotated space. The rotation is
+    orthonormal, so
     L2 distances — coarse routing, ADC scores, the exact re-rank — are
     all preserved; what improves is PQ quantization error on
     anisotropic embeddings (see ``opq_encode``), which tightens the
@@ -729,32 +706,7 @@ def ivfopq_topk(
     float, so there is no fixed-point replay path (recall contracts
     bound it instead).
     """
-    import numpy as np
-    import pandas as pd
-
-    from .linalg import embed_pca
-
-    first = corpus.select(F.size(_as_double(F.col(vec_col))).alias("d")).first()
-    d = int(first["d"])
-    if d % m:
-        raise ValueError(f"dim {d} not divisible by m={m} subspaces")
-    _, comps, eigvals = embed_pca(
-        corpus, k=d, vec_col=vec_col, id_col=id_col, dim=d, scale=scale
-    )
-    rotation = np.asarray(comps)[_opq_allocation(eigvals, m, d // m)]
-    rb = corpus.sparkSession.sparkContext.broadcast(rotation)
-
-    def rot(vs):
-        a = np.stack(vs.to_numpy())
-        return pd.Series(list(a @ rb.value.T))
-
-    rot_udf = F.pandas_udf(rot, "array<double>")
-
-    def rotate(df):
-        return df.select(
-            F.col(id_col), rot_udf(_as_double(F.col(vec_col))).alias(vec_col)
-        )
-
+    _, _, rotate = _opq_rotation(corpus, m, id_col, vec_col, scale)
     return ivfpq_topk(
         rotate(corpus), rotate(queries), k=k, n_cells=n_cells,
         nprobe=nprobe, m=m, ks=ks, max_iter=max_iter, refine=refine,
@@ -815,11 +767,7 @@ def ivfpq_topk(
         corpus, n_cells, id_col, vec_col,
         portable=bool(replay_scale), scale=replay_scale,
     )
-    vexpr = (
-        _int_units(F.col(vec_col), replay_scale)
-        if replay_scale
-        else _as_double(F.col(vec_col))
-    )
+    vexpr = _vec_units(F.col(vec_col), replay_scale)
     base = corpus.select(F.col(id_col).alias("id"), vexpr.alias("v"))
     routed = base.withColumn("a", _assign_kernel(cent)(F.col("v"))).select(
         "id", F.col("a.cluster").alias("cell")
@@ -829,10 +777,7 @@ def ivfpq_topk(
     def candidates(qids, Q, luts, _k_short):
         # probe list: nprobe nearest coarse cells per query (driver-side
         # — n_cells x d is kilobytes)
-        d2q = (
-            (Q * Q).sum(axis=1, keepdims=True) - 2.0 * (Q @ cent.T) + (cent * cent).sum(axis=1)
-        )
-        probe = np.argsort(d2q, axis=1, kind="stable")[:, :nprobe]
+        probe = np.argsort(_sq_l2(Q, cent), axis=1, kind="stable")[:, :nprobe]
         probe_rows = [
             (qid, int(c)) for qid, cells in zip(qids, probe) for c in cells
         ]

@@ -727,15 +727,6 @@ def dedup_clusters(
     )
 
 
-def _plan_size_bytes(df: DataFrame) -> int:
-    """Catalyst's optimizer estimate of the plan's output bytes — free
-    (no job; file sources report size from footers). -1 if unavailable."""
-    try:
-        return estimated_bytes(df)
-    except Exception:  # noqa: BLE001 — py4j / non-classic sessions
-        return -1
-
-
 #: corpora above this optimizer-estimated size route method="auto" to
 #: the bloom form (zero corpus-side exchange); below it the join form's
 #: simpler plan wins (no eager bloom-build jobs at operator-construction
@@ -759,11 +750,11 @@ def contamination(
     least ``min_overlap`` distinct word ``k``-grams with ANY heldout doc.
 
     ``method="auto"`` (default): picks ``"bloom"`` when Catalyst's free
-    size estimate of the corpus plan exceeds ``auto_bloom_bytes`` (or is
-    unavailable — at real scale, unknown means big), else ``"join"`` —
-    so the default plan never shuffles a 100 TB corpus's shingles, and
-    small/test corpora skip the bloom-build jobs. Both forms return
-    identical rows.
+    size estimate of the corpus plan exceeds ``auto_bloom_bytes``, else
+    ``"join"`` — so the default plan never shuffles a 100 TB corpus's
+    shingles, and small/test corpora skip the bloom-build jobs. A size
+    read that fails raises rather than picking a form. Both forms
+    return identical rows.
 
     ``method="join"``: the heldout shingle set is deduplicated to
     distinct 64-bit hashes and eagerly materialized (localCheckpoint —
@@ -811,8 +802,7 @@ def contamination(
     CCNet/Dolma taggers).
     """
     if method == "auto":
-        size = _plan_size_bytes(docs)
-        method = "bloom" if (size < 0 or size > auto_bloom_bytes) else "join"
+        method = "bloom" if estimated_bytes(docs) > auto_bloom_bytes else "join"
     if method == "bloom":
         return _contamination_bloom(docs, heldout, k, min_overlap, text_col, id_col, fpp)
     if method != "join":

@@ -15,8 +15,9 @@ Scale design:
   ~2^bits, then exact cosine + top-k within candidates. Multiple hash
   tables recover recall. All joins are equi-joins on (table, bucket) —
   shuffle-friendly, skew-safe.
-- ivf_topk: inverted-file variant — k-means-ish centroids sampled
-  deterministically, every vector assigned to its nearest centroid
+- ivf_topk: inverted-file variant — centroids sampled
+  deterministically (or fitted by cluster.kmeans), every vector
+  assigned to its nearest centroid
   (broadcast argmin), queries probe the nprobe nearest cells. The
   persisted index (ivf_index_topk) runs the same probe and rank steps
   (_ivf_probe, _ivf_rank) over its partition-pruned cells.
@@ -250,34 +251,16 @@ def _ivf_centroids(corpus, n_cells, id_col, vec_col, centroids):
     three seeding modes). Returns an n_cells x d float64 matrix."""
     import numpy as np
 
+    from .cluster import _seed_centroids, kmeans
+
     if centroids == "kmeans":
-        from pyspark.ml.clustering import KMeans
-        from pyspark.ml.functions import array_to_vector
-
-        feats = corpus.select(array_to_vector(_as_double(F.col(vec_col))).alias("features"))
-        model = KMeans(
-            k=n_cells, initMode="k-means||", maxIter=5, seed=7, featuresCol="features"
-        ).fit(feats)
-        cent_mat = np.stack([np.asarray(c) for c in model.clusterCenters()])
-    elif centroids in ("hash", "portable"):
-        if centroids == "portable":
-            from .cluster import _portable31
-
-            h = _portable31(F.col(id_col))
-        else:
-            h = F.xxhash64(F.col(id_col))
-        cent_rows = (
-            corpus.select(
-                _as_double(F.col(vec_col)).alias("cv"),
-                h.alias("__h"),
-                F.col(id_col).alias("__id"),
-            )
-            .orderBy("__h", "__id")
-            .limit(n_cells)
-            .select("cv")
-            .collect()  # tiny: n_cells rows
+        _, cent_mat, _ = kmeans(
+            corpus, k=n_cells, max_iter=5, id_col=id_col, vec_col=vec_col, init="hash"
         )
-        cent_mat = np.stack([np.array(r["cv"]) for r in cent_rows])
+    elif centroids in ("hash", "portable"):
+        cent_mat = _seed_centroids(
+            corpus, n_cells, id_col, vec_col, portable=centroids == "portable"
+        )
     else:
         raise ValueError(
             f"centroids must be 'hash', 'portable' or 'kmeans', got {centroids!r}"
@@ -462,10 +445,10 @@ def ivf_topk(
     smallest xxhash64(id). That is a distributed TakeOrderedAndProject
     (per-partition top-k, merged on the driver) — no global window, no
     count(), no full-corpus single task (round-1 VERDICT fix #4), and
-    reproducible for oracle checks. ``centroids="kmeans"`` fits real
-    cluster centers with pyspark.ml KMeans (k-means|| init — the
-    distributed seeding of Bahmani et al.), giving balanced cells on
-    clustered corpora at the cost of a few corpus passes; only the
+    reproducible for oracle checks. ``centroids="kmeans"`` refines that
+    hash sample with five iterations of the package's one k-means
+    (``cluster.kmeans``, the Lloyd lane), giving balanced cells on
+    clustered corpora at the cost of five corpus passes; only the
     seeding differs — the assignment plumbing (broadcast argmin matmul,
     cell equi-join) is identical. ``centroids="portable"`` is the
     hash sample with the Knuth multiplicative hash

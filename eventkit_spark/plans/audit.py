@@ -68,8 +68,13 @@ def _tree(node) -> list:
 def _walk(df: DataFrame, phase: str) -> list:
     """``(class, node)`` for every node of ``df``'s plan in ``phase``,
     parent before children."""
+    return _walk_from(getattr(_qe(df), _PHASES[phase])(), phase)
+
+
+def _walk_from(root, phase: str) -> list:
+    """``(class, node)`` for ``root`` and every node below it."""
     inner = _INNER if phase == "physical" else {}
-    out, stack = [], [getattr(_qe(df), _PHASES[phase])()]
+    out, stack = [], [root]
     while stack:
         node = stack.pop()
         cls = node_class(node)
@@ -172,6 +177,33 @@ def has_pandas_kernel(df: DataFrame) -> bool:
     """True when the analyzed plan runs a pandas state kernel or a
     ``mapInPandas``, whose cost is per key group in Python."""
     return any(cls in _PANDAS_KERNELS for cls, _ in _walk(df, "analyzed"))
+
+
+def repeated_python_udfs(df: DataFrame) -> list:
+    """Names of the Python UDF calls the physical plan evaluates twice
+    in one lineage: a call (one result id) in a Python eval node and
+    again in an eval node below it. Catalyst can copy a pure kernel
+    into every projection that reads one of its struct fields, or below
+    a filter it pushes down, and each copy runs; ``asNondeterministic``
+    pins it to one evaluation. Copies in sibling branches are not
+    counted: they are one subtree read by two branches, and whether it
+    runs twice is decided by exchange reuse, not by a copied kernel."""
+
+    def calls(node):
+        return {
+            x.resultId().id(): x.name()
+            for e in _seq(node.expressions()) for x in _tree(e)
+            if node_class(x) == "PythonUDF"
+        }
+
+    found = set()
+    for cls, n in _walk(df, "physical"):
+        if cls in _PYTHON_EVALS:
+            mine = calls(n)
+            for below_cls, below in _walk_from(n, "physical")[1:]:
+                if below_cls in _PYTHON_EVALS:
+                    found |= {mine[i] for i in mine.keys() & calls(below).keys()}
+    return sorted(found)
 
 
 def semantic_hash(df: DataFrame) -> int:

@@ -450,3 +450,41 @@ def test_kmeans_replay_partials_incluster_aggregate(spark):
         spark.conf.set(key, prev)
     assert (c_small == c_big).all()
     assert r_small == r_big and len(r_small) == 60
+
+
+def test_codebook_fits_release_their_cache(spark):
+    """The Lloyd lane caches its base frame for the fit and releases it:
+    collecting kmeans, pq_encode and opq_encode outputs leaves no
+    persisted RDD behind (opq_encode used to keep its rotated frame)."""
+    from eventkit_spark.llm.cluster import kmeans, opq_encode, pq_encode
+    from eventkit_spark.sources.tables import load_table
+
+    emb = load_table(spark, SF, "embeddings")
+    before = len(spark.sparkContext._jsc.getPersistentRDDs())
+    kmeans(emb, k=4, max_iter=2)[0].collect()
+    pq_encode(emb, m=8, ks=4, max_iter=2)[0].collect()
+    opq_encode(emb, m=8, ks=4, max_iter=2)[0].collect()
+    assert len(spark.sparkContext._jsc.getPersistentRDDs()) == before
+
+
+def test_pq_fit_jobs_do_not_grow_with_m(spark):
+    """One Lloyd lane fits every PQ subspace: a pq_encode fit with m = 8
+    runs as many Spark jobs as with m = 1 (counted by job group), where
+    m sequential fits ran m times the corpus passes."""
+    from eventkit_spark.llm.cluster import pq_encode
+    from eventkit_spark.sources.tables import load_table
+
+    emb = load_table(spark, SF, "embeddings")
+    sc = spark.sparkContext
+
+    def fit_jobs(m):
+        group = f"pq-fit-m{m}"
+        sc.setJobGroup(group, group, False)
+        try:
+            pq_encode(emb, m=m, ks=4, max_iter=2, replay_scale=1_000_000)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    assert fit_jobs(8) == fit_jobs(1) > 0

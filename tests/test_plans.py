@@ -175,12 +175,11 @@ SHUFFLE_CEILING = {
     # tf agg + df agg + idf join + norm window (id exchange) + posting
     # agg + pair agg — the jaccard posting-list shape over weights
     "tfidf_cosine": 7,
-    # plan-time lineage: the persisted (id,bucket,c) aggregate appears
-    # under BOTH the weight-table and scoring sides (and tgt_f under the
-    # broadcast), so tokenize chains are COUNTED thrice; at runtime each
-    # side's text is scanned once and the broadcast weight table is
-    # buckets-sized
-    "dsir": 10,
+    # five hash shuffles as the node-class walker reads them (the
+    # cached plan under each scan of the persisted (id,bucket,c)
+    # aggregate is walked once); at runtime each side's text is scanned
+    # once and the broadcast weight table is buckets-sized
+    "dsir": 5,
     "char_entropy": 0,  # Arrow kernel + codegen ratios, pure scan
     "containment": 7,  # shared _pair_counts core — same shape as jaccard
     "rfm": 3,  # key agg + 1-row corpus-max agg, no window
@@ -222,11 +221,9 @@ SHUFFLE_CEILING = {
     # broadcast; the vocab branch is persisted so its plan-time lineage
     # (counted here) runs once at runtime
     "unigram_logprob": 7,
-    # flagged-residue agg + heldout distinct + heldout broadcast; +1
-    # plan-text exchange since the heldout pipeline is PERSISTED (the
-    # cached plan's one-time materialization prints alongside the cache
-    # read — at runtime the distinct runs once, not twice)
-    "decontaminate_bloom": 4,
+    # flagged-residue agg + the heldout distinct, which is PERSISTED
+    # and read through a broadcast (its cached plan is walked once)
+    "decontaminate_bloom": 2,
     # slice-count agg (+tiny-table window) + data shuffle on slice + broadcast
     "train_order": 4,
     # plan-time lineage: the persisted doc-score table appears on both
@@ -759,6 +756,48 @@ def test_contamination_auto_routes_by_corpus_size(spark):
                           auto_bloom_bytes=1 << 60)
     c = node_counts(small)
     assert not c["ArrowEvalPythonExec"] + c["BatchEvalPythonExec"]
+
+
+def test_contamination_auto_raises_on_unreadable_plan(spark, monkeypatch):
+    """method='auto' reads Catalyst's size estimate to pick a form; a
+    plan it cannot read raises instead of routing to bloom as if the
+    corpus were big."""
+    from eventkit_spark.llm.dedup import contamination
+    from eventkit_spark.plans import audit
+    from eventkit_spark.sources.tables import load_table
+
+    docs = load_table(spark, SF, "documents")
+    train = docs.filter(F.col("doc_id") % 5 != 0)
+    held = docs.filter(F.col("doc_id") % 5 == 0)
+
+    def unreadable(df):
+        raise RuntimeError("plan unreadable")
+
+    monkeypatch.setattr(audit, "_qe", unreadable)
+    with pytest.raises(RuntimeError, match="unreadable"):
+        contamination(train, held, method="auto")
+
+
+def test_registry_kernels_evaluate_once(spark):
+    """No batch registry query's physical plan evaluates a Python UDF
+    call twice in one lineage (plans/audit.repeated_python_udfs). Holds
+    the asNondeterministic pins of the Arrow kernels, and fails a new
+    unpinned kernel that Catalyst copies into several projections."""
+    import __spark_entry__ as e
+    from concurrent.futures import ThreadPoolExecutor
+
+    from eventkit_spark.plans.audit import repeated_python_udfs
+
+    qs = e.queries()
+
+    def check(name):
+        return name, repeated_python_udfs(qs[name](spark, SF))
+
+    names = [n for n in qs if "_stream" not in n]
+    # plan construction is driver/JVM work; see test_headline_shuffle_ceilings
+    with ThreadPoolExecutor(max_workers=8) as ex:
+        repeats = {n: r for n, r in ex.map(check, names) if r}
+    assert not repeats, f"Python UDF calls evaluated twice: {repeats}"
 
 
 def test_profile_table_single_pass(spark):
