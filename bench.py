@@ -13,6 +13,9 @@ MIN so real plan regressions separate from noise, and ``queries_cold`` /
 
 from __future__ import annotations
 
+import ast
+import importlib
+import inspect
 import json
 import os
 import sys
@@ -33,51 +36,56 @@ _FIT_EXCLUDED = frozenset({"opq_gain", "pq_topk", "ivfpq"})
 HEADLINE = [n for n in queries() if n not in _FIT_EXCLUDED]
 
 
-def _family(name: str) -> str:
-    """Deterministic family assignment for the compact subtotals line.
-    Buckets only need to be stable across rounds so the driver can
-    localize a regression from the bounded stdout tail."""
-    if "_stream" in name:
-        return "streaming"
-    if name.startswith("tpch_"):
-        return "tpch"
-    if (
-        "dedup" in name
-        or "decontaminate" in name
-        or name in {
-            "containment", "winnow", "winnow_overlap", "pagerank",
-            "central_dedup", "triangles", "novelty",
-            "sorted_neighborhood", "corpus_diff", "contamination_report",
-        }
-    ):
-        return "dedup"
-    if (
-        name.startswith(("embed_", "pq_", "sq_", "ivf", "kmeans", "mm_"))
-        or name in {
-            "cluster_topics", "coreset_sample", "opq_gain",
-            "hard_negatives", "approx_agg", "webdataset",
-        }
-    ):
-        return "ann_mm"
-    if (
-        name.startswith(("bpe_", "unigram_", "text_", "token_"))
-        or name in {
-            "bm25", "bm25_search", "hybrid_rrf", "tfidf", "tfidf_cosine",
-            "char_entropy", "lexical_diversity", "collocations",
-            "bigram_logprob", "stupid_backoff", "ngram_lm_store",
-            "normalize_text", "keyword_hits", "phrase_hits",
-            "phrase_search", "top_ngrams", "sliding_chunks",
-            "line_dedup", "redact_pii", "repetition", "gopher_rules",
-            "c4_filters", "quality_classifier", "url_canonicalize",
-            "cms_counts", "hll_card", "hll_by_key", "dsir",
-            "pipeline_corpus", "pipeline_moderation",
-            "blocklist_verdicts", "corpus_report", "pack_sequences",
-            "pack_spans", "train_order", "ccnet_buckets",
-            "temperature_mix", "upsample_mix", "source_quota",
-        }
-    ):
-        return "text"
-    return "rest"
+def _families(entry) -> dict[str, str]:
+    """Family of every registry query, for the compact subtotals line:
+    the ``eventkit_spark`` module its operator comes from — the last
+    one, in source order, that the query function imports from or
+    names, following the entry-module helpers it calls. The loaders of
+    ``sources.tables`` count as the module of the frame class they
+    return (``load_events`` -> ``frame``), or not at all when that is
+    a plain DataFrame, so a query that only reads tables and runs
+    Spark SQL is ``sql``."""
+
+    def module_of(module, name):
+        if module != "eventkit_spark.sources.tables":
+            return module
+        obj = getattr(importlib.import_module(module), name)
+        ret = getattr(obj, "__annotations__", {}).get("return")
+        cls = getattr(sys.modules[obj.__module__], str(ret), None)
+        return getattr(cls, "__module__", None) if isinstance(cls, type) else None
+
+    def imported(node):
+        if not (node.module or "").startswith("eventkit_spark."):
+            return {}
+        return {a.asname or a.name: module_of(node.module, a.name) for a in node.names}
+
+    tree = ast.parse(inspect.getsource(entry))
+    defs = {n.name: n for n in tree.body if isinstance(n, ast.FunctionDef)}
+    bound = {}
+    for n in tree.body:
+        if isinstance(n, ast.ImportFrom):
+            bound.update(imported(n))
+
+    def modules(name, seen):
+        if name in seen:
+            return []
+        seen.add(name)
+        out = []
+        nodes = [n for n in ast.walk(defs[name]) if hasattr(n, "lineno")]
+        for node in sorted(nodes, key=lambda n: (n.lineno, n.col_offset)):
+            if isinstance(node, ast.ImportFrom):
+                out += imported(node).values()
+            elif isinstance(node, ast.Name) and node.id in bound:
+                out.append(bound[node.id])
+            elif isinstance(node, ast.Name) and node.id in defs:
+                out += modules(node.id, seen)
+        return [m for m in out if m and m.startswith("eventkit_spark.")]
+
+    fams = {}
+    for name, fn in entry.queries().items():
+        mods = modules(fn.__name__, set())
+        fams[name] = mods[-1].removeprefix("eventkit_spark.") if mods else "sql"
+    return fams
 
 
 def main():
@@ -230,11 +238,12 @@ def main():
     # line so the driver's bounded stdout tail always carries enough to
     # LOCALIZE a regression even when the full per-query JSON line is
     # truncated away (PERF_r11 had per_query: {} for exactly that
-    # reason). Families are assigned by name, deterministically.
+    # reason). Families come from the implementing module (_families).
+    family = _families(entrymod)
     fam_tot: dict[str, float] = {}
     fam_n: dict[str, int] = {}
     for n in ok:
-        f = _family(n)
+        f = family[n]
         fam_tot[f] = round(fam_tot.get(f, 0.0) + best[n], 3)
         fam_n[f] = fam_n.get(f, 0) + 1
     fams = {

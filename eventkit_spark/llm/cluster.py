@@ -458,18 +458,29 @@ def _opq_allocation(eigvals, m: int, sub: int) -> list[int]:
     return [i for b in buckets for i in b]
 
 
+def _matmul_kernel(rotation):
+    """``x @ rotation.T`` per Arrow batch, the matrix shipped by value
+    in the closure: no broadcast variable outlives the query."""
+    import numpy as np
+    import pandas as pd
+
+    def rot(vs):
+        return pd.Series(list(np.stack(vs.to_numpy()) @ rotation.T))
+
+    return F.pandas_udf(rot, "array<double>")
+
+
 def _opq_rotation(corpus, m, id_col, vec_col, scale):
     """The OPQ-lite rotation ``opq_encode`` and ``ivfopq_topk`` share:
     the PCA eigenbasis from ONE exact moment-sums pass
     (``linalg.embed_pca``; the d x d eigen step is driver-side), its
     dimensions permuted by ``_opq_allocation``. Returns
     ``(rotation, perm, rotate)``; ``rotate(df)`` is (id_col, vec_col)
-    with vec_col the rotated doubles — ONE broadcast d x d matmul per
-    Arrow batch, not d folded Column dot-products. Applied UNCENTERED:
-    k-means/PQ reconstruction error and L2 distances are
+    with vec_col the rotated doubles — ONE d x d matmul per Arrow batch
+    (``_matmul_kernel``), not d folded Column dot-products. Applied
+    UNCENTERED: k-means/PQ reconstruction error and L2 distances are
     translation-invariant, and queries take the same ``x @ R.T``."""
     import numpy as np
-    import pandas as pd
 
     from .linalg import embed_pca
 
@@ -481,13 +492,7 @@ def _opq_rotation(corpus, m, id_col, vec_col, scale):
     )
     perm = _opq_allocation(eigvals, m, d // m)
     rotation = np.asarray(comps)[perm]  # permuted orthonormal d x d
-    rb = corpus.sparkSession.sparkContext.broadcast(rotation)
-
-    def rot(vs):
-        a = np.stack(vs.to_numpy())
-        return pd.Series(list(a @ rb.value.T))
-
-    rot_udf = F.pandas_udf(rot, "array<double>")
+    rot_udf = _matmul_kernel(rotation)
 
     def rotate(df):
         return df.select(

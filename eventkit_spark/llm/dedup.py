@@ -945,20 +945,17 @@ def _contamination_bloom(docs, heldout, k, min_overlap, text_col, id_col, fpp):
     return _bloom_probe(docs, bloom, held, k, min_overlap, text_col, id_col)
 
 
-def _bloom_probe(docs, bloom_tuple, held_df, k, min_overlap, text_col, id_col):
-    """Shared probe kernel: broadcast-bloom map-side prune of the corpus
-    (zero exchanges on the corpus branch), then exact verify of the
-    flagged residue against the distributed heldout hash frame. Used by
-    the in-memory bloom path and the persisted contamination store."""
+def _bloom_hits_kernel(bloom_tuple):
+    """Per-doc count of shingle hashes the bloom filter holds, the
+    filter shipped by value in the closure: no broadcast variable
+    outlives the query (PySpark broadcasts a command over 1 MB itself,
+    tied to the UDF)."""
     import pandas as pd
-
-    spark = docs.sparkSession
-    bloom = spark.sparkContext.broadcast(bloom_tuple)
 
     def _bloom_hits(arrs):
         import numpy as np
 
-        words, m_bits, n_probes = bloom.value
+        words, m_bits, n_probes = bloom_tuple
         lens = arrs.map(lambda a: 0 if a is None else len(a)).to_numpy(dtype="int64")
         if lens.sum() == 0:
             return pd.Series(np.zeros(len(arrs), dtype="int32"))
@@ -979,7 +976,15 @@ def _bloom_probe(docs, bloom_tuple, held_df, k, min_overlap, text_col, id_col):
         per_doc[lens == 0] = 0  # reduceat repeats a neighbor segment for empty ones
         return pd.Series(per_doc.astype("int32"))
 
-    bloom_hits = F.pandas_udf(_bloom_hits, "int")
+    return F.pandas_udf(_bloom_hits, "int")
+
+
+def _bloom_probe(docs, bloom_tuple, held_df, k, min_overlap, text_col, id_col):
+    """Shared probe kernel: broadcast-bloom map-side prune of the corpus
+    (zero exchanges on the corpus branch), then exact verify of the
+    flagged residue against the distributed heldout hash frame. Used by
+    the in-memory bloom path and the persisted contamination store."""
+    bloom_hits = _bloom_hits_kernel(bloom_tuple)
 
     # Distinct shingle hashes per doc, in place (no explode, no exchange).
     hashes = F.filter(

@@ -18,13 +18,18 @@ Scale design (the part that matters at 100 TB):
   iteration is one partial-combined pair-count aggregate + a 1-row
   TakeOrdered (the ``cluster.kmeans`` collect-per-iteration
   discipline). Both paths learn identical rulesets (parity-tested).
+- One fit lane, ``_fit``, owns every cache: callers get the merges and
+  a frame derived from the final type table, and never persist,
+  checkpoint or unpersist. The char and byte families differ only in
+  their seed spec (``_seed_spec``).
 - Merge application is a pure ``aggregate()`` fold over each word's
   in-row symbol array — no explode, no shuffle, no Python. The fold
   implements the exact greedy left-to-right non-overlapping merge
   of the classic implementation.
-- Encoding a corpus re-uses the type table: encode each distinct
-  word once, then join back to the (doc, word) stream — the join is
-  the only exchange and its build side is vocabulary-sized.
+- Every corpus encode (BPE and ``llm/unigram.py``) runs through one
+  word-type lane, ``_encode_types``: encode each distinct word once,
+  then join back to the (doc, word) stream — the join is the only
+  corpus-width exchange and its build side is vocabulary-sized.
 
 Everything is integer counts + lexicographic tie-breaks, so a DuckDB
 oracle replays the whole training loop as chained CTEs bit-identically
@@ -54,17 +59,20 @@ __all__ = [
     "bytes_to_unicode",
 ]
 
+_MERGES_SCHEMA = "rank int, lhs string, rhs string, pair_count long"
+
+
+def _pretokens(text_col: str) -> Column:
+    """Every ``BPE_REGEX`` pretoken of the text, in order."""
+    return F.regexp_extract_all(F.col(text_col), F.lit(BPE_REGEX), 0)
+
 
 def pretoken_counts(
     docs: DataFrame, text_col: str = "text", min_freq: int = 1
 ) -> DataFrame:
     """``(word, freq)`` word-type table: the single corpus-wide scan
     BPE training needs. One hash aggregate, map-side combined."""
-    w = docs.select(
-        F.explode(
-            F.regexp_extract_all(F.col(text_col), F.lit(BPE_REGEX), 0)
-        ).alias("word")
-    )
+    w = docs.select(F.explode(_pretokens(text_col)).alias("word"))
     out = w.groupBy("word").agg(F.count("*").alias("freq"))
     if min_freq > 1:
         out = out.filter(F.col("freq") >= min_freq)
@@ -72,8 +80,13 @@ def pretoken_counts(
 
 
 def _chars(word: Column) -> Column:
-    """Seed symbol array: one single-character string per position."""
-    return F.filter(F.split(word, "(?!^)"), lambda c: c != "")
+    """Seed symbol array: one code point per position, as ``list(word)``
+    (a regex split cuts a surrogate pair in two; ``substr`` does not)."""
+    syms = F.transform(
+        F.sequence(F.lit(1), F.length(word)),
+        lambda i: F.substr(word, i, F.lit(1)),
+    )
+    return F.filter(syms, lambda c: c != "")
 
 
 def bytes_to_unicode() -> list[str]:
@@ -126,6 +139,18 @@ def _byte_syms_py(word: str, eow: str | None) -> list[str]:
     if eow:
         syms.append(eow)
     return syms
+
+
+def _seed_spec(byte_level: bool, eow: str | None):
+    """``(seed_expr, seed_py)``: a word's pre-merge symbols as a Column
+    and as a Python list — characters, or with ``byte_level`` the
+    mapped UTF-8 bytes plus the optional ``eow`` marker (which only
+    byte seeds carry: ``eow`` without ``byte_level`` raises)."""
+    if not byte_level:
+        if eow:
+            raise ValueError(f"eow={eow!r} needs byte_level=True")
+        return _chars, list
+    return lambda w: _byte_syms(w, eow), lambda w: _byte_syms_py(w, eow)
 
 
 def _adjacent_pairs(syms: Column) -> Column:
@@ -193,19 +218,21 @@ def _py_merge(syms: list[str], left: str, right: str) -> list[str]:
 
 
 def _fit_local(
-    rows: list, n_merges: int, seed_py=None
+    rows: list, n_merges: int, seed_py
 ) -> tuple[list[tuple[int, str, str, int]], list]:
     """Merge loop over a collected word-type table — the standard
     practice (distributed count, single-node merges) when the
     vocabulary fits; identical merges/byproducts to the distributed
-    loop (same counts, same tie-break). ``seed_py`` maps a word to its
-    seed symbol list (default: one character per position)."""
-    seed_py = seed_py or list
-    words = [(r["word"], int(r["freq"]), seed_py(r["word"])) for r in rows]
+    loop (same counts, same tie-break). Returns the merges and the
+    final ``(word, freq, n_seed, syms)`` rows."""
+    words = []
+    for r in rows:
+        s = seed_py(r["word"])
+        words.append((r["word"], int(r["freq"]), len(s), s))
     merges: list[tuple[int, str, str, int]] = []
     for rank in range(1, n_merges + 1):
         pc: dict[tuple[str, str], int] = {}
-        for _, f, s in words:
+        for _, f, _, s in words:
             for a, b in zip(s, s[1:]):
                 k = (a, b)
                 pc[k] = pc.get(k, 0) + f
@@ -216,8 +243,8 @@ def _fit_local(
         )
         merges.append((rank, left, right, cnt))
         words = [
-            (w, f, _py_merge(s, left, right) if left in s else s)
-            for w, f, s in words
+            (w, f, n, _py_merge(s, left, right) if left in s else s)
+            for w, f, n, s in words
         ]
     return merges, words
 
@@ -227,12 +254,14 @@ def _fit(
     n_merges: int,
     text_col: str,
     min_freq: int,
-    driver_types_max: int = 200_000,
-    seed_expr=None,
-    seed_py=None,
-) -> tuple[list[tuple[int, str, str, int]], DataFrame]:
-    """Run the merge loop. Returns (merges, final word-type frame with
-    the encoded ``syms`` arrays — persisted; caller unpersists).
+    driver_types_max: int,
+    spec,
+    finish=None,
+) -> tuple[list[tuple[int, str, str, int]], DataFrame | None]:
+    """The fit lane: run the merge loop under the seed ``spec``; return
+    the merges and ``finish(types)`` (None without ``finish``) over the
+    final type table ``(word, freq, n_seed, syms)``, ``n_seed`` being
+    the pre-merge symbol count.
 
     Scale dispatch: the corpus-wide pretokenize+count pass is always
     distributed; the merge LOOP runs driver-side when the word-type
@@ -241,59 +270,78 @@ def _fit(
     ~2*n_merges scheduled jobs), and falls back to the fully
     distributed fold loop above it. Both paths produce identical
     merges (same integer counts, same lexicographic tie-break) — a
-    parity test pins them."""
+    parity test pins them.
+
+    The lane owns every cache. On the driver path the type table is a
+    local relation, so the derived frame comes back lazy: no job runs,
+    nothing is cached. On the distributed path each loop frame stays
+    persisted until the next is materialized, the derived frame is cut
+    by the one eager ``localCheckpoint`` while the final frame is
+    cached (so it never replays the merge lineage), and a ``finally``
+    releases every loop frame."""
     if n_merges < 1:
         raise ValueError(f"need n_merges >= 1, got {n_merges}")
-    seed_expr = seed_expr or _chars
+    seed_expr, seed_py = spec
     counts = pretoken_counts(docs, text_col, min_freq)
     if driver_types_max > 0:
         head = counts.limit(driver_types_max + 1).collect()
         if len(head) <= driver_types_max:
             merges, final = _fit_local(head, n_merges, seed_py)
-            spark = docs.sparkSession
-            wf = local_frame(
-                spark, final,
-                "word string, freq long, syms array<string>",
+            if finish is None:
+                return merges, None
+            types = local_frame(
+                docs.sparkSession, final,
+                "word string, freq long, n_seed int, syms array<string>",
             )
-            return merges, wf
-    words = counts.select(
+            return merges, finish(types)
+    cur = counts.select(
         "word", "freq", seed_expr(F.col("word")).alias("syms")
-    )
-    cur = words.persist()
-    release: DataFrame | None = None
-    merges: list[tuple[int, str, str, int]] = []
-    for rank in range(1, n_merges + 1):
-        best = (
-            cur.select(
-                F.col("freq"),
-                F.explode(_adjacent_pairs(F.col("syms"))).alias("p"),
+    ).select("word", "freq", F.size("syms").alias("n_seed"), "syms")
+    held = [cur.persist()]
+    merges = []
+    try:
+        for rank in range(1, n_merges + 1):
+            best = (
+                cur.select(
+                    F.col("freq"),
+                    F.explode(_adjacent_pairs(F.col("syms"))).alias("p"),
+                )
+                .groupBy(
+                    F.col("p.lhs").alias("lhs"), F.col("p.rhs").alias("rhs")
+                )
+                .agg(F.sum("freq").alias("pair_count"))
+                .orderBy(F.col("pair_count").desc(), "lhs", "rhs")
+                .limit(1)
+                .collect()
             )
-            .groupBy(
-                F.col("p.lhs").alias("lhs"), F.col("p.rhs").alias("rhs")
+            # the job above materialized `cur`; the frames before it
+            # are dead
+            for dead in held[:-1]:
+                dead.unpersist()
+            del held[:-1]
+            if not best:
+                break  # degenerate corpus: every word is a single symbol
+            row = best[0]
+            merges.append(
+                (rank, row["lhs"], row["rhs"], int(row["pair_count"]))
             )
-            .agg(F.sum("freq").alias("pair_count"))
-            .orderBy(F.col("pair_count").desc(), "lhs", "rhs")
-            .limit(1)
-            .collect()
+            cur = cur.withColumn(
+                "syms", _merge_pair(F.col("syms"), row["lhs"], row["rhs"])
+            ).persist()
+            held.append(cur)
+        derived = (
+            None if finish is None
+            else finish(cur).localCheckpoint(eager=True)
         )
-        # the job above materialized `cur`; its parent is now dead
-        if release is not None:
-            release.unpersist()
-        if not best:
-            break  # degenerate corpus: every word is a single symbol
-        row = best[0]
-        merges.append((rank, row["lhs"], row["rhs"], int(row["pair_count"])))
-        nxt = cur.withColumn(
-            "syms", _merge_pair(F.col("syms"), row["lhs"], row["rhs"])
-        ).persist()
-        release, cur = cur, nxt
-    # release the second-to-last cached frame too — without this every
-    # distributed training call leaked one cached word-type DataFrame
-    # for the session's lifetime. The returned `cur` recomputes its one
-    # narrow withColumn from `words` if touched before caching kicks in.
-    if release is not None and release is not cur:
-        release.unpersist()
-    return merges, cur
+    finally:
+        for frame in held:
+            frame.unpersist()
+    return merges, derived
+
+
+def _train(docs, n_merges, text_col, min_freq, driver_types_max, spec):
+    merges, _ = _fit(docs, n_merges, text_col, min_freq, driver_types_max, spec)
+    return local_frame(docs.sparkSession, merges, _MERGES_SCHEMA)
 
 
 def bpe_train(
@@ -310,40 +358,10 @@ def bpe_train(
     (count DESC, lhs ASC, rhs ASC) tie-break, so the same corpus
     always yields the same ruleset in any engine.
     """
-    merges, wf = _fit(docs, n_merges, text_col, min_freq, driver_types_max)
-    wf.unpersist()
-    spark = docs.sparkSession
-    return local_frame(
-        spark, merges, "rank int, lhs string, rhs string, pair_count long"
+    return _train(
+        docs, n_merges, text_col, min_freq, driver_types_max,
+        _seed_spec(False, None),
     )
-
-
-def bpe_token_freq(
-    docs: DataFrame,
-    n_merges: int = 8,
-    text_col: str = "text",
-    min_freq: int = 1,
-    top: int | None = None,
-    driver_types_max: int = 200_000,
-) -> DataFrame:
-    """Corpus token frequencies after applying the learned merges:
-    ``(token, freq)``, optionally the top-k by (freq DESC, token) —
-    the vocabulary a trained tokenizer would ship."""
-    merges, wf = _fit(docs, n_merges, text_col, min_freq, driver_types_max)
-    out = (
-        wf.select(F.explode("syms").alias("token"), "freq")
-        .groupBy("token")
-        .agg(F.sum("freq").alias("freq"))
-    )
-    if top is not None:
-        out = out.orderBy(F.col("freq").desc(), "token").limit(top)
-    # The freq table is vocab-sized (distinct token types, not rows) —
-    # eagerly materialize it THROUGH the persisted word frame so the
-    # cache actually pays off, then drop the cache; the returned frame's
-    # lineage no longer depends on wf.
-    out = out.localCheckpoint(eager=True)
-    wf.unpersist()
-    return out
 
 
 def bpe_train_bytes(
@@ -368,15 +386,43 @@ def bpe_train_bytes(
     (bytes 33-126 map to themselves; parity-tested). Returns the same
     ``(rank, lhs, rhs, pair_count)`` merge table.
     """
-    merges, wf = _fit(
+    return _train(
         docs, n_merges, text_col, min_freq, driver_types_max,
-        seed_expr=lambda w: _byte_syms(w, eow),
-        seed_py=lambda w: _byte_syms_py(w, eow),
+        _seed_spec(True, eow),
     )
-    wf.unpersist()
-    spark = docs.sparkSession
-    return local_frame(
-        spark, merges, "rank int, lhs string, rhs string, pair_count long"
+
+
+def _token_freq(docs, n_merges, text_col, min_freq, top, driver_types_max,
+                spec):
+    def finish(types):
+        out = (
+            types.select(F.explode("syms").alias("token"), "freq")
+            .groupBy("token")
+            .agg(F.sum("freq").alias("freq"))
+        )
+        if top is not None:
+            out = out.orderBy(F.col("freq").desc(), "token").limit(top)
+        return out
+
+    return _fit(
+        docs, n_merges, text_col, min_freq, driver_types_max, spec, finish
+    )[1]
+
+
+def bpe_token_freq(
+    docs: DataFrame,
+    n_merges: int = 8,
+    text_col: str = "text",
+    min_freq: int = 1,
+    top: int | None = None,
+    driver_types_max: int = 200_000,
+) -> DataFrame:
+    """Corpus token frequencies after applying the learned merges:
+    ``(token, freq)``, optionally the top-k by (freq DESC, token) —
+    the vocabulary a trained tokenizer would ship."""
+    return _token_freq(
+        docs, n_merges, text_col, min_freq, top, driver_types_max,
+        _seed_spec(False, None),
     )
 
 
@@ -392,35 +438,67 @@ def bpe_token_freq_bytes(
     """Byte-level twin of ``bpe_token_freq``: corpus token frequencies
     after the byte-level merges, optionally top-k by (freq DESC, token).
     """
-    merges, wf = _fit(
-        docs, n_merges, text_col, min_freq, driver_types_max,
-        seed_expr=lambda w: _byte_syms(w, eow),
-        seed_py=lambda w: _byte_syms_py(w, eow),
+    return _token_freq(
+        docs, n_merges, text_col, min_freq, top, driver_types_max,
+        _seed_spec(True, eow),
     )
-    out = (
-        wf.select(F.explode("syms").alias("token"), "freq")
-        .groupBy("token")
-        .agg(F.sum("freq").alias("freq"))
-    )
-    if top is not None:
-        out = out.orderBy(F.col("freq").desc(), "token").limit(top)
-    # Same eager-materialize-then-unpersist as bpe_token_freq: the
-    # vocab-sized result is computed once through the cache, and the
-    # returned frame no longer recomputes the merge lineage.
-    out = out.localCheckpoint(eager=True)
-    wf.unpersist()
-    return out
 
 
-def _apply_kernel(merges: list[tuple[str, str]], seed_py=None):
+def _encode_types(docs, text_col, id_col, encode, sums=None,
+                  tokens_col="tokens"):
+    """The one word-type encode lane: ``encode`` maps the distinct word
+    types ``(word)`` to a vocabulary-sized ``(word, ...)`` frame, which
+    joins back to the (doc, word) stream (the one corpus-width
+    exchange) and aggregates per document; documents without a
+    pretoken survive through a left join from the id stream. With
+    ``sums`` ({output: per-word count column}) the counts are summed,
+    zero-filled; without it the ``__toks`` arrays concatenate in
+    pretoken order into ``tokens_col`` (empty when there are none)."""
+    pre = _pretokens(text_col)
+    gen = (
+        F.posexplode(pre).alias("wpos", "word") if sums is None
+        else F.explode(pre).alias("word")
+    )
+    dw = docs.select(F.col(id_col), gen)
+    joined = dw.join(encode(dw.select("word").distinct()), "word")
+    if sums is None:
+        per_doc = joined.groupBy(id_col).agg(
+            F.flatten(
+                F.transform(
+                    F.array_sort(
+                        F.collect_list(F.struct("wpos", "__toks"))
+                    ),
+                    lambda x: x["__toks"],
+                )
+            ).alias(tokens_col)
+        )
+        fills = [
+            F.coalesce(
+                F.col(tokens_col), F.array().cast("array<string>")
+            ).alias(tokens_col)
+        ]
+    else:
+        per_doc = joined.groupBy(id_col).agg(
+            *[F.sum(c).alias(out) for out, c in sums.items()]
+        )
+        fills = [
+            F.coalesce(F.col(out), F.lit(0).cast("long")).alias(out)
+            for out in sums
+        ]
+    return (
+        docs.select(id_col)
+        .join(per_doc, id_col, "left")
+        .select(id_col, *fills)
+    )
+
+
+def _apply_kernel(merges: list[tuple[str, str]], seed_py):
     """Arrow kernel: apply the ruleset to each word type, sequentially
     in rank order (identical semantics to the fold path — each rule
     merges all its occurrences once). The NUL-wrapped join makes the
     per-rule adjacency probe one C-speed substring check, so rules the
     word doesn't contain cost O(len) and never rebuild the array."""
     import pandas as pd  # local: kernels must be self-contained closures
-
-    seed_py = seed_py or list
 
     def kernel(batches):
         for pdf in batches:
@@ -454,12 +532,14 @@ def bpe_apply_merges(
     applying a tokenizer trained elsewhere): ``(id, tokens)`` with
     pretoken order preserved. ``byte_level=True`` seeds each pretoken
     with its ``bytes_to_unicode``-mapped UTF-8 bytes (+ optional
-    ``eow`` marker) — pair with a ``bpe_train_bytes`` ruleset.
+    ``eow`` marker) — pair with a ``bpe_train_bytes`` ruleset; ``eow``
+    without ``byte_level`` raises ``ValueError``.
 
-    One distinct-word pass encodes each word type exactly once, then a
-    join back to the (doc, position, word) stream and an
-    order-restoring re-aggregate. The join is the only exchange whose
-    width scales with the corpus; its build side is vocabulary-sized.
+    Runs through the word-type lane (``_encode_types``): each word type
+    is encoded exactly once, then joined back to the (doc, position,
+    word) stream and re-aggregated in pretoken order. The join is the
+    only exchange whose width scales with the corpus; its build side is
+    vocabulary-sized.
 
     Rulesets up to ``max_fold_merges`` nest as pure Column folds (no
     Python anywhere); real tokenizers carry thousands of rules, and a
@@ -468,43 +548,39 @@ def bpe_apply_merges(
     mapInPandas kernel with identical rank-order semantics
     (parity-tested against the fold path).
     """
-    pre = F.regexp_extract_all(F.col(text_col), F.lit(BPE_REGEX), 0)
-    dw = docs.select(
-        F.col(id_col), F.posexplode(pre).alias("wpos", "word")
-    )
-    types = dw.select("word").distinct()
-    if byte_level:
-        seed_expr = lambda w: _byte_syms(w, eow)  # noqa: E731
-        seed_py = lambda w: _byte_syms_py(w, eow)  # noqa: E731
-    else:
-        seed_expr, seed_py = _chars, None
-    if len(merges) <= max_fold_merges:
+    seed_expr, seed_py = _seed_spec(byte_level, eow)
+
+    def encode(types):
+        if len(merges) > max_fold_merges:
+            return types.mapInPandas(
+                _apply_kernel(list(merges), seed_py),
+                schema="word string, __toks array<string>",
+            )
         syms = seed_expr(F.col("word"))
         for left, right in merges:
             syms = _merge_pair(syms, left, right)
-        enc = types.select("word", syms.alias("__toks"))
-    else:
-        enc = types.mapInPandas(
-            _apply_kernel(list(merges), seed_py),
-            schema="word string, __toks array<string>",
-        )
-    joined = dw.join(enc, "word")
-    per_doc = joined.groupBy(id_col).agg(
-        F.flatten(
-            F.transform(
-                F.array_sort(
-                    F.collect_list(F.struct("wpos", "__toks"))
-                ),
-                lambda x: x["__toks"],
-            )
-        ).alias(tokens_col)
+        return types.select("word", syms.alias("__toks"))
+
+    return _encode_types(
+        docs, text_col, id_col, encode, tokens_col=tokens_col
     )
-    ids = docs.select(id_col)
-    return ids.join(per_doc, id_col, "left").select(
-        id_col,
-        F.coalesce(
-            F.col(tokens_col), F.array().cast("array<string>")
-        ).alias(tokens_col),
+
+
+def _encode(docs, n_merges, text_col, id_col, min_freq, driver_types_max,
+            spec):
+    """``(id, n_tokens, n_chars)``: per-document sums of each word's
+    merged and pre-merge symbol counts, read from the fit's type table."""
+    _, per_word = _fit(
+        docs, n_merges, text_col, min_freq, driver_types_max, spec,
+        finish=lambda types: types.select(
+            "word",
+            F.size("syms").alias("__nt"),
+            F.col("n_seed").alias("__nc"),
+        ),
+    )
+    return _encode_types(
+        docs, text_col, id_col, lambda _types: per_word,
+        sums={"n_tokens": "__nt", "n_chars": "__nc"},
     )
 
 
@@ -520,46 +596,9 @@ def bpe_encode(
     ``(id, n_tokens, n_chars)`` — BPE token count after the merges vs
     the character-symbol count before any merge. Empty / no-pretoken
     documents survive with zeros (left join back to the id stream)."""
-    merges, wf = _fit(docs, n_merges, text_col, min_freq, driver_types_max)
-    # per_word is vocab-sized (one row per distinct word type), so it is
-    # cheap to materialize eagerly THROUGH wf's cache; the per-document
-    # output below then joins against the checkpointed table and never
-    # replays the merge lineage after wf.unpersist().
-    per_word = wf.select(
-        "word", F.size("syms").alias("__nt"), F.length("word").alias("__nc")
-    ).localCheckpoint(eager=True)
-    out = _encode_report(docs, per_word, text_col, id_col)
-    wf.unpersist()
-    return out
-
-
-def _encode_report(docs, per_word, text_col, id_col):
-    """Join the vocab-sized per-word (token count, pre-merge symbol
-    count) table back onto the (doc, word) stream and aggregate per
-    document — the one corpus-width exchange of the encode report;
-    empty / no-pretoken docs survive with zeros via the id-stream left
-    join. Shared by the char- and byte-seeded encode forms."""
-    pre = F.regexp_extract_all(F.col(text_col), F.lit(BPE_REGEX), 0)
-    dw = docs.select(F.col(id_col), F.explode(pre).alias("word"))
-    agg = (
-        dw.join(per_word, "word")
-        .groupBy(id_col)
-        .agg(
-            F.sum("__nt").alias("n_tokens"), F.sum("__nc").alias("n_chars")
-        )
-    )
-    return (
-        docs.select(id_col)
-        .join(agg, id_col, "left")
-        .select(
-            id_col,
-            F.coalesce(F.col("n_tokens"), F.lit(0)).cast("long").alias(
-                "n_tokens"
-            ),
-            F.coalesce(F.col("n_chars"), F.lit(0)).cast("long").alias(
-                "n_chars"
-            ),
-        )
+    return _encode(
+        docs, n_merges, text_col, id_col, min_freq, driver_types_max,
+        _seed_spec(False, None),
     )
 
 
@@ -579,22 +618,10 @@ def bpe_encode_bytes(
     char count. On printable-ASCII corpora with ``eow=None`` the
     output is IDENTICAL to ``bpe_encode`` (bytes map to themselves, so
     seeds, merges, and counts coincide — parity-pinned)."""
-    merges, wf = _fit(
-        docs, n_merges, text_col, min_freq, driver_types_max,
-        seed_expr=lambda w: _byte_syms(w, eow),
-        seed_py=lambda w: _byte_syms_py(w, eow),
+    return _encode(
+        docs, n_merges, text_col, id_col, min_freq, driver_types_max,
+        _seed_spec(True, eow),
     )
-    extra = 1 if eow else 0
-    per_word = wf.select(
-        "word",
-        F.size("syms").alias("__nt"),
-        (F.length(F.encode(F.col("word"), "UTF-8")) + F.lit(extra)).alias(
-            "__nc"
-        ),
-    ).localCheckpoint(eager=True)
-    out = _encode_report(docs, per_word, text_col, id_col)
-    wf.unpersist()
-    return out
 
 
 def bpe_store_init(
@@ -612,11 +639,8 @@ def bpe_store_init(
     count, read back by ``bpe_encode_with_store``; joins the
     exact-dedup / minhash / simhash / contamination persisted-store
     lifecycle family."""
-    merges, wf = _fit(docs, n_merges, text_col, min_freq, driver_types_max)
-    wf.unpersist()
-    spark = docs.sparkSession
-    local_frame(
-        spark, merges, "rank int, lhs string, rhs string, pair_count long"
+    bpe_train(
+        docs, n_merges, text_col, min_freq, driver_types_max
     ).write.mode("overwrite").parquet(f"{store_path}/merges")
 
 

@@ -45,7 +45,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, functions as F
 
 from ..sources.tables import local_frame, read_parquet
-from .tokenize import pretoken_counts
+from .tokenize import _encode_types, pretoken_counts
 
 __all__ = [
     "unigram_vocab",
@@ -188,6 +188,18 @@ def _max_piece_len(vocab: DataFrame) -> int:
     length they already know via ``max_len``-sized training params."""
     row = vocab.agg(F.max(F.length("piece"))).first()
     return int(row[0] or 1)
+
+
+def _encode_vocab(docs, vocab, vocab_size, min_len, max_len, text_col):
+    """The vocabulary an encode probes and its DP carry width: fit on
+    ``docs`` and localized when ``vocab`` is None, else the user's
+    frame with duplicate pieces collapsed."""
+    if vocab is None:
+        return _localized_vocab(
+            unigram_vocab(docs, vocab_size, min_len, max_len, text_col)
+        )
+    vocab = _dedup_user_vocab(vocab)
+    return vocab, _max_piece_len(vocab)
 
 
 def _piece_candidates(types: DataFrame, L: int) -> DataFrame:
@@ -336,57 +348,31 @@ def unigram_encode(
     width — see ``_max_piece_len``), so the returned frame is not
     fully lazy.
     """
-    if vocab is None:
-        vocab, L = _localized_vocab(
-            unigram_vocab(docs, vocab_size, min_len, max_len, text_col)
-        )
-    else:
-        vocab = _dedup_user_vocab(vocab)
-        L = _max_piece_len(vocab)
-    from .text import BPE_REGEX
+    vocab, L = _encode_vocab(docs, vocab, vocab_size, min_len, max_len, text_col)
 
-    dw = docs.select(
-        F.col(id_col),
-        F.explode(
-            F.regexp_extract_all(F.col(text_col), F.lit(BPE_REGEX), 0)
-        ).alias("word"),
-    )
-    types = dw.select("word").distinct()
-    wm = _packed_scores(types, vocab, L)
-    enc = (
-        wm.select(
-            "word", _dp_final(F.col("word"), F.col("m"), L).alias("__dp")
+    def encode(types):
+        return (
+            _packed_scores(types, vocab, L)
+            .select(
+                "word", _dp_final(F.col("word"), F.col("m"), L).alias("__dp")
+            )
+            # DIV is exact int64 division — the packed cost unpacks to
+            # (pieces, score_sum) without any float in the path. Ceiling
+            # form: score_sum is 0 (not >=1) when a word is all 0-score
+            # <unk> chars, so the naive  dp DIV BASE + 1  would overcount
+            .withColumn(
+                "__p", F.expr(f"(__dp + {COST_BASE - 1}) DIV {COST_BASE}")
+            )
+            .select(
+                "word",
+                F.col("__p"),
+                (F.col("__p") * F.lit(COST_BASE) - F.col("__dp")).alias("__s"),
+            )
         )
-        # DIV is exact int64 division — the packed cost unpacks to
-        # (pieces, score_sum) without any float in the path. Ceiling
-        # form: score_sum is 0 (not >=1) when a word is all 0-score
-        # <unk> chars, so the naive  dp DIV BASE + 1  would overcount
-        .withColumn(
-            "__p", F.expr(f"(__dp + {COST_BASE - 1}) DIV {COST_BASE}")
-        )
-        .select(
-            "word",
-            F.col("__p"),
-            (F.col("__p") * F.lit(COST_BASE) - F.col("__dp")).alias("__s"),
-        )
-    )
-    per_doc = (
-        dw.join(enc, "word")
-        .groupBy(id_col)
-        .agg(F.sum("__p").alias("n_tokens"), F.sum("__s").alias("score_sum"))
-    )
-    return (
-        docs.select(id_col)
-        .join(per_doc, id_col, "left")
-        .select(
-            id_col,
-            F.coalesce(F.col("n_tokens"), F.lit(0).cast("long")).alias(
-                "n_tokens"
-            ),
-            F.coalesce(F.col("score_sum"), F.lit(0).cast("long")).alias(
-                "score_sum"
-            ),
-        )
+
+    return _encode_types(
+        docs, text_col, id_col, encode,
+        sums={"n_tokens": "__p", "score_sum": "__s"},
     )
 
 
@@ -589,48 +575,25 @@ def unigram_tokenize(
     A user-supplied ``vocab`` may carry duplicate pieces — they are
     collapsed (max score wins) before the packed-score build.
     """
-    if vocab is None:
-        vocab, L = _localized_vocab(
-            unigram_vocab(docs, vocab_size, min_len, max_len, text_col)
-        )
-    else:
-        vocab = _dedup_user_vocab(vocab)
-        L = _max_piece_len(vocab)
-    from .text import BPE_REGEX
+    vocab, L = _encode_vocab(docs, vocab, vocab_size, min_len, max_len, text_col)
 
-    pre = F.regexp_extract_all(F.col(text_col), F.lit(BPE_REGEX), 0)
-    dw = docs.select(F.col(id_col), F.posexplode(pre).alias("wpos", "word"))
-    types = dw.select("word").distinct()
-    wm = _packed_scores(types, vocab, L)
-    enc = wm.select(
-        "word", "m", _dp_full(F.col("word"), F.col("m"), L).alias("__dparr")
-    ).select(
-        "word",
-        _walk_pieces(
-            F.col("word"), F.col("__dparr"), F.col("m"), L
-        ).alias("__toks"),
-    )
-    per_doc = (
-        dw.join(enc, "word")
-        .groupBy(id_col)
-        .agg(
-            F.flatten(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("wpos", "__toks"))),
-                    lambda x: x["__toks"],
-                )
-            ).alias(tokens_col)
+    def encode(types):
+        return (
+            _packed_scores(types, vocab, L)
+            .select(
+                "word", "m",
+                _dp_full(F.col("word"), F.col("m"), L).alias("__dparr"),
+            )
+            .select(
+                "word",
+                _walk_pieces(
+                    F.col("word"), F.col("__dparr"), F.col("m"), L
+                ).alias("__toks"),
+            )
         )
-    )
-    return (
-        docs.select(id_col)
-        .join(per_doc, id_col, "left")
-        .select(
-            id_col,
-            F.coalesce(
-                F.col(tokens_col), F.array().cast("array<string>")
-            ).alias(tokens_col),
-        )
+
+    return _encode_types(
+        docs, text_col, id_col, encode, tokens_col=tokens_col
     )
 
 

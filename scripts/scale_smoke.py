@@ -145,6 +145,17 @@ def main() -> None:
         "unigram_encode",
         unigram_encode(docs, vocab=None, vocab_size=60),
     )
+    # BPE's driver merge loop against its distributed twin (the
+    # driver_types_max gate): the fit runs while the frame is BUILT, so
+    # the call is timed together with the write
+    from eventkit_spark.llm.tokenize import bpe_encode
+
+    for name, dtm in (("bpe_encode", 200_000), ("bpe_encode_distributed", 0)):
+        t0 = time.perf_counter()
+        bpe_encode(docs, n_merges=6, driver_types_max=dtm).write.mode(
+            "overwrite"
+        ).format("noop").save()
+        times[name] = round(time.perf_counter() - t0, 2)
     # brute-force ANN stays bounded by the query side
     from eventkit_spark.llm.similarity import brute_force_topk
 

@@ -92,11 +92,12 @@ SHUFFLE_CEILING = {
     "embed_topk": 2,
     # r5 sketch/tokenizer/split contracts: measured shapes pinned —
     # sketch outputs are d*w / 2^p bounded, so every exchange after the
-    # type-collapse carries kilobytes; bpe_encode's corpus-width
-    # exchange is the single word join; dedup_safe_split rides the CC
-    # driver fast path (labels arrive as a local relation)
-    # r7: the eager vocab-table checkpoint drops the word-join branch's
-    # recompute lineage from the plan (encode reads a local relation)
+    # type-collapse carries kilobytes; dedup_safe_split rides the CC
+    # driver fast path (labels arrive as a local relation).
+    # bpe_encode's word join broadcasts the per-word table, which the
+    # fit lane derives lazily from its local type table (driver path),
+    # so that branch carries no merge lineage: the 2 are the per-doc
+    # aggregate and the id-stream join-back
     "bpe_encode": 2,
     "bpe_encode_bytes": 2,
     "bpe_fertility": 3,
@@ -329,8 +330,10 @@ SHUFFLE_CEILING = {
     # twice — df-guard + join leg)
     "winnow_overlap": 10,
     "webdataset": 0,  # binaryFile scan -> one tar kernel, no shuffle
-    "bpe_train_bytes": 0,  # driver-path merge loop; one count pass
-    "bpe_vocab_bytes": 1,  # + the token-frequency aggregate
+    # the fit runs while the frame is built; train returns its merges
+    # as a local relation, vocab aggregates the local type table lazily
+    "bpe_train_bytes": 0,
+    "bpe_vocab_bytes": 1,  # the token-frequency aggregate
 }
 
 

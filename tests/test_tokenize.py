@@ -421,3 +421,176 @@ def test_bpe_encode_bytes_ascii_parity(spark):
     uni = spark.createDataFrame([(0, "é é x")], "doc_id int, text string")
     r = bpe_encode_bytes(uni, n_merges=1, eow="</w>").first()
     assert r["n_chars"] == (2 + 1) * 2 + (1 + 1)
+
+
+def test_eow_without_byte_level_raises(spark):
+    """The end-of-word marker is part of the byte seed only: asking for
+    it on character seeds fails loudly instead of dropping it."""
+    docs = spark.createDataFrame([(0, "a cat")], "doc_id int, text string")
+    with pytest.raises(ValueError, match="byte_level"):
+        bpe_apply_merges(docs, [("c", "a")], eow="</w>")
+
+
+def test_astral_chars_seed_one_symbol_on_both_paths(spark):
+    """A code point outside the BMP (an emoji, two UTF-16 units) is one
+    seed symbol on the distributed path too, as on the driver path: the
+    two learn the same ruleset and report the same counts."""
+    docs = spark.createDataFrame(
+        [(0, "ab\U0001F600 ab \U0001F600\U0001F600"), (1, "ab")],
+        "doc_id int, text string",
+    )
+    fast = sorted(bpe_train(docs, n_merges=3).collect())
+    dist = sorted(bpe_train(docs, n_merges=3, driver_types_max=0).collect())
+    assert fast == dist == [(1, "a", "b", 3)]
+    enc = sorted(bpe_encode(docs, n_merges=3).collect())
+    assert enc == sorted(
+        bpe_encode(docs, n_merges=3, driver_types_max=0).collect()
+    )
+    assert enc == [(0, 5, 7), (1, 1, 2)]
+
+
+def test_tokenizers_leave_no_cached_state(spark, tmp_path):
+    """The fit lane owns every cache: on the driver path no tokenizer
+    entry point leaves a persisted or checkpointed RDD behind; the
+    distributed (driver_types_max=0) twins leave at most the lane's one
+    eager boundary under the derived frame, and training none."""
+    from eventkit_spark.llm import tokenize as T, unigram as U
+
+    docs = spark.createDataFrame(
+        [(i, t) for i, t in enumerate(TEXTS)], "doc_id int, text string"
+    )
+    rules = [(r["lhs"], r["rhs"]) for r in bpe_train(docs, 6).collect()]
+    jsc = spark.sparkContext._jsc
+
+    def added(build):
+        before = set(jsc.getPersistentRDDs())
+        out = build()
+        if out is not None:
+            out.collect()
+        return len(set(jsc.getPersistentRDDs()) - before)
+
+    bpe_store = str(tmp_path / "bpe")
+    uni_store = str(tmp_path / "uni")
+    driver = {
+        "bpe_train": lambda: T.bpe_train(docs, 6),
+        "bpe_train_bytes": lambda: T.bpe_train_bytes(docs, 6, eow="</w>"),
+        "bpe_token_freq": lambda: T.bpe_token_freq(docs, 6, top=5),
+        "bpe_token_freq_bytes": lambda: T.bpe_token_freq_bytes(docs, 6),
+        "bpe_encode": lambda: T.bpe_encode(docs, 6),
+        "bpe_encode_bytes": lambda: T.bpe_encode_bytes(docs, 6, eow="</w>"),
+        "bpe_apply_merges": lambda: T.bpe_apply_merges(docs, rules),
+        "bpe_apply_merges_kernel": lambda: T.bpe_apply_merges(
+            docs, rules, max_fold_merges=0
+        ),
+        "bpe_store_init": lambda: T.bpe_store_init(docs, bpe_store, 6),
+        "bpe_encode_with_store": lambda: T.bpe_encode_with_store(
+            docs, bpe_store
+        ),
+        "unigram_vocab": lambda: U.unigram_vocab(docs, vocab_size=10),
+        "unigram_encode": lambda: U.unigram_encode(docs, vocab_size=10),
+        "unigram_tokenize": lambda: U.unigram_tokenize(docs, vocab_size=10),
+        "unigram_train": lambda: U.unigram_train(
+            docs, vocab_size=5, start_size=15, iters=2
+        ),
+        "unigram_store_init": lambda: U.unigram_store_init(
+            U.unigram_vocab(docs, vocab_size=10), uni_store
+        ),
+        "unigram_encode_with_store": lambda: U.unigram_encode_with_store(
+            docs, uni_store
+        ),
+    }
+    assert {n: added(b) for n, b in driver.items()} == dict.fromkeys(
+        driver, 0
+    )
+    twins = {
+        "bpe_train": (T.bpe_train, 0),
+        "bpe_train_bytes": (T.bpe_train_bytes, 0),
+        "bpe_token_freq": (T.bpe_token_freq, 1),
+        "bpe_token_freq_bytes": (T.bpe_token_freq_bytes, 1),
+        "bpe_encode": (T.bpe_encode, 1),
+        "bpe_encode_bytes": (T.bpe_encode_bytes, 1),
+    }
+    for name, (fn, most) in twins.items():
+        n = added(lambda: fn(docs, 6, driver_types_max=0))
+        assert n <= most, (name, n)
+
+
+def test_encode_and_freq_build_with_train_jobs(spark):
+    """Building the encode and token-frequency frames on the driver path
+    runs exactly the jobs training does (counted by job group): the
+    derived frame stays lazy over the local type table."""
+    from eventkit_spark.llm import tokenize as T
+
+    docs = spark.createDataFrame(
+        [(i, t) for i, t in enumerate(TEXTS)], "doc_id int, text string"
+    )
+    sc = spark.sparkContext
+
+    def build_jobs(fn, **kw):
+        group = f"bpe-build-{fn.__name__}"
+        sc.setJobGroup(group, group, False)
+        try:
+            fn(docs, n_merges=6, **kw)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    train = build_jobs(T.bpe_train)
+    assert train > 0
+    assert build_jobs(T.bpe_encode) == train
+    assert build_jobs(T.bpe_token_freq, top=5) == train
+    assert build_jobs(T.bpe_train_bytes) == train
+    assert build_jobs(T.bpe_encode_bytes) == train
+    assert build_jobs(T.bpe_token_freq_bytes) == train
+
+
+def test_cache_and_join_back_only_in_the_lanes():
+    """In the tokenizer modules only the fit lane (``tokenize._fit``)
+    and ``unigram_train`` touch the cache, and only the word-type lane
+    (``tokenize._encode_types``) re-aggregates ``(wpos, tokens)``
+    structs or joins back to the id stream: any other site is a new
+    copy of a lane, with its own cache or empty-document rule to
+    drift."""
+    import ast
+    import pathlib
+
+    llm = pathlib.Path(__file__).resolve().parent.parent / "eventkit_spark" / "llm"
+    cache_ok = {("tokenize.py", "_fit"), ("unigram.py", "unigram_train")}
+    cache_calls = {"persist", "unpersist", "cache", "localCheckpoint", "checkpoint"}
+    bad = []
+
+    def is_wpos_struct(arg):
+        return (
+            isinstance(arg, ast.Call)
+            and isinstance(arg.func, ast.Attribute)
+            and arg.func.attr == "struct"
+            and bool(arg.args)
+            and isinstance(arg.args[0], ast.Constant)
+            and arg.args[0].value == "wpos"
+        )
+
+    for name in ("tokenize.py", "unigram.py"):
+        tree = ast.parse((llm / name).read_text())
+        for top in tree.body:
+            where = getattr(top, "name", "<module>")
+            for node in ast.walk(top):
+                if not (
+                    isinstance(node, ast.Call)
+                    and isinstance(node.func, ast.Attribute)
+                ):
+                    continue
+                attr = node.func.attr
+                if attr in cache_calls and (name, where) not in cache_ok:
+                    bad.append(f"{name}:{node.lineno} {attr} in {where}")
+                in_lane = (name, where) == ("tokenize.py", "_encode_types")
+                regroup = attr == "collect_list" and any(
+                    is_wpos_struct(a) for a in node.args
+                )
+                join_back = attr == "join" and any(
+                    isinstance(a, ast.Name) and a.id == "id_col"
+                    for a in node.args
+                )
+                if (regroup or join_back) and not in_lane:
+                    bad.append(f"{name}:{node.lineno} {attr} in {where}")
+    assert not bad, bad
