@@ -70,15 +70,18 @@ handler shell, ``StreamFrame._scan_state``: the step sees the key group's
 micro-batch sorted in its order plus the carried state, and returns its
 output rows and new state; the lane owns the GroupState protocol (load,
 store, timers), the Arrow chunk drain and the key columns of the output.
+``running_agg``, the live-stream hot path, groups by hash bucket of the
+keys instead: one handler call and one state row per bucket, the
+per-key carries held as parallel arrays (see its docstring).
 
 Late data is governed by ``with_watermark``; every windowed/stateful op
 requires it in append mode. Tests drive these with file sources +
 ``trigger(availableNow=True)`` + memory sink, so results are
 deterministic (same rows as batch).
 
-Scale: state lives in the state store keyed by the stream key —
-partition-parallel across keys like the batch engine's windows; no
-global state.
+Scale: state lives in the state store keyed by the stream key (by its
+hash bucket for ``running_agg``) — partition-parallel across keys like
+the batch engine's windows; no global state.
 """
 
 from __future__ import annotations
@@ -92,7 +95,7 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.types import StructType, TimestampType
+from pyspark.sql.types import DecimalType, NumericType, StructType, TimestampType
 
 from ..plans.audit import has_pandas_kernel
 from ..session import _size_to_bytes, session_width
@@ -329,6 +332,10 @@ def _make_running_scan():
 
 _running_scan = _make_running_scan()
 
+# running_agg's hash buckets per state partition (its docstring has the
+# sweep behind the value)
+_BUCKETS_PER_PARTITION = 16
+
 
 def rate_stream(spark: SparkSession, rows_per_second: int = 100) -> "StreamFrame":
     """The reference's Timer/Sequence analog: monotonically timestamped
@@ -424,8 +431,8 @@ class StreamFrame:
         output and the new state in place of a step.
 
         ``running_agg`` keeps its own handler: it is the live-stream hot
-        path, builds its frame straight from numpy arrays and skips the
-        pandas sort when a group arrived in time order."""
+        path, runs one call per hash bucket of keys rather than per key,
+        and builds its frame straight from numpy arrays."""
         keys = self.key_cols
         df = self.df if df is None else df
         cols = [self.ts_col, self.value_cols[0]] if cols is None else cols
@@ -746,6 +753,51 @@ class StreamFrame:
         they are: they need no localization, and Spark's NTZ-to-micros
         arithmetic reads the session zone, which would move wall times
         that fall in a DST gap.
+
+        Bucketed state: the kernel groups by the hash bucket
+        ``pmod(xxhash64(keys), B)``, not by the key, so one handler
+        call serves every key of a bucket and the state store holds at
+        most B rows (plus the NULL-key buckets below). PySpark's fixed cost is per GROUP (Arrow slicing,
+        the pandas frames, the state row round trip): a 10k-event burst
+        over 4,199 keys took 2.0-3.4 s of ``addBatch`` with one group
+        per key and 0.7-1.2 s with 64 buckets (4 vCPUs, 4 state
+        partitions), for the same output rows. The handler drains the
+        bucket's chunks once, sorts them once by (keys, event time),
+        and runs ``_running_scan`` per key run on numpy slices with
+        that key's carried tuple; slicing a pandas frame per key
+        instead measured 2.1-2.4 s and erased the gain. The state row
+        is ``nb`` (the bucket count it was written under), one array
+        per key column, then the rcount/rsum/rmin/rmax/ema carries as
+        parallel arrays, NULL where the per-key carry is None.
+
+        ``B = _BUCKETS_PER_PARTITION * session_width`` at build time.
+        The multiplier was swept on the same burst, 8 interleaved runs
+        per point (4 vCPUs, width 4), as the burst batch's ``addBatch``
+        median (range): x4 (16 buckets) 728 ms (572-1,222), x16 (64)
+        874 ms (628-1,120), x64 (256) 957 ms (692-1,315); the per-key
+        form took 1,895-2,793 ms. 62-event steady batches showed no
+        trend with the bucket count (375-750 ms at 4, 64 and 256
+        buckets). x16 is kept over the slightly faster x4: a touched
+        bucket rewrites every key state it holds, and at the 10k live
+        keys of that stream x4 would put about 625 keys in each state
+        row, x16 about 160.
+
+        Keys are told apart by their values on the Python side, so a
+        bucket must carry every key column exactly: pandas reads an
+        integer column with a NULL in it as float64, which rounds
+        values past 2^53. A key with a NULL in a numeric key column
+        therefore goes to its own bucket past B, one per pattern of
+        NULL numeric key columns; those buckets hold only NULLs in the
+        NULL columns and no NULL in the others. NULL key values still
+        form one key, as ``groupBy`` makes them. An integer event time
+        with a NULL crosses as float64 as well (exact below 2^53, which
+        epoch micros are).
+
+        A checkpoint restarted under another width would hash its keys
+        into other buckets; the handler raises on a stored ``nb`` that
+        differs from B instead. Checkpoints written by the per-key form
+        of this kernel do not restart either: the grouping key and the
+        state schema differ.
         """
         value_col = self.value_cols[0]
         ts_col = self.ts_col
@@ -761,19 +813,48 @@ class StreamFrame:
             + f"{ts_col} {_sql_type(src, ts_col)}, value double, "
             + "rcount long, rsum double, rmin double, rmax double, ema double"
         )
-        state_schema = "rcount long, rsum double, rmin double, rmax double, ema double"
+        nb = _BUCKETS_PER_PARTITION * session_width(self.df.sparkSession) if keys else 1
+        state_schema = (
+            "nb int, "
+            + "".join(f"k{i} array<{_sql_type(src, k)}>, " for i, k in enumerate(keys))
+            + "rcount array<long>, rsum array<double>, rmin array<double>, "
+            + "rmax array<double>, ema array<double>"
+        )
+        group = []
+        if keys:
+            bucket = F.pmod(F.xxhash64(*keys), F.lit(nb))
+            nullable = [
+                k for k in keys
+                if isinstance(src.schema[k].dataType, NumericType)
+                and not isinstance(src.schema[k].dataType, DecimalType)
+            ]
+            if nullable:
+                mask = sum(
+                    F.col(k).isNull().cast("int") * (1 << i)
+                    for i, k in enumerate(nullable)
+                )
+                bucket = F.when(mask == 0, bucket).otherwise(mask + (nb - 1))
+            src, group = src.withColumn("__b", bucket.cast("int")), ["__b"]
         cols = [*keys, ts_col, value_col]
+        fresh = (0, 0.0, None, None, None)
+
+        def stored_values(a) -> list:
+            """``a``'s elements as a state array stores them: Python
+            scalars, None for NULL (NaN in a float column)."""
+            if a.dtype.kind in "iubO":
+                return a.tolist()
+            if a.dtype.kind == "f":
+                return [None if v != v else v for v in a.tolist()]
+            s = pd.Series(a).astype(object)
+            return s.where(s.notna(), None).tolist()
 
         def handler(
             key, pdfs: Iterator[pd.DataFrame], state: GroupState
         ) -> Iterator[pd.DataFrame]:
-            # one frame per key group built straight from numpy arrays:
-            # no pd.concat for single-chunk groups and no sort when the
-            # group arrived in time order (the common file-replay case).
-            # A group spanning Arrow chunks is joined before the ONE
-            # event-time sort, like _sorted_chunks. Missing-value
-            # semantics (NULL prefix, decay-by-q ema) are pinned in
-            # _running_scan's docstring.
+            # one frame per bucket built from numpy arrays; the bucket's
+            # Arrow chunks are joined before its ONE sort, like
+            # _sorted_chunks. Missing-value semantics (NULL prefix,
+            # decay-by-q ema) are pinned in _running_scan's docstring.
             chunks = [p for p in pdfs if len(p)]
             if not chunks:
                 return
@@ -782,28 +863,79 @@ class StreamFrame:
                 if len(chunks) > 1 else chunks[0][c].to_numpy()
                 for c in cols
             }
-            t = arrs[ts_col]
-            x = np.asarray(arrs[value_col], dtype=np.float64)
-            # NaN compares False, so a NULL event time also sorts (last)
-            if not (t[1:] >= t[:-1]).all():
-                order = np.argsort(t, kind="stable")
-                t, x = t[order], x[order]
+            n = len(arrs[ts_col])
+            # NULL key values share factorize code -1; NaN (a NULL event
+            # time) sorts last; lexsort is stable for equal times
+            codes = [pd.factorize(arrs[k])[0] for k in keys]
+            order = np.lexsort((arrs[ts_col], *codes[::-1]))
+            t = arrs[ts_col][order]
+            x = np.asarray(arrs[value_col], dtype=np.float64)[order]
+            cuts = (
+                np.flatnonzero(np.any([np.diff(c[order]) != 0 for c in codes], axis=0)) + 1
+                if keys and n > 1 else np.empty(0, dtype=np.int64)
+            )
+            starts = np.concatenate(([0], cuts)).tolist()
+            ends = np.concatenate((cuts, [n])).tolist()
+            run_keys = (
+                list(zip(*(stored_values(arrs[k][order[starts]]) for k in keys)))
+                if keys else [()]
+            )
+
             if state.exists:
-                cnt, s, mn, mx, ema = state.get
+                stored_nb, *stored = state.get
+                if stored_nb != nb:
+                    raise RuntimeError(
+                        f"running_agg: this checkpoint's state was written with "
+                        f"{stored_nb} key buckets and this query uses {nb} "
+                        f"({_BUCKETS_PER_PARTITION} x spark.sql.shuffle.partitions); "
+                        f"restart it under the spark.sql.shuffle.partitions "
+                        f"it was written with"
+                    )
+                kept = [list(a) for a in stored[: len(keys)]]
+                carry = [list(a) for a in stored[len(keys):]]
             else:
-                cnt, s, mn, mx, ema = 0, 0.0, None, None, None
-            scans, carry = _running_scan(x, w, cnt, s, mn, mx, ema)
-            state.update(carry)
+                kept, carry = [[] for _ in keys], [[] for _ in fresh]
+            slot = {
+                k: i for i, k in
+                enumerate(zip(*kept) if keys else [()] * len(carry[0]))
+            }
+
+            rcount = np.empty(n, dtype=np.int64)
+            scanned = {c: np.empty(n) for c in ("rsum", "rmin", "rmax", "ema")}
+            unseen = np.zeros(n, dtype=bool)
+            for rk, s, e in zip(run_keys, starts, ends):
+                j = slot.get(rk)
+                if j is None:
+                    j = len(carry[0])
+                    for a, v in zip((*kept, *carry), (*rk, *fresh)):
+                        a.append(v)
+                scans, new = _running_scan(x[s:e], w, *(a[j] for a in carry))
+                for a, v in zip(carry, new):
+                    a[j] = v
+                rcount[s:e] = scans["rcount"]
+                # every aggregate is None on the same prefix rows
+                if scans["rsum"].dtype == object:
+                    none = pd.isna(scans["rsum"])
+                    unseen[s:e] = none
+                    for c, out in scanned.items():
+                        out[s:e] = np.where(none, np.nan, scans[c]).astype(np.float64)
+                else:
+                    for c, out in scanned.items():
+                        out[s:e] = scans[c]
+            state.update((nb, *kept, *carry))
+            if unseen.any():
+                for c, out in scanned.items():
+                    scanned[c] = out.astype(object)
+                    scanned[c][unseen] = None
             miss = np.isnan(x)
             # a missing input echoes as NULL, not NaN
             value = np.where(miss, None, x.astype(object)) if miss.any() else x
-            yield pd.DataFrame(
-                {**{k: arrs[k] for k in keys}, ts_col: t, "value": value, **scans}
-            )
+            yield pd.DataFrame({
+                **{k: arrs[k][order] for k in keys}, ts_col: t, "value": value,
+                "rcount": rcount, **scanned,
+            })
 
-        out = _apply_state(
-            src, keys, [ts_col, value_col], handler, out_schema, state_schema
-        )
+        out = _apply_state(src, group, cols, handler, out_schema, state_schema)
         return out.withColumn(ts_col, F.timestamp_micros(ts_col)) if micros else out
 
     def changes(self) -> DataFrame:
@@ -2129,11 +2261,13 @@ class StreamFrame:
         ):
             # Byte-derived narrowing is only safe for JVM-native state
             # (aggregations, dropDuplicates): their per-partition cost
-            # tracks bytes. The pandas state kernels' cost is per KEY
-            # GROUP in Python — narrowing serializes that work and
-            # measured 4-5x SLOWER at bench scale (1.9 s -> 7.8 s for
-            # running_agg at one partition), so they keep the session
-            # width, which is already sized to the cluster.
+            # tracks bytes. The pandas state kernels' cost is per GROUP
+            # in Python (per key for the _scan_state steps, per hash
+            # bucket of keys for running_agg) — narrowing serializes
+            # that work and measured 4-5x SLOWER at bench scale (1.9 s
+            # -> 7.8 s for the per-key running_agg at one partition), so
+            # they keep the session width, which is already sized to
+            # the cluster.
             if has_pandas_kernel(sink_df):
                 parts = None
         if parts is None:

@@ -65,8 +65,12 @@ def main():
             d = p["durationMs"] if isinstance(p, dict) else json.loads(p.json)["durationMs"]
             row = json.loads(p.json) if not isinstance(p, dict) else p
             so = row.get("stateOperators") or []
+            # numRowsTotal beside addBatch: running_agg keeps one state
+            # row per hash bucket of keys, the steps one per key
             print(
                 "   batch", row.get("batchId"), "rows", row.get("numInputRows"),
+                "addBatch", d.get("addBatch"),
+                "numRowsTotal", [o.get("numRowsTotal") for o in so],
                 "durationMs", d,
                 "stateParts", [o.get("numShufflePartitions") for o in so],
                 "commitMs", [o.get("commitTimeMs") for o in so],

@@ -40,19 +40,21 @@ _RUNNING_AGG_SCHEMA = (
 )
 
 
-def _running_agg_sql(spark, src):
+def _running_agg_sql(spark, src, keys=("user_id",)):
     """running_agg's batch SQL twin: window aggregates plus the
     closed-form ema (the oracle algebra, where NULL terms drop out of
-    the SUM), over ``src``'s (user_id, ts, value); ema_n=10."""
+    the SUM), over ``src``'s (keys, ts, value); ema_n=10."""
     w, q = 2.0 / 11.0, 9.0 / 11.0
+    k = "".join(f"{c}, " for c in keys)
+    part = f"PARTITION BY {', '.join(keys)}" if keys else ""
     return spark.sql(
         f"""
         WITH t AS (
-          SELECT user_id, ts, value,
-                 row_number() OVER (PARTITION BY user_id ORDER BY ts) - 1 AS i
+          SELECT {k}ts, value,
+                 row_number() OVER ({part} ORDER BY ts) - 1 AS i
           FROM {{src}}
         )
-        SELECT user_id, ts, value,
+        SELECT {k}ts, value,
                i + 1 AS rcount,
                sum(value) OVER win AS rsum,
                min(value) OVER win AS rmin,
@@ -60,23 +62,26 @@ def _running_agg_sql(spark, src):
                pow({q}, i) * sum(CASE WHEN i = 0 THEN value
                     ELSE {w} * value * pow({q}, -i) END) OVER win AS ema
         FROM t
-        WINDOW win AS (PARTITION BY user_id ORDER BY i
+        WINDOW win AS ({part} ORDER BY i
                        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
         """,
         src=src,
     ).collect()
 
 
-def _running_agg_rows(rows):
-    """(user_id, ts, value, rcount, rsum, rmin, rmax, ema) tuples,
-    floats rounded to 9 places, sorted."""
+def _running_agg_rows(rows, keys=("user_id",)):
+    """(keys, ts, value, rcount, rsum, rmin, rmax, ema) tuples, floats
+    rounded to 9 places, sorted with NULLs first."""
     def f(v):
         return None if v is None else round(float(v), 9)
 
     return sorted(
-        (r["user_id"], r["ts"], f(r["value"]), r["rcount"], f(r["rsum"]),
-         f(r["rmin"]), f(r["rmax"]), f(r["ema"]))
-        for r in rows
+        (
+            (tuple(r[c] for c in keys), r["ts"], f(r["value"]), r["rcount"],
+             f(r["rsum"]), f(r["rmin"]), f(r["rmax"]), f(r["ema"]))
+            for r in rows
+        ),
+        key=lambda t: [(v is not None, v) for v in (*t[0], *t[1:])],
     )
 
 
@@ -2075,6 +2080,153 @@ def test_running_agg_event_time_types(spark, tmp_path):
         spark.conf.set(tz_key, old_tz)
 
 
+def _publish(src, dst, name, at):
+    """Write ``src`` as the one parquet file ``dst/name.parquet``,
+    modified at epoch ``at``: a file stream lists files oldest first,
+    so ``maxFilesPerTrigger=1`` replays them in ``at`` order."""
+    import shutil
+
+    stage = f"{dst}_stage_{name}"
+    src.coalesce(1).write.parquet(stage)
+    part = [f for f in os.listdir(stage) if f.endswith(".parquet")][0]
+    os.makedirs(dst, exist_ok=True)
+    out = os.path.join(dst, f"{name}.parquet")
+    shutil.copyfile(os.path.join(stage, part), out)
+    os.utime(out, (at, at))
+
+
+def test_running_agg_bucketed_parity(spark, tmp_path):
+    """running_agg keeps its state per hash bucket of the keys, and
+    every key's carries must still be its own. With 5-row Arrow chunks
+    (a bucket spans many), the single-batch and the
+    maxFilesPerTrigger=1 replays equal the batch SQL windows for a
+    long + string key pair with NULLs in both columns, and for a
+    keyless frame. The long ids sit past 2^53 and differ only in their
+    low bits: pandas reads an integer column holding a NULL as
+    float64, which would merge them."""
+    import time as _time
+
+    from eventkit_spark.streaming.stream import StreamFrame
+
+    rows = []
+    for u in range(40):
+        uid = None if u < 2 else (1 << 60) + u
+        tag = None if u == 0 or u % 7 == 3 else f"t{u % 3}"
+        for i in range(6):
+            v = None if (u + i) % 5 == 0 else float((u * 13 + i * 29) % 50) - 20
+            rows.append((1000 * i + u, uid, tag, v, "x" * i))
+    schema = "ts long, user_id long, tag string, value double, props string"
+    src = spark.createDataFrame(rows, schema)
+    src_dir = str(tmp_path / "src")
+    t0 = _time.time()
+    for i, pred in enumerate(["ts < 2000", "ts >= 2000 AND ts < 4000", "ts >= 4000"]):
+        _publish(src.filter(pred), src_dir, f"f{i}", t0 + i)
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "5")
+    try:
+        for keys in (("user_id", "tag"), ()):
+            expected = _running_agg_rows(_running_agg_sql(spark, src, keys), keys)
+            for multi in (False, True):
+                reader = spark.readStream.format("parquet").schema(schema)
+                if multi:
+                    reader = reader.option("maxFilesPerTrigger", 1)
+                sf = StreamFrame(reader.load(src_dir), value_cols=["value"],
+                                 ts_col="ts", key_cols=list(keys))
+                out = sf.run_available_now(sink_df=sf.running_agg(ema_n=10),
+                                           name=f"ek_bucket_{len(keys)}_{multi}")
+                got = _running_agg_rows(out.collect(), keys)
+                assert got == expected and len(got) == len(rows), (keys, multi)
+    finally:
+        spark.conf.set(key, old)
+
+
+def test_running_agg_state_rows_at_most_buckets(spark, tmp_path):
+    """One micro-batch over 1,200 keys leaves at most B state rows
+    (B hash buckets of the keys), where one state row per key would
+    leave 1,200."""
+    from eventkit_spark.session import session_width
+    from eventkit_spark.streaming.stream import _BUCKETS_PER_PARTITION, StreamFrame
+
+    n_keys = 1200
+    src_dir = str(tmp_path / "keys")
+    spark.range(2 * n_keys).selectExpr(
+        "id AS ts", f"id % {n_keys} AS user_id", "CAST(id AS double) AS value"
+    ).coalesce(1).write.parquet(src_dir)
+    sf = StreamFrame(
+        spark.readStream.schema("ts long, user_id long, value double").parquet(src_dir),
+        value_cols=["value"], ts_col="ts", key_cols=["user_id"],
+    )
+    sink = sf.running_agg(ema_n=10)
+    writer = (
+        sink.writeStream.format("memory").queryName("ek_bucket_rows")
+        .outputMode("append").trigger(availableNow=True)
+    )
+    q = sf._sized_start(writer, sink_df=sink)
+    q.awaitTermination()
+    ops = q.lastProgress["stateOperators"]
+    b = _BUCKETS_PER_PARTITION * session_width(spark)
+    assert spark.table("ek_bucket_rows").count() == 2 * n_keys
+    assert ops and 0 < ops[0]["numRowsTotal"] <= b < n_keys, ops
+
+
+def test_running_agg_restart_same_and_other_width(spark, tmp_path):
+    """A running_agg checkpoint restarted at the same width continues
+    every key's carries exactly. Restarted under another
+    spark.sql.shuffle.partitions its keys would hash into other
+    buckets, so the handler raises, naming both bucket counts, and
+    nothing is emitted."""
+    import time as _time
+
+    from pyspark.errors import StreamingQueryException
+
+    from eventkit_spark.streaming.stream import _BUCKETS_PER_PARTITION as b, StreamFrame
+
+    rows = [
+        (100 * i + u, None if u % 11 == 0 else u % 37, float((u * 7 + i) % 23))
+        for u in range(90) for i in range(3)
+    ]
+    schema = "ts long, user_id long, value double"
+    src = spark.createDataFrame(rows, schema)
+    src_dir, ckpt = str(tmp_path / "src"), str(tmp_path / "ckpt")
+    got = []
+
+    def run(width):
+        key = "spark.sql.shuffle.partitions"
+        old = spark.conf.get(key)
+        spark.conf.set(key, str(width))
+        try:
+            sf = StreamFrame(
+                spark.readStream.format("parquet").schema(schema).load(src_dir),
+                value_cols=["value"], ts_col="ts", key_cols=["user_id"],
+            )
+            q = sf.foreach_batch(
+                lambda df, _: got.extend(df.collect()),
+                sink_df=sf.running_agg(ema_n=10), checkpoint=ckpt,
+                available_now=True,
+            )
+            q.awaitTermination()
+        finally:
+            spark.conf.set(key, old)
+
+    width = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    t0 = _time.time()
+    for i in range(2):
+        _publish(src.filter(f"ts >= {100 * i} AND ts < {100 * (i + 1)}"),
+                 src_dir, f"f{i}", t0 + i)
+        run(width)
+    first_two = src.filter("ts < 200")
+    assert _running_agg_rows(got) == _running_agg_rows(_running_agg_sql(spark, first_two))
+    n = len(got)
+    assert n == first_two.count()
+
+    _publish(src.filter("ts >= 200"), src_dir, "f2", t0 + 2)
+    with pytest.raises(StreamingQueryException,
+                       match=rf"{b * width} key buckets and this query uses {b * width // 2}"):
+        run(width // 2)
+    assert len(got) == n
+
+
 def _state_node_input(df):
     """(name, type) of each column the pandas state node receives, read
     off the analyzed JVM plan tree by node class and ``output()`` — no
@@ -2101,7 +2253,7 @@ def test_state_kernels_ship_only_read_columns(spark, stream_dir):
 
     sf = _stream(spark, stream_dir)
     assert _state_node_input(sf.running_agg(ema_n=10)) == [
-        ("user_id", "long"), ("ts", "long"), ("value", "double"),
+        ("__b", "integer"), ("user_id", "long"), ("ts", "long"), ("value", "double"),
     ]
     assert _state_node_input(sf.changes()) == [
         ("user_id", "long"), ("ts", "timestamp"), ("value", "double"),
